@@ -652,26 +652,14 @@ def main() -> None:
     def build_cin() -> NarCinEstimator:
         big = _TC(epochs=8, d_word=16, d_ff=64, batch_size=1024, seed=42)
         small = _TC(epochs=10, d_word=12, d_ff=48, batch_size=1024, seed=42)
-        # thread-parallel across centers: bench caps BLAS to 4 threads
-        # (top of file), which removes the sf0.1 inversion the
-        # sequential default guards against — measured 50.4s -> 36.3s
-        # this round, estimates bit-identical (see build_cin_estimator).
         # localize=True so the chained path's HT cross-validation
         # (sample_arbiter) runs as a few vectorized numpy passes per
         # fragment.
-        # fit_processes REVERTED to False (r12): the r11 fork pool
-        # helped at sf0.01 (33.8s -> 12.8s) but the official r11 runs
-        # regressed this build at BOTH core counts (33.9 -> 64.6s at
-        # 32c, 74.3s at 8c) — the jl fits are small enough that the
-        # thread overlap alone covers them, and the fork adds
-        # per-worker page-table/pickle overhead that is workload-
-        # sensitive.  The jm builds keep the pool (their fits are
-        # heavier and improved 1.6-2.1x on the same official runs).
         return build_cin_estimator(
             sg, tables, CIN_MODEL_COLUMNS,
             lambda center: big if center == "lineitem" else small,
             sample_size=1000, max_rows=32_000, fact_threshold=8,
-            seed=42, localize=True, parallel=True, fit_processes=False)
+            seed=42, localize=True)
 
     cin_holder: list = []
 
@@ -783,26 +771,11 @@ def main() -> None:
     # NAR-UR: one model per alternative, routed by edge support; zero
     # and CI clamps against the jm HT samples (same protocol as 2a'')
     def train_jm_ur():
-        # two independent per-variant trainings — thread-overlapped
-        # Spark encodes + forked-process numpy fits (same rationale/
-        # safety as the CIN builds: ex.map preserves order, per-model
-        # seeded RandomState, fit code identical → same weights)
-        from concurrent.futures import ThreadPoolExecutor
-
-        from scardina_spark.model.join_bridge import process_fit_pool
-
-        def one(ts_, pool):
-            d = train_join_estimator(
-                ts_, JM_UR_MODEL_COLUMNS,
-                _TC(epochs=8, d_word=16, d_ff=64, batch_size=1024,
-                    seed=42),
-                sample_size=500, max_rows=32_000, fact_threshold=8,
-                defer_fit=True)
-            return pool.run(d)
-
-        with process_fit_pool(max_workers=2) as pool, \
-                ThreadPoolExecutor(max_workers=2) as ex:
-            return list(ex.map(lambda t: one(t, pool), jm_ht.samples))
+        cfg = _TC(epochs=8, d_word=16, d_ff=64, batch_size=1024, seed=42)
+        return [train_join_estimator(ts_, JM_UR_MODEL_COLUMNS, cfg,
+                                     sample_size=500, max_rows=32_000,
+                                     fact_threshold=8)
+                for ts_ in jm_ht.samples]
     jm_urs = timed("jm_nar_train", train_jm_ur)
     # Routing (measured, sf0.1): the suite's tail queries are supported
     # by exactly ONE alternative each (they predicate a specific parallel
@@ -851,39 +824,19 @@ def main() -> None:
     from scardina_spark.estimators.sample import cin_tree as _cin_tree
 
     def build_jm_cin() -> NarCinEstimator:
-        # thread-parallel Spark preps + FORKED-process numpy fits (same
-        # shape as the jl CIN build): threads overlap the preps, the
-        # process pool runs the fits truly concurrently instead of
-        # GIL-sharing; ex.map preserves item order and the fit is the
-        # same numpy code, so the estimator (and every estimate) is
-        # bit-identical to the sequential build
-        from concurrent.futures import ThreadPoolExecutor
-
-        from scardina_spark.model.join_bridge import process_fit_pool
-
         cfg = _TC(epochs=8, d_word=16, d_ff=64, batch_size=1024, seed=42)
         subs = [ss for ss in jm_sg.cin_subschemas().values()
                 if ss.center == "shipments"]
         items = ([("shipments", ss, JM_CIN_SH_COLUMNS) for ss in subs]
                  + [(c, _cin_tree(jm_sg, c), CIN_MODEL_COLUMNS[c])
                     for c in ["lineitem", "orders", "supplier", "nation"]])
-
-        def one(item, pool):
-            center, tree, cols = item
+        cin = NarCinEstimator()
+        for center, tree, cols in items:
             ts_ = prepare_tree_sample(tree, jm_tables, center,
                                       n_max=50_000, seed=42)
-            d = train_join_estimator(ts_, cols, cfg, sample_size=500,
-                                     max_rows=32_000, fact_threshold=8,
-                                     defer_fit=True)
-            m = pool.run(d)
+            cin.add(train_join_estimator(ts_, cols, cfg, sample_size=500,
+                                         max_rows=32_000, fact_threshold=8))
             ts_.localize()
-            return m
-
-        cin = NarCinEstimator()
-        with process_fit_pool(max_workers=len(items)) as pool, \
-                ThreadPoolExecutor(max_workers=len(items)) as ex:
-            for m in ex.map(lambda it: one(it, pool), items):
-                cin.add(m)
         return cin
 
     jm_cin_holder: list = []

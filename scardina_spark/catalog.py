@@ -15,11 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schema import SchemaGraph
 
-TPCH_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 # PK->FK relationships of the star schema (FIXTURES.md §1).
 TPCH_RELATIONSHIPS = [
     # (pk_table, pk_col, fk_table, fk_col)
@@ -145,11 +140,3 @@ def load_tables(spark: SparkSession, sf_dir: str,
                 names: list[str] | None = None) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or RELATIONAL_TABLES)}
 
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: list[str] | None = None) -> None:
-    """Register each table as a temp view so `spark.sql` works directly."""
-    for n in names or TPCH_TABLES:
-        p = table_path(sf_dir, n)
-        if os.path.exists(p):
-            load_table(spark, sf_dir, n).createOrReplaceTempView(n)

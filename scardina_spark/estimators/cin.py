@@ -198,54 +198,17 @@ def build_cin_estimator(sg, tables, model_columns: dict,
                         cfg_for, *, sample_size: int = 1000,
                         max_rows: int = 32_000, fact_threshold: int = 8,
                         seed: int = 42, localize: bool = False,
-                        parallel: bool = False, fit_processes: bool = False,
                         arch: str = "mlp") -> NarCinEstimator:
-    """Prepare + train every CIN subschema model.
+    """Prepare + train every CIN subschema model, one at a time.
 
-    ``parallel=True`` runs centers on a thread pool, overlapping the
-    Spark-side stages of one model with the driver-side numpy fitting of
-    another.  History of this knob: with OpenBLAS at its default
-    one-thread-per-core pool the overlap INVERTED at data-bound scale
-    (measured 2x SLOWER at sf0.1 on local[32], 85s vs 43s — each
-    trainer's BLAS spun 32 threads against the executor cores); with
-    BLAS capped to a few threads (bench.py sets
-    OPENBLAS/OMP_NUM_THREADS=4) the overlap wins at sf0.1 too
-    (measured 50.4s -> 36.3s, round 9), so callers that cap BLAS should
-    pass ``parallel=True``.  The default stays sequential — the safe
-    shape under an uncapped BLAS, and on a real cluster each prep stage
-    already uses every executor.  Model order (and therefore every
-    estimate) is deterministic either way: results are collected in
-    ``model_columns`` iteration order, each trainer owns its own seeded
-    RandomState, and seq==par estimates are verified bit-identical.
-
-    ``cfg_for(center)`` returns the TrainConfig for one center.
-
-    ``fit_processes=True`` (with ``parallel``) additionally routes each
-    center's numpy fit through a forked worker process
-    (:func:`~scardina_spark.model.join_bridge.process_fit_pool`): the
-    thread pool still overlaps the Spark preps, but the fits no longer
-    serialize on the GIL.  Weights — hence every estimate — stay
-    bit-identical to the in-process fit (same numpy code, same BLAS
-    env; pinned by test_process_fit_pool_matches_serial).
+    ``cfg_for(center)`` returns the TrainConfig for one center.  Each
+    subschema's sample is prepared, then its model fitted, in
+    ``model_columns`` order; each trainer owns its own seeded
+    RandomState, so the models (and every estimate) are deterministic.
+    ``localize=True`` pulls each sample to the driver after its fit.
     """
-    from concurrent.futures import ThreadPoolExecutor
-    from contextlib import nullcontext
-
-    from ..model.join_bridge import process_fit_pool, train_join_estimator
+    from ..model.join_bridge import train_join_estimator
     from .sample import cin_trees, prepare_tree_sample
-
-    def one(item, pool=None):
-        center, cin_cols, tree = item
-        ts = prepare_tree_sample(tree, tables, center, seed=seed)
-        m = train_join_estimator(ts, cin_cols, cfg_for(center),
-                                 sample_size=sample_size, max_rows=max_rows,
-                                 fact_threshold=fact_threshold, arch=arch,
-                                 defer_fit=pool is not None)
-        if pool is not None:
-            m = pool.run(m)
-        if localize:
-            ts.localize()
-        return m
 
     est = NarCinEstimator()
     # a center with parallel FK edges expands into one subschema per
@@ -253,17 +216,13 @@ def build_cin_estimator(sg, tables, model_columns: dict,
     # query-time routing can pick the alternative whose edge the query
     # uses (shared model columns; the supplier-role columns bind to
     # whichever FK the subschema materializes)
-    items = [(center, cin_cols, tree)
-             for center, cin_cols in model_columns.items()
-             for tree in cin_trees(sg, center)]
-    if parallel and len(items) > 1:
-        pool_cm = (process_fit_pool(max_workers=len(items))
-                   if fit_processes else nullcontext(None))
-        with pool_cm as pool, \
-                ThreadPoolExecutor(max_workers=len(items)) as ex:
-            for m in ex.map(lambda it: one(it, pool), items):
-                est.add(m)
-    else:
-        for it in items:
-            est.add(one(it))
+    for center, cin_cols in model_columns.items():
+        for tree in cin_trees(sg, center):
+            ts = prepare_tree_sample(tree, tables, center, seed=seed)
+            est.add(train_join_estimator(
+                ts, cin_cols, cfg_for(center), sample_size=sample_size,
+                max_rows=max_rows, fact_threshold=fact_threshold,
+                arch=arch))
+            if localize:
+                ts.localize()
     return est

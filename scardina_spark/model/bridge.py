@@ -249,17 +249,6 @@ def fine_tune_single_table(est: NarEstimator, delta_df: DataFrame,
     return est
 
 
-def base_dictionaries(tables: dict[str, DataFrame],
-                      prefixed_columns: list[str]) -> dict[str, DataFrame]:
-    """Build one dictionary per BASE column (``table.col`` names) for reuse
-    across every subschema's encoder."""
-    out: dict[str, DataFrame] = {}
-    for name in prefixed_columns:
-        t, c = name.split(".", 1)
-        out[name] = build_dictionary(tables[t], c)
-    return out
-
-
 def train_single_table(df: DataFrame, columns: list[str],
                        cfg: TrainConfig | None = None,
                        sample_size: int = 512,

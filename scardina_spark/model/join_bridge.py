@@ -331,76 +331,21 @@ def _restrict_filters(pq: ParsedQuery, tables: set[str]) -> ParsedQuery:
 class DeferredFit:
     """A fully-prepared training job whose numpy ``fit`` has not run
     yet: the Spark side (sample prep, encode, training matrix) is done,
-    and ``model``/``mat`` are plain driver objects.  Exists so callers
-    training SEVERAL models can run the fits in forked worker
-    PROCESSES (:func:`process_fit_pool`) instead of GIL-sharing
-    threads — the fit is identical numpy code either way, so the
-    trained weights are bit-identical to the in-process path (pinned
-    by test_process_fit_pool_matches_serial)."""
+    and ``model``/``mat`` are plain driver objects.  Lets a caller time
+    or schedule the fit apart from the Spark work; :meth:`finish` runs
+    the same fit as :func:`train_join_estimator`, so the weights are
+    bit-identical (pinned by test_deferred_fit_matches_serial)."""
 
     def __init__(self, model, mat, kwargs: dict):
         self.model = model
         self.mat = mat
         self.kwargs = kwargs
 
-    def finish(self, fitted_model=None) -> "NarJoinEstimator":
-        """Fit (unless a fitted model is supplied) and assemble the
-        estimator — the tail of :func:`train_join_estimator`."""
-        m = fitted_model
-        if m is None:
-            self.model.fit(self.mat)
-            m = self.model
-        return NarJoinEstimator(model=m, **self.kwargs)
-
-
-def _fit_worker(payload):
-    model, mat = payload
-    model.fit(mat)
-    return model
-
-
-class _ProcessFitPool:
-    """See :func:`process_fit_pool`."""
-
-    def __init__(self, ex):
-        self._ex = ex
-
-    def run(self, deferred: "DeferredFit") -> "NarJoinEstimator":
-        if self._ex is None:
-            return deferred.finish()
-        fut = self._ex.submit(_fit_worker, (deferred.model, deferred.mat))
-        return deferred.finish(fitted_model=fut.result())
-
-
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def process_fit_pool(max_workers: int | None = None):
-    """Forked-process executor for :class:`DeferredFit` numpy fits.
-
-    Multi-model builds (CIN centers, per-variant UR models) previously
-    overlapped on a thread pool: the Spark preps genuinely parallelize
-    (py4j releases the GIL), but the numpy fits only overlap during
-    BLAS sections — the Python-level training loop serializes on the
-    GIL.  Forked workers run the fits truly concurrently; the fit is
-    the same numpy code with the same BLAS thread env, so the weights
-    are bit-identical to the in-process fit.  Only (model, matrix)
-    cross the process boundary — never Spark objects; the forked child
-    inherits but never touches the JVM gateway (the same fork contract
-    pyspark's own daemon workers rely on).  Falls back to in-process
-    fits where fork is unavailable."""
-    import multiprocessing as mp
-    from concurrent.futures import ProcessPoolExecutor
-
-    try:
-        ctx = mp.get_context("fork")
-    except ValueError:  # pragma: no cover - non-POSIX
-        yield _ProcessFitPool(None)
-        return
-    with ProcessPoolExecutor(max_workers=max_workers,
-                             mp_context=ctx) as ex:
-        yield _ProcessFitPool(ex)
+    def finish(self) -> "NarJoinEstimator":
+        """Fit and assemble the estimator — the tail of
+        :func:`train_join_estimator`."""
+        self.model.fit(self.mat)
+        return NarJoinEstimator(model=self.model, **self.kwargs)
 
 
 def train_join_estimator(ts: TreeSample, data_columns: list[str],
@@ -425,7 +370,10 @@ def train_join_estimator(ts: TreeSample, data_columns: list[str],
     ``2**fact_threshold`` codes are bit-slice factorized (M2, reference
     scardina/common.py:137-196): near-continuous columns (prices,
     timestamps) would otherwise each add a domain-wide softmax head that
-    dominates the training cost."""
+    dominates the training cost.
+
+    With ``defer_fit``, the prepared job comes back unfitted as a
+    :class:`DeferredFit`; its ``finish()`` completes it."""
     from ..functions.factorize import factorization_spec
     from .progressive import ColumnGroup
 
@@ -487,14 +435,8 @@ def train_join_estimator(ts: TreeSample, data_columns: list[str],
                   sample_size=sample_size, seed=cfg.seed, ts=ts,
                   constant_one_fanouts=constant1, continuous=cont,
                   groups=groups or None)
-    if defer_fit:
-        # ``defer_fit=True`` hands back the (model, matrix) pair with
-        # the estimator-assembly kwargs so multi-model callers can run
-        # the numpy fits in forked processes (process_fit_pool) —
-        # identical weights, true parallelism
-        return DeferredFit(model, mat, kwargs)
-    model.fit(mat)
-    return NarJoinEstimator(model=model, **kwargs)
+    deferred = DeferredFit(model, mat, kwargs)
+    return deferred if defer_fit else deferred.finish()
 
 
 def fine_tune_join_estimator(est: NarJoinEstimator,

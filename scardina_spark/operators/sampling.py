@@ -70,15 +70,6 @@ def stratified_sample(df: DataFrame, strata_cols: list[str], n: int,
             .where(F.col("__rk__") <= n).drop("__rk__"))
 
 
-def proportional_stratified(df: DataFrame, strata_cols: list[str],
-                            fraction: float, id_col: str,
-                            salt: str = "") -> DataFrame:
-    """fraction-of-each-stratum variant: Bernoulli filter, no shuffle at
-    all — per-stratum proportions hold in expectation because the hash
-    is uniform within every stratum."""
-    return bernoulli_sample(df, fraction, id_col, salt)
-
-
 def pareto_quality_sample(df: DataFrame, score_col: str, id_col: str,
                           alpha: float = 9.0,
                           salt: str = "quality") -> DataFrame:

@@ -18,6 +18,7 @@ Two consumers:
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from datetime import datetime
 from typing import Any
@@ -208,6 +209,9 @@ def sql_literal(v: Any) -> str:
         # BIGINT — the same rule F.lit applies
         return str(v)
     if isinstance(v, float):
+        # Catalyst has no literal for inf/nan (``infD`` fails to parse)
+        if not math.isfinite(v):
+            raise ValueError(f"non-finite literal: {v!r}")
         # shortest-repr round-trips the double exactly; the D suffix
         # pins DoubleType (a bare decimal would parse as DECIMAL)
         return repr(v) + "D"

@@ -157,30 +157,6 @@ def test_sample_arbiter_tightens_chain(nar_cin, exact):
     assert nar_cin.estimate(empty) == 0.0
 
 
-def test_parallel_builder_matches_sequential(tables):
-    """build_cin_estimator(parallel=True) is bit-identical to the
-    sequential loop — thread scheduling must not leak into estimates."""
-    from scardina_spark.estimators.cin import build_cin_estimator
-
-    sg = build_tpch_schema()
-    cols = {
-        "customer": ["customer.c_mktsegment", "nation.n_name"],
-        "nation": ["nation.n_name", "region.r_name"],
-    }
-    cfg = TrainConfig(epochs=4, d_word=8, d_ff=24, batch_size=512, seed=7)
-    kw = dict(sample_size=200, max_rows=8_000, seed=7)
-    seq = build_cin_estimator(sg, tables, cols, lambda c: cfg,
-                              parallel=False, **kw)
-    par = build_cin_estimator(sg, tables, cols, lambda c: cfg,
-                              parallel=True, **kw)
-    sql = ("SELECT COUNT(*) FROM customer c, nation n, region r "
-           "WHERE c.c_nationkey = n.n_nationkey "
-           "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'")
-    assert seq.estimate(sql) == par.estimate(sql)
-    assert [m.ts.tree.center for m in seq.models] == \
-        [m.ts.tree.center for m in par.models]
-
-
 def test_cin_builder_transformer_arch(spark, tables):
     """build_cin_estimator threads arch= through to every subschema
     model; a trm-arch CIN still answers a chained query sensibly."""

@@ -213,15 +213,13 @@ def test_skip_high_card_cols_flag(tables):
     assert set(on) <= set(off)
 
 
-def test_process_fit_pool_matches_serial(tables):
-    """defer_fit + forked-process fit must give BIT-IDENTICAL weights to
-    the in-process train_join_estimator (same numpy fit, same BLAS env)
-    — the invariant the bench's multi-model builds rely on."""
+def test_deferred_fit_matches_serial(tables):
+    """defer_fit=True then finish() must give BIT-IDENTICAL weights and
+    estimates to the one-call train_join_estimator — the contract
+    callers that time the fit apart from the Spark prep rely on."""
     import hashlib
 
     import numpy as np
-
-    from scardina_spark.model.join_bridge import process_fit_pool
 
     sg = build_tpch_schema()
     ts = prepare_tree_sample(spanning_tree(sg, "lineitem"), tables,
@@ -237,10 +235,8 @@ def test_process_fit_pool_matches_serial(tables):
 
     serial = train_join_estimator(ts, DATA_COLS, cfg, sample_size=500)
     deferred = train_join_estimator(ts, DATA_COLS, cfg, sample_size=500,
-                                    defer_fit=True)
-    with process_fit_pool(max_workers=1) as pool:
-        pooled = pool.run(deferred)
-    assert whash(pooled) == whash(serial)
+                                    defer_fit=True).finish()
+    assert whash(deferred) == whash(serial)
     # the assembled estimator answers queries identically
     sql = "SELECT COUNT(*) FROM lineitem WHERE l_quantity > 30"
-    assert pooled.estimate(sql) == serial.estimate(sql)
+    assert deferred.estimate(sql) == serial.estimate(sql)

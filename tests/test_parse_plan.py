@@ -6,7 +6,8 @@ from scardina_spark.catalog import build_tpch_schema
 from scardina_spark.plans import parse_query, plan_query
 from scardina_spark.plans.planner import execute_count
 from scardina_spark.plans.predicates import (
-    Predicate, normalize_predicates, predicates_to_column)
+    Predicate, literal_value, normalize_predicates, predicates_to_column,
+    predicates_to_sql, sql_literal)
 
 
 def test_parse_single_table():
@@ -45,6 +46,20 @@ def test_normalize_between_and_null_eq():
     assert Predicate("t.b", "!=", 3) in out
     assert Predicate("t.c", "IS", None) in out
 
+
+
+@pytest.mark.parametrize("tok", ["inf", "-inf", "nan"])
+def test_sql_literal_rejects_non_finite(tok):
+    """Catalyst cannot parse ``infD``/``nanD``: a non-finite literal
+    fails loudly instead of shipping unparseable SQL."""
+    with pytest.raises(ValueError, match="non-finite"):
+        sql_literal(float(tok))
+    # literal_value types the token "inf" as a float, so a parsed
+    # predicate reaches the SQL lowering with it
+    pred = Predicate("lineitem.l_quantity", ">", literal_value(tok))
+    with pytest.raises(ValueError, match="non-finite"):
+        predicates_to_sql([pred])
+    assert sql_literal(1.5) == "1.5D"
 
 def test_planner_rejects_cyclic_query():
     sg = build_tpch_schema()
