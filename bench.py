@@ -1440,6 +1440,7 @@ def main() -> None:
         json.dump(payload, f, indent=1, sort_keys=True)
     headline = [
         "jl_qerror_p50", "jl_qerror_p100", "jl_mean_ms_per_query",
+        "cpu_steal_pct_run",
         "jl_nar_hybrid_qerror_max", "jl_nar_mean_ms_per_query",
         "jl_cin_hybrid_qerror_max", "jl_cin_mean_ms_per_query",
         "jm_ht_qerror_p100", "jm_nar_hybrid_qerror_max",

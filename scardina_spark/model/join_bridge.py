@@ -33,7 +33,7 @@ from ..plans.parse import ParsedQuery, parse_query
 from ..plans.predicates import Predicate, normalize_predicates
 from .bridge import training_matrix
 from .nar import NarMLP, TrainConfig
-from .progressive import MASK_SLOT, NarEstimator, valid_mask
+from .progressive import MASK_SLOT, NarEstimator, distinct_rows, valid_mask
 
 
 def _require_local_values(dom, what: str) -> np.ndarray:
@@ -75,6 +75,17 @@ def _encode_values(dom, values: np.ndarray) -> np.ndarray:
         match = vals[idx] == arr
         codes[nn] = np.where(match, idx + 2, 1)
     return codes
+
+
+def decode_fanouts(vals: np.ndarray, drawn: np.ndarray) -> np.ndarray:
+    """Fanout values of drawn dictionary codes: code d ≥ 2 decodes to
+    ``vals[d - 2]``; codes 0 and 1 (MASK, NULL) and codes past the
+    dictionary decode to 1.  Clamped at 1, the fanout ≥ 1 invariant
+    (reference: estimators.py:383)."""
+    fan = np.ones(len(drawn))
+    ok = (drawn >= 2) & (drawn < len(vals) + 2)
+    fan[ok] = vals[drawn[ok] - 2]
+    return np.maximum(fan, 1.0)
 
 
 def _col_table(col: str) -> str | None:
@@ -215,7 +226,9 @@ class NarJoinEstimator(NarEstimator):
                 if c in self.continuous:
                     # regressed log2 fanout, decoded 2**x, clamp ≥ 1
                     # (reference: scardina/estimators.py:374-376)
-                    val = self.model.regress_for(codes, mask, j)
+                    first, inverse = distinct_rows(codes, mask)
+                    val = self.model.regress_for(
+                        codes[first], mask[first], j)[inverse]
                     codes[:, j] = val
                     mask[:, j] = False
                     fan = np.maximum(np.exp2(val), 1.0)
@@ -230,12 +243,7 @@ class NarJoinEstimator(NarEstimator):
                 drawn = (u > cdf).sum(axis=1)
                 codes[:, j] = drawn
                 mask[:, j] = False
-                vals = self.domains[c].values
-                fan = np.array([
-                    float(vals[d - 2]) if 2 <= d < len(vals) + 2 else 1.0
-                    for d in drawn])
-                fan = np.maximum(fan, 1.0)  # fanout ≥ 1 invariant
-                                            # (reference: estimators.py:383)
+                fan = decode_fanouts(self.domains[c].values, drawn)
                 prob = prob / fan if sign < 0 else prob * fan
         return prob, sampled
 

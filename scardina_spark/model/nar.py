@@ -173,12 +173,17 @@ class NarMLP:
     def _hidden(self, codes: np.ndarray, mask: np.ndarray) -> np.ndarray:
         """Final hidden activations ``a2`` — the SERVING path.
 
-        Progressive sampling masks most columns for EVERY row of the
-        batch (a JOB-light query touches ~3 of ~37 model columns), and
-        a fully-masked block's contribution to ``z1`` is a constant
-        vector, not a GEMM: factoring those out shrinks the input GEMM
-        from ``[B, Σd_j] @ [Σd_j, h]`` to the active columns only
-        (~6× fewer flops at the bench shapes, measured 26 → ~7 ms/q).
+        Progressive sampling calls this once per DISTINCT input row of
+        its Monte-Carlo batch (``progressive.distinct_rows``), not once
+        per sample: the S rows share their conditioning prefixes, so
+        ``B`` is tens of rows where S is a thousand.  Those rows mask
+        most columns in every row (a JOB-light query touches ~3 of ~37
+        model columns), and a fully-masked block's contribution to
+        ``z1`` is a constant vector, not a GEMM: factoring those out
+        shrinks the input GEMM from ``[B, Σd_j] @ [Σd_j, h]`` to the
+        active columns only (~6× fewer flops at the bench shapes,
+        measured 26 → ~7 ms/q when B was the full S = 1000 rows; not
+        re-measured at distinct-row batch sizes).
         Numerics: float32 summation is re-associated versus the dense
         product, so logits can drift at the last ulp — the dense path
         stays available (``serving_dense=True`` attribute) and the

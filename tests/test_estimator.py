@@ -286,28 +286,20 @@ def test_parallel_edge_subschemas_route_queries(spark):
         assert max(e / truth, truth / e) < 1.5, (fk, e, truth)
 
 
-def test_contrib_sql_matches_column_estimates(spark, tables):
-    """r12 pin: the HT contribution column is rendered as ONE SQL
-    string (driver py4j round-trips dropped per guide §4); the parsed
-    tree must produce BIT-IDENTICAL estimates to the Column-API build
-    for every suite query (typed literals: ints, D-suffixed doubles,
-    TIMESTAMP, RLIKE-lowered LIKE, OR groups)."""
+def _contrib_sql_vs_column_checked(est, names=None) -> int:
+    """The HT contribution column is rendered as ONE SQL string (to save
+    driver py4j round-trips); the parsed tree must produce BIT-IDENTICAL
+    estimates to the Column-API build for each suite query in ``names``
+    (default: every query the sample routes; typed literals: ints,
+    D-suffixed doubles, TIMESTAMP, RLIKE-lowered LIKE, OR groups).
+    Returns the number of queries checked."""
     from pyspark.sql import functions as F
 
     from scardina_spark.benchmarks import job_light_suite, or_suite
-    from scardina_spark.catalog import build_tpch_schema
-    from scardina_spark.estimators import SampleEstimator, prepare_tree_sample
-    from scardina_spark.estimators.sample import (
-        _divisor_cols, spanning_tree)
+    from scardina_spark.estimators.sample import _divisor_cols
     from scardina_spark.plans.predicates import predicates_to_column
 
-    sg = build_tpch_schema()
-    ts = prepare_tree_sample(spanning_tree(sg, "lineitem"), tables,
-                             "lineitem", seed=42)
-    est = SampleEstimator()
-    est.add(ts)
-
-    def column_contrib(preds, q_tables):
+    def column_contrib(ts, preds, q_tables):
         ind = predicates_to_column(preds, qualify=True)
         for t in sorted(q_tables):
             ind = ind & F.col(f"`__in__:{t}`")
@@ -320,16 +312,32 @@ def test_contrib_sql_matches_column_estimates(spark, tables):
     suite = {**job_light_suite(), **or_suite()}
     checked = 0
     for name, sql in suite.items():
-        try:
-            routed = est._route(sql)
-        except Exception:
+        if names is not None and name not in names:
             continue
-        _, preds, q_tables = routed
-        got = ts.sample.agg(
-            F.avg(est._contrib_column(ts, preds, q_tables))).first()[0]
-        want = ts.sample.agg(
-            F.avg(column_contrib(preds, q_tables))).first()[0]
+        try:
+            ts, preds, q_tables = est._route(sql)
+        except Exception:
+            if names is not None:
+                raise
+            continue
+        got, want = ts.sample.agg(
+            F.avg(est._contrib_column(ts, preds, q_tables)),
+            F.avg(column_contrib(ts, preds, q_tables))).first()
         assert got == want, (name, got, want)
         checked += 1
-    assert checked >= 60
-    ts.sample.unpersist()
+    return checked
+
+
+def test_contrib_sql_matches_column_estimates(estimator):
+    assert _contrib_sql_vs_column_checked(estimator) >= 60
+
+
+# one query per literal kind: doubles and BETWEEN, LIKE, IS NOT NULL
+# with TIMESTAMP, ints on a 3-way join, OR with LIKE, OR with BETWEEN
+_CONTRIB_FAST = ("jl_l_5", "jl_o_c_0", "jl_o_c_5", "jl_l_s_n_2",
+                 "or_l_o_1", "or_l_s_n_0")
+
+
+def test_contrib_sql_matches_column_estimates_fast(estimator):
+    assert _contrib_sql_vs_column_checked(estimator, _CONTRIB_FAST) == len(
+        _CONTRIB_FAST)
