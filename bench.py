@@ -384,7 +384,7 @@ def main() -> None:
     def run_asha_pool():
         from scardina_spark.model import TrainConfig
         from scardina_spark.model.bridge import training_matrix
-        from scardina_spark.model.search import asha_async_pool_search
+        from scardina_spark.model.search import asha_async_search
         cols = ["lineitem.l_returnflag", "lineitem.l_linestatus",
                 "lineitem.l_quantity", "orders.o_orderstatus"]
         base = TrainConfig(epochs=8, batch_size=1024, seed=42)
@@ -392,7 +392,7 @@ def main() -> None:
             ts.sample, cols, max_rows=20_000, seed=base.seed,
             id_cols=["__sample_id__"])
         bins = [(c, domains[c].dom_size) for c in cols]
-        best, trials, infl = asha_async_pool_search(
+        best, trials, infl = asha_async_search(
             bins, codes, base, d_words=(8, 16, 32), d_ffs=(32, 64, 96),
             n_workers=4)
         extras["asha_pool_max_inflight"] = infl

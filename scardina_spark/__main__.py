@@ -760,14 +760,17 @@ def cmd_train(args) -> int:
 
 def cmd_search(args) -> int:
     """Hyperparameter search over a single-table matrix (M8): the
-    reference's train-time search workflow with all three deterministic
-    drivers — exhaustive grid, ASHA successive halving, TPE sampler."""
+    reference's train-time search workflow with the deterministic
+    strategies — exhaustive grid, ASHA successive halving (sync, or
+    async on a Spark job pool), TPE sampler.  A ``-spark`` driver runs
+    the same strategy with its trials as Spark jobs."""
+    from functools import partial
+
     from .catalog import load_table
     from .model import TrainConfig
     from .model.bridge import training_matrix
-    from .model.search import (asha_search, asha_search_spark,
-                               grid_search, grid_search_spark,
-                               tpe_search)
+    from .model.search import (asha_async_search, asha_search,
+                               grid_search, tpe_search)
     spark = _spark()
     df = load_table(spark, args.sf_dir, args.table)
     cols = [c.strip() for c in args.columns.split(",")]
@@ -776,32 +779,22 @@ def cmd_search(args) -> int:
     codes, domains = training_matrix(df, cols, max_rows=args.max_rows,
                                      seed=base.seed)
     bins = [(c, domains[c].dom_size) for c in cols]
-    if args.driver == "grid":
-        model, trials = grid_search(bins, codes, base)
-        spent = len(trials) * args.epochs
-    elif args.driver == "grid-spark":
-        model, trials = grid_search_spark(spark, bins, codes, base)
-        spent = len(trials) * args.epochs
-    elif args.driver == "asha":
-        model, trials = asha_search(bins, codes, base)
-        spent = sum(t.epochs for t in trials)
-    elif args.driver == "asha-spark":
-        model, trials = asha_search_spark(spark, bins, codes, base)
-        spent = sum(t.epochs for t in trials)
-    elif args.driver == "asha-async-spark":
-        from .model.search import asha_async_spark_search
-        model, trials, _infl = asha_async_spark_search(
-            spark, bins, codes, base, n_workers=args.n_workers)
-        spent = sum(t.epochs for t in trials)
-    else:
-        model, trials = tpe_search(bins, codes, base,
-                                   n_trials=args.n_trials)
-        spent = len(trials) * args.epochs
+    search = {
+        "grid": grid_search,
+        "grid-spark": partial(grid_search, spark=spark),
+        "asha": asha_search,
+        "asha-spark": partial(asha_search, spark=spark),
+        "asha-async-spark": partial(asha_async_search, spark=spark,
+                                    n_workers=args.n_workers),
+        "tpe": partial(tpe_search, n_trials=args.n_trials),
+    }[args.driver]
+    model, trials = search(bins, codes, base)[:2]
     print(json.dumps({
         "driver": args.driver, "table": args.table, "columns": cols,
         "chosen_d_word": model.cfg.d_word,
         "chosen_d_ff": model.cfg.d_ff,
-        "n_trials": len(trials), "epochs_spent": spent,
+        "n_trials": len(trials),
+        "epochs_spent": sum(t.cfg.epochs for t in trials),
     }))
     return 0
 
@@ -831,7 +824,7 @@ def cmd_train_join(args) -> int:
     return 0
 
 
-def main(argv=None) -> int:
+def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="scardina_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -1122,7 +1115,11 @@ def main(argv=None) -> int:
     p.add_argument("--seed", type=int, default=42)
     p.set_defaults(fn=cmd_search)
 
-    args = ap.parse_args(argv)
+    return ap
+
+
+def main(argv=None) -> int:
+    args = build_parser().parse_args(argv)
     return args.fn(args)
 
 

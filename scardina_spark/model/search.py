@@ -2,20 +2,24 @@
 
 Reference semantics (NOT code): scardina/run.py:611-708 — a search over
 {d_word, d_ff, ...} scored by validation loss, best config exported.  The
-reference drives Ray Tune + Optuna + ASHA; here two deterministic
-drivers cover the same protocol:
+reference drives Ray Tune + Optuna + ASHA; here four deterministic
+strategies cover the same protocol:
 
 * ``grid_search`` — exhaustive over the (small) space, every trial at
-  full budget; and
+  full budget;
 * ``asha_search`` — the reference's ASHA SCHEDULER semantics made
   deterministic: successive-halving rungs (epoch budgets r, r·eta,
   r·eta², ...), each rung keeping the top 1/eta configs by validation
   loss (ties broken by config, so the run is reproducible), survivors
-  retrained at the next budget from the same seed.  Synchronous rather
-  than async (no worker pool here — promotion decisions see the whole
-  rung, which is ASHA's limit behavior), and early-stopped configs
-  really do cost only their rung budget — the resource-adaptivity the
-  reference gets from Ray's scheduler; and
+  retrained at the next budget from the same seed.  Synchronous:
+  promotion decisions see the whole rung, which is ASHA's limit
+  behavior, and early-stopped configs really do cost only their rung
+  budget — the resource-adaptivity the reference gets from Ray's
+  scheduler;
+* ``asha_async_search`` — ASYNCHRONOUS ASHA (Li et al., MLSys 2020),
+  the algorithm Ray's scheduler actually runs: promotions fire on
+  partial rung information, on a pool of ``n_workers`` threads
+  (``n_workers=1`` is the deterministic serialized driver); and
 * ``tpe_search`` — the reference's Optuna TPE SAMPLER semantics
   (Bergstra et al., NIPS'11 categorical TPE) made deterministic: a
   fixed maximin startup spread replaces the random startup, then each
@@ -26,13 +30,25 @@ drivers cover the same protocol:
   config).  No RNG anywhere, so every promotion/pick decision is
   externally re-checkable.
 
-Both use a seeded 90/10 train/validation split (validation capped at
-10k rows, matching scardina/common.py:597-608); each trial is seconds
-of NumPy.
+Every strategy trains through one trial runner,
+``run(cfgs) -> [(val_loss, train_loss, model)]``, built once per search
+over a seeded 90/10 train/validation split (validation capped at 10k
+rows, matching scardina/common.py:597-608); each trial is seconds of
+NumPy.  Grid hands the runner the whole grid, sync ASHA one rung at a
+time, TPE one config at a time and async ASHA one config per pool
+worker.  With ``spark=None`` the runner trains on the calling thread;
+with a session each call is one Spark job with one task per config —
+the reference's Ray Tune distribution leg (run.py:643-657).  Where a
+trial runs changes no decision: every promotion and winner ranks by
+(val_loss, d_word, d_ff), and Spark losses match local ones to float32
+cross-process BLAS kernel noise (~1e-6 relative, test-pinned).
 """
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, replace
 
 import numpy as np
@@ -73,6 +89,59 @@ def masked_val_loss(model, codes: np.ndarray, seed: int = 7) -> float:
     return total / max(cnt, 1)
 
 
+def _run_trial(input_bins, cfg, train, val):
+    """One trial = construct, fit, validate.  Runs identically on the
+    driver or inside a Spark task (pure NumPy, seeded by cfg)."""
+    model = NarMLP(input_bins, cfg)
+    losses = model.fit(train)
+    return masked_val_loss(model, val), losses[-1], model
+
+
+@contextmanager
+def _trial_runner(spark, input_bins, codes: np.ndarray, base: TrainConfig):
+    """The one trial-execution path: yields ``run(cfgs)``, which trains
+    every config and returns ``[(val_loss, train_loss, model)]`` in
+    ``cfgs`` order.
+
+    Local (``spark=None``): a loop on the calling thread.  Spark: the
+    train/val matrices broadcast ONCE per search (sample-scale: bounded
+    by the 500k-row sample clamp times the column count, independent of
+    data scale), each call is ``parallelize(cfgs, len(cfgs)).map(train)``
+    — one task per config, shipping back the pickled model (grid-size,
+    MBs) — and the broadcasts are released when the search ends, failed
+    or not."""
+    train, val = train_val_split(codes, base.seed)
+    if spark is None:
+        yield lambda cfgs: [_run_trial(input_bins, c, train, val)
+                            for c in cfgs]
+        return
+    sc = spark.sparkContext
+    b_train, b_val = sc.broadcast(train), sc.broadcast(val)
+    try:
+        def task(cfg):
+            return _run_trial(input_bins, cfg, b_train.value, b_val.value)
+
+        yield lambda cfgs: (sc.parallelize(cfgs, len(cfgs)).map(task)
+                            .collect())
+    finally:
+        b_train.unpersist()
+        b_val.unpersist()
+
+
+def _rank(trial) -> tuple[float, int, int]:
+    """The one decision order over ``(cfg, (val_loss, train_loss,
+    model))`` trials: ascending (val_loss, d_word, d_ff).  The config
+    tie-break makes every promotion and winner deterministic."""
+    cfg, (vl, _tl, _model) = trial
+    return vl, cfg.d_word, cfg.d_ff
+
+
+def _winner(trials) -> NarMLP:
+    """The one winner rule: the model of the least trial by
+    :func:`_rank`."""
+    return min(trials, key=_rank)[1][2]
+
+
 @dataclass
 class TrialResult:
     cfg: TrainConfig
@@ -90,11 +159,21 @@ class AshaTrial:
     promoted: bool     # survived into the next rung
 
 
+def _check_ladder(eta: int, min_epochs: int) -> None:
+    """Budgets grow and survivors shrink only for eta >= 2 and
+    min_epochs >= 1; anything less never reaches the final rung."""
+    if eta < 2:
+        raise ValueError(f"eta must be >= 2, got {eta}")
+    if min_epochs < 1:
+        raise ValueError(f"min_epochs must be >= 1, got {min_epochs}")
+
+
 def asha_schedule(n_configs: int, max_epochs: int, eta: int = 2,
                   min_epochs: int = 2) -> list[tuple[int, int]]:
     """The successive-halving ladder: [(epoch_budget, n_kept_after)]
     per rung.  Budgets grow by eta, survivors shrink by eta, and the
     last rung trains at ``max_epochs`` keeping one winner."""
+    _check_ladder(eta, min_epochs)
     rungs = []
     n, e = n_configs, min_epochs
     while n > 1 and e < max_epochs:
@@ -110,43 +189,32 @@ def asha_search(input_bins: list[tuple[str, int]], codes: np.ndarray,
                 d_words: tuple[int, ...] = (8, 16, 32),
                 d_ffs: tuple[int, ...] = (32, 64, 96),
                 eta: int = 2, min_epochs: int = 2,
-                model_cls=NarMLP) -> tuple[NarMLP, list[AshaTrial]]:
+                spark=None) -> tuple[NarMLP, list[AshaTrial]]:
     """Deterministic successive halving over the (d_word, d_ff) grid:
     returns the winning model (trained at the full epoch budget) and
     the complete trial table — one row per (config, rung) training run,
     so the promotion decisions are externally re-checkable.
 
-    Retraining survivors from the same seed (rather than checkpointing
-    optimizer state) keeps every rung bit-reproducible; at this model
-    scale a retrain costs the same handful of seconds the reference's
-    per-trial Ray task does."""
+    Each rung is one runner call (one Spark job with ``spark``): the
+    rung barrier IS sync ASHA's semantics, so distributing a rung loses
+    nothing.  Retraining survivors from the same seed (rather than
+    checkpointing optimizer state) keeps every rung bit-reproducible;
+    at this model scale a retrain costs the same handful of seconds the
+    reference's per-trial Ray task does."""
     base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
     alive = [replace(base, d_word=dw, d_ff=dff)
              for dw in d_words for dff in d_ffs]
     rungs = asha_schedule(len(alive), base.epochs, eta, min_epochs)
     trials: list[AshaTrial] = []
-    best_model = None
-    for rung_idx, (budget, keep) in enumerate(rungs):
-        scored = []
-        for cfg in alive:
-            run_cfg = replace(cfg, epochs=budget)
-            model = model_cls(input_bins, run_cfg)
-            losses = model.fit(train)
-            vl = masked_val_loss(model, val)
-            scored.append((vl, cfg.d_word, cfg.d_ff, cfg, model,
-                           losses[-1]))
-        # promotion rule: top-`keep` by (val_loss, d_word, d_ff) — the
-        # config tie-break makes the whole run deterministic
-        scored.sort(key=lambda t: (t[0], t[1], t[2]))
-        kept = {(t[1], t[2]) for t in scored[:keep]}
-        for vl, dw, dff, cfg, model, tl in scored:
-            trials.append(AshaTrial(replace(cfg, epochs=budget),
-                                    rung_idx, budget, vl, tl,
-                                    (dw, dff) in kept))
-        alive = [t[3] for t in scored[:keep]]
-        best_model = scored[0][4]
-    return best_model, trials
+    with _trial_runner(spark, input_bins, codes, base) as run:
+        for rung_idx, (budget, keep) in enumerate(rungs):
+            cfgs = [replace(cfg, epochs=budget) for cfg in alive]
+            # promotion rule: the top-`keep` by _rank
+            scored = sorted(zip(cfgs, run(cfgs)), key=_rank)
+            trials += [AshaTrial(cfg, rung_idx, budget, vl, tl, i < keep)
+                       for i, (cfg, (vl, tl, _m)) in enumerate(scored)]
+            alive = [cfg for cfg, _out in scored[:keep]]
+    return _winner(scored), trials
 
 
 @dataclass
@@ -166,74 +234,124 @@ def asha_async_search(input_bins: list[tuple[str, int]],
                       d_words: tuple[int, ...] = (8, 16, 32),
                       d_ffs: tuple[int, ...] = (32, 64, 96),
                       eta: int = 2, min_epochs: int = 2,
-                      model_cls=NarMLP) -> tuple[NarMLP, list[AsyncTrial]]:
+                      n_workers: int = 1, spark=None
+                      ) -> tuple[NarMLP, list[AsyncTrial], int]:
     """ASYNCHRONOUS ASHA (Li et al., MLSys 2020 — the algorithm the
-    reference's Ray scheduler actually runs), deterministically
-    serialized: one simulated worker, so each scheduling decision sees
-    every previously completed job and the run is bit-reproducible.
+    reference's Ray scheduler actually runs) on a pool of ``n_workers``
+    threads, each training one trial at a time through the runner.
+    Locally the NumPy trials overlap because BLAS releases the GIL;
+    with ``spark`` each trial is a single-task Spark job and Spark's
+    scheduler spreads the concurrent jobs across executor slots (the
+    reference's cluster-wide Ray pool, run.py:611-657).
 
-    The get_job rule is Li et al.'s verbatim: scan rungs top-down and
-    PROMOTE the best not-yet-promoted config sitting in the top
-    ``floor(n_seen / eta)`` of its rung's results-so-far; if no rung
-    has a promotable config, START the next unstarted config (row-major
-    grid order) at rung 0; stop when neither exists.  This is the
-    semantics sync ASHA lacks: promotions fire on PARTIAL rung
+    A freed worker takes the scheduler lock and applies Li et al.'s
+    get_job rule to the results completed SO FAR: scan rungs top-down
+    and PROMOTE the best not-yet-promoted config sitting in the top
+    ``floor(n_seen / eta)`` of its rung's results; if no rung has a
+    promotable config, START the next unstarted config (row-major grid
+    order) at rung 0.  It trains outside the lock.  A worker finding no
+    eligible job while others are in flight WAITS — their completions
+    can unlock promotions — and exits when nothing is eligible and
+    nothing is in flight.  So promotions fire on PARTIAL rung
     information (the first rung-1 job runs after only ``eta`` rung-0
-    completions, long before the rung fills), which is what removes
-    the straggler barrier on a real worker pool.
+    completions, long before the rung fills), which removes sync
+    ASHA's straggler barrier.
 
     The rung whose budget reaches ``base.epochs`` is final (never
-    promoted from); the winner is the val-loss argmin among final-rung
-    trials (config tie-break).  Total job count and epoch spend depend
-    only on |grid| and eta, not on losses — the e14 contract exploits
-    this for its literal oracle."""
+    promoted from); the winner is the final-rung argmin (config
+    tie-break).  At ``n_workers=1`` each decision sees every earlier
+    completion, so the run is bit-reproducible, and its job count and
+    epoch spend depend only on |grid| and eta — the e14 contract
+    exploits this for its literal oracle.  With more workers the trial
+    order depends on completion timing, exactly as on Ray; for every
+    timing each config starts at rung 0 at most once, each (rung,
+    config) promotes at most once, every promotion was in the top
+    ``floor(n_seen/eta)`` of its rung at decision time, and the winner
+    is the final-rung argmin.
+
+    When a trial raises, no further job is handed out, the trials in
+    flight finish, and the first exception is re-raised.  Returns
+    ``(best_model, trials, max_inflight)`` — the concurrency high-water
+    mark, so callers can see whether the pool overlapped."""
+    if n_workers < 1:
+        raise ValueError("n_workers must be >= 1")
+    _check_ladder(eta, min_epochs)
     base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
     grid = [(dw, dff) for dw in d_words for dff in d_ffs]
 
     def rung_budget(r: int) -> int:
         return min(min_epochs * eta ** r, base.epochs)
 
-    results: dict[int, list[tuple[float, int, int]]] = {}
+    lock = threading.Condition()
+    results: dict[int, list] = {}   # rung -> [(cfg, (val, train, model))]
     promoted: dict[int, set] = {}
-    models: dict[tuple[int, int, int], object] = {}  # (rung, dw, dff)
     trials: list[AsyncTrial] = []
-    started = 0
-    job = 0
-    while True:
-        pick = None
+    errors: list[BaseException] = []
+    state = {"started": 0, "job": 0, "inflight": 0, "max_inflight": 0}
+
+    def get_job():
+        """Li et al.'s rule over completed results, under the lock:
+        (from_rung, d_word, d_ff) with from_rung None for a fresh start;
+        None = nothing eligible right now, or a trial failed."""
+        if errors:
+            return None
         for r in sorted(results, reverse=True):
             if rung_budget(r) >= base.epochs:
-                continue  # final rung: never promoted from
-            done = sorted(results[r])
-            k = len(done) // eta
-            cands = [t for t in done[:k]
-                     if (t[1], t[2]) not in promoted.get(r, set())]
+                continue   # final rung: never promoted from
+            done = sorted(results[r], key=_rank)
+            cands = [(cfg.d_word, cfg.d_ff)
+                     for cfg, _out in done[:len(done) // eta]
+                     if (cfg.d_word, cfg.d_ff) not in promoted.get(r, ())]
             if cands:
-                pick = ("promote", r, cands[0][1], cands[0][2])
-                break
-        if pick is None and started < len(grid):
-            pick = ("start", None, *grid[started])
-            started += 1
-        if pick is None:
-            break
-        kind, from_rung, dw, dff = pick
-        rung = 0 if kind == "start" else from_rung + 1
-        cfg = replace(base, d_word=dw, d_ff=dff,
-                      epochs=rung_budget(rung))
-        model = model_cls(input_bins, cfg)
-        losses = model.fit(train)
-        vl = masked_val_loss(model, val)
-        results.setdefault(rung, []).append((vl, dw, dff))
-        if kind == "promote":
-            promoted.setdefault(from_rung, set()).add((dw, dff))
-        models[(rung, dw, dff)] = model
-        trials.append(AsyncTrial(cfg, job, rung, rung_budget(rung),
-                                 vl, losses[-1], from_rung))
-        job += 1
-    final_rung = max(results)
-    win = min(results[final_rung])
-    return models[(final_rung, win[1], win[2])], trials
+                promoted.setdefault(r, set()).add(cands[0])
+                return (r, *cands[0])
+        if state["started"] < len(grid):
+            state["started"] += 1
+            return (None, *grid[state["started"] - 1])
+        return None
+
+    def worker(run):
+        while True:
+            with lock:
+                pick = get_job()
+                while pick is None and state["inflight"] > 0:
+                    lock.wait()
+                    pick = get_job()
+                if pick is None:
+                    return
+                state["inflight"] += 1
+                state["max_inflight"] = max(state["max_inflight"],
+                                            state["inflight"])
+                job = state["job"]
+                state["job"] += 1
+            from_rung, dw, dff = pick
+            rung = 0 if from_rung is None else from_rung + 1
+            cfg = replace(base, d_word=dw, d_ff=dff,
+                          epochs=rung_budget(rung))
+            try:
+                [(vl, tl, model)] = run([cfg])
+                with lock:
+                    results.setdefault(rung, []).append(
+                        (cfg, (vl, tl, model)))
+                    trials.append(AsyncTrial(cfg, job, rung, cfg.epochs,
+                                             vl, tl, from_rung))
+            except BaseException as exc:
+                with lock:
+                    errors.append(exc)
+            finally:
+                # waiting workers re-check get_job; without this a
+                # failed trial would leave them waiting forever
+                with lock:
+                    state["inflight"] -= 1
+                    lock.notify_all()
+
+    with _trial_runner(spark, input_bins, codes, base) as run, \
+            ThreadPoolExecutor(max_workers=n_workers) as ex:
+        for f in [ex.submit(worker, run) for _ in range(n_workers)]:
+            f.result()
+    if errors:
+        raise errors[0]
+    return _winner(results[max(results)]), trials, state["max_inflight"]
 
 
 @dataclass
@@ -299,364 +417,54 @@ def tpe_search(input_bins: list[tuple[str, int]], codes: np.ndarray,
                d_ffs: tuple[int, ...] = (32, 64, 96),
                n_trials: int = 6, n_startup: int = 3,
                gamma: float = 0.25, prior: float = 1.0,
-               model_cls=NarMLP) -> tuple[NarMLP, list[TpeTrial]]:
+               spark=None) -> tuple[NarMLP, list[TpeTrial]]:
     """Deterministic TPE over the (d_word, d_ff) grid: returns the
     best-validation model and the full pick-ordered trial table.  Each
     config is trained at most once (the space is finite), so
     ``n_trials < |grid|`` really saves the difference vs exhaustive —
     the sampler's adaptivity claim, which the e13 contract certifies
-    alongside pick-by-pick re-verification of the acquisition argmax."""
+    alongside pick-by-pick re-verification of the acquisition argmax.
+    Each pick needs the previous trial's loss, so the runner gets one
+    config at a time."""
     base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
     grid = [(dw, dff) for dw in d_words for dff in d_ffs]
     n_trials = min(n_trials, len(grid))
     startup = tpe_startup_order(d_words, d_ffs)
     history: list[tuple[int, int, float]] = []
+    done = []
     trials: list[TpeTrial] = []
-    best = None  # (val_loss, d_word, d_ff, model)
-    for t in range(n_trials):
-        if t < n_startup:
-            dw, dff = startup[t]
-        else:
-            tried = {(h[0], h[1]) for h in history}
-            untried = [c for c in grid if c not in tried]
-            scores = tpe_scores(history, untried, d_words, d_ffs,
-                                gamma, prior)
-            dw, dff = min(untried,
-                          key=lambda c: (-scores[c], c[0], c[1]))
-        cfg = replace(base, d_word=dw, d_ff=dff)
-        model = model_cls(input_bins, cfg)
-        losses = model.fit(train)
-        vl = masked_val_loss(model, val)
-        history.append((dw, dff, vl))
-        trials.append(TpeTrial(cfg, t, vl, losses[-1], t < n_startup))
-        if best is None or (vl, dw, dff) < best[:3]:
-            best = (vl, dw, dff, model)
-    return best[3], trials
+    with _trial_runner(spark, input_bins, codes, base) as run:
+        for t in range(n_trials):
+            if t < n_startup:
+                dw, dff = startup[t]
+            else:
+                tried = {(h[0], h[1]) for h in history}
+                untried = [c for c in grid if c not in tried]
+                scores = tpe_scores(history, untried, d_words, d_ffs,
+                                    gamma, prior)
+                dw, dff = min(untried,
+                              key=lambda c: (-scores[c], c[0], c[1]))
+            cfg = replace(base, d_word=dw, d_ff=dff)
+            [(vl, tl, model)] = run([cfg])
+            history.append((dw, dff, vl))
+            done.append((cfg, (vl, tl, model)))
+            trials.append(TpeTrial(cfg, t, vl, tl, t < n_startup))
+    return _winner(done), trials
 
 
 def grid_search(input_bins: list[tuple[str, int]], codes: np.ndarray,
                 base: TrainConfig | None = None,
                 d_words: tuple[int, ...] = (16, 32),
                 d_ffs: tuple[int, ...] = (64, 96),
-                model_cls=NarMLP) -> tuple[NarMLP, list[TrialResult]]:
-    """Train every (d_word, d_ff) combination; return the best-val model
-    and the full trial table (the analog of the exported best-config
+                spark=None) -> tuple[NarMLP, list[TrialResult]]:
+    """Train every (d_word, d_ff) combination in one runner call (one
+    Spark job with ``spark``); return the best-val model and the full
+    trial table in grid order (the analog of the exported best-config
     JSON)."""
     base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
-    trials: list[TrialResult] = []
-    best, best_model = None, None
-    for dw in d_words:
-        for dff in d_ffs:
-            cfg = replace(base, d_word=dw, d_ff=dff)
-            model = model_cls(input_bins, cfg)
-            losses = model.fit(train)
-            vl = masked_val_loss(model, val)
-            t = TrialResult(cfg, vl, losses[-1])
-            trials.append(t)
-            if best is None or vl < best.val_loss:
-                best, best_model = t, model
-    return best_model, trials
-
-
-def asha_async_pool_search(input_bins: list[tuple[str, int]],
-                           codes: np.ndarray,
-                           base: TrainConfig | None = None,
-                           d_words: tuple[int, ...] = (8, 16, 32),
-                           d_ffs: tuple[int, ...] = (32, 64, 96),
-                           eta: int = 2, min_epochs: int = 2,
-                           n_workers: int = 4,
-                           model_cls=NarMLP,
-                           trial_runner=None
-                           ) -> tuple[NarMLP, list[AsyncTrial], int]:
-    """Async ASHA on a REAL worker pool — the physical execution the
-    reference gets from Ray Tune (run.py:611-657), here a
-    ``ThreadPoolExecutor``: trials are NumPy training whose BLAS
-    kernels release the GIL, so ``n_workers`` trials genuinely train
-    concurrently on one box (the single-node stand-in for Ray's
-    cluster pool; the SCHEDULING rule is byte-for-byte
-    :func:`asha_async_search`'s get_job).
-
-    Each freed worker takes the scheduler lock, applies the get_job
-    rule to the results completed SO FAR (promotions fire on partial
-    rung information — the property that removes sync ASHA's straggler
-    barrier), and trains outside the lock.  A worker finding no
-    eligible job while others are in flight WAITS on the condition —
-    their completions can unlock promotions — and only exits when the
-    queue is empty with nothing in flight.
-
-    Trial ORDER (and therefore which jobs exist) depends on completion
-    timing with ``n_workers > 1`` — exactly as on Ray; with
-    ``n_workers=1`` the run is bit-identical to the serialized
-    :func:`asha_async_search` (test-pinned).  Invariants that hold for
-    every timing: each config starts at rung 0 at most once, each
-    (rung, config) promotes at most once, every promotion was in the
-    top ``floor(n_seen/eta)`` of its rung at decision time, and the
-    winner is the val-loss argmin of the highest rung.  Returns
-    ``(best_model, trials, max_inflight)`` — the last observed
-    concurrency high-water mark, so callers can assert the pool really
-    overlapped.
-
-    ``trial_runner`` (cfg -> (val_loss, train_loss, model)) swaps WHERE
-    a trial trains while this function stays the scheduler: the default
-    trains on the calling thread (one-box pool); pass a closure that
-    submits a Spark job to get the cluster-wide async pool
-    (:func:`asha_async_spark_search`)."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    if n_workers < 1:
-        raise ValueError("n_workers must be >= 1")
-    base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
-    if trial_runner is None:
-        def trial_runner(cfg):
-            return _run_trial(input_bins, cfg, train, val, model_cls)
-    grid = [(dw, dff) for dw in d_words for dff in d_ffs]
-
-    def rung_budget(r: int) -> int:
-        return min(min_epochs * eta ** r, base.epochs)
-
-    lock = threading.Condition()
-    results: dict[int, list[tuple[float, int, int]]] = {}
-    promoted: dict[int, set] = {}
-    models: dict[tuple[int, int, int], object] = {}
-    trials: list[AsyncTrial] = []
-    state = {"started": 0, "job": 0, "inflight": 0, "max_inflight": 0}
-
-    def get_job():
-        """get_job under the lock: Li et al.'s rule over completed
-        results; None = nothing eligible right now."""
-        for r in sorted(results, reverse=True):
-            if rung_budget(r) >= base.epochs:
-                continue
-            done = sorted(results[r])
-            k = len(done) // eta
-            cands = [t for t in done[:k]
-                     if (t[1], t[2]) not in promoted.get(r, set())]
-            if cands:
-                promoted.setdefault(r, set()).add(
-                    (cands[0][1], cands[0][2]))
-                return ("promote", r, cands[0][1], cands[0][2])
-        if state["started"] < len(grid):
-            cfg = grid[state["started"]]
-            state["started"] += 1
-            return ("start", None, *cfg)
-        return None
-
-    def worker():
-        while True:
-            with lock:
-                pick = get_job()
-                while pick is None and state["inflight"] > 0:
-                    lock.wait()
-                    pick = get_job()
-                if pick is None:
-                    return
-                state["inflight"] += 1
-                state["max_inflight"] = max(state["max_inflight"],
-                                            state["inflight"])
-                job = state["job"]
-                state["job"] += 1
-            kind, from_rung, dw, dff = pick
-            rung = 0 if kind == "start" else from_rung + 1
-            cfg = replace(base, d_word=dw, d_ff=dff,
-                          epochs=rung_budget(rung))
-            vl, tl, model = trial_runner(cfg)
-            with lock:
-                results.setdefault(rung, []).append((vl, dw, dff))
-                models[(rung, dw, dff)] = model
-                trials.append(AsyncTrial(cfg, job, rung,
-                                         rung_budget(rung), vl,
-                                         tl, from_rung))
-                state["inflight"] -= 1
-                lock.notify_all()
-
-    with ThreadPoolExecutor(max_workers=n_workers) as ex:
-        futs = [ex.submit(worker) for _ in range(n_workers)]
-        for f in futs:
-            f.result()   # surface worker exceptions
-    final_rung = max(results)
-    win = min(results[final_rung])
-    return (models[(final_rung, win[1], win[2])], trials,
-            state["max_inflight"])
-
-
-# -- cluster-distributed drivers (the reference's Ray Tune leg,
-# -- scardina/run.py:643-657, re-expressed as Spark jobs) -------------------
-
-def _run_trial(input_bins, cfg, train, val, model_cls):
-    """One trial = construct, fit, validate.  Runs identically on the
-    driver or inside a Spark task (pure NumPy, seeded by cfg)."""
-    model = model_cls(input_bins, cfg)
-    losses = model.fit(train)
-    return masked_val_loss(model, val), losses[-1], model
-
-
-def grid_search_spark(spark, input_bins: list[tuple[str, int]],
-                      codes: np.ndarray, base: TrainConfig | None = None,
-                      d_words: tuple[int, ...] = (16, 32),
-                      d_ffs: tuple[int, ...] = (64, 96),
-                      model_cls=NarMLP) -> tuple[NarMLP, list[TrialResult]]:
-    """:func:`grid_search` distributed over the CLUSTER: one Spark task
-    per (d_word, d_ff) config — the multi-machine leg the reference
-    gets from Ray Tune, here plain ``parallelize(configs).map(train)``.
-
-    The train/val matrices broadcast once (sample-scale: bounded by the
-    500k-row sample clamp times the column count, independent of data
-    scale); each task trains its NumPy model from the config's seed and
-    ships back (val_loss, train_loss, pickled model) — grid-size
-    models, MBs.  Trials are re-sorted into grid order on the driver:
-    distribution changes WHERE a trial runs, never the schedule or the
-    arithmetic SEMANTICS — losses match the serial driver to float32
-    BLAS kernel noise (~1e-6 relative; executor Python workers are
-    separate processes whose GEMM kernels may re-associate, the same
-    caveat as any cross-process float reduction — test-pinned)."""
-    base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
-    grid = [(dw, dff) for dw in d_words for dff in d_ffs]
-    b_train = spark.sparkContext.broadcast(train)
-    b_val = spark.sparkContext.broadcast(val)
-    try:
-        def run(pair):
-            dw, dff = pair
-            cfg = replace(base, d_word=dw, d_ff=dff)
-            vl, tl, model = _run_trial(input_bins, cfg,
-                                       b_train.value, b_val.value,
-                                       model_cls)
-            return dw, dff, vl, tl, model
-
-        got = {(dw, dff): (vl, tl, m)
-               for dw, dff, vl, tl, m in
-               spark.sparkContext.parallelize(grid, len(grid)).map(run)
-               .collect()}
-    finally:
-        b_train.unpersist()
-        b_val.unpersist()
-    trials: list[TrialResult] = []
-    best, best_model = None, None
-    for dw, dff in grid:                       # serial driver's order
-        vl, tl, model = got[(dw, dff)]
-        t = TrialResult(replace(base, d_word=dw, d_ff=dff), vl, tl)
-        trials.append(t)
-        if best is None or vl < best.val_loss:
-            best, best_model = t, model
-    return best_model, trials
-
-
-def asha_search_spark(spark, input_bins: list[tuple[str, int]],
-                      codes: np.ndarray, base: TrainConfig | None = None,
-                      d_words: tuple[int, ...] = (8, 16, 32),
-                      d_ffs: tuple[int, ...] = (32, 64, 96),
-                      eta: int = 2, min_epochs: int = 2,
-                      model_cls=NarMLP) -> tuple[NarMLP, list[AshaTrial]]:
-    """:func:`asha_search` (synchronous successive halving) with each
-    RUNG's trainings distributed as one Spark job — the rung barrier IS
-    sync ASHA's semantics, so a per-rung job loses nothing the serial
-    driver had.  Promotion decisions run on the driver over the
-    collected (val_loss, config) rows with the identical
-    (val_loss, d_word, d_ff) total order, so the trial SCHEDULE and
-    promotion structure are identical to the serial driver, with losses
-    equal to float32 BLAS kernel noise (cross-process GEMM
-    re-association; a promotion could flip only on a near-tie at that
-    scale, and the trial table records what happened — test-pinned to
-    1e-5 relative).  For the
-    barrier-free variant on one box, use :func:`asha_async_pool_search`;
-    for the barrier-free variant across the CLUSTER (Ray's actual
-    semantics), :func:`asha_async_spark_search`."""
-    base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
-    alive = [replace(base, d_word=dw, d_ff=dff)
-             for dw in d_words for dff in d_ffs]
-    rungs = asha_schedule(len(alive), base.epochs, eta, min_epochs)
-    trials: list[AshaTrial] = []
-    best_model = None
-    b_train = spark.sparkContext.broadcast(train)
-    b_val = spark.sparkContext.broadcast(val)
-    try:
-        for rung_idx, (budget, keep) in enumerate(rungs):
-            cfgs = [replace(cfg, epochs=budget) for cfg in alive]
-
-            def run(cfg):
-                vl, tl, model = _run_trial(input_bins, cfg,
-                                           b_train.value, b_val.value,
-                                           model_cls)
-                return cfg.d_word, cfg.d_ff, vl, tl, model
-
-            got = {(dw, dff): (vl, tl, m)
-                   for dw, dff, vl, tl, m in
-                   spark.sparkContext.parallelize(cfgs, len(cfgs))
-                   .map(run).collect()}
-            scored = []
-            for cfg in alive:
-                vl, tl, model = got[(cfg.d_word, cfg.d_ff)]
-                scored.append((vl, cfg.d_word, cfg.d_ff, cfg, model, tl))
-            scored.sort(key=lambda t: (t[0], t[1], t[2]))
-            kept = {(t[1], t[2]) for t in scored[:keep]}
-            for vl, dw, dff, cfg, model, tl in scored:
-                trials.append(AshaTrial(replace(cfg, epochs=budget),
-                                        rung_idx, budget, vl, tl,
-                                        (dw, dff) in kept))
-            alive = [t[3] for t in scored[:keep]]
-            best_model = scored[0][4]
-    finally:
-        b_train.unpersist()
-        b_val.unpersist()
-    return best_model, trials
-
-
-def asha_async_spark_search(spark, input_bins: list[tuple[str, int]],
-                            codes: np.ndarray,
-                            base: TrainConfig | None = None,
-                            d_words: tuple[int, ...] = (8, 16, 32),
-                            d_ffs: tuple[int, ...] = (32, 64, 96),
-                            eta: int = 2, min_epochs: int = 2,
-                            n_workers: int = 4,
-                            model_cls=NarMLP
-                            ) -> tuple[NarMLP, list[AsyncTrial], int]:
-    """Cluster-wide ASYNC ASHA — the reference's actual Ray Tune
-    semantics (scardina/run.py:643-657: trials run asynchronously
-    across machines, promotions fire on partial rung information): a
-    driver-side scheduler (the VERBATIM get_job rule of
-    :func:`asha_async_pool_search`) feeds a pool of ``n_workers``
-    driver threads, each of which submits its trial as ONE concurrent
-    Spark job (``parallelize([cfg], 1).map(train)`` — Spark's scheduler
-    spreads simultaneous jobs across executor slots, the cluster-wide
-    job pool) and reports completion back through the shared condition
-    variable, unblocking promotions that need only partial rung
-    results — no rung barrier anywhere.
-
-    Train/val matrices broadcast ONCE for all trials (sample-scale,
-    bounded by the 500k-row sample clamp — independent of base-data
-    scale); each task ships back (val_loss, train_loss, pickled model),
-    grid-size small.  With ``n_workers=1`` the schedule is identical to
-    the serialized :func:`asha_async_search` driver, with losses equal
-    to float32 cross-process BLAS kernel noise (the grid_search_spark
-    caveat; contract-pinned by e18); with ``n_workers>1`` job order is
-    completion-timing-dependent exactly as on Ray, and the e16
-    invariants (unique starts/promotions, nested rungs, final-rung
-    argmin winner) hold for every timing."""
-    b_train = None
-    b_val = None
-    base = base or TrainConfig()
-    train, val = train_val_split(codes, base.seed)
-    b_train = spark.sparkContext.broadcast(train)
-    b_val = spark.sparkContext.broadcast(val)
-    try:
-        def submit(cfg):
-            def run(c):
-                return _run_trial(input_bins, c, b_train.value,
-                                  b_val.value, model_cls)
-            [(vl, tl, model)] = (spark.sparkContext
-                                 .parallelize([cfg], 1).map(run)
-                                 .collect())
-            return vl, tl, model
-
-        return asha_async_pool_search(
-            input_bins, codes, base, d_words=d_words, d_ffs=d_ffs,
-            eta=eta, min_epochs=min_epochs, n_workers=n_workers,
-            model_cls=model_cls, trial_runner=submit)
-    finally:
-        b_train.unpersist()
-        b_val.unpersist()
+    cfgs = [replace(base, d_word=dw, d_ff=dff)
+            for dw in d_words for dff in d_ffs]
+    with _trial_runner(spark, input_bins, codes, base) as run:
+        done = list(zip(cfgs, run(cfgs)))
+    return _winner(done), [TrialResult(cfg, vl, tl)
+                           for cfg, (vl, tl, _m) in done]

@@ -2345,8 +2345,8 @@ order by d.doc_id
 
 def q_asha_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E16 (async ASHA on a REAL worker pool — the physical execution
-    the reference gets from Ray Tune, `search.asha_async_pool_search`
-    on a ThreadPoolExecutor whose NumPy trials overlap because BLAS
+    the reference gets from Ray Tune, `search.asha_async_search` with
+    n_workers=4 threads whose NumPy trials overlap because BLAS
     releases the GIL): returns ONE row of timing-independent invariant
     checks — rung-0 starts cover the grid exactly once, every
     (rung, config) promotion is unique, higher rungs are subsets of
@@ -2357,12 +2357,11 @@ def q_asha_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT and order are completion-timing-dependent (exactly as on
     Ray), which is why this key is rows-only: the invariants are the
     deterministic surface.
-    Scheduling-rule correctness itself is e14's literal oracle (the
-    n_workers=1 run is bit-identical to e14's serialized driver,
-    test-pinned)."""
+    Scheduling-rule correctness itself is e14's literal oracle: the
+    same scheduler at n_workers=1, every decision re-simulated."""
     from .model import TrainConfig
     from .model.bridge import training_matrix
-    from .model.search import asha_async_pool_search
+    from .model.search import asha_async_search
 
     li = load_table(spark, sf_dir, "lineitem")
     cols = ["l_returnflag", "l_linestatus", "l_quantity", "l_discount"]
@@ -2371,7 +2370,7 @@ def q_asha_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_cols=["l_orderkey", "l_linenumber"])
     bins = [(c, domains[c].dom_size) for c in cols]
     base = TrainConfig(epochs=8, batch_size=1024, seed=42)
-    best, trials, infl = asha_async_pool_search(
+    best, trials, infl = asha_async_search(
         bins, codes, base, d_words=(8, 16), d_ffs=(16, 32),
         eta=2, min_epochs=2, n_workers=4)
     grid = {(dw, dff) for dw in (8, 16) for dff in (16, 32)}
@@ -5164,7 +5163,7 @@ def q_asha_async(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      id_cols=["l_orderkey",
                                               "l_linenumber"])
     bins = [(c, domains[c].dom_size) for c in cols]
-    best_model, trials = asha_async_search(
+    best_model, trials, _infl = asha_async_search(
         bins, codes, base, d_words=_ASHA_D_WORDS, d_ffs=_ASHA_D_FFS,
         eta=_ASHA_ETA, min_epochs=_ASHA_MIN_EPOCHS)
     grid = [(dw, dff) for dw in _ASHA_D_WORDS for dff in _ASHA_D_FFS]
@@ -5432,11 +5431,12 @@ def _sql_grid_search(d_words=(8, 16), d_ffs=(32, 64)) -> str:
 def q_spark_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E17 (cluster-distributed hyperparameter search — the reference's
     Ray Tune DISTRIBUTION leg, run.py:643-657, as Spark jobs:
-    `search.grid_search_spark`): one row per grid config with booleans
-    certifying Spark-side that the distributed run (a) executed the
-    identical trial schedule as the serial driver, (b) reproduced every
-    loss to float32 cross-process BLAS kernel noise (1e-5 relative —
-    executor GEMMs may re-associate), and (c) picked the same winner,
+    `search.grid_search(..., spark=spark)`): one row per grid config
+    with booleans certifying Spark-side that the distributed run (a)
+    executed the identical trial schedule as the local run, (b)
+    reproduced every loss to float32 cross-process BLAS kernel noise
+    (1e-5 relative — executor GEMMs may re-associate), and (c) picked
+    the same winner,
     whose shipped-back weights match to the same tolerance.  The oracle
     emits the literal grid; correctness is carried by the booleans
     (e8's protocol)."""
@@ -5444,7 +5444,7 @@ def q_spark_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .model import TrainConfig
     from .model.bridge import training_matrix
-    from .model.search import grid_search, grid_search_spark
+    from .model.search import grid_search
 
     li = load_table(spark, sf_dir, "lineitem")
     cols = ["l_returnflag", "l_linestatus", "l_quantity"]
@@ -5457,8 +5457,8 @@ def q_spark_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_words, d_ffs = (8, 16), (32, 64)
     m_s, t_s = grid_search(bins, codes, base, d_words=d_words,
                            d_ffs=d_ffs)
-    m_d, t_d = grid_search_spark(spark, bins, codes, base,
-                                 d_words=d_words, d_ffs=d_ffs)
+    m_d, t_d = grid_search(bins, codes, base, d_words=d_words,
+                           d_ffs=d_ffs, spark=spark)
     sched = ([(t.cfg.d_word, t.cfg.d_ff) for t in t_s]
              == [(t.cfg.d_word, t.cfg.d_ff) for t in t_d])
     close = all(math.isclose(a.val_loss, b.val_loss, rel_tol=1e-5)
@@ -5481,15 +5481,16 @@ def q_spark_asha_async(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E18 (cluster-wide ASYNC ASHA — the reference's actual Ray Tune
     semantics, run.py:643-657: trials asynchronous across machines,
     promotions on partial rung information; the last M8 search delta):
-    `search.asha_async_spark_search` drives the VERBATIM
-    asha_async_pool_search get_job rule from a driver-side scheduler
-    whose workers submit trials as concurrent single-task Spark jobs
-    against once-broadcast train/val matrices.
+    `search.asha_async_search(..., spark=spark)` runs its get_job
+    scheduler on a driver-side worker pool whose workers submit trials
+    as concurrent single-task Spark jobs against once-broadcast
+    train/val matrices.
 
     One row of booleans (e17's literal-oracle protocol): at
     n_workers=1 the cluster run's trial schedule — (job, rung, budget,
-    config, promoted_from) per trial — EQUALS the serialized
-    `asha_async_search` driver's, losses match to float32
+    config, promoted_from) per trial — EQUALS the local run's at
+    n_workers=1 (the deterministic serialized schedule that e14
+    re-simulates), losses match to float32
     cross-process BLAS noise (1e-5 rel) and the winner agrees; at
     n_workers=4 the timing-independent e16 invariants hold (rung-0
     starts cover the grid once, promotions unique, rungs nested,
@@ -5498,7 +5499,7 @@ def q_spark_asha_async(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .model import TrainConfig
     from .model.bridge import training_matrix
-    from .model.search import asha_async_search, asha_async_spark_search
+    from .model.search import asha_async_search
 
     li = load_table(spark, sf_dir, "lineitem")
     cols = ["l_returnflag", "l_linestatus", "l_quantity"]
@@ -5510,9 +5511,9 @@ def q_spark_asha_async(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins = [(c, domains[c].dom_size) for c in cols]
     d_words, d_ffs = (8, 16), (16, 32)
     kw = dict(d_words=d_words, d_ffs=d_ffs, eta=2, min_epochs=2)
-    m_s, t_s = asha_async_search(bins, codes, base, **kw)
-    m_1, t_1, _ = asha_async_spark_search(spark, bins, codes, base,
-                                          n_workers=1, **kw)
+    m_s, t_s, _ = asha_async_search(bins, codes, base, **kw)
+    m_1, t_1, _ = asha_async_search(bins, codes, base, n_workers=1,
+                                    spark=spark, **kw)
 
     def sched(ts):
         return [(t.job, t.rung, t.epochs, t.cfg.d_word, t.cfg.d_ff,
@@ -5526,8 +5527,9 @@ def q_spark_asha_async(spark: SparkSession, sf_dir: str) -> DataFrame:
     winner_eq = ((m_s.cfg.d_word, m_s.cfg.d_ff)
                  == (m_1.cfg.d_word, m_1.cfg.d_ff))
 
-    best, trials, _infl = asha_async_spark_search(spark, bins, codes,
-                                                  base, n_workers=4, **kw)
+    best, trials, _infl = asha_async_search(bins, codes, base,
+                                            n_workers=4, spark=spark,
+                                            **kw)
     grid = {(dw, dff) for dw in d_words for dff in d_ffs}
     starts = [(t.cfg.d_word, t.cfg.d_ff) for t in trials if t.rung == 0]
     promos = [(t.rung, t.cfg.d_word, t.cfg.d_ff)

@@ -1,10 +1,11 @@
 """CLI surface: subcommands run in-process and emit JSON lines."""
 
+import argparse
 import json
 
 import pytest
 
-from scardina_spark.__main__ import main
+from scardina_spark.__main__ import build_parser, main
 
 
 def test_cli_estimate(capsys, spark, sf_dir):
@@ -128,16 +129,24 @@ def test_cli_semdedup(capsys, spark, sf_dir, tmp_path):
     assert set(back.columns) >= {"vec_id", "cell", "kept"}
 
 
-def test_cli_search_drivers(capsys, spark, sf_dir):
-    for driver, extra in (("tpe", []), ("asha", [])):
-        rc = main(["search", "--sf-dir", sf_dir, "--table", "lineitem",
-                   "--columns", "l_returnflag,l_linestatus",
-                   "--driver", driver, "--epochs", "2"] + extra)
-        assert rc == 0
-        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert out["driver"] == driver
-        assert out["chosen_d_word"] in (8, 16, 32)
-        assert out["n_trials"] >= 2 and out["epochs_spent"] > 0
+def _search_drivers():
+    """The `search --driver` choices, read from the parser itself."""
+    sub = next(a for a in build_parser()._actions
+               if isinstance(a, argparse._SubParsersAction))
+    return next(a for a in sub.choices["search"]._actions
+                if a.dest == "driver").choices
+
+
+@pytest.mark.parametrize("driver", _search_drivers())
+def test_cli_search_drivers(capsys, spark, sf_dir, driver):
+    rc = main(["search", "--sf-dir", sf_dir, "--table", "lineitem",
+               "--columns", "l_returnflag,l_linestatus",
+               "--driver", driver, "--epochs", "2"])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["driver"] == driver
+    assert out["chosen_d_word"] in (8, 16, 32)
+    assert out["n_trials"] >= 2 and out["epochs_spent"] > 0
 
 
 def test_cli_tokenize_frozen_merges(capsys, spark, sf_dir, tmp_path):

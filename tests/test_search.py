@@ -1,10 +1,16 @@
-"""Hyperparameter grid search: split semantics + best-model selection."""
+"""Hyperparameter search: split semantics, each strategy's decisions,
+the async scheduler's failure handling, and local/Spark runner parity."""
+
+import math
+import threading
 
 import numpy as np
+import pytest
 
 from scardina_spark.model import TrainConfig
 from scardina_spark.model.search import (
-    grid_search, masked_val_loss, train_val_split)
+    asha_async_search, asha_search, grid_search, masked_val_loss,
+    tpe_search, train_val_split)
 
 
 def test_split_is_seeded_and_capped():
@@ -153,7 +159,7 @@ def test_tpe_search_deterministic_verifiable_and_adaptive():
 
 
 def test_asha_async_scheduler_semantics():
-    """Deterministic async ASHA (Li et al. MLSys'20, W=1 serialized):
+    """Deterministic async ASHA (Li et al. MLSys'20, n_workers=1):
     every promotion is legal at its decision point (top floor(n/eta)
     of the rung's results-so-far, not yet promoted, highest rung
     preferred, best-first), every config starts exactly once at rung
@@ -161,15 +167,18 @@ def test_asha_async_scheduler_semantics():
     with rung-0 starts (the async property sync ASHA lacks), and the
     winner is the final-rung argmin.  The whole run is re-simulated
     from the trial table alone."""
-    from scardina_spark.model.search import asha_async_search
     rs = np.random.RandomState(0)
     x = rs.randint(2, 10, size=3000)
     y = np.where(rs.rand(3000) < 0.85, x, rs.randint(2, 10, size=3000))
     codes = np.stack([x, y], axis=1)
     base = TrainConfig(epochs=8, batch_size=512, seed=2)
-    kw = dict(d_words=(8, 16), d_ffs=(16, 32), eta=2, min_epochs=2)
-    m1, t1 = asha_async_search([("x", 10), ("y", 10)], codes, base, **kw)
-    m2, t2 = asha_async_search([("x", 10), ("y", 10)], codes, base, **kw)
+    kw = dict(d_words=(8, 16), d_ffs=(16, 32), eta=2, min_epochs=2,
+              n_workers=1)
+    m1, t1, infl = asha_async_search([("x", 10), ("y", 10)], codes, base,
+                                     **kw)
+    m2, t2, _ = asha_async_search([("x", 10), ("y", 10)], codes, base,
+                                  **kw)
+    assert infl == 1
     key = lambda t: (t.job, t.rung, t.cfg.d_word, t.cfg.d_ff, t.val_loss)
     assert [key(t) for t in t1] == [key(t) for t in t2]  # deterministic
 
@@ -225,36 +234,16 @@ def _pool_codes(n=3000, seed=0):
     return np.stack([x, y], axis=1)
 
 
-def test_asha_pool_single_worker_equals_serialized():
-    """n_workers=1 is bit-identical to the serialized asha_async_search
-    — same jobs, same rungs, same losses, same winner."""
-    from scardina_spark.model.search import (
-        asha_async_pool_search, asha_async_search)
-    codes = _pool_codes()
-    bins = [("x", 10), ("y", 10)]
-    base = TrainConfig(epochs=8, batch_size=512, seed=2)
-    kw = dict(d_words=(8, 16), d_ffs=(16, 32), eta=2, min_epochs=2)
-    m1, t1 = asha_async_search(bins, codes, base, **kw)
-    m2, t2, infl = asha_async_pool_search(bins, codes, base,
-                                          n_workers=1, **kw)
-    key = lambda t: (t.job, t.rung, t.epochs, t.cfg.d_word,
-                     t.cfg.d_ff, t.val_loss, t.promoted_from)
-    assert [key(t) for t in t1] == [key(t) for t in t2]
-    assert infl == 1
-    assert (m1.cfg.d_word, m1.cfg.d_ff) == (m2.cfg.d_word, m2.cfg.d_ff)
-
-
 def test_asha_pool_overlaps_and_keeps_invariants():
     """A 4-worker pool really overlaps trials (max_inflight > 1), and
     every timing-independent ASHA invariant holds: rung-0 starts are
     unique and grid-complete, (rung, config) promotions unique, rungs
     only reachable by promotion from below, winner = final-rung
     argmin."""
-    from scardina_spark.model.search import asha_async_pool_search
     codes = _pool_codes()
     bins = [("x", 10), ("y", 10)]
     base = TrainConfig(epochs=8, batch_size=512, seed=2)
-    best, trials, infl = asha_async_pool_search(
+    best, trials, infl = asha_async_search(
         bins, codes, base, d_words=(8, 16, 32), d_ffs=(16, 32, 64),
         eta=2, min_epochs=2, n_workers=4)
     # overlap (infl >= 2) is scheduling-timing-dependent under co-tenant
@@ -297,96 +286,99 @@ def test_e16_invariant_row_is_all_true(spark, sf_dir):
 def test_asha_pool_rejects_bad_n_workers():
     """n_workers < 1 raises a named ValueError up front, not the
     ThreadPoolExecutor's unrelated max_workers error."""
-    import pytest
-    from scardina_spark.model.search import asha_async_pool_search
     codes = _pool_codes()
     with pytest.raises(ValueError, match="n_workers"):
-        asha_async_pool_search([("x", 10), ("y", 10)], codes,
-                               n_workers=0)
+        asha_async_search([("x", 10), ("y", 10)], codes, n_workers=0)
 
 
-def _spark_codes():
-    return _pool_codes()
+@pytest.mark.parametrize("search", [asha_search, asha_async_search])
+@pytest.mark.parametrize("param", [dict(eta=1), dict(min_epochs=0)])
+def test_asha_rejects_ladder_that_never_ends(search, param):
+    """eta < 2 never shrinks a rung and min_epochs < 1 never grows a
+    budget, so the ladder would never reach its final rung: both
+    drivers reject them up front, naming the parameter."""
+    with pytest.raises(ValueError, match=next(iter(param))):
+        search([("x", 10), ("y", 10)], _pool_codes(), **param)
 
 
-def test_grid_search_spark_matches_serial(spark):
-    """Distribution changes WHERE a trial runs, never the schedule or
-    semantics: the Spark-distributed grid runs the same trials in the
-    same order with losses equal to float32 BLAS kernel noise
-    (executor workers are separate processes whose GEMM kernels may
-    re-associate), and picks the same winner."""
-    import math
+def test_asha_async_failing_trial_raises(monkeypatch):
+    """One trial raising must end the search with that exception, not
+    leave the other workers waiting forever for a completion.  Checked
+    with a joined thread and a timeout, so a hang fails the test."""
+    from scardina_spark.model import search
 
-    import numpy as np
+    real = search._run_trial
 
-    from scardina_spark.model.search import grid_search_spark
-    codes = _spark_codes()
+    def flaky(input_bins, cfg, train, val):
+        if (cfg.d_word, cfg.d_ff) == (8, 16):
+            raise RuntimeError("trial (8, 16) failed")
+        return real(input_bins, cfg, train, val)
+
+    monkeypatch.setattr(search, "_run_trial", flaky)
+    raised = []
+
+    def call():
+        try:
+            asha_async_search([("x", 10), ("y", 10)], _pool_codes(),
+                              TrainConfig(epochs=4, batch_size=512,
+                                          seed=2),
+                              d_words=(8, 16), d_ffs=(16, 32),
+                              n_workers=2)
+        except RuntimeError as exc:
+            raised.append(exc)
+
+    th = threading.Thread(target=call, daemon=True)
+    th.start()
+    th.join(120)
+    assert not th.is_alive(), "async ASHA hung after a failing trial"
+    assert raised and "(8, 16)" in str(raised[0])
+
+
+# strategy -> (search, kwargs, epochs, schedule key of a trial row)
+_PARITY = {
+    "grid": (grid_search, dict(d_words=(8, 16), d_ffs=(16, 32)), 4,
+             lambda t: (t.cfg.d_word, t.cfg.d_ff)),
+    "asha": (asha_search, dict(d_words=(8, 16), d_ffs=(16, 32), eta=2,
+                               min_epochs=2), 8,
+             lambda t: (t.cfg.d_word, t.cfg.d_ff, t.rung, t.epochs,
+                        t.promoted)),
+    "asha_async": (asha_async_search,
+                   dict(d_words=(8, 16), d_ffs=(16, 32), eta=2,
+                        min_epochs=2, n_workers=1), 8,
+                   lambda t: (t.job, t.rung, t.epochs, t.cfg.d_word,
+                              t.cfg.d_ff, t.promoted_from)),
+    "tpe": (tpe_search, dict(d_words=(8, 16), d_ffs=(16, 32, 48),
+                             n_trials=4, n_startup=2), 2,
+            lambda t: (t.trial, t.cfg.d_word, t.cfg.d_ff, t.startup)),
+}
+
+
+@pytest.mark.parametrize("strategy", list(_PARITY))
+def test_spark_runner_matches_local(spark, strategy):
+    """Distribution changes WHERE a trial runs, never a scheduling
+    decision: every strategy on the Spark runner runs the same trial
+    schedule as on the local runner, with losses equal to float32 BLAS
+    kernel noise (executor workers are separate processes whose GEMM
+    kernels may re-associate), and picks the same winner."""
+    search, kw, epochs, key = _PARITY[strategy]
+    codes = _pool_codes()
     bins = [("x", 10), ("y", 10)]
-    base = TrainConfig(epochs=4, batch_size=512, seed=2)
-    kw = dict(d_words=(8, 16), d_ffs=(16, 32))
-    m_s, t_s = grid_search(bins, codes, base, **kw)
-    m_d, t_d = grid_search_spark(spark, bins, codes, base, **kw)
-    assert [(t.cfg.d_word, t.cfg.d_ff) for t in t_s] == \
-           [(t.cfg.d_word, t.cfg.d_ff) for t in t_d]
+    base = TrainConfig(epochs=epochs, batch_size=512, seed=2)
+    local = search(bins, codes, base, **kw)
+    dist = search(bins, codes, base, spark=spark, **kw)
+    (m_s, t_s), (m_d, t_d) = local[:2], dist[:2]
+    assert [key(t) for t in t_s] == [key(t) for t in t_d]
     for a, b in zip(t_s, t_d):
         assert math.isclose(a.val_loss, b.val_loss, rel_tol=1e-5)
         assert math.isclose(a.train_loss, b.train_loss, rel_tol=1e-5)
     assert (m_s.cfg.d_word, m_s.cfg.d_ff) == (m_d.cfg.d_word,
                                               m_d.cfg.d_ff)
-    # the shipped-back winner is the same trained model to kernel noise
-    np.testing.assert_allclose(m_s.W1, m_d.W1, rtol=1e-4, atol=1e-6)
-    np.testing.assert_allclose(m_s.W2, m_d.W2, rtol=1e-4, atol=1e-6)
-
-
-def test_asha_search_spark_matches_serial(spark):
-    """Per-rung Spark jobs + the identical driver-side promotion rule
-    == the serial sync-ASHA run: same (config, rung, budget, promoted)
-    trial table, losses to kernel noise, same winner."""
-    import math
-
-    from scardina_spark.model.search import (asha_search,
-                                             asha_search_spark)
-    codes = _spark_codes()
-    bins = [("x", 10), ("y", 10)]
-    base = TrainConfig(epochs=8, batch_size=512, seed=2)
-    kw = dict(d_words=(8, 16), d_ffs=(16, 32), eta=2, min_epochs=2)
-    m_s, t_s = asha_search(bins, codes, base, **kw)
-    m_d, t_d = asha_search_spark(spark, bins, codes, base, **kw)
-    key = lambda t: (t.cfg.d_word, t.cfg.d_ff, t.rung, t.epochs,
-                     t.promoted)
-    assert [key(t) for t in t_s] == [key(t) for t in t_d]
-    for a, b in zip(t_s, t_d):
-        assert math.isclose(a.val_loss, b.val_loss, rel_tol=1e-5)
-    assert (m_s.cfg.d_word, m_s.cfg.d_ff) == (m_d.cfg.d_word,
-                                              m_d.cfg.d_ff)
-
-
-def test_asha_async_spark_matches_serialized_at_one_worker(spark):
-    """The cluster-wide async pool at n_workers=1 IS the serialized
-    async-ASHA driver: identical (job, rung, budget, config,
-    promoted_from) schedule, losses to cross-process kernel noise,
-    same winner — distribution changes WHERE a trial trains, never a
-    scheduling decision."""
-    import math
-
-    from scardina_spark.model.search import (asha_async_search,
-                                             asha_async_spark_search)
-    codes = _spark_codes()
-    bins = [("x", 10), ("y", 10)]
-    base = TrainConfig(epochs=8, batch_size=512, seed=2)
-    kw = dict(d_words=(8, 16), d_ffs=(16, 32), eta=2, min_epochs=2)
-    m_s, t_s = asha_async_search(bins, codes, base, **kw)
-    m_d, t_d, infl = asha_async_spark_search(spark, bins, codes, base,
-                                             n_workers=1, **kw)
-    assert infl == 1
-    key = lambda t: (t.job, t.rung, t.epochs, t.cfg.d_word,
-                     t.cfg.d_ff, t.promoted_from)
-    assert [key(t) for t in t_s] == [key(t) for t in t_d]
-    for a, b in zip(t_s, t_d):
-        assert math.isclose(a.val_loss, b.val_loss, rel_tol=1e-5)
-        assert math.isclose(a.train_loss, b.train_loss, rel_tol=1e-5)
-    assert (m_s.cfg.d_word, m_s.cfg.d_ff) == (m_d.cfg.d_word,
-                                              m_d.cfg.d_ff)
+    if strategy == "asha_async":
+        assert dist[2] == 1
+    if strategy == "grid":
+        # the shipped-back winner is the same trained model to noise
+        np.testing.assert_allclose(m_s.W1, m_d.W1, rtol=1e-4, atol=1e-6)
+        np.testing.assert_allclose(m_s.W2, m_d.W2, rtol=1e-4, atol=1e-6)
 
 
 def test_asha_async_spark_concurrent_invariants(spark):
@@ -395,13 +387,12 @@ def test_asha_async_spark_concurrent_invariants(spark):
     hold for every timing — grid-covering unique rung-0 starts, unique
     promotions, nested rungs, final-rung argmin winner — and the
     driver pool genuinely overlapped submissions."""
-    from scardina_spark.model.search import asha_async_spark_search
-    codes = _spark_codes()
+    codes = _pool_codes()
     bins = [("x", 10), ("y", 10)]
     base = TrainConfig(epochs=8, batch_size=512, seed=2)
-    best, trials, infl = asha_async_spark_search(
-        spark, bins, codes, base, d_words=(8, 16), d_ffs=(16, 32),
-        eta=2, min_epochs=2, n_workers=4)
+    best, trials, infl = asha_async_search(
+        bins, codes, base, d_words=(8, 16), d_ffs=(16, 32),
+        eta=2, min_epochs=2, n_workers=4, spark=spark)
     grid = {(dw, dff) for dw in (8, 16) for dff in (16, 32)}
     starts = [(t.cfg.d_word, t.cfg.d_ff) for t in trials if t.rung == 0]
     assert sorted(starts) == sorted(grid)
