@@ -9,6 +9,10 @@ Prints ONE JSON line:
 Protocol mirrors BASELINE.md: sample-backed cardinality estimation with
 q-error percentiles + mean ms/query, plus the heavy data-pipeline
 operators (join sampling prep, grouped agg, minhash dedup, cosine top-k).
+
+This is the accuracy and coverage run: each stage runs once and its time
+is one plain reading.  Speed is measured by perfbench/ (medians, spreads,
+per-layer split), the benchmark of record.
 """
 
 from __future__ import annotations
@@ -38,7 +42,8 @@ from scardina_spark.benchmarks import (  # noqa: E402
 from scardina_spark.catalog import build_tpch_schema, load_table, load_tables  # noqa: E402
 from scardina_spark.estimators import (  # noqa: E402
     ExactEstimator, SampleEstimator, prepare_tree_sample)
-from scardina_spark.estimators.sample import spanning_tree  # noqa: E402
+from scardina_spark.estimators.sample import (  # noqa: E402
+    UnsupportedQueryError, spanning_tree)
 from scardina_spark.operators import dedup as DD  # noqa: E402
 from scardina_spark.operators import similarity as SIM  # noqa: E402
 from scardina_spark.queries import (  # noqa: E402
@@ -71,6 +76,18 @@ def _exact_topk_sets_np(emb, qids, k: int) -> dict:
     return out
 
 
+def _mean_recall(rows, exact_sets, k: int) -> float:
+    """Mean recall@k of batched top-k ``rows`` (``q_idx`` = position of
+    the query in ``sorted(exact_sets)``) against the exact id sets."""
+    qids = sorted(exact_sets)
+    by_q: dict[int, set] = {}
+    for r in rows:
+        by_q.setdefault(r["q_idx"], set()).add(r["vec_id"])
+    tot = sum(len(by_q.get(i, set()) & exact_sets[q][1]) / k
+              for i, q in enumerate(qids))
+    return round(tot / len(qids), 3)
+
+
 def pct(xs: list[float], p: float) -> float:
     if not xs:
         return float("nan")
@@ -89,72 +106,51 @@ def ht_pair(checker, sql):
     """One estimate_with_stderr pass shared by every clamp over the
     same query; None when the checker can't answer (clamp then falls
     back to its own path, which returns the learned estimate)."""
-    from scardina_spark.estimators.sample import UnsupportedQueryError
     try:
         return checker.estimate_with_stderr(sql)
     except (UnsupportedQueryError, ValueError):
         return None
 
 
-def steal_snapshot():
-    """(steal_jiffies, demanded_jiffies) from /proc/stat, or None.
-
-    Hypervisor steal is the one co-tenant signal load average cannot
-    see: a host-level neighbour starves this VM's vCPUs while the
-    in-VM process table stays empty (measured r12: 10-37% steal turned
-    a 200 s bench into >1250 s with in-VM load 0.03 at start).
-    demanded = non-idle + steal, so the ratio reads "fraction of the
-    CPU we asked for that the host withheld" — an all-core average
-    would dilute a starved 4-core driver stage with 28 idle vCPUs."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return steal, sum(vals) - idle
-    except Exception:
-        return None
-
-
-def steal_pct(before, after):
-    if not before or not after or after[1] <= before[1]:
-        return None
-    return round(100.0 * (after[0] - before[0]) / (after[1] - before[1]), 1)
-
-
-def spin_rate(seconds: float = 0.3) -> float:
-    """Single-core spin throughput (M iters/s) — a host-speed canary.
-
-    Steal accounts for withheld scheduling quanta but not SMT-sibling
-    or memory-bandwidth pollution from host neighbours; that shows up
-    as a depressed spin rate on an otherwise 'clean' box (measured
-    r12: 2x swings at <2% steal)."""
-    x = 0
-    n = 0
-    t0 = time.perf_counter()
-    deadline = t0 + seconds
-    while time.perf_counter() < deadline:
-        for _ in range(100000):
-            x += 1
-        n += 100000
-    return round(n / (time.perf_counter() - t0) / 1e6, 1)
+def score_learned(models, checker, suite, truths, clamps):
+    """Score a learned estimator over ``suite``: per-query q-errors of the
+    raw estimate and of each clamp in ``clamps`` (name -> HybridEstimator,
+    applied in order against one shared ``checker`` HT pass), plus
+    per-query latency in ms.  A list of ``models`` answers with the
+    geomean of the models that support the query.  Unsupported queries
+    are skipped."""
+    several = isinstance(models, list)
+    qs = {"raw": [], **{tag: [] for tag in clamps}}
+    ms = []
+    for name, sql in suite.items():
+        ests = []
+        t0 = time.perf_counter()
+        for m in models if several else [models]:
+            try:
+                ests.append(m.estimate(sql))
+            except (UnsupportedQueryError, ValueError):
+                continue
+        if not ests:
+            continue
+        ms.append((time.perf_counter() - t0) * 1000)
+        e = (math.exp(sum(math.log(max(x, 1e-12)) for x in ests)
+                      / len(ests)) if several else ests[0])
+        pair = ht_pair(checker, sql)
+        qs["raw"].append(qerr(e, truths[name]))
+        for tag, hyb in clamps.items():
+            qs[tag].append(qerr(hyb.clamp(sql, e, ht_se=pair), truths[name]))
+    return qs, ms
 
 
-def mem_bw_gbps(mb: int = 256, reps: int = 4) -> float:
-    """Single-core memory-copy bandwidth (GB/s) — the canary for host
-    neighbours polluting the shared memory bus: a register-only spin
-    reads full speed while memory-heavy Spark stages run 3-5x slow
-    (measured r12: a 33 s first attempt vs 7 s retry at ~0% steal)."""
-    import numpy as np
-    a = np.ones(mb * 131072, dtype=np.float64)  # mb MiB
-    b = np.empty_like(a)
-    np.copyto(b, a)  # touch pages
-    t0 = time.perf_counter()
-    for _ in range(reps):
-        np.copyto(b, a)
-    dt = time.perf_counter() - t0
-    return round(reps * a.nbytes / dt / 1e9, 1)
+def record_learned(extras, prefix, qs) -> None:
+    """Supported count, p50/p90/max of the raw q-errors and p90/max of
+    each clamp's, under ``<prefix>_...`` extras keys."""
+    extras[f"{prefix}_n_supported"] = len(qs["raw"])
+    extras[f"{prefix}_qerror_p50"] = round(pct(qs["raw"], 0.5), 4)
+    for tag, vals in qs.items():
+        key = prefix if tag == "raw" else f"{prefix}_{tag}"
+        extras[f"{key}_qerror_p90"] = round(pct(vals, 0.9), 4)
+        extras[f"{key}_qerror_max"] = round(max(vals), 4)
 
 
 def main() -> None:
@@ -166,104 +162,18 @@ def main() -> None:
     timings: dict[str, float] = {}
     extras: dict[str, object] = {}
 
-    # Self-defense against co-tenant load (the r9/r10 lesson: one burst
-    # on a shared box poisons the committed artifact while the code is
-    # untouched).  bench_bands.json maps stage -> clean-run ceiling
-    # seconds; a stage that exceeds its ceiling is re-run ONCE (total
-    # re-run budget bounds added wall), the MINIMUM is reported as the
-    # stage time, and both readings plus the 1-min load before each
-    # attempt land in extras["stage_reruns"] as the load evidence.
-    bands_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "bench_bands.json")
-    bands: dict[str, float] = {}
-    if os.path.exists(bands_path):
-        with open(bands_path) as f:
-            bands = {k: float(v) for k, v in json.load(f).items()}
-    rerun_budget = [4]
-    stage_reruns: dict[str, dict] = {}
-    stage_steal: dict[str, float] = {}
-    run_steal0 = steal_snapshot()
-    extras["spin_M_per_s_start"] = spin_rate()
-    extras["mem_GBps_start"] = mem_bw_gbps()
-    try:
-        extras["load_1min_start"] = round(os.getloadavg()[0], 2)
-    except OSError:
-        pass
-
     def timed(name: str, fn):
-        try:
-            load0 = round(os.getloadavg()[0], 2)
-        except OSError:
-            load0 = None
-        st0 = steal_snapshot()
         t0 = time.perf_counter()
         out = fn()
-        dt = time.perf_counter() - t0
-        sp0 = steal_pct(st0, steal_snapshot())
-        # evidence trail: a stage that ran under >2% hypervisor steal
-        # was externally starved even if it stayed inside its band
-        if sp0 is not None and sp0 > 2.0:
-            stage_steal[name] = sp0
-        band = bands.get(name)
-        # re-run only when the overrun is worth a retry: a marginal
-        # excess on a small stage must not drain the budget the big
-        # stages need (the first live run spent 2 of 4 retries on
-        # <2 s overruns and had none left for a 45 s one)
-        if (band is not None and dt > band and dt - band > 5.0
-                and rerun_budget[0] > 0):
-            rerun_budget[0] -= 1
-            try:
-                load1 = round(os.getloadavg()[0], 2)
-            except OSError:
-                load1 = None
-            st1 = steal_snapshot()
-            # memory-bus health at the retry decision: a depressed copy
-            # rate here says the first attempt ran under bus pollution
-            bw1 = mem_bw_gbps(mb=128, reps=2)
-            t1 = time.perf_counter()
-            out = fn()  # stages are idempotent; keep the retry's result
-            dt2 = time.perf_counter() - t1
-            sp1 = steal_pct(st1, steal_snapshot())
-            stage_reruns[name] = {
-                "first_sec": round(dt, 2), "retry_sec": round(dt2, 2),
-                "band_sec": band, "load_first": load0,
-                "load_retry": load1, "steal_pct_first": sp0,
-                "steal_pct_retry": sp1, "mem_GBps_at_retry": bw1}
-            dt = min(dt, dt2)
-        timings[name] = round(dt, 4)
+        timings[name] = round(time.perf_counter() - t0, 4)
         return out
 
     tables = load_tables(spark, sf_dir)
     sg = build_tpch_schema()
 
-    # A band retry re-enters a stage fn; stages that build caches/
-    # checkpoints must first drop the previous attempt's storage, or the
-    # retry runs against (and the rest of the bench inherits) leaked
-    # blocks — measured r12: one retried prep left a full sample cache
-    # pinned for the remaining 50+ stages.
-    def self_cleaning_prep(build):
-        holder: list = []
-
-        def fn():
-            for old in holder:
-                try:
-                    old.sample.unpersist()
-                except Exception:
-                    pass
-                try:
-                    old.release()
-                except Exception:
-                    pass
-            holder.clear()
-            out = build()
-            holder.append(out)
-            return out
-        return fn
-
     # 1. prep: materialize the UR join sample (fanouts + weights + sample)
-    ts = timed("prep_join_sample", self_cleaning_prep(
-        lambda: prepare_tree_sample(
-            spanning_tree(sg, "lineitem"), tables, "lineitem", seed=42)))
+    ts = timed("prep_join_sample", lambda: prepare_tree_sample(
+        spanning_tree(sg, "lineitem"), tables, "lineitem", seed=42))
     extras["join_sample_rows"] = ts.n_sample
     extras["full_join_size"] = ts.join_size
 
@@ -340,7 +250,6 @@ def main() -> None:
     # join sample (the reference's headline path), low-cardinality model
     # columns; queries with predicates outside the model are skipped and
     # counted
-    from scardina_spark.estimators.sample import UnsupportedQueryError
     from scardina_spark.model import TrainConfig as _TC
     from scardina_spark.model.join_bridge import train_join_estimator
     # every suite predicate column is modeled; near-continuous columns
@@ -404,33 +313,13 @@ def main() -> None:
     from scardina_spark.estimators import HybridEstimator
     nar_hyb = HybridEstimator(nar_ur, est)   # est: localized HT (2a)
     nar_ci = HybridEstimator(nar_ur, est, name="nar-ci", mode="ci")
-    jn_q, jn_hq, jn_cq, jn_ms = [], [], [], []
-    t0 = time.perf_counter()
-    for name, sql in suite.items():
-        try:
-            tq0 = time.perf_counter()
-            e = nar_ur.estimate(sql)
-            jn_ms.append((time.perf_counter() - tq0) * 1000)
-            pair = ht_pair(est, sql)
-            h = nar_hyb.clamp(sql, e, ht_se=pair)
-            ci = nar_ci.clamp(sql, e, ht_se=pair)
-        except (UnsupportedQueryError, ValueError):
-            continue
-        jn_q.append(qerr(e, truths[name]))
-        jn_hq.append(qerr(h, truths[name]))
-        jn_cq.append(qerr(ci, truths[name]))
-    timings["joblight_nar_est"] = round(time.perf_counter() - t0, 4)
-    extras["jl_nar_n_supported"] = len(jn_q)
-    extras["jl_nar_qerror_p50"] = round(pct(jn_q, 0.5), 4)
-    extras["jl_nar_qerror_p90"] = round(pct(jn_q, 0.9), 4)
-    extras["jl_nar_qerror_max"] = round(max(jn_q), 4)
+    jn_q, jn_ms = timed("joblight_nar_est", lambda: score_learned(
+        nar_ur, est, suite, truths, {"hybrid": nar_hyb, "ci": nar_ci}))
+    # hybrid: sample-verified zero clamp — the max collapses when the only
+    # tail queries are smoothed estimates of empty results; ci: learned
+    # estimate confined to the sample's 3-sigma band
+    record_learned(extras, "jl_nar", jn_q)
     extras["jl_nar_mean_ms_per_query"] = round(sum(jn_ms) / len(jn_ms), 2)
-    # sample-verified zero clamp: the max collapses when the only tail
-    # queries are smoothed estimates of empty results
-    extras["jl_nar_hybrid_qerror_max"] = round(max(jn_hq), 4)
-    # CI clamp: learned estimate confined to the sample's 3-sigma band
-    extras["jl_nar_ci_qerror_p90"] = round(pct(jn_cq, 0.9), 4)
-    extras["jl_nar_ci_qerror_max"] = round(max(jn_cq), 4)
 
     # plan-quality: p-error of the learned cards under the C_out cost
     # model over the FULL BUSHY plan space (the reference's CEB/Postgres
@@ -661,20 +550,7 @@ def main() -> None:
             sample_size=1000, max_rows=32_000, fact_threshold=8,
             seed=42, localize=True)
 
-    cin_holder: list = []
-
-    def build_cin_clean():
-        for old in cin_holder:
-            for ts_ in old.samples:
-                try:
-                    ts_.sample.unpersist()
-                except Exception:
-                    pass
-        cin_holder.clear()
-        est_ = build_cin()
-        cin_holder.append(est_)
-        return est_
-    nar_cin = timed("joblight_cin_train", build_cin_clean)
+    nar_cin = timed("joblight_cin_train", build_cin)
     # gated arbiter since round 4 (same protocol as the jm NAR hybrid):
     # the zero-only hybrid tracked the model's tail (sf0.01 measured
     # hybrid 2.41 where sf0.1 sat at 1.65); the gate bounds it by
@@ -683,30 +559,10 @@ def main() -> None:
                               mode="arbiter")
     extras["jl_cin_hybrid_protocol"] = "gated-arbiter-2x"
     cin_ci = HybridEstimator(nar_cin, est, name="cin-ci", mode="ci")
-    cq, chq, ccq, cms = [], [], [], []
-    t0 = time.perf_counter()
-    for name, sql in suite.items():
-        try:
-            tq0 = time.perf_counter()
-            e = nar_cin.estimate(sql)
-            cms.append((time.perf_counter() - tq0) * 1000)
-            pair = ht_pair(est, sql)
-            h = cin_hyb.clamp(sql, e, ht_se=pair)
-            ci = cin_ci.clamp(sql, e, ht_se=pair)
-        except (UnsupportedQueryError, ValueError):
-            continue
-        cq.append(qerr(e, truths[name]))
-        chq.append(qerr(h, truths[name]))
-        ccq.append(qerr(ci, truths[name]))
-    timings["joblight_cin_est"] = round(time.perf_counter() - t0, 4)
-    extras["jl_cin_n_supported"] = len(cq)
-    extras["jl_cin_qerror_p50"] = round(pct(cq, 0.5), 4)
-    extras["jl_cin_qerror_p90"] = round(pct(cq, 0.9), 4)
-    extras["jl_cin_qerror_max"] = round(max(cq), 4)
+    cq, cms = timed("joblight_cin_est", lambda: score_learned(
+        nar_cin, est, suite, truths, {"hybrid": cin_hyb, "ci": cin_ci}))
+    record_learned(extras, "jl_cin", cq)
     extras["jl_cin_mean_ms_per_query"] = round(sum(cms) / len(cms), 2)
-    extras["jl_cin_hybrid_qerror_max"] = round(max(chq), 4)
-    extras["jl_cin_ci_qerror_p90"] = round(pct(ccq, 0.9), 4)
-    extras["jl_cin_ci_qerror_max"] = round(max(ccq), 4)
 
     # 2c. job-m-shape suite: a second fact table (derived `shipments`)
     # with TWO parallel FK edges into supplier — the reference's job-m
@@ -746,20 +602,7 @@ def main() -> None:
                 se.add(ts_)
         return se
 
-    jm_prep_holder: list = []
-
-    def prep_jm_clean():
-        for old in jm_prep_holder:
-            for ts_ in old.samples:
-                try:
-                    ts_.sample.unpersist()
-                except Exception:
-                    pass
-        jm_prep_holder.clear()
-        se = prep_jm()
-        jm_prep_holder.append(se)
-        return se
-    jm_ht = timed("jm_prep_samples", prep_jm_clean)
+    jm_ht = timed("jm_prep_samples", prep_jm)
     rep_jm = timed("jm_est_ht", lambda: run_benchmark(
         jm_ht, jm_suite, truths=jm_truths))
     s_jm = rep_jm.summary
@@ -795,29 +638,10 @@ def main() -> None:
                              mode="arbiter")
     extras["jm_nar_hybrid_protocol"] = "gated-arbiter-2x"
     jm_cicl = HybridEstimator(None, jm_ht, name="jm-ci", mode="ci")
-    ju, juh, juc = [], [], []
-    t0 = time.perf_counter()
-    for name, sql in jm_suite.items():
-        ests = []
-        for m in jm_urs:
-            try:
-                ests.append(m.estimate(sql))
-            except (UnsupportedQueryError, ValueError):
-                continue
-        if not ests:
-            continue
-        e = math.exp(sum(math.log(max(x, 1e-12)) for x in ests)
-                     / len(ests))
-        ju.append(qerr(e, jm_truths[name]))
-        pair = ht_pair(jm_ht, sql)
-        juh.append(qerr(jm_arb.clamp(sql, e, ht_se=pair), jm_truths[name]))
-        juc.append(qerr(jm_cicl.clamp(sql, e, ht_se=pair), jm_truths[name]))
-    timings["jm_nar_est"] = round(time.perf_counter() - t0, 4)
-    extras["jm_nar_n_supported"] = len(ju)
-    extras["jm_nar_qerror_p50"] = round(pct(ju, 0.5), 4)
-    extras["jm_nar_qerror_max"] = round(max(ju), 4)
-    extras["jm_nar_hybrid_qerror_max"] = round(max(juh), 4)
-    extras["jm_nar_ci_qerror_max"] = round(max(juc), 4)
+    ju, _ = timed("jm_nar_est", lambda: score_learned(
+        jm_urs, jm_ht, jm_suite, jm_truths,
+        {"hybrid": jm_arb, "ci": jm_cicl}))
+    record_learned(extras, "jm_nar", ju)
 
     # CIN: BOTH shipments parallel-edge subschemas (cartesian expansion)
     # + the chain partners; multi-fact queries stitch across models
@@ -839,44 +663,15 @@ def main() -> None:
             ts_.localize()
         return cin
 
-    jm_cin_holder: list = []
-
-    def build_jm_cin_clean():
-        for old in jm_cin_holder:
-            for ts_ in old.samples:
-                try:
-                    ts_.sample.unpersist()
-                except Exception:
-                    pass
-        jm_cin_holder.clear()
-        est_ = build_jm_cin()
-        jm_cin_holder.append(est_)
-        return est_
-    jm_cin = timed("jm_cin_train", build_jm_cin_clean)
+    jm_cin = timed("jm_cin_train", build_jm_cin)
     jm_cin_ci = HybridEstimator(jm_cin, jm_ht, name="jm-cin-ci", mode="ci")
     jm_cin_arb = HybridEstimator(jm_cin, jm_ht, name="jm-cin-arbiter",
                                  mode="arbiter")
-    jc, jcc, jch = [], [], []
-    t0 = time.perf_counter()
-    for name, sql in jm_suite.items():
-        try:
-            e = jm_cin.estimate(sql)
-            pair = ht_pair(jm_ht, sql)
-            ci = jm_cin_ci.clamp(sql, e, ht_se=pair)
-            h = jm_cin_arb.clamp(sql, e, ht_se=pair)
-        except (UnsupportedQueryError, ValueError):
-            continue
-        jc.append(qerr(e, jm_truths[name]))
-        jcc.append(qerr(ci, jm_truths[name]))
-        jch.append(qerr(h, jm_truths[name]))
-    timings["jm_cin_est"] = round(time.perf_counter() - t0, 4)
-    extras["jm_cin_n_supported"] = len(jc)
-    extras["jm_cin_qerror_p50"] = round(pct(jc, 0.5), 4)
-    extras["jm_cin_qerror_p90"] = round(pct(jc, 0.9), 4)
-    extras["jm_cin_qerror_max"] = round(max(jc), 4)
-    extras["jm_cin_ci_qerror_max"] = round(max(jcc), 4)
+    jc, _ = timed("jm_cin_est", lambda: score_learned(
+        jm_cin, jm_ht, jm_suite, jm_truths,
+        {"ci": jm_cin_ci, "hybrid": jm_cin_arb}))
+    record_learned(extras, "jm_cin", jc)
     extras["jm_cin_hybrid_protocol"] = "gated-arbiter-2x"
-    extras["jm_cin_hybrid_qerror_max"] = round(max(jch), 4)
 
     # 2d. the reference's FLAGSHIP workload end-to-end: the actual
     # job-light.csv 70-query suite (shipped verbatim,
@@ -900,9 +695,7 @@ def main() -> None:
             for nme, df in synth_job_light_tables(spark, scale=1.0,
                                                   seed=42).items():
                 p = os.path.join(imdb_td, f"{nme}.parquet")
-                # overwrite so a band retry of this stage regenerates
-                # instead of failing on the existing path
-                df.write.mode("overwrite").parquet(p)
+                df.write.parquet(p)
                 out[nme] = spark.read.parquet(p)
             return out
         imdb_tables = timed("imdb_jl_gen", gen_imdb)
@@ -923,10 +716,9 @@ def main() -> None:
                        for nme, sql in imdb_suite.items()}
         icon.close()
         imdb_sg = build_job_light_schema()
-        imdb_ts = timed("imdb_jl_prep", self_cleaning_prep(
-            lambda: prepare_tree_sample(
-                spanning_tree(imdb_sg, "cast_info"), imdb_tables,
-                "cast_info", n_max=200_000, seed=42)))
+        imdb_ts = timed("imdb_jl_prep", lambda: prepare_tree_sample(
+            spanning_tree(imdb_sg, "cast_info"), imdb_tables,
+            "cast_info", n_max=200_000, seed=42))
         extras["imdb_jl_join_size"] = float(imdb_ts.join_size)
         extras["imdb_jl_fanout_ratio"] = round(
             imdb_ts.join_size / max(imdb_tables["cast_info"].count(), 1),
@@ -955,24 +747,10 @@ def main() -> None:
         imdb_arb = HybridEstimator(imdb_nar, imdb_ht, name="imdb-arbiter",
                                    mode="arbiter")
         extras["imdb_nar_protocol"] = "gated-arbiter-2x"
-        iq, ihq = [], []
-        t0 = time.perf_counter()
-        for nme, sql in imdb_suite.items():
-            try:
-                e = imdb_nar.estimate(sql)
-                pair = ht_pair(imdb_ht, sql)
-                h = imdb_arb.clamp(sql, e, ht_se=pair)
-            except (UnsupportedQueryError, ValueError):
-                continue
-            iq.append(qerr(e, imdb_truths[nme]))
-            ihq.append(qerr(h, imdb_truths[nme]))
-        timings["imdb_jl_nar_est"] = round(time.perf_counter() - t0, 4)
-        extras["imdb_nar_n_supported"] = len(iq)
-        extras["imdb_nar_qerror_p50"] = round(pct(iq, 0.5), 4)
-        extras["imdb_nar_qerror_p90"] = round(pct(iq, 0.9), 4)
-        extras["imdb_nar_qerror_max"] = round(max(iq), 4)
-        extras["imdb_nar_hybrid_qerror_p90"] = round(pct(ihq, 0.9), 4)
-        extras["imdb_nar_hybrid_qerror_max"] = round(max(ihq), 4)
+        iq, _ = timed("imdb_jl_nar_est", lambda: score_learned(
+            imdb_nar, imdb_ht, imdb_suite, imdb_truths,
+            {"hybrid": imdb_arb}))
+        record_learned(extras, "imdb_nar", iq)
         imdb_ts.sample.unpersist()
     finally:
         shutil.rmtree(imdb_td, ignore_errors=True)
@@ -1283,12 +1061,8 @@ def main() -> None:
         many = topk_cosine_lsh_many(
             emb, [exact_sets[q][0] for q in qids], 10,
             planes=hyperplanes(64, 8, seed=42)).collect()
-        by_q: dict[int, set] = {}
-        for r in many:
-            by_q.setdefault(r["q_idx"], set()).add(r["vec_id"])
-        tot = sum(len(by_q.get(i, set()) & exact_sets[q][1]) / 10.0
-                  for i, q in enumerate(qids))
-        extras["ann_lsh_mean10_recall_at_10"] = round(tot / 10.0, 3)
+        extras["ann_lsh_mean10_recall_at_10"] = _mean_recall(
+            many, exact_sets, 10)
         # single-bucket probe kept for the ledger: the cheapest scan,
         # and the recall it gives away vs the derived default
         sp = topk_cosine_lsh(emb, qv, 10,
@@ -1394,12 +1168,8 @@ def main() -> None:
         many = topk_cosine_ivfpq_many(
             ivfx, pqx, [exact_sets[q][0] for q in qids], e2, 10,
             nprobe=3, shortlist=sl).collect()
-        by_q: dict[int, set] = {}
-        for r in many:
-            by_q.setdefault(r["q_idx"], set()).add(r["vec_id"])
-        tot = sum(len(by_q.get(i, set()) & exact_sets[q][1]) / 10.0
-                  for i, q in enumerate(qids))
-        extras["ivfpq_mean10_recall_at_10"] = round(tot / 10.0, 3)
+        extras["ivfpq_mean10_recall_at_10"] = _mean_recall(
+            many, exact_sets, 10)
         pqx.release()  # drop the index's checkpointed codes (r12)
     timed("pq_train_encode_search", run_pq)
 
@@ -1412,15 +1182,6 @@ def main() -> None:
             sum(r["distinct_est"] for r in rows), 2)
     timed("hll_distinct", run_hll)
 
-    if stage_reruns:
-        extras["stage_reruns"] = stage_reruns
-    if stage_steal:
-        extras["stage_steal_pct"] = stage_steal
-    run_sp = steal_pct(run_steal0, steal_snapshot())
-    if run_sp is not None:
-        extras["cpu_steal_pct_run"] = run_sp
-    extras["spin_M_per_s_end"] = spin_rate()
-    extras["mem_GBps_end"] = mem_bw_gbps()
     total = round(sum(timings.values()), 4)
     payload = {
         "metric": "total_bench_sec",
@@ -1440,7 +1201,6 @@ def main() -> None:
         json.dump(payload, f, indent=1, sort_keys=True)
     headline = [
         "jl_qerror_p50", "jl_qerror_p100", "jl_mean_ms_per_query",
-        "cpu_steal_pct_run",
         "jl_nar_hybrid_qerror_max", "jl_nar_mean_ms_per_query",
         "jl_cin_hybrid_qerror_max", "jl_cin_mean_ms_per_query",
         "jm_ht_qerror_p100", "jm_nar_hybrid_qerror_max",

@@ -139,13 +139,13 @@ class DistributedDomain(ColumnDomain):
         from pyspark.sql import functions as F  # noqa: PLC0415
 
         from ..functions.dictionary import CODE, VALUE  # noqa: PLC0415
-        from ..plans.predicates import predicates_to_column  # noqa: PLC0415
+        from ..plans.predicates import predicates_to_sql  # noqa: PLC0415
 
         short = self.name.split(".")[-1]
         d = self.dictionary.select(F.col(VALUE).alias(short), F.col(CODE))
         # Arrow localization: matching codes arrive as one int64 column,
         # not per-row JVM->Python Row objects
-        matched = (d.where(predicates_to_column(preds)).select(CODE)
+        matched = (d.where(predicates_to_sql(preds)).select(CODE)
                    .toPandas()[CODE].to_numpy(dtype=np.int64))
         matched = matched[matched != MASK_SLOT]
         # NULL-slot tri-state, mirroring the numpy valid_mask exactly:

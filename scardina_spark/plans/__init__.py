@@ -1,3 +1,3 @@
-from .predicates import Predicate, normalize_predicates, predicates_to_column  # noqa: F401
+from .predicates import Predicate, normalize_predicates  # noqa: F401
 from .parse import ParsedQuery, parse_query  # noqa: F401
 from .planner import QueryPlan, plan_query  # noqa: F401

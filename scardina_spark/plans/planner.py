@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schema import SchemaGraph
 from .parse import ParsedQuery
-from .predicates import Predicate, normalize_predicates, predicates_to_column
+from .predicates import Predicate, normalize_predicates, predicates_to_sql
 
 
 @dataclass
@@ -152,5 +152,5 @@ def execute_join(plan: QueryPlan, tables: dict[str, DataFrame]) -> DataFrame:
                 present.add(child)
 
     if plan.filters:
-        df = df.where(predicates_to_column(plan.filters, qualify=True))
+        df = df.where(predicates_to_sql(plan.filters, qualify=True))
     return df

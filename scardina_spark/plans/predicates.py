@@ -1,4 +1,4 @@
-"""Predicate model, normalization, and lowering to Spark Columns.
+"""Predicate model, normalization, and lowering to Spark SQL.
 
 Reference semantics (NOT code): scardina/common.py:635-645 (frozen predicate
 tuple), scardina/estimators.py:94-116 (op table: > < >= <= = != <> IN
@@ -8,10 +8,10 @@ scardina/estimators.py:476-549 (normalization: BETWEEN → >= AND <=,
 compilation).
 
 Two consumers:
-* execution on base data — ``predicates_to_column`` lowers a conjunction
-  to one ``pyspark.sql.Column``, which Catalyst pushes into the parquet
-  scan (predicate pushdown is the free win the reference's numpy loop
-  cannot have);
+* execution on Spark data — ``predicates_to_sql`` lowers a conjunction
+  to one SQL boolean expression for ``DataFrame.where`` (or inside an
+  aggregate), which Catalyst pushes into the parquet scan (predicate
+  pushdown is the free win the reference's numpy loop cannot have);
 * the estimator — predicates evaluated over a column's *dictionary* to
   produce valid masks (see estimators/masks.py).
 """
@@ -22,8 +22,6 @@ import math
 from dataclasses import dataclass
 from datetime import datetime
 from typing import Any
-
-from pyspark.sql import Column, functions as F
 
 COMPARISON_OPS = {">", "<", ">=", "<=", "=", "!=", "<>"}
 ALL_OPS = COMPARISON_OPS | {
@@ -134,55 +132,6 @@ def _like_to_rlike(pattern: str) -> str:
     return "^" + "".join(out) + "$"
 
 
-def predicate_to_column(p: Predicate, qualify: bool = False) -> Column:
-    """Lower one predicate to a Spark Column over base data.  With
-    ``qualify`` the prefixed sample layout (``table.column``) is used."""
-    o = p.o.upper()
-    if o == "OR":
-        col = predicate_to_column(p.branches[0], qualify)
-        for b in p.branches[1:]:
-            col = col | predicate_to_column(b, qualify)
-        return col
-    name = p.c if qualify else p.column
-    c = F.col(f"`{name}`")
-    if o in (">", "<", ">=", "<="):
-        return {">" : c > F.lit(p.v), "<": c < F.lit(p.v),
-                ">=": c >= F.lit(p.v), "<=": c <= F.lit(p.v)}[o]
-    if o in ("=", "=="):
-        return c == F.lit(p.v)
-    if o in ("!=", "<>"):
-        return c != F.lit(p.v)
-    if o == "IN":
-        return c.isin(list(p.v))
-    if o == "BETWEEN":
-        lo, hi = p.v
-        return c.between(F.lit(lo), F.lit(hi))
-    if o == "IS":
-        return c.isNull() if p.v is None else (c == F.lit(p.v))
-    if o == "IS NOT":
-        return c.isNotNull() if p.v is None else (c != F.lit(p.v))
-    if o == "LIKE":
-        return c.rlike(_like_to_rlike(p.v))
-    if o == "NOT LIKE":
-        return ~c.rlike(_like_to_rlike(p.v))
-    if o == "ALL_TRUE":
-        return F.lit(True)
-    if o == "ALL_FALSE":
-        return F.lit(False)
-    raise ValueError(f"unsupported op: {p.o}")
-
-
-def predicates_to_column(preds: list[Predicate], qualify: bool = False) -> Column:
-    """AND-conjunction (the only connective the reference's query language
-    has, scardina/run.py:796-917)."""
-    if not preds:
-        return F.lit(True)
-    col = predicate_to_column(preds[0], qualify)
-    for p in preds[1:]:
-        col = col & predicate_to_column(p, qualify)
-    return col
-
-
 # --- SQL-string lowering -----------------------------------------------------
 #
 # Building a Column expression tree costs one py4j round-trip per node;
@@ -191,10 +140,11 @@ def predicates_to_column(preds: list[Predicate], qualify: bool = False) -> Colum
 # the same pathology similarity._lit_vec fixed for vector literals).
 # Rendering the predicate as ONE SQL string hands the whole tree to
 # Catalyst's parser in a single call.  The parsed tree is
-# node-for-node the tree the Column API builds (typed literals: bare
-# integers, 'D'-suffixed doubles, TIMESTAMP '...' — so no
-# decimal-vs-double coercion drift), pinned by
-# test_predicates_sql_matches_column.
+# node-for-node the tree the Column API would build (typed literals:
+# bare integers, 'D'-suffixed doubles, TIMESTAMP '...' — so no
+# decimal-vs-double coercion drift), pinned bit-identical against a
+# Column-API reference kept in tests/column_lowering.py by
+# test_contrib_sql_matches_column_estimates and its _fast variant.
 
 
 def sql_literal(v: Any) -> str:
@@ -222,7 +172,9 @@ def sql_literal(v: Any) -> str:
 
 
 def predicate_to_sql(p: Predicate, qualify: bool = False) -> str:
-    """SQL form of :func:`predicate_to_column` — identical parsed tree."""
+    """Lower one predicate to a SQL boolean expression over Spark data.
+    With ``qualify`` the prefixed sample layout (``table.column``) is
+    used."""
     o = p.o.upper()
     if o == "OR":
         return "(" + " OR ".join(
@@ -260,8 +212,8 @@ def predicate_to_sql(p: Predicate, qualify: bool = False) -> str:
 
 
 def predicates_to_sql(preds: list[Predicate], qualify: bool = False) -> str:
-    """SQL form of :func:`predicates_to_column` (left-associated AND,
-    matching the Column API's fold order)."""
+    """AND-conjunction (the only connective the reference's query
+    language has, scardina/run.py:796-917), left-associated."""
     if not preds:
         return "TRUE"
     return " AND ".join(predicate_to_sql(p, qualify) for p in preds)

@@ -297,7 +297,7 @@ def _contrib_sql_vs_column_checked(est, names=None) -> int:
 
     from scardina_spark.benchmarks import job_light_suite, or_suite
     from scardina_spark.estimators.sample import _divisor_cols
-    from scardina_spark.plans.predicates import predicates_to_column
+    from column_lowering import predicates_to_column
 
     def column_contrib(ts, preds, q_tables):
         ind = predicates_to_column(preds, qualify=True)

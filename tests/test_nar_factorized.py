@@ -93,6 +93,40 @@ def test_distributed_domain_mask_is_packed(spark):
         ((n // 2) >= (n - n // 4))
 
 
+def test_distributed_domain_string_mask_matches_numpy(spark):
+    """LIKE / NOT LIKE / IN on a string dictionary evaluate Spark-side
+    (SQL RLIKE / IN) to exactly the codes a re/NumPy pass over the sorted
+    values selects — '.' in a LIKE pattern is literal, '_' one char."""
+    import re
+
+    from scardina_spark.functions.dictionary import build_dictionary
+    from scardina_spark.model.progressive import (
+        DistributedDomain, PackedMask, valid_mask)
+    from scardina_spark.plans.predicates import Predicate
+
+    vals = sorted(f"{p}{i}" for p in ("alpha_", "beta", "gam.ma", "gamXma")
+                  for i in range(750))
+    df = spark.createDataFrame([(v,) for v in vals], ["s"])
+    dom = DistributedDomain("t.s", None, build_dictionary(df, "s"),
+                            len(vals))
+    cases = [
+        ([Predicate("s", "LIKE", "gam.ma1%")],
+         lambda v: re.fullmatch(r"gam\.ma1.*", v)),
+        ([Predicate("s", "NOT LIKE", "alpha_1%")],
+         lambda v: not re.fullmatch(r"alpha.1.*", v)),
+        ([Predicate("s", "IN", ("beta7", "gamXma42", "absent"))],
+         lambda v: v in ("beta7", "gamXma42")),
+        ([Predicate("s", "LIKE", "beta%"), Predicate("s", "NOT LIKE", "%9")],
+         lambda v: v.startswith("beta") and not v.endswith("9")),
+    ]
+    for preds, keep in cases:
+        m = valid_mask(dom, preds)
+        assert isinstance(m, PackedMask)
+        want = np.flatnonzero([bool(keep(v)) for v in vals]) + 2
+        assert len(want) > 0
+        np.testing.assert_array_equal(m.codes, want, err_msg=str(preds))
+
+
 def test_sub_mask_all_valid_passes_everything():
     spec = factorization_spec("c", 1000, 4)
     full = np.ones(1000)

@@ -6,8 +6,8 @@ from scardina_spark.catalog import build_tpch_schema
 from scardina_spark.plans import parse_query, plan_query
 from scardina_spark.plans.planner import execute_count
 from scardina_spark.plans.predicates import (
-    Predicate, literal_value, normalize_predicates, predicates_to_column,
-    predicates_to_sql, sql_literal)
+    Predicate, literal_value, normalize_predicates, predicates_to_sql,
+    sql_literal)
 
 
 def test_parse_single_table():
