@@ -468,67 +468,71 @@ def main() -> None:
             connected_subsets, fragment)
         t0 = time.perf_counter()
         pg_srv = PGH.ensure_server()
-        pg_db = PGH.load_sf_tables(pg_srv, sf_dir)
-        timings["pg_load"] = round(time.perf_counter() - t0, 4)
-        t0 = time.perf_counter()
-        pes_pg, pg_forced_ok = [], 0
-        pes_pg_sens: dict[str, list[float]] = {}
-        for name, sql in ext_suite.items():
-            pq = _parse(sql)
-            est_cards, true_cards = {}, {}
-            for s in connected_subsets(pq):
-                if len(s) < 2:
-                    continue
-                frag = fragment(pq, s)
-                true_cards[s] = float(ext_true(frag))
-                try:
-                    est_cards[s] = float(ext_nar_fn(frag))
-                except (UnsupportedQueryError, ValueError):
-                    est_cards[s] = true_cards[s]
-            r = PGH.pg_plan_error(pg_srv, pg_db, pq, est_cards, true_cards,
-                                  method_sensitivity=True)
-            pes_pg.append(r["pe_pg"])
-            for tag in PGH.METHOD_REGIMES:
-                pes_pg_sens.setdefault(tag, []).append(
-                    r[f"pe_pg_{tag}"])
-            pg_forced_ok += int(r["order_respected"])
-        timings["pg_perror"] = round(time.perf_counter() - t0, 4)
-        extras["pg_perror_n"] = len(pes_pg)
-        extras["pg_forced_plans_ok"] = pg_forced_ok
-        extras["pg_nar_perror_p50"] = round(pct(pes_pg, 0.5), 4)
-        extras["pg_nar_perror_p90"] = round(pct(pes_pg, 0.9), 4)
-        extras["pg_nar_perror_max"] = round(max(pes_pg), 4)
-        # method-costing robustness: the SAME forced est/true trees
-        # re-priced with one join-method family disabled — p-error ≈ 1
-        # must hold in every regime, not just the planner's default mix
-        for tag, vals in pes_pg_sens.items():
-            extras[f"pg_nar_perror_max_{tag}"] = round(max(vals), 4)
+        try:
+            pg_db = PGH.load_sf_tables(pg_srv, sf_dir)
+            timings["pg_load"] = round(time.perf_counter() - t0, 4)
+            t0 = time.perf_counter()
+            pes_pg, pg_forced_ok = [], 0
+            pes_pg_sens: dict[str, list[float]] = {}
+            for name, sql in ext_suite.items():
+                pq = _parse(sql)
+                est_cards, true_cards = {}, {}
+                for s in connected_subsets(pq):
+                    if len(s) < 2:
+                        continue
+                    frag = fragment(pq, s)
+                    true_cards[s] = float(ext_true(frag))
+                    try:
+                        est_cards[s] = float(ext_nar_fn(frag))
+                    except (UnsupportedQueryError, ValueError):
+                        est_cards[s] = true_cards[s]
+                r = PGH.pg_plan_error(pg_srv, pg_db, pq, est_cards, true_cards,
+                                      method_sensitivity=True)
+                pes_pg.append(r["pe_pg"])
+                for tag in PGH.METHOD_REGIMES:
+                    pes_pg_sens.setdefault(tag, []).append(
+                        r[f"pe_pg_{tag}"])
+                pg_forced_ok += int(r["order_respected"])
+            timings["pg_perror"] = round(time.perf_counter() - t0, 4)
+            extras["pg_perror_n"] = len(pes_pg)
+            extras["pg_forced_plans_ok"] = pg_forced_ok
+            extras["pg_nar_perror_p50"] = round(pct(pes_pg, 0.5), 4)
+            extras["pg_nar_perror_p90"] = round(pct(pes_pg, 0.9), 4)
+            extras["pg_nar_perror_max"] = round(max(pes_pg), 4)
+            # method-costing robustness: the SAME forced est/true trees
+            # re-priced with one join-method family disabled — p-error ≈ 1
+            # must hold in every regime, not just the planner's default mix
+            for tag, vals in pes_pg_sens.items():
+                extras[f"pg_nar_perror_max_{tag}"] = round(max(vals), 4)
 
-        # PostgreSQL's NATIVE estimator as the DBMS baseline (Leis et
-        # al. VLDB'15): its planner's Plan Rows on every artifact
-        # subquery, scored against the recorded truths and through the
-        # same DP plan-choice p-error as the learned cards.  Batched
-        # EXPLAINs — the whole 746-row artifact is ~15 psql round trips.
-        t0 = time.perf_counter()
-        pg_ests = PGH.row_estimates(pg_srv, pg_db,
-                                    [r["sql"] for r in ext_rows])
-        pg_card = {r["sql"]: e for r, e in zip(ext_rows, pg_ests)}
-        sq_pg = [qerr(e, r["card"]) for e, r in zip(pg_ests, ext_rows)]
+            # PostgreSQL's NATIVE estimator as the DBMS baseline (Leis et
+            # al. VLDB'15): its planner's Plan Rows on every artifact
+            # subquery, scored against the recorded truths and through the
+            # same DP plan-choice p-error as the learned cards.  Batched
+            # EXPLAINs — the whole 746-row artifact is ~15 psql round trips.
+            t0 = time.perf_counter()
+            pg_ests = PGH.row_estimates(pg_srv, pg_db,
+                                        [r["sql"] for r in ext_rows])
+            pg_card = {r["sql"]: e for r, e in zip(ext_rows, pg_ests)}
+            sq_pg = [qerr(e, r["card"]) for e, r in zip(pg_ests, ext_rows)]
 
-        def pg_native_fn(frag):
-            return pg_card[to_sql(frag)]
+            def pg_native_fn(frag):
+                return pg_card[to_sql(frag)]
 
-        pe_pgnat = [max(p_error(_parse(sql), pg_native_fn, ext_true),
-                        p_error(_parse(sql), pg_native_fn, ext_true,
-                                cost_model="smj"))
-                    for sql in ext_suite.values()]
-        timings["pg_native_baseline"] = round(time.perf_counter() - t0, 4)
-        extras["pg_native_subq_qerror_p50"] = round(pct(sq_pg, 0.5), 4)
-        extras["pg_native_subq_qerror_p90"] = round(pct(sq_pg, 0.9), 4)
-        extras["pg_native_subq_qerror_max"] = round(max(sq_pg), 4)
-        extras["pg_native_perror_max"] = round(max(pe_pgnat), 4)
-        extras["pg_native_perror_flips"] = sum(
-            1 for x in pe_pgnat if x > 1.0001)
+            pe_pgnat = [max(p_error(_parse(sql), pg_native_fn, ext_true),
+                            p_error(_parse(sql), pg_native_fn, ext_true,
+                                    cost_model="smj"))
+                        for sql in ext_suite.values()]
+            timings["pg_native_baseline"] = round(time.perf_counter() - t0, 4)
+            extras["pg_native_subq_qerror_p50"] = round(pct(sq_pg, 0.5), 4)
+            extras["pg_native_subq_qerror_p90"] = round(pct(sq_pg, 0.9), 4)
+            extras["pg_native_subq_qerror_max"] = round(max(sq_pg), 4)
+            extras["pg_native_perror_max"] = round(max(pe_pgnat), 4)
+            extras["pg_native_perror_flips"] = sum(
+                1 for x in pe_pgnat if x > 1.0001)
+        finally:
+            # the embedded server outlives this process otherwise
+            pg_srv.stop()
 
     # 2a'''. CIN mode over the same suite: one NAR model per
     # closed-in-neighborhood subschema (the reference's headline

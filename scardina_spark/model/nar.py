@@ -185,13 +185,13 @@ class NarMLP:
         measured 26 → ~7 ms/q when B was the full S = 1000 rows; not
         re-measured at distinct-row batch sizes).
         Numerics: float32 summation is re-associated versus the dense
-        product, so logits can drift at the last ulp — the dense path
-        stays available (``serving_dense=True`` attribute) and the
-        equivalence is test-pinned to 1e-4.  Training never comes
-        through here (backprop needs the full ``x``)."""
+        product (``_trunk(_encode(...))``, still taken when more than
+        half the columns are active), so logits can drift at the last
+        ulp; the equivalence is test-pinned to 1e-4.  Training never
+        comes through here (backprop needs the full ``x``)."""
         allm = mask.all(axis=0)
         act = np.flatnonzero(~allm)
-        if getattr(self, "serving_dense", False) or len(act) > self.C // 2:
+        if len(act) > self.C // 2:
             return self._trunk(self._encode(codes, mask))[2]
         B = codes.shape[0]
         z1c = (self._masked_consts()[np.flatnonzero(allm)].sum(axis=0)

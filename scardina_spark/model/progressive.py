@@ -4,7 +4,8 @@ Reference semantics (NOT code):
 * valid masks (P5, scardina/estimators.py:673-793): every predicate is
   evaluated over the column's sorted distinct-value DICTIONARY, not base
   rows, producing a {0,1} vector over the code domain; MASK slot forced 0;
-  the NULL slot is set only by IS [NOT] NULL.
+  the NULL slot is open only when every conjunct accepts NULL (one
+  evaluator with the HT sample path: plans/predicates.py).
 * progressive sampling (M6, scardina/estimators.py:177-408): predicate
   columns are visited in a selectivity order; at each step the model's
   conditional distribution over the column is multiplied by the valid
@@ -34,13 +35,13 @@ no cluster round-trip per query).
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 import numpy as np
 
 from ..plans.parse import ParsedQuery, parse_query
-from ..plans.predicates import Predicate, normalize_predicates
+from ..plans.predicates import (
+    Predicate, accepts_null, normalize_predicates, value_mask)
 from .nar import NarMLP, _softmax
 
 MASK_SLOT = 0
@@ -148,19 +149,9 @@ class DistributedDomain(ColumnDomain):
         matched = (d.where(predicates_to_sql(preds)).select(CODE)
                    .toPandas()[CODE].to_numpy(dtype=np.int64))
         matched = matched[matched != MASK_SLOT]
-        # NULL-slot tri-state, mirroring the numpy valid_mask exactly:
-        # dictionaries hold no NULLs, so IS/IS NOT never reach the filter
-        null_ok = None
-        for p in preds:
-            o = p.o.upper()
-            if o == "IS":
-                null_ok = True
-            elif o == "IS NOT":
-                null_ok = False
-            elif o == "OR" and null_ok is None and any(
-                    b.o.upper() == "IS" for b in p.v):
-                null_ok = True
-        if null_ok:
+        # dictionaries hold no NULLs: the NULL slot follows the same
+        # rule as the numpy valid_mask
+        if all(accepts_null(p) for p in preds):
             matched = np.append(matched, NULL_SLOT)
         # packed (O(matched)) rather than a dom_size-length float array:
         # the old dense return was the documented ~0.8 GB/predicated-
@@ -168,33 +159,11 @@ class DistributedDomain(ColumnDomain):
         return PackedMask(self.dom_size, np.unique(matched))
 
 
-def _like_regex(pattern: str) -> re.Pattern:
-    out = []
-    for ch in pattern:
-        if ch == "%":
-            out.append(".*")
-        elif ch == "_":
-            out.append(".")
-        else:
-            out.append(re.escape(ch))
-    return re.compile("".join(out))
-
-
-def _coerce_literal(vals: np.ndarray, v):
-    """Align a predicate literal with the dictionary dtype.  numpy will not
-    compare a datetime64 array against a python datetime (raises
-    elementwise int-vs-datetime TypeError), so date/timestamp literals are
-    converted explicitly; everything else passes through."""
-    if np.issubdtype(vals.dtype, np.datetime64) and not isinstance(
-            v, np.datetime64):
-        return np.datetime64(v)
-    return v
-
-
 def valid_mask(dom: ColumnDomain, preds: list[Predicate]
                ) -> "np.ndarray | PackedMask":
     """{0,1} mask over the code domain [dom_size] combining all
-    predicates on this column (AND).  MASK slot 0; NULL slot per IS/IS NOT.
+    predicates on this column (AND).  MASK slot 0; the NULL slot is open
+    only when every predicate accepts NULL (``accepts_null``).
 
     Distributed domains (huge dictionaries) evaluate Spark-side and ship
     only matching codes back as a :class:`PackedMask` (O(matched)
@@ -202,67 +171,10 @@ def valid_mask(dom: ColumnDomain, preds: list[Predicate]
     driver-scale dictionaries."""
     if isinstance(dom, DistributedDomain):
         return dom.eval_mask(preds)
-    vals = dom.values
-    m = np.ones(dom.dom_size)
-    m[MASK_SLOT] = 0.0
-    null_ok = None  # tri-state: None = follow value-predicates (NULL fails)
-    vm = np.ones(len(vals), dtype=bool)
-    for p in preds:
-        o = p.o.upper()
-        v = p.v if o in ("IS", "IS NOT", "IN", "LIKE", "NOT LIKE",
-                         "ALL_TRUE", "ALL_FALSE", "OR", "BETWEEN") \
-            else _coerce_literal(vals, p.v)
-        if o == "OR":
-            # disjunction over this column: union of the branch masks
-            # (NULL slot included, so ``x > 5 OR x IS NULL`` works)
-            sub = np.stack([valid_mask(dom, [b]) for b in p.v])
-            m_or = sub.max(axis=0)
-            vm &= m_or[2:] > 0.5
-            if m_or[NULL_SLOT] > 0.5 and null_ok is None:
-                null_ok = True
-        elif o == "BETWEEN":
-            # kept whole inside OR branches (normalize_predicates splits
-            # top-level BETWEENs before this point)
-            lo = _coerce_literal(vals, p.v[0])
-            hi = _coerce_literal(vals, p.v[1])
-            vm &= (vals >= lo) & (vals <= hi)
-        elif o == "IS":
-            null_ok = True
-            vm &= np.zeros(len(vals), dtype=bool)
-        elif o == "IS NOT":
-            null_ok = False
-        elif o == "=":
-            vm &= vals == v
-        elif o == "!=":
-            vm &= vals != v
-        elif o == ">":
-            vm &= vals > v
-        elif o == ">=":
-            vm &= vals >= v
-        elif o == "<":
-            vm &= vals < v
-        elif o == "<=":
-            vm &= vals <= v
-        elif o == "IN":
-            vm &= np.isin(vals, np.array(
-                [_coerce_literal(vals, x) for x in p.v]))
-        elif o == "LIKE":
-            rx = _like_regex(str(p.v))
-            vm &= np.array([bool(rx.fullmatch(str(v))) for v in vals])
-        elif o == "NOT LIKE":
-            rx = _like_regex(str(p.v))
-            vm &= np.array([not rx.fullmatch(str(v)) for v in vals])
-        elif o == "ALL_TRUE":
-            pass
-        elif o == "ALL_FALSE":
-            vm &= np.zeros(len(vals), dtype=bool)
-        else:
-            raise ValueError(f"unsupported op in valid mask: {p.o}")
-    m[2:] = vm.astype(float)
-    if null_ok is None or null_ok is False:
-        m[NULL_SLOT] = 0.0
-    else:
-        m[NULL_SLOT] = 1.0
+    m = np.zeros(dom.dom_size)
+    m[NULL_SLOT] = all(accepts_null(p) for p in preds)
+    m[2:] = np.logical_and.reduce([value_mask(dom.values, p)
+                                   for p in preds])
     return m
 
 

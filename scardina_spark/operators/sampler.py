@@ -69,8 +69,8 @@ def _q(name: str) -> F.Column:
 
 def weighted_sample_with_replacement(
     df: DataFrame, weight_col: str, order_cols: list[str] | None = None,
-    n: int = 1, seed: int = 42, n_buckets: int | None = None,
-    uniform: bool = False, cache_out: list | None = None,
+    n: int = 1, seed: int = 42, uniform: bool = False,
+    cache_out: list | None = None,
     n_bounds: tuple[int, int] | None = None,
     meta_out: list | None = None,
 ) -> DataFrame:
@@ -108,8 +108,7 @@ def weighted_sample_with_replacement(
 
     Pass ``cache_out`` (a list) to receive the weighted path's persist
     handle (the sorted relation is read twice) — the caller should
-    ``unpersist()`` it once the sample is materialized.  ``n_buckets``
-    is accepted for API stability.
+    ``unpersist()`` it once the sample is materialized.
 
     ``n_bounds=(n_min, n_max)`` (weighted path only) resolves ``n`` from
     the weight total the draw computes anyway — ``n = clamp(int(total))``

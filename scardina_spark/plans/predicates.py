@@ -2,7 +2,7 @@
 
 Reference semantics (NOT code): scardina/common.py:635-645 (frozen predicate
 tuple), scardina/estimators.py:94-116 (op table: > < >= <= = != <> IN
-BETWEEN IS IS_NOT LIKE NOT_LIKE ALL_TRUE ALL_FALSE) and
+BETWEEN IS IS_NOT LIKE NOT_LIKE) and
 scardina/estimators.py:476-549 (normalization: BETWEEN → >= AND <=,
 ``<>`` → ``!=``, ``= NULL`` → IS NULL, LIKE kept for dictionary
 compilation).
@@ -12,21 +12,26 @@ Two consumers:
   to one SQL boolean expression for ``DataFrame.where`` (or inside an
   aggregate), which Catalyst pushes into the parquet scan (predicate
   pushdown is the free win the reference's numpy loop cannot have);
-* the estimator — predicates evaluated over a column's *dictionary* to
-  produce valid masks (see estimators/masks.py).
+* evaluation on driver-side NumPy values — ``value_mask`` and
+  ``accepts_null`` give one predicate one meaning for both the model's
+  dictionary valid masks (model/progressive.py) and the localized join
+  sample (estimators/sample.py).
 """
 
 from __future__ import annotations
 
 import math
+import operator
+import re
 from dataclasses import dataclass
 from datetime import datetime
 from typing import Any
 
+import numpy as np
+
 COMPARISON_OPS = {">", "<", ">=", "<=", "=", "!=", "<>"}
 ALL_OPS = COMPARISON_OPS | {
-    "IN", "BETWEEN", "IS", "IS NOT", "LIKE", "NOT LIKE",
-    "ALL_TRUE", "ALL_FALSE", "OR",
+    "IN", "BETWEEN", "IS", "IS NOT", "LIKE", "NOT LIKE", "OR",
 }
 
 
@@ -117,10 +122,8 @@ def normalize_predicates(preds: list[Predicate]) -> list[Predicate]:
 
 def _like_to_rlike(pattern: str) -> str:
     """SQL LIKE wildcards to an anchored regex (reference analog:
-    scardina/estimators.py:29-40 — but lowered to Spark's native ``rlike``
-    instead of a numpy fullmatch loop)."""
-    import re
-
+    scardina/estimators.py:29-40 — lowered to Spark's native ``rlike``
+    and compiled by ``value_mask`` for driver-side values)."""
     out = []
     for ch in pattern:
         if ch == "%":
@@ -195,19 +198,13 @@ def predicate_to_sql(p: Predicate, qualify: bool = False) -> str:
         return (f"({c} BETWEEN {sql_literal(lo)}"
                 f" AND {sql_literal(hi)})")
     if o == "IS":
-        return (f"({c} IS NULL)" if p.v is None
-                else f"({c} = {sql_literal(p.v)})")
+        return f"({c} IS NULL)"
     if o == "IS NOT":
-        return (f"({c} IS NOT NULL)" if p.v is None
-                else f"({c} != {sql_literal(p.v)})")
+        return f"({c} IS NOT NULL)"
     if o == "LIKE":
         return f"({c} RLIKE {sql_literal(_like_to_rlike(p.v))})"
     if o == "NOT LIKE":
         return f"(NOT ({c} RLIKE {sql_literal(_like_to_rlike(p.v))}))"
-    if o == "ALL_TRUE":
-        return "TRUE"
-    if o == "ALL_FALSE":
-        return "FALSE"
     raise ValueError(f"unsupported op: {p.o}")
 
 
@@ -217,6 +214,57 @@ def predicates_to_sql(preds: list[Predicate], qualify: bool = False) -> str:
     if not preds:
         return "TRUE"
     return " AND ".join(predicate_to_sql(p, qualify) for p in preds)
+
+
+# --- driver-side evaluation --------------------------------------------------
+#
+# SQL three-valued logic split in two: ``value_mask`` says which non-NULL
+# values pass, ``accepts_null`` whether a NULL passes.  Only IS NULL (or
+# an OR with an IS NULL branch) admits NULL, and a conjunction admits it
+# only when every conjunct does.
+
+_COMPARE = {"=": operator.eq, "!=": operator.ne, ">": operator.gt,
+            ">=": operator.ge, "<": operator.lt, "<=": operator.le}
+
+
+def _np_literal(values: np.ndarray, v: Any) -> Any:
+    """numpy will not compare a datetime64 array against a python
+    ``datetime``, so literals on datetime64 values become datetime64;
+    every other literal passes through."""
+    if np.issubdtype(values.dtype, np.datetime64):
+        return np.datetime64(v)
+    return v
+
+
+def value_mask(values: np.ndarray, p: Predicate) -> np.ndarray:
+    """Bool mask of the non-NULL ``values`` that satisfy ``p`` (an op as
+    ``normalize_predicates`` emits it; OR branches share ``values``)."""
+    o = p.o.upper()
+    if o == "OR":
+        return np.logical_or.reduce([value_mask(values, b)
+                                     for b in p.branches])
+    if o in ("IS", "IS NOT"):
+        return np.full(len(values), o == "IS NOT")
+    if o in ("LIKE", "NOT LIKE"):
+        rx = re.compile(_like_to_rlike(str(p.v)))
+        m = np.fromiter((rx.match(str(x)) is not None for x in values),
+                        dtype=bool, count=len(values))
+        return m if o == "LIKE" else ~m
+    if o == "IN":
+        return np.isin(values, [_np_literal(values, x) for x in p.v])
+    if o == "BETWEEN":
+        lo, hi = (_np_literal(values, x) for x in p.v)
+        return (values >= lo) & (values <= hi)
+    if o not in _COMPARE:
+        raise ValueError(f"unsupported op: {p.o}")
+    return _COMPARE[o](values, _np_literal(values, p.v))
+
+
+def accepts_null(p: Predicate) -> bool:
+    """Whether a NULL value satisfies ``p``."""
+    if p.o.upper() == "OR":
+        return any(accepts_null(b) for b in p.branches)
+    return p.o.upper() == "IS"
 
 
 def parse_datetime(s: str) -> datetime | None:

@@ -127,6 +127,34 @@ def test_distributed_domain_string_mask_matches_numpy(spark):
         np.testing.assert_array_equal(m.codes, want, err_msg=str(preds))
 
 
+def test_distributed_domain_null_slot_follows_and_rule(spark):
+    """The Spark-evaluated mask opens the NULL slot only when every
+    conjunct accepts NULL, exactly as the numpy valid_mask does."""
+    from scardina_spark.functions.dictionary import build_dictionary
+    from scardina_spark.model.progressive import (
+        NULL_SLOT, ColumnDomain, DistributedDomain, valid_mask)
+    from scardina_spark.plans.predicates import Predicate
+
+    vals = [float(i) / 2 for i in range(20)]
+    df = spark.createDataFrame([(v,) for v in vals] + [(None,)], "x double")
+    dom = DistributedDomain("t.x", None, build_dictionary(df, "x"),
+                            len(vals))
+    local = ColumnDomain("t.x", np.array(vals))
+    is_null = Predicate("x", "IS", None)
+    cases = [
+        ([is_null, Predicate("x", ">", 5.0)], 0.0),
+        ([Predicate("x", "IS NOT", None), is_null], 0.0),
+        ([Predicate("x", "OR", (is_null, Predicate("x", "<", 5.0))),
+          Predicate("x", "<", 8.0)], 0.0),
+        ([Predicate("x", "OR", (is_null, Predicate("x", "<", 5.0)))], 1.0),
+    ]
+    for preds, null_slot in cases:
+        m = valid_mask(dom, preds)
+        assert m[NULL_SLOT] == null_slot, preds
+        np.testing.assert_array_equal(m.dense(), valid_mask(local, preds),
+                                      err_msg=str(preds))
+
+
 def test_sub_mask_all_valid_passes_everything():
     spec = factorization_spec("c", 1000, 4)
     full = np.ones(1000)

@@ -239,19 +239,16 @@ def test_serving_fast_path_matches_dense_trunk():
             # make one column mixed-mask: half the rows masked
             mixed = [j for j in range(10) if j not in masked_cols][0]
             mask[:32, mixed] = True
+        h = m._trunk(m._encode(codes, mask))[2]   # the dense trunk
         for j in (9, 0):
             if j in masked_cols or mask[:, j].any():
                 pass  # logits for a masked column are legitimate
             fast = m.logits_for(codes, mask, j)
-            m.serving_dense = True
-            dense = m.logits_for(codes, mask, j)
-            m.serving_dense = False
+            dense = (h @ m.P[j]) @ m.emb[j].T
             assert np.allclose(fast, dense, atol=1e-4), (
                 masked_cols, j, np.abs(fast - dense).max())
         fr = m.regress_for(codes, mask, 10)
-        m.serving_dense = True
-        dr = m.regress_for(codes, mask, 10)
-        m.serving_dense = False
+        dr = (h @ m.P[10]).ravel()
         assert np.allclose(fr, dr, atol=1e-4)
 
 
@@ -270,8 +267,6 @@ def test_serving_fast_path_cache_invalidates_on_train():
     before = m.logits_for(codes, mask, 1).copy()
     m.train_step(codes, rs)
     after = m.logits_for(codes, mask, 1)
-    m.serving_dense = True
-    dense_after = m.logits_for(codes, mask, 1)
-    m.serving_dense = False
+    dense_after = (m._trunk(m._encode(codes, mask))[2] @ m.P[1]) @ m.emb[1].T
     assert not np.allclose(before, after)          # training moved it
     assert np.allclose(after, dense_after, atol=1e-4)  # cache refreshed
