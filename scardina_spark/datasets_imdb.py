@@ -136,9 +136,6 @@ JOB_LIGHT_SUBSCHEMA_SIZES: dict[str, int] = {
     "movie_keyword:movie_id=title.id": 6_575_449,
 }
 
-#: Universal-relation size for JOB-light (reference datasets.py:581).
-JOB_LIGHT_UR_SIZE = 2_128_877_229_383
-
 
 def build_imdb_schema() -> SchemaGraph:
     """The full 15-table IMDB SchemaGraph with the reference's sizes."""

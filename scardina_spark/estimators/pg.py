@@ -48,7 +48,6 @@ from dataclasses import dataclass
 from ..plans.parse import ParsedQuery, parse_query
 from .perror import (bushy_best_plan, plan_space_size, tree_join_sets,
                      _pred_sql)
-from ..plans.predicates import pred_tables
 
 _PG_BINDIRS = ["/usr/lib/postgresql/15/bin", "/usr/local/bin"]
 
@@ -177,14 +176,32 @@ def _pg_type(duck_type: str) -> str:
     return _DUCK_TO_PG.get(t, "text")
 
 
+#: ANALYZE samples 300 x (statistics target) rows; PostgreSQL's ceiling
+_MAX_STATS_TARGET = 10_000
+
+
+def _stats_target(n_rows: int) -> int:
+    """Per-column statistics target whose ANALYZE sample covers all
+    ``n_rows`` rows (never below the server default of 100)."""
+    return min(_MAX_STATS_TARGET, max(100, -(-n_rows // 300)))
+
+
 def load_sf_tables(server: PgServer, sf_dir: str,
                    tables: tuple[str, ...] = (
                        "region", "nation", "customer", "supplier",
                        "part", "orders", "lineitem")) -> str:
     """COPY the relational parquet tables for ``sf_dir`` into a per-sf
-    database (DuckDB streams parquet -> CSV; psql \\copy loads it), then
-    ANALYZE.  Idempotent: a table whose row count already matches the
-    parquet is left alone, so per (machine, sf) the load happens once."""
+    database (DuckDB streams parquet -> CSV; psql \\copy loads it).  A
+    table whose row count already matches the parquet is not reloaded,
+    so per (machine, sf) the COPY happens once.
+
+    Each table's planner statistics are pinned: autovacuum is off (no
+    background ANALYZE redraws them), and each column gets a statistics
+    target whose sample covers the whole table (up to 3M rows), which
+    makes ANALYZE deterministic.  ANALYZE runs only after a (re)load or
+    when a column's target differs from that one; otherwise the stored
+    statistics are kept, so the native baseline reads the same ones on
+    every run, at any table size."""
     import hashlib
 
     import duckdb
@@ -197,24 +214,40 @@ def load_sf_tables(server: PgServer, sf_dir: str,
     for t in tables:
         pq_path = os.path.join(sf_dir, f"{t}.parquet")
         n = con.sql(f"SELECT count(*) FROM '{pq_path}'").fetchone()[0]
+        desc = con.sql(f"DESCRIBE SELECT * FROM '{pq_path}'").fetchall()
         have = server.psql(
             f"SELECT reltuples::bigint FROM pg_class "
             f"WHERE relname = '{t}'", db).strip()
-        if have:
-            got = server.psql(f"SELECT count(*) FROM {t}", db).strip()
-            if got == str(n):
-                continue
+        if have and server.psql(f"SELECT count(*) FROM {t}",
+                                db).strip() != str(n):
             server.psql(f"DROP TABLE {t}", db)
-        desc = con.sql(f"DESCRIBE SELECT * FROM '{pq_path}'").fetchall()
-        cols = ", ".join(f'"{name}" {_pg_type(typ)}'
-                         for name, typ, *_ in desc)
-        csv = os.path.join(csv_dir, f"{t}.csv")
-        con.sql(f"COPY (SELECT * FROM '{pq_path}') TO '{csv}' "
-                f"(FORMAT CSV, HEADER)")
-        server.psql(f"CREATE TABLE {t} ({cols});\n"
-                    f"\\copy {t} from '{csv}' (format csv, header)\n"
-                    f"ANALYZE {t};", db)
-        os.remove(csv)
+            have = ""
+        if not have:
+            cols = ", ".join(f'"{name}" {_pg_type(typ)}'
+                             for name, typ, *_ in desc)
+            csv = os.path.join(csv_dir, f"{t}.csv")
+            con.sql(f"COPY (SELECT * FROM '{pq_path}') TO '{csv}' "
+                    f"(FORMAT CSV, HEADER)")
+            server.psql(f"CREATE TABLE {t} ({cols}) "
+                        f"WITH (autovacuum_enabled = false);\n"
+                        f"\\copy {t} from '{csv}' (format csv, header)",
+                        db)
+            os.remove(csv)
+        target = _stats_target(n)
+        script = f"ALTER TABLE {t} SET (autovacuum_enabled = false);"
+        if not have or server.psql(
+                f"SELECT count(*) FROM pg_attribute "
+                f"WHERE attrelid = '{t}'::regclass AND attnum > 0 "
+                f"AND NOT attisdropped "
+                f"AND coalesce(attstattarget, -1) <> {target}",
+                db).strip() != "0":
+            stats = ", ".join(
+                f'ALTER COLUMN "{name}" SET STATISTICS {target}'
+                for name, *_ in desc)
+            # one transaction: a target on record means ANALYZE ran with it
+            script += (f"\nBEGIN;\nALTER TABLE {t} {stats};\n"
+                       f"ANALYZE {t};\nCOMMIT;")
+        server.psql(script, db)
     return db
 
 
@@ -245,18 +278,6 @@ def store_cards(server: PgServer, db: str, rows: list[dict],
 
 
 # --- plan forcing + costing ------------------------------------------------
-
-def forced_join_sql(pq: ParsedQuery, order: tuple[str, ...]) -> str:
-    """COUNT(*) SQL with the left-deep join order made explicit: under
-    ``join_collapse_limit = 1`` Postgres keeps the written JOIN nesting,
-    so the planner costs exactly this order (scan/join METHODS stay
-    free — the forcing pins the order, which is what the injected cards
-    decide)."""
-    tree = order[0]
-    for a in order[1:]:
-        tree = (tree, a)
-    return forced_join_sql_tree(pq, tree)
-
 
 def forced_join_sql_tree(pq: ParsedQuery, tree) -> str:
     """COUNT(*) SQL whose JOIN nesting mirrors an arbitrary BUSHY plan

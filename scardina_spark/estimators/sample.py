@@ -170,12 +170,16 @@ def cin_tree(sg: SchemaGraph, center: str) -> Subschema:
     return cin_trees(sg, center)[0]
 
 
-def attach_tree_adj_fanouts(tree: Subschema, tables: dict[str, DataFrame]
-                            ) -> dict[str, DataFrame]:
+def attach_tree_adj_fanouts(
+    tree: Subschema, tables: dict[str, DataFrame],
+    counts: dict[tuple[str, str], DataFrame] | None = None,
+) -> dict[str, DataFrame]:
     """Per tree edge, attach both directed adjacency fanouts: the PK side
     gets the FK side's per-key row count; the FK side gets constant 1 (a
     PK matches at most one row).  Unmatched keys fill 1 — a null-extended
-    row contributes exactly one join row.
+    row contributes exactly one join row.  ``counts`` maps an edge's
+    ``(fk_table, fk_col)`` to a precomputed per-key count table (e.g. a
+    delta-merged one) used instead of counting the FK table.
 
     Sibling trees (parallel-edge variants) recompute shared per-edge
     aggregates; sharing them via a cache changes partition lineage and
@@ -187,9 +191,11 @@ def attach_tree_adj_fanouts(tree: Subschema, tables: dict[str, DataFrame]
     out = {t: tables[t] for t in tree.tables}
     for rel in tree.rels:
         pk_col = adj_fanout_col(rel.pk_col, rel.fk_table, rel.fk_col)
-        counts = fk_counts(out[rel.fk_table], rel.fk_col)
+        cnt = (counts or {}).get((rel.fk_table, rel.fk_col))
+        if cnt is None:
+            cnt = fk_counts(out[rel.fk_table], rel.fk_col)
         out[rel.pk_table] = attach_count(
-            out[rel.pk_table], rel.pk_col, counts, rel.fk_col, pk_col)
+            out[rel.pk_table], rel.pk_col, cnt, rel.fk_col, pk_col)
         fk_col = adj_fanout_col(rel.fk_col, rel.pk_table, rel.pk_col)
         out[rel.fk_table] = out[rel.fk_table].withColumn(
             fk_col, F.lit(1).cast("long"))
@@ -204,24 +210,10 @@ class TreeSample:
     join_size: int
     n_sample: int
     local: "object | None" = None   # pandas DataFrame when localized
-    # sampler-internal persisted handles (root-table-sized) still live on
-    # the ``cache=False`` prep path; release() them once the sample has
-    # been materialized (an action ran) — the cache=True path releases
-    # them inside prepare_tree_sample already
-    cache_handles: "list | None" = None
 
     @property
     def tables(self) -> set[str]:
         return self.tree.tables
-
-    def release(self) -> "TreeSample":
-        """Unpersist the sampler's internal root-table persist.  Safe to
-        call any time after the sample DataFrame has been materialized
-        (cached, localized, or written); idempotent."""
-        for h in self.cache_handles or []:
-            h.unpersist()
-        self.cache_handles = None
-        return self
 
     def localize(self) -> "TreeSample":
         """Pull the (bounded, ≤n_max-row) sample to the driver for
@@ -245,14 +237,12 @@ class TreeSample:
                     if nu <= min(100_000, max(1, len(pdf) // 2)):
                         pdf[c] = pdf[c].astype("category")
             self.local = pdf
-            self.release()
         return self
 
 
 def prepare_tree_sample(
     tree: Subschema, tables: dict[str, DataFrame], root: str | None = None,
     n_min: int = 100_000, n_max: int = 500_000, seed: int = 42,
-    cache: bool = True,
 ) -> TreeSample:
     """Materialize the unbiased weighted join sample of ``tree``
     (reference pipeline stages b-d, scardina/datasets.py:144-378)."""
@@ -296,26 +286,20 @@ def prepare_tree_sample(
                        meta_out=meta)
     if not all_m2o:
         join_size, n = meta[0]
-    if cache:
-        # right-size partitions for the per-query aggregate: ~64k rows per
-        # task keeps scheduling overhead off the query path (estimate()
-        # latency is dominated by task launch, not compute).  repartition,
-        # NOT coalesce: coalesce would narrow the whole draw+join pipeline
-        # to this width, serializing the one-off materialization — the
-        # extra sample-sized shuffle is far cheaper than that.
-        samp = samp.repartition(max(4, n // 65536))
-        samp = samp.cache()
-        samp.count()  # materialize once; queries reuse the cached sample
-        # the weighted-root draw's internal persist (full root table) is
-        # only needed until the sample is materialized
-        for h in handles:
-            h.unpersist()
-        handles = []
-    # cache=False: the handles ride on the TreeSample so the caller (or
-    # localize()) can release() the root-table-sized persist once an
-    # action has materialized the sample
-    return TreeSample(tree, root, samp, join_size, n,
-                      cache_handles=handles or None)
+    # right-size partitions for the per-query aggregate: ~64k rows per
+    # task keeps scheduling overhead off the query path (estimate()
+    # latency is dominated by task launch, not compute).  repartition,
+    # NOT coalesce: coalesce would narrow the whole draw+join pipeline
+    # to this width, serializing the one-off materialization — the
+    # extra sample-sized shuffle is far cheaper than that.
+    samp = samp.repartition(max(4, n // 65536))
+    samp = samp.cache()
+    samp.count()  # materialize once; queries reuse the cached sample
+    # the weighted-root draw's internal persist (full root table) is
+    # only needed until the sample is materialized
+    for h in handles:
+        h.unpersist()
+    return TreeSample(tree, root, samp, join_size, n)
 
 
 def _query_tables(pq: ParsedQuery) -> dict[str, str]:

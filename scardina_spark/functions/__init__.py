@@ -1,9 +1,6 @@
 from .dictionary import (  # noqa: F401
-    MASK_CODE,
     NULL_CODE,
     build_dictionary,
-    dict_sizes,
-    encode_table,
     encode_with_dictionary,
 )
-from .factorize import factorize_exprs, factorization_spec  # noqa: F401
+from .factorize import factorization_spec  # noqa: F401

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..operators.prefix import IDX, with_global_index
 
-MASK_CODE = 0
 NULL_CODE = 1
 CODE = "__code__"
 VALUE = "__value__"
@@ -80,23 +79,3 @@ def encode_with_dictionary(df: DataFrame, col: str, dictionary: DataFrame,
         .drop(col)
         .withColumnRenamed("__enc__", out_col)
     )
-
-
-def encode_table(df: DataFrame, dictionaries: dict[str, DataFrame],
-                 broadcast: bool = True) -> DataFrame:
-    """Dictionary-encode every column named in ``dictionaries``; the output
-    is the model-facing all-integer training matrix (reference analog:
-    DBDataset tuple tensor, scardina/common.py:499-558) — write it to
-    parquet and any trainer can stream it."""
-    out = df
-    for col, dic in dictionaries.items():
-        if col in out.columns:
-            out = encode_with_dictionary(out, col, dic, broadcast=broadcast)
-    return out.select(*[F.col(f"`{c}`") for c in df.columns if c in out.columns])
-
-
-def dict_sizes(dictionaries: dict[str, DataFrame]) -> dict[str, int]:
-    """dist_size per column INCLUDING the MASK/NULL slots (+2), the number
-    the model's embedding tables and the factorizer consume
-    (reference: input_bins, scardina/run.py:268-440)."""
-    return {c: d.count() + 2 for c, d in dictionaries.items()}

@@ -19,7 +19,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 @dataclass(frozen=True)
@@ -76,16 +76,3 @@ def sub_code_expr(code_col: str, sub: SubColumnSpec) -> Column:
         (F.shiftright(c, sub.offset).bitwiseAND(F.lit(2 ** sub.window - 1)))
         + F.lit(1)
     ).cast("int")
-
-
-def factorize_exprs(df: DataFrame, spec: FactorizationSpec,
-                    drop_original: bool = True) -> DataFrame:
-    """Materialize the sub-code columns for one factorized column."""
-    if not spec.is_factorized:
-        return df
-    out = df
-    for sub in spec.sub_cols:
-        out = out.withColumn(sub.name, sub_code_expr(spec.col, sub))
-    if drop_original:
-        out = out.drop(spec.col)
-    return out

@@ -28,8 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..localrel import local_df
-
 TOKENS = "__toks__"
 DL = "__dl__"
 
@@ -53,8 +51,7 @@ def bm25_scores(df: DataFrame, query_terms: list[str],
     # tokens are lowercased, so normalize the query side symmetrically —
     # otherwise a capitalized term silently matches nothing.  The query
     # is a term SET (order-preserving dedup): duplicated terms must not
-    # double their contribution, and both the scan and indexed paths
-    # must score the same query identically.
+    # double their contribution.
     seen: set[str] = set()
     query_terms = [t for t in (t.lower() for t in query_terms)
                    if not (t in seen or seen.add(t))]
@@ -101,142 +98,4 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10,
     TakeOrderedAndProject, never a global sort."""
     return (bm25_scores(df, query_terms, id_col, text_col, k1, b)
             .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(k))
-
-
-# --- materialized inverted index: build once, query many ------------------
-#
-# The scan path above costs two corpus passes PER QUERY — fine for audits,
-# wrong for query-heavy workloads (the amortization caveat SCALE.md
-# carried).  The index is the classic postings table (term, doc, tf, dl):
-# built in one explode+groupBy pass, written SORTED BY TERM so parquet
-# row-group stats prune each query's scan to its few terms, and scored
-# with the identical arithmetic (ulp-level parity with bm25_scores).
-
-from dataclasses import dataclass  # noqa: E402
-
-
-@dataclass
-class Bm25Index:
-    """postings: (term, id, tf, dl) one row per (document, distinct
-    term); term_df: (term, df) document frequencies; n_docs / avgdl:
-    corpus scalars (avgdl from the exact integer token total)."""
-
-    postings: DataFrame
-    term_df: DataFrame
-    n_docs: int
-    avgdl: float
-    id_col: str = "doc_id"
-
-    def save(self, path: str,
-             parquet_block_bytes: int | None = None) -> None:
-        """Persist the index: postings range-partitioned + sorted by
-        term (row-group pruning turns a query into a few-term scan),
-        term_df + scalars alongside.  The scalars go through a Spark
-        writer too (1-row JSON dataset), so the whole index lands on one
-        filesystem — a driver-local ``open()`` would drop ``meta`` on
-        the driver's disk when ``path`` is HDFS/S3.
-
-        ``parquet_block_bytes`` overrides the parquet row-group size;
-        the default (128 MiB) is right at corpus scale, a small value
-        makes the row-group pruning property observable on test-sized
-        corpora."""
-        import os
-        w = (self.postings.repartitionByRange(F.col("term"))
-             .sortWithinPartitions("term", self.id_col)
-             .write.mode("overwrite"))
-        if parquet_block_bytes is not None:
-            w = (w.option("parquet.block.size", parquet_block_bytes)
-                 .option("parquet.page.size",
-                         max(1024, parquet_block_bytes // 4)))
-        w.parquet(os.path.join(path, "postings"))
-        self.term_df.coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(path, "term_df"))
-        spark = self.postings.sparkSession
-        # A legacy driver-local meta.json at this path would shadow the
-        # meta/ dataset on load (bm25_load_index prefers it), so a
-        # rebuild over an old-format location must remove it or it
-        # silently serves stale n_docs/avgdl.
-        legacy = os.path.join(path, "meta.json")
-        try:
-            os.remove(legacy)
-        except OSError:
-            pass
-        meta = local_df(spark,
-            [(int(self.n_docs), float(self.avgdl), self.id_col)],
-            _META_SCHEMA)
-        meta.coalesce(1).write.mode("overwrite") \
-            .json(os.path.join(path, "meta"))
-
-
-_META_SCHEMA = "n_docs long, avgdl double, id_col string"
-
-
-def bm25_load_index(spark, path: str) -> Bm25Index:
-    import os
-    legacy = os.path.join(path, "meta.json")
-    if os.path.exists(legacy):
-        # index written by the earlier driver-local-meta format
-        import json
-        with open(legacy) as f:
-            m = json.load(f)
-        meta = {"n_docs": m["n_docs"], "avgdl": m["avgdl"],
-                "id_col": m["id_col"]}
-    else:
-        meta = spark.read.schema(_META_SCHEMA) \
-            .json(os.path.join(path, "meta")).first()
-    return Bm25Index(
-        postings=spark.read.parquet(os.path.join(path, "postings")),
-        term_df=spark.read.parquet(os.path.join(path, "term_df")),
-        n_docs=int(meta["n_docs"]), avgdl=float(meta["avgdl"]),
-        id_col=meta["id_col"])
-
-
-def bm25_build_index(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> Bm25Index:
-    """One corpus pass: explode tokens → per-(term, doc) tf with the doc
-    length carried; per-term document frequencies and the exact-division
-    avgdl fall out of the same postings relation."""
-    tok = tokenize(df, text_col)
-    totals = tok.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(DL)).alias("tot")).first()
-    n_docs = int(totals["n"])
-    avgdl = float(totals["tot"]) / n_docs if n_docs else 0.0
-    postings = (tok.select(F.col(id_col), F.col(DL).alias("dl"),
-                           F.explode(F.col(TOKENS)).alias("term"))
-                .groupBy("term", id_col, "dl")
-                .agg(F.count(F.lit(1)).alias("tf")))
-    term_df = postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"))
-    return Bm25Index(postings, term_df, n_docs, avgdl, id_col)
-
-
-def bm25_topk_indexed(index: Bm25Index, query_terms: list[str],
-                      k: int = 10, k1: float = 1.2, b: float = 0.75
-                      ) -> DataFrame:
-    """Top-k over the materialized index: the postings scan touches only
-    the query's terms (an IN filter that parquet row-group stats prune
-    when the index was saved term-sorted), the per-term df table joins
-    by broadcast, and the per-document sum + top-k work on matching
-    postings only — query cost is O(matching postings), not O(corpus).
-    Same arithmetic and exact avgdl as the scan path; only the float
-    summation order differs (per-row fold vs fixed expression order),
-    so scores agree to ulp precision (asserted 1e-9 in tests)."""
-    query_terms = sorted({t.lower() for t in query_terms})
-    p = index.postings.where(F.col("term").isin(query_terms))
-    d = F.broadcast(index.term_df.where(F.col("term").isin(query_terms)))
-    j = p.join(d, "term")
-    n = F.lit(float(index.n_docs))
-    tf = F.col("tf").cast("double")
-    df_t = F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (n - df_t + F.lit(0.5)) / (df_t + F.lit(0.5)))
-    norm = tf + F.lit(k1) * (F.lit(1.0 - b)
-                             + F.lit(b) * F.col("dl").cast("double")
-                             / F.lit(index.avgdl))
-    contrib = idf * tf * F.lit(k1 + 1.0) / norm
-    return (j.groupBy(index.id_col)
-            .agg(F.sum(contrib).alias("score"))
-            .where(F.col("score") > 0)
-            .orderBy(F.col("score").desc(), F.col(index.id_col).asc())
             .limit(k))

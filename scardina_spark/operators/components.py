@@ -138,16 +138,6 @@ def dup_groups(pairs: DataFrame, col_a: str = "id_a", col_b: str = "id_b",
             .orderBy("member_id"))
 
 
-def dedup_by_groups(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                    col_a: str = "id_a", col_b: str = "id_b") -> DataFrame:
-    """Drop every row whose id belongs to a duplicate group but is not the
-    group's keeper — the end-to-end 'dedup the corpus' operator."""
-    drop = (dup_groups(pairs, col_a, col_b)
-            .where(F.col("member_id") != F.col("keep_id"))
-            .select(F.col("member_id")))
-    return df.join(drop, df[id_col] == drop["member_id"], "left_anti")
-
-
 def canonical_groups(df: DataFrame, pairs: DataFrame, score_col: str,
                      id_col: str = "doc_id", col_a: str = "id_a",
                      col_b: str = "id_b", max_iter: int = 25
@@ -169,13 +159,3 @@ def canonical_groups(df: DataFrame, pairs: DataFrame, score_col: str,
     return (scored.join(best, COMP)
             .select(F.col(NODE).alias("member_id"), "keep_id")
             .orderBy("member_id"))
-
-
-def dedup_canonical(df: DataFrame, pairs: DataFrame, score_col: str,
-                    id_col: str = "doc_id", col_a: str = "id_a",
-                    col_b: str = "id_b") -> DataFrame:
-    """Collapse every duplicate group to its best-quality member."""
-    drop = (canonical_groups(df, pairs, score_col, id_col, col_a, col_b)
-            .where(F.col("member_id") != F.col("keep_id"))
-            .select("member_id"))
-    return df.join(drop, df[id_col] == drop["member_id"], "left_anti")

@@ -106,16 +106,3 @@ def scrub_pii(df: DataFrame, text_col: str = "text",
     for _, pattern, placeholder in (rules or PII_RULES):
         col = F.regexp_replace(col, pattern, placeholder)
     return df.withColumn(out_col, col)
-
-
-def pii_stats(df: DataFrame, text_col: str = "text",
-              rules: list[tuple[str, str, str]] | None = None) -> DataFrame:
-    """Corpus-level redaction audit: per rule, how many documents match
-    and the total match count — one aggregation pass."""
-    aggs = []
-    for name, pattern, _ in (rules or PII_RULES):
-        cnt = F.size(F.regexp_extract_all(F.col(text_col),
-                                          F.lit(pattern), F.lit(0)))
-        aggs.append(F.sum((cnt > 0).cast("long")).alias(f"docs_{name}"))
-        aggs.append(F.sum(cnt).alias(f"spans_{name}"))
-    return df.agg(*aggs)

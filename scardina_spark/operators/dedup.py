@@ -331,7 +331,7 @@ def lsh_probe_pairs(new_sigs: DataFrame, index_sigs: DataFrame,
     EXISTING index's — ``(new_id, index_id)`` candidates without any
     self-join over the standing corpus.  The ingest-time shape: the
     index table is precomputed (in practice a materialized parquet,
-    like `IvfIndex`/`Bm25Index`), so a shard arrival costs only the
+    like `IvfIndex`), so a shard arrival costs only the
     shard's shingles plus a band-keyed join whose left side is
     shard-sized."""
     a = _band_table(new_sigs, id_col, "new_id", n_hashes, n_bands)
@@ -423,18 +423,6 @@ def simhash(col: str = "text") -> F.Column:
 def simhash_table(df: DataFrame, id_col: str = "doc_id", col: str = "text"
                   ) -> DataFrame:
     return df.select(F.col(id_col), simhash(col).alias("simhash"))
-
-
-def simhash_dup_groups(df: DataFrame, id_col: str = "doc_id",
-                       col: str = "text") -> DataFrame:
-    """Groups of documents sharing a simhash (candidate near-dups)."""
-    return (
-        simhash_table(df, id_col, col)
-        .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-        .orderBy("keep_id")
-    )
 
 
 def line_dedup(df: DataFrame, id_col: str = "doc_id",

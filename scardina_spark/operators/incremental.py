@@ -39,21 +39,25 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..estimators.sample import TreeSample
+from ..estimators.sample import TreeSample, attach_tree_adj_fanouts
 from ..schema import Relationship
 from .fanout import COUNT, adj_fanout_col, attach_count, fk_counts
 from .sampler import SAMPLE_ID, join_sample
 from .weights import WEIGHT
 
 
+def _sum_counts(a: DataFrame, b: DataFrame, fk_col: str) -> DataFrame:
+    """counts(A ∪ B) from two per-key count tables: union, sum per key."""
+    return (a.unionByName(b)
+            .groupBy(F.col(f"`{fk_col}`").alias(fk_col))
+            .agg(F.sum(COUNT).alias(COUNT)))
+
+
 def merge_fk_counts(old_counts: DataFrame, delta: DataFrame, fk_col: str
                     ) -> DataFrame:
     """counts(old ∪ delta) from counts(old) and the delta *rows*: union the
     delta's own counts and sum per key.  Only count tables shuffle."""
-    d = fk_counts(delta, fk_col)
-    return (old_counts.unionByName(d)
-            .groupBy(F.col(f"`{fk_col}`").alias(fk_col))
-            .agg(F.sum(COUNT).alias(COUNT)))
+    return _sum_counts(old_counts, fk_counts(delta, fk_col), fk_col)
 
 
 def patch_sample_fanouts(sample: DataFrame, tree_rels: list[Relationship],
@@ -75,32 +79,10 @@ def patch_sample_fanouts(sample: DataFrame, tree_rels: list[Relationship],
     return out
 
 
-def _attach_tree_adj_fanouts_with_overrides(
-    tree_rels: list[Relationship], tables: dict[str, DataFrame],
-    count_overrides: dict[tuple[str, str], DataFrame],
-) -> dict[str, DataFrame]:
-    """attach_tree_adj_fanouts, but per-edge counts can be injected —
-    (fk_table, fk_col) → precomputed (merged) count table — so the grown
-    table's counts come from the delta merge instead of a rescan."""
-    out = dict(tables)
-    for rel in tree_rels:
-        pk_col = adj_fanout_col(rel.pk_col, rel.fk_table, rel.fk_col)
-        counts = count_overrides.get((rel.fk_table, rel.fk_col))
-        if counts is None:
-            counts = fk_counts(tables[rel.fk_table], rel.fk_col)
-        out[rel.pk_table] = attach_count(
-            out[rel.pk_table], rel.pk_col, counts, rel.fk_col, pk_col)
-        fk_col = adj_fanout_col(rel.fk_col, rel.pk_table, rel.pk_col)
-        out[rel.fk_table] = out[rel.fk_table].withColumn(
-            fk_col, F.lit(1).cast("long"))
-    return out
-
-
 def append_refresh_tree_sample(
     ts: TreeSample, tables: dict[str, DataFrame], delta_root: DataFrame,
     old_fk_counts: dict[str, DataFrame] | None = None,
     n_min: int = 100_000, n_max: int = 500_000, seed: int = 43,
-    cache: bool = True,
     merged_fk_counts: dict[str, DataFrame] | None = None,
 ) -> TreeSample:
     """Refresh ``ts`` after appending ``delta_root`` rows to its root table.
@@ -155,9 +137,9 @@ def append_refresh_tree_sample(
     n_delta = max(1, min(n_delta, n_new))
     n_keep = n_new - n_delta
 
-    overrides = {(root, fk): cnt for fk, cnt in merged.items()}
-    adj = _attach_tree_adj_fanouts_with_overrides(
-        list(tree.rels), {**tables, root: delta_root}, overrides)
+    adj = attach_tree_adj_fanouts(
+        tree, {**tables, root: delta_root},
+        {(root, fk): cnt for fk, cnt in merged.items()})
     w = dict(adj)
     w[root] = w[root].withColumn(WEIGHT, F.lit(1.0))
     # uniform_root: all root weights are the literal 1.0 and delta_root
@@ -182,10 +164,9 @@ def append_refresh_tree_sample(
         SAMPLE_ID, (F.col(SAMPLE_ID) + F.lit(n_keep)).cast("long"))
     samp = kept.unionByName(delta_samp)
 
-    if cache:
-        samp = samp.coalesce(max(4, n_new // 65536)).cache()
-        samp.count()
-        ts.sample.unpersist()
+    samp = samp.coalesce(max(4, n_new // 65536)).cache()
+    samp.count()
+    ts.sample.unpersist()
     delta_root.unpersist()
     return TreeSample(tree, root, samp, new_join_size, n_new)
 
@@ -195,7 +176,7 @@ def streaming_refresh_tree_sample(
     state_root: str,
     base_fk_counts: dict[str, DataFrame] | None = None,
     n_min: int = 100_000, n_max: int = 500_000, seed: int = 43,
-    cache: bool = True, timeout_sec: int = 120,
+    timeout_sec: int = 120,
 ) -> tuple[TreeSample, dict[str, DataFrame]]:
     """ONE ingest step of the streaming→model loop: an arriving root
     shard (parquet under ``delta_dir``) updates the fanout statistics
@@ -246,12 +227,9 @@ def streaming_refresh_tree_sample(
         base = (base_fk_counts or {}).get(rel.fk_col)
         if base is None:
             base = fk_counts(tables[root], rel.fk_col)
-        merged[rel.fk_col] = (base.unionByName(state)
-                              .groupBy(F.col(f"`{rel.fk_col}`")
-                                       .alias(rel.fk_col))
-                              .agg(F.sum(COUNT).alias(COUNT)))
+        merged[rel.fk_col] = _sum_counts(base, state, rel.fk_col)
     delta_root = spark.read.parquet(delta_dir)
     out = append_refresh_tree_sample(
         ts, tables, delta_root, n_min=n_min, n_max=n_max, seed=seed,
-        cache=cache, merged_fk_counts=merged)
+        merged_fk_counts=merged)
     return out, merged

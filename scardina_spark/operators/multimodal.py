@@ -22,12 +22,6 @@ idx1 index) and ``decode_avi_features`` walks the chunk tree, validates
 the headers, cross-checks idx1 against the actual movi layout, and
 un-flips the DIBs (x65).  All three modalities therefore run genuine
 container codecs built on stdlib alone (wave / zlib+struct / struct).
-``decode_stub`` remains only for the generic text-byte fixture that
-exercises batching/partitioning plumbing in isolation — the real
-decoders above ARE the drop-ins it documents: schema (binary payload +
-metadata struct), partitioning (payload-size-aware repartition so one
-executor never holds a skewed chunk of large blobs), Arrow batch
-shapes, and the UDF signature.
 
 At 100 TB the rules encoded here matter: binary columns ride along parquet
 scans without being read when pruned (columnar projection), metadata-only
@@ -43,14 +37,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType)
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("kind", StringType()),       # "image" | "audio" | "video"
-    StructField("payload", BinaryType()),
-    StructField("n_bytes", LongType()),
-    StructField("digest", StringType()),
-])
 
 
 def documents_as_media(df: DataFrame, id_col: str = "doc_id",
@@ -74,41 +60,6 @@ def metadata_only(df: DataFrame) -> DataFrame:
     """Metadata projection — must NOT read payload bytes (column pruning
     reaches the parquet scan; verify with .explain ReadSchema)."""
     return df.select("media_id", "kind", "n_bytes", "digest")
-
-
-def repartition_by_payload_size(df: DataFrame, target_bytes: int = 128 << 20
-                                ) -> DataFrame:
-    """Size-aware repartition: large payloads are the skew hazard, so the
-    partition count follows total payload bytes, not row count."""
-    total = df.agg(F.sum("n_bytes").alias("s")).collect()[0]["s"] or 0
-    n = max(1, int(total // target_bytes) + 1)
-    return df.repartition(n, "media_id")
-
-
-FEATURE_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("kind", StringType()),
-    StructField("n_bytes", LongType()),
-    StructField("feat_dim", IntegerType()),
-    StructField("feat_head", StringType()),   # hex of first feature bytes
-])
-
-
-def decode_stub(payload: bytes, kind: str) -> bytes:
-    """STUB decode kernel for the generic text-byte media fixture.
-
-    Deterministic fake 'decode': returns the first 16 payload bytes as the
-    'decoded frame'.  The REAL codecs live beside this: audio =
-    ``decode_wav_features`` (stdlib ``wave``), image =
-    ``decode_png_features`` (from-scratch PNG reader), video =
-    ``decode_avi_features`` (from-scratch RIFF/AVI reader).  This stub
-    exists only for the generic text-byte fixture whose payloads are not
-    containers; the Spark plumbing around it (batching, schema,
-    partitioning) is the part under test.
-    """
-    if kind not in ("image", "audio", "video"):
-        raise NotImplementedError(f"unknown media kind: {kind}")
-    return bytes(payload[:16])
 
 
 FRAME_SCHEMA = StructType([
@@ -280,7 +231,7 @@ def documents_as_wav(df: DataFrame, id_col: str = "doc_id",
 def decode_wav_features(df: DataFrame) -> DataFrame:
     """REAL audio decode: parse each payload with the stdlib ``wave``
     reader (RIFF header, format block, frame extraction — an actual
-    codec, unlike the image/video ``decode_stub``) and emit
+    codec) and emit
     exact-integer features: sample count, duration, PCM byte sum,
     centered sum of squares (the RMS numerator) and peak amplitude.
     Integer outputs keep the operator bit-reproducible by the DuckDB
@@ -867,27 +818,3 @@ def avi_thumbnail(df: DataFrame, frame: str = "middle") -> DataFrame:
 
     return (df.select("media_id", "payload")
             .mapInPandas(run, out_schema))
-
-
-def extract_features(df: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """Arrow-batched feature extraction over payload bytes.  The kernel is
-    the stub above; the batch loop, schema and output contract are real."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            frames = [
-                decode_stub(p if p is not None else b"", k)
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].values,
-                "kind": pdf["kind"].values,
-                "n_bytes": pdf["n_bytes"].values,
-                "feat_dim": [len(f) for f in frames],
-                "feat_head": [f.hex() for f in frames],
-            })
-
-    return df.select("media_id", "kind", "n_bytes", "payload") \
-        .mapInPandas(run, FEATURE_SCHEMA)

@@ -23,8 +23,8 @@ Scale design:
 * Out-of-vocabulary tokens get the additive-smoothing floor
   ``k / (N + k·(V+1))`` — every token contributes a finite NLL, so a
   fully-OOV document scores the worst band rather than NaN.
-* The band filter is a projection + predicate over the scored
-  relation: no extra shuffle beyond the score join.
+* Banding is a projection over the scored relation (callers filter on
+  ``ppl_band``): no extra shuffle beyond the score join.
 
 Reference relationship: Scardina has no text-quality operators at all —
 this is green-field scope from the LLM-pipeline north star (same family
@@ -119,48 +119,6 @@ def perplexity_band(df: DataFrame, lm: DataFrame, lo: float, hi: float,
             .when(F.col("ppl") < hi, F.lit("middle"))
             .otherwise(F.lit("tail")))
     return df.join(ppl, id_col).withColumn("ppl_band", band)
-
-
-def filter_by_perplexity(df: DataFrame, lm: DataFrame, lo: float,
-                         hi: float, keep: tuple[str, ...] = ("head",
-                                                             "middle"),
-                         id_col: str = "doc_id", text_col: str = "text",
-                         smoothing_k: float = 1.0) -> DataFrame:
-    """Keep only the requested bands (CCNet keeps head+middle),
-    restoring the input schema."""
-    banded = perplexity_band(df, lm, lo, hi, id_col, text_col,
-                             smoothing_k)
-    return banded.where(F.col("ppl_band").isin(*keep)) \
-        .drop("n_toks", "ppl", "ppl_band")
-
-
-def derive_ppl_thresholds(df: DataFrame, lm: DataFrame,
-                          qs: tuple[float, float] = (1 / 3, 2 / 3),
-                          lang_col: str | None = None,
-                          id_col: str = "doc_id",
-                          text_col: str = "text",
-                          smoothing_k: float = 1.0) -> DataFrame:
-    """Derive the CCNet band thresholds as perplexity percentiles —
-    the paper computes them per language over a held-out sample and
-    keeps the head+middle (lowest two thirds).  Returns one row per
-    language (``(lang, lo, hi)``; a single ``('*', lo, hi)`` row when
-    ``lang_col`` is None) to feed :func:`perplexity_band`.
-
-    Exact ``percentile`` (not approx) so the cut is deterministic and
-    engine-reproducible; the aggregation input is one double per
-    document — percentile's sort cost is bounded by the document count,
-    not the token count, and at 100 TB the held-out sample this runs
-    on is bounded by construction (CCNet protocol)."""
-    ppl = doc_perplexity(df, lm, id_col, text_col, smoothing_k)
-    if lang_col is not None:
-        ppl = ppl.join(df.select(id_col, lang_col), id_col)
-        grouped = ppl.groupBy(F.col(lang_col).alias("lang"))
-    else:
-        grouped = ppl.groupBy(F.lit("*").alias("lang"))
-    return (grouped.agg(
-        F.percentile("ppl", F.lit(float(qs[0]))).alias("lo"),
-        F.percentile("ppl", F.lit(float(qs[1]))).alias("hi"))
-        .orderBy("lang"))
 
 
 def perplexity_band_derived(df: DataFrame, lm: DataFrame,

@@ -38,15 +38,6 @@ def hash_fraction(col: F.Column | str) -> F.Column:
     return kmv_hash(col) / F.lit(HASH_SPACE)
 
 
-def bernoulli_sample(df: DataFrame, fraction: float, id_col: str,
-                     salt: str = "") -> DataFrame:
-    """Keep rows whose hash fraction of (salt || id) < ``fraction``.
-    Different salts give independent samples over the same ids; the
-    same salt selects consistent id sets across tables."""
-    key = F.concat(F.lit(salt), F.col(id_col).cast("string"))
-    return df.where(hash_fraction(key) < fraction)
-
-
 def split_train_holdout(df: DataFrame, holdout: float, id_col: str,
                         salt: str = "split") -> tuple[DataFrame, DataFrame]:
     """Disjoint, exhaustive (train, holdout) pair keyed on the id hash —

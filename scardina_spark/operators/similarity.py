@@ -421,7 +421,7 @@ class IvfIndex:
 
     def save(self, path: str) -> None:
         """Write cells as parquet partitions + centroids through a Spark
-        JSON writer (same one-filesystem rule as ``Bm25Index.save``)."""
+        JSON writer, so both land on the same filesystem."""
         import os
         (self.assigned.write.partitionBy("cell")
          .mode("overwrite").parquet(os.path.join(path, "cells")))
@@ -468,31 +468,9 @@ def ivf_build_index(df: DataFrame, k: int | None = 16, iters: int = 2,
                     id_col, vec_col)
 
 
-def ivf_append(index: IvfIndex, new_df: DataFrame) -> IvfIndex:
-    """Extend an IVF index with new vectors WITHOUT retraining — the
-    x62/x73 incremental lesson applied to ANN: the FROZEN centroids
-    assign the delta (delta-sized work, one broadcast-by-construction
-    projection), and the existing cells' data is never touched.  The
-    result is bit-identical to assigning the full union against the
-    same centroids (oracle-pinned), because assignment is a pure
-    per-row function of (vector, centroids).
-
-    The standard trade (FAISS `add` semantics): cell balance degrades
-    as the corpus drifts from the training distribution — retrain the
-    quantizer when probe-cell sizes skew, the same trigger FAISS
-    documents."""
-    cols = [index.id_col, index.vec_col]
-    na = ivf_assign(new_df.select(*cols), index.centroids,
-                    vec_col=index.vec_col)
-    return IvfIndex(
-        index.assigned.select(*cols, "cell")
-        .unionByName(na.select(*cols, "cell")),
-        index.centroids, index.id_col, index.vec_col)
-
-
 def ivf_append_saved(spark, path: str, new_df: DataFrame) -> int:
-    """Disk twin of :func:`ivf_append`: append the delta's rows into
-    the saved partition-per-cell layout (``mode=append`` writes only
+    """Append the delta's rows, assigned by the saved frozen centroids,
+    into the saved partition-per-cell layout (``mode=append`` writes only
     new files under the touched cell partitions — existing files are
     untouched, so a 0.1% delta costs 0.1% of the index write).
     Returns the number of appended rows."""
@@ -528,34 +506,6 @@ def topk_cosine_ivf_indexed(index: IvfIndex, query_vec: list[float],
     return topk_cosine(cands, query_vec, k, index.id_col, index.vec_col)
 
 
-def derive_lsh_params(n_rows: int, target_bucket_rows: int = 1024,
-                      sim: float = 0.95, target_recall: float = 0.9,
-                      ) -> tuple[int, int]:
-    """Pick ``(n_bands, rows_per_band)`` for :func:`near_dup_pairs` from
-    the corpus size: ``rows_per_band`` grows with log2(N) so the expected
-    bucket holds ~``target_bucket_rows`` vectors (bounding the quadratic
-    within-bucket join), then ``n_bands`` is the smallest band count whose
-    OR-construction recall at cosine ``sim`` reaches ``target_recall``
-    (sign-LSH collision prob p = 1 - theta/pi; recall = 1-(1-p^r)^B).
-
-    This is what keeps the operator viable at 100 TB: a FIXED plane count
-    makes the per-bucket self-join O((N/2^r)^2) with constant r — banding
-    with r derived from N keeps buckets constant-sized and buys the lost
-    recall back with more bands.
-    """
-    import math
-    r = max(4, math.ceil(math.log2(max(n_rows / max(target_bucket_rows, 1),
-                                       2.0))))
-    p = 1.0 - math.acos(min(max(sim, -1.0), 1.0)) / math.pi
-    pr = p ** r
-    if pr >= 1.0:
-        bands = 1
-    else:
-        bands = max(1, math.ceil(math.log(1.0 - min(target_recall, 0.999999))
-                                 / math.log(1.0 - pr)))
-    return bands, r
-
-
 def near_dup_pairs(df: DataFrame, threshold: float = 0.9,
                    planes: list[list[float]] | None = None, dim: int = 64,
                    id_col: str = "vec_id", vec_col: str = "embedding",
@@ -570,7 +520,7 @@ def near_dup_pairs(df: DataFrame, threshold: float = 0.9,
 
     * the per-band buckets come from ONE projection + explode — the
       shuffle key is (band, bucket) and within-bucket join work is
-      B * (N/2^r)^2, tunable via :func:`derive_lsh_params` (a single
+      B * (N/2^r)^2, tunable via ``rows_per_band`` (a single
       fixed-width table is (N/2^r)^2 with r frozen — quadratic
       blowup once buckets outgrow the corpus);
     * candidate ids (not vectors) travel through the self-join; the
@@ -995,8 +945,8 @@ def pq_topk_rerank(encoded: DataFrame, raw: DataFrame,
     recall@10 ≈ 0.5, shortlist=50 (10 % of corpus) refine ≈ 0.9,
     shortlist=100 ≈ 1.0 — but the same fixed 50 at sf0.1 (5 000
     vectors, 1 %) measured only ≈ 0.4 (bench
-    ``pq_rerank_recall_at_10_sl50``).  Size the shortlist with
-    :func:`derive_pq_params`, which scales it with the corpus.
+    ``pq_rerank_recall_at_10_sl50``).  Size the shortlist with the
+    corpus.
     """
     sl = pq_topk(encoded, codebooks, query_vec, k=shortlist,
                  id_col=id_col, codes_col=codes_col)
@@ -1049,27 +999,6 @@ def random_project(df: DataFrame, out_dim: int = 16, seed: int = 42,
     mat = projection_matrix(in_dim, out_dim, seed)
     proj = F.array(*[dot(F.col(vec_col), _lit_vec(r)) for r in mat])
     return df.withColumn(out_col, proj).drop(vec_col)
-
-
-def derive_pq_params(n_rows: int, dim: int) -> tuple[int, int, int]:
-    """Pick ``(m, k_codes, shortlist)`` from corpus size and dimension —
-    the PQ sibling of :func:`derive_ivf_params`.
-
-    m = dim/8 subspaces (8-dim subvectors, the FAISS-default
-    granularity: fine enough that per-subspace k-means stays
-    informative, coarse enough that codes stay a few bytes); k_codes
-    = 16 below 100k vectors (seeded k-means needs members per cell)
-    else 256 (the one-byte ceiling — and at that size each subspace
-    quantizer is trained on plenty); refine shortlist = max(100,
-    n/1000) capped at 10k — a fixed multiple of k on clustered real
-    corpora per the FAISS refine guidance, with the floor sized for
-    adversarially unclustered data (this repo's synthetic corpus needs
-    ~10% at tiny n, which the floor covers; the FRACTION needed shrinks
-    as codebooks grow into their budget at real scale)."""
-    m = max(4, dim // 8)
-    k_codes = 16 if n_rows < 100_000 else 256
-    shortlist = min(10_000, max(100, n_rows // 1000))
-    return m, k_codes, shortlist
 
 
 @dataclass
@@ -1142,38 +1071,17 @@ def lsh_load_index(spark, path: str) -> LshIndex:
                     planes, r["id_col"], r["vec_col"], _seed=r["seed"])
 
 
-def lsh_append_saved(spark, path: str, new_df: DataFrame) -> int:
-    """FAISS-add for the saved LSH index — completes the append trio
-    beside :func:`ivf_append_saved` and :func:`pq_append_saved`: the
-    FROZEN seed-derived planes bucket the delta (signatures are a pure
-    function of (dim, n_planes, seed), so old and new rows hash
-    identically by construction) and the new files APPEND under the
-    touched bucket partitions only.  Returns the appended row count."""
-    import os
-    idx = lsh_load_index(spark, path)
-    nb = with_lsh_bucket(new_df.select(idx.id_col, idx.vec_col),
-                         idx.planes, idx.vec_col)
-    n = nb.count()
-    # same pre-write clustering + sizing as LshIndex.save: one writer
-    # per touched bucket instead of partitions x buckets appended files
-    p = min(1 << len(idx.planes), max(8, nb.rdd.getNumPartitions()))
-    (nb.repartition(p, F.col("bucket"))
-     .write.partitionBy("bucket").mode("append")
-     .parquet(os.path.join(path, "buckets")))
-    return n
-
-
 def pq_reconstruction_error(df: DataFrame,
                             codebooks: list[list[list[float]]],
                             vec_col: str = "embedding",
                             codes_col: str | None = None) -> DataFrame:
     """Mean squared PQ reconstruction error over a corpus —
-    ``E[ Σ_j ‖v_j − book_j[code_j]‖² ]`` — the RETRAIN TRIGGER the
-    append paths (:func:`pq_append_saved`, :func:`ivfpq_append_saved`)
-    document: frozen codebooks drift as the data distribution moves, and
-    FAISS's guidance for add-heavy indexes is to monitor exactly this
-    quantity on (a sample of) newly added vectors against the
-    build-time baseline.  Returns one row ``(n, mean_sq_err, rmse)``.
+    ``E[ Σ_j ‖v_j − book_j[code_j]‖² ]`` — the RETRAIN TRIGGER for
+    indexes appended under frozen codebooks: frozen codebooks drift as
+    the data distribution moves, and FAISS's guidance for add-heavy
+    indexes is to monitor exactly this quantity on (a sample of) newly
+    added vectors against the build-time baseline.  Returns one row
+    ``(n, mean_sq_err, rmse)``.
 
     Pure codegen: with ``codes_col`` the stored codes are used directly
     (one ``element_at`` per subspace into the literal codebook, a
@@ -1258,10 +1166,10 @@ def ivf_residuals(df: DataFrame, centroids: list[list[float]],
 
 @dataclass
 class PqIndex:
-    """Materialized PQ index: the CODES relation as parquet plus the
-    codebooks as JSON rows — the trio-completing sibling of
-    :class:`IvfIndex` (partition-pruned probes) and :class:`LshIndex`
-    (bucket partitions).  PQ's scan is deliberately whole-relation (ADC
+    """Materialized PQ index: the CODES relation plus the codebooks
+    (saved with the IVF cells by :func:`ivfpq_save_index`) — the
+    trio-completing sibling of :class:`IvfIndex` (partition-pruned
+    probes) and :class:`LshIndex` (bucket partitions).  PQ's scan is deliberately whole-relation (ADC
     reads every code — that's the point: m bytes/vector), so the layout
     optimizes SIZE, not pruning; pair with :class:`IvfIndex` cells for
     a pruned+compressed hybrid when both matter."""
@@ -1275,22 +1183,10 @@ class PqIndex:
     #: ``q·centroid`` offsets, which topk_cosine_ivfpq supplies.
     residual: bool = False
 
-    def save(self, path: str) -> None:
-        import os
-        self.codes.write.mode("overwrite").parquet(
-            os.path.join(path, "codes"))
-        spark = self.codes.sparkSession
-        meta = local_df(spark,
-            [(j, [[float(x) for x in c] for c in book],
-              self.id_col, self.codes_col, bool(self.residual))
-             for j, book in enumerate(self.codebooks)], _PQ_META_SCHEMA)
-        meta.coalesce(1).write.mode("overwrite") \
-            .json(os.path.join(path, "codebooks"))
-
     def release(self) -> "PqIndex":
         """Free the codes relation's checkpoint storage (builders
         checkpoint it eagerly).  The index is unusable afterwards —
-        call when done probing, or after :meth:`save`."""
+        call when done probing, or after :func:`ivfpq_save_index`."""
         from .storage import free_checkpoint
         free_checkpoint(self.codes)
         return self
@@ -1298,46 +1194,6 @@ class PqIndex:
 
 _PQ_META_SCHEMA = ("subspace int, book array<array<double>>, "
                    "id_col string, codes_col string, residual boolean")
-
-
-def pq_build_index(df: DataFrame, m: int = 8, k_codes: int = 16,
-                   iters: int = 2, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> PqIndex:
-    """Train codebooks and encode the corpus — the index is the codes
-    relation (raw vectors are NOT stored; keep the source table for the
-    refine pass)."""
-    books = pq_train(df, m=m, k_codes=k_codes, iters=iters,
-                     vec_col=vec_col)
-    enc = pq_encode(df.select(id_col, vec_col), books, vec_col=vec_col)
-    return PqIndex(enc, books, id_col)
-
-
-def pq_load_index(spark, path: str) -> PqIndex:
-    import os
-    rows = (spark.read.schema(_PQ_META_SCHEMA)
-            .json(os.path.join(path, "codebooks"))
-            .orderBy("subspace").collect())
-    books = [[[float(x) for x in c] for c in r["book"]] for r in rows]
-    return PqIndex(spark.read.parquet(os.path.join(path, "codes")),
-                   books, rows[0]["id_col"], rows[0]["codes_col"],
-                   bool(rows[0]["residual"] or False))
-
-
-def pq_append_saved(spark, path: str, new_df: DataFrame,
-                    vec_col: str = "embedding") -> int:
-    """FAISS-add semantics for the saved PQ index (the x77 pattern):
-    the FROZEN codebooks encode only the delta, whose code files APPEND
-    under codes/ — existing files byte-untouched, work delta-sized.
-    Returns the number of appended vectors.  Retrain trigger: monitor
-    reconstruction drift (e.g. mean ADC self-score of a sample) exactly
-    as FAISS documents for add-heavy workloads."""
-    import os
-    idx = pq_load_index(spark, path)
-    delta = pq_encode(new_df.select(idx.id_col, vec_col), idx.codebooks,
-                      vec_col=vec_col, out_col=idx.codes_col)
-    n = delta.count()
-    delta.write.mode("append").parquet(os.path.join(path, "codes"))
-    return n
 
 
 def ivfpq_build_index(df: DataFrame, n_cells: int = 8, m: int = 8,
@@ -1440,28 +1296,6 @@ def ivfpq_load_index(spark, path: str) -> tuple[IvfIndex, PqIndex]:
                  bool(brows[0]["residual"] or False))
     return (IvfIndex(codes, cents, crows[0]["id_col"],
                      crows[0]["vec_col"]), pq)
-
-
-def ivfpq_append_saved(spark, path: str, new_df: DataFrame,
-                       vec_col: str = "embedding") -> int:
-    """FAISS-add for the saved hybrid: FROZEN centroids route the
-    delta's cells, FROZEN codebooks encode its (residual) codes, and
-    the new code files APPEND under the touched cell partitions —
-    existing files byte-untouched, work delta-sized.  Returns the
-    number of appended vectors.  Retrain trigger: same reconstruction-
-    drift monitoring as :func:`pq_append_saved`."""
-    import os
-    ivf, pq = ivfpq_load_index(spark, path)
-    assigned = ivf_assign(new_df.select(pq.id_col, vec_col), ivf.centroids,
-                          vec_col=vec_col)
-    enc_src = (ivf_residuals(assigned, ivf.centroids, vec_col=vec_col)
-               if pq.residual else assigned)
-    delta = pq_encode(enc_src, pq.codebooks, vec_col=vec_col,
-                      out_col=pq.codes_col)
-    n = delta.count()
-    (delta.write.partitionBy("cell").mode("append")
-     .parquet(os.path.join(path, "codes")))
-    return n
 
 
 def topk_cosine_ivfpq_indexed(spark, path: str, query_vec: list[float],

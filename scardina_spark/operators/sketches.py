@@ -67,9 +67,9 @@ def kmv_sketch(df: DataFrame, col: str, k: int = 64,
 def kmv_fold(sketches: DataFrame, k: int = 64,
              group_cols: list[str] | None = None) -> DataFrame:
     """N-way semigroup fold of a sketch table (group..., hashes): union
-    the hash sets per group, dedup, keep the k smallest.  This is THE
-    canonical merge — `kmv_merge` and the streaming read-time fold both
-    route through it, so sketch semantics live in one place."""
+    the hash sets per group, dedup, keep the k smallest: fold(sketch(A)
+    ∪ sketch(B)) == sketch(A ∪ B) exactly.  The streaming read-time fold
+    routes through it, so sketch semantics live in one place."""
     group_cols = group_cols or []
     ex = (sketches.select(*group_cols, F.explode("hashes").alias("__kh__"))
           .groupBy(*group_cols, "__kh__").agg(F.lit(1).alias("__one__")))
@@ -77,15 +77,6 @@ def kmv_fold(sketches: DataFrame, k: int = 64,
     return grouped.agg(
         F.slice(F.sort_array(F.collect_list("__kh__")), 1, k)
         .alias("hashes"))
-
-
-def kmv_merge(a: DataFrame, b: DataFrame, k: int = 64,
-              group_cols: list[str] | None = None) -> DataFrame:
-    """Merge two sketch tables (semigroup op): merge(sketch(A),
-    sketch(B)) == sketch(A ∪ B) exactly — the property that makes
-    partial sketches composable across partitions, executors, and
-    incremental batches."""
-    return kmv_fold(a.unionByName(b), k, group_cols)
 
 
 def kmv_estimate(sketch: DataFrame, k: int = 64,
@@ -154,19 +145,6 @@ def quantile_sketch(df: DataFrame, value_col: str, key_col: F.Column | str,
     return (part.groupBy(*group_cols)
             .agg(F.slice(F.sort_array(F.collect_list("__s__")), 1, k)
                  .alias("samp")))
-
-
-def quantile_sketch_merge(a: DataFrame, b: DataFrame, k: int = 256,
-                          group_cols: list[str] | None = None) -> DataFrame:
-    """Semigroup merge: union the samples per group and keep the k
-    smallest-hash rows — merge(sketch(A), sketch(B)) == sketch(A ∪ B)
-    exactly, so partial sketches compose across partitions and batches."""
-    group_cols = group_cols or []
-    both = a.unionByName(b)
-    ex = both.select(*group_cols, F.explode("samp").alias("__s__"))
-    return (ex.groupBy(*group_cols) if group_cols else ex.groupBy()) \
-        .agg(F.slice(F.sort_array(F.collect_list("__s__")), 1, k)
-             .alias("samp"))
 
 
 def quantile_estimate(sketch: DataFrame, probs: list[float],
@@ -252,8 +230,8 @@ def hll_registers(df: DataFrame, col: str, p: int = HLL_P,
     ONE map-side-combinable shuffle on (group, idx): the pre-shuffle
     combine collapses each partition to <= m rows per group, so shuffle
     volume is O(parts · m) however many rows went in — the property
-    that makes the register relation the mergeable/streamable form
-    (max is the semigroup op; see :func:`hll_fold`)."""
+    that makes the register relation the mergeable form (max per
+    (group, idx) is the semigroup op)."""
     group_cols = group_cols or []
     w_bits = 32 - p
     kh = kmv_hash(col)
@@ -267,18 +245,6 @@ def hll_registers(df: DataFrame, col: str, p: int = HLL_P,
     return (df.select(*group_cols, idx, rho.alias("__rho__"))
             .groupBy(*group_cols, "idx")
             .agg(F.max("__rho__").alias("rho")))
-
-
-def hll_fold(registers: DataFrame, group_cols: list[str] | None = None
-             ) -> DataFrame:
-    """Union-merge any number of register relations per group: max per
-    (group, idx) — the HLL semigroup.  Feed it a unionByName of shard
-    sketches; the result is EXACTLY the sketch of the unioned inputs
-    (max is associative/commutative/idempotent), which is what makes
-    per-shard sketching + fold equal to one global pass."""
-    group_cols = group_cols or []
-    return (registers.groupBy(*group_cols, "idx")
-            .agg(F.max("rho").alias("rho")))
 
 
 def hll_estimate(registers: DataFrame, p: int = HLL_P,

@@ -1,25 +1,19 @@
-"""Skew mitigation: salted aggregation and salted joins.
+"""Skew mitigation: salted aggregation.
 
 AQE's skew-join splitting (enabled in session.py) handles most runtime
-skew; these operators are for the cases AQE can't fix:
+skew; ``salted_group_agg`` covers the case AQE can't fix: a single hot
+group key overwhelms one reducer.  Two-phase: aggregate on (key, salt)
+first (spreads the hot key over ``n_salts`` reducers), then combine
+partials.  Only works for algebraic aggregates (sum/count/min/max) —
+exactly the ones the prep pipeline uses.
 
-* ``salted_group_agg`` — a single hot group key overwhelms one reducer.
-  Two-phase: aggregate on (key, salt) first (spreads the hot key over
-  ``n_salts`` reducers), then combine partials.  Only works for
-  algebraic aggregates (sum/count/min/max) — exactly the ones the prep
-  pipeline uses.
-* ``salted_broadcast_left`` — joining a huge skewed fact against a small
-  dimension: replicate the dimension ``n_salts`` times with a salt column
-  and salt the fact side randomly, so one hot FK value spreads across
-  ``n_salts`` tasks while staying an equi-join.
-
-Both rewrite to pure DataFrame ops; results are exactly equal to the
+It rewrites to pure DataFrame ops; results are exactly equal to the
 unsalted plan (tests assert equality).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 SALT = "__salt__"
 
@@ -47,21 +41,3 @@ def salted_group_agg(df: DataFrame, key_cols: list[str],
     if count_alias:
         final_aggs.append(F.sum("__pc__").alias(count_alias))
     return partial.groupBy(*[F.col(f"`{k}`") for k in key_cols]).agg(*final_aggs)
-
-
-def salted_broadcast_left(fact: DataFrame, dim: DataFrame,
-                          fact_key: str, dim_key: str,
-                          n_salts: int = 8, seed: int = 42,
-                          how: str = "inner") -> DataFrame:
-    """Equi-join ``fact ⋈ dim`` with the dim side replicated per salt and
-    the fact side salted randomly — a hot ``fact_key`` value spreads over
-    ``n_salts`` tasks.  The dim side must be broadcast-sized (it is
-    replicated ``n_salts``×)."""
-    salted_fact = fact.withColumn(
-        SALT, (F.rand(seed) * n_salts).cast("int"))
-    replicated_dim = dim.withColumn(
-        SALT, F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
-    cond = (F.col(f"`{fact_key}`") == F.col(f"`{dim_key}`")) & \
-        (salted_fact[SALT] == replicated_dim[SALT])
-    out = salted_fact.join(F.broadcast(replicated_dim), cond, how)
-    return out.drop(SALT)

@@ -8,7 +8,8 @@ Everything here is a narrow projection built from JVM-side higher-order
 functions (``filter``, ``transform``, ``regexp_*``) — no Python UDFs, so the
 whole stage stays inside whole-stage codegen and scales linearly with no
 shuffle at all.  At 100 TB these run at parquet-scan speed; the only
-shuffle in this module is the groupBy of ``source_quality_profile``.
+shuffles in this module are ``pmi_collocations``' count aggregations
+and their joins.
 """
 
 from __future__ import annotations
@@ -246,24 +247,6 @@ def select_training_corpus(df: DataFrame, min_quality: float = 0.7,
         out = (pref.where(F.col(CUM) < float(token_budget))
                .drop("__w__", "__negq__", CUM, "__pid__"))
     return out
-
-
-def source_quality_profile(df: DataFrame, col: str = "text") -> DataFrame:
-    """Per-source corpus profile — the rollup a data-curation pipeline
-    monitors.  One shuffle on ``source``; partial aggregation map-side."""
-    stats = with_text_stats(df, col)
-    return (
-        stats.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
-            F.round(F.avg("quality"), 4).alias("avg_quality"),
-            F.round(F.avg("punct_ratio"), 4).alias("avg_punct_ratio"),
-            F.sum(F.when(F.col("lang_pred") == "en", 1).otherwise(0))
-            .alias("n_pred_en"),
-        )
-        .orderBy("source")
-    )
 
 
 def pmi_collocations(df: DataFrame, min_count: int = 5,

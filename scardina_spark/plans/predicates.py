@@ -29,16 +29,12 @@ from typing import Any
 
 import numpy as np
 
-COMPARISON_OPS = {">", "<", ">=", "<=", "=", "!=", "<>"}
-ALL_OPS = COMPARISON_OPS | {
-    "IN", "BETWEEN", "IS", "IS NOT", "LIKE", "NOT LIKE", "OR",
-}
-
 
 @dataclass(frozen=True)
 class Predicate:
-    """``c`` is ``table.column`` (or a bare column name), ``o`` an op from
-    ALL_OPS, ``v`` the literal (tuple for IN/BETWEEN, None for IS [NOT]).
+    """``c`` is ``table.column`` (or a bare column name), ``o`` an op
+    (``= != <> < <= > >= IN BETWEEN LIKE NOT LIKE IS IS NOT OR``), ``v``
+    the literal (tuple for IN/BETWEEN, None for IS [NOT]).
 
     ``o == "OR"`` is a disjunction group (beyond the reference's AND-only
     language, scardina/run.py:796-917): ``v`` is a tuple of simple

@@ -28,9 +28,6 @@ from .operators.weights import WEIGHT, compute_weights
 from .plans import parse_query, plan_query
 from .plans.planner import execute_join
 
-NORM_RE = "\\s+"
-
-
 # --------------------------------------------------------------------------
 # relational / estimation-pipeline operators (SURVEY §2.1-2.6)
 # --------------------------------------------------------------------------

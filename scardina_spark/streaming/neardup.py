@@ -53,8 +53,8 @@ def build_neardup_index(index_docs: DataFrame, id_col: str = "doc_id",
     """The standing corpus's two probe targets: ``(bands, shingles)``
     — the banded signature table ``(index_id, __band__, __bh__)`` and
     the shingle table ``(index_id, sh_b)``.  Both are plain batch
-    relations (in practice materialized parquet, like `IvfIndex` /
-    `Bm25Index`); signatures use the batch explode+groupBy path, which
+    relations (in practice materialized parquet, like `IvfIndex`);
+    signatures use the batch explode+groupBy path, which
     spreads long documents' hashing across tasks."""
     sigs = minhash_signatures(index_docs, id_col, col, k_shingle,
                               n_hashes, hash_fn=hash_fn)

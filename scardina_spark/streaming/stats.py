@@ -22,9 +22,7 @@ Design — exactly-once via idempotent per-batch snapshots:
   snapshot file would have.
 
 At 100 TB each delta is key-cardinality sized (not row sized); the
-read-time merge shuffles only count tables.  Compaction (folding old
-deltas into one) is itself just the merge written back — run it whenever
-the delta count grows past a threshold.
+read-time merge shuffles only count tables.
 """
 
 from __future__ import annotations
@@ -36,17 +34,15 @@ from ..operators.fanout import COUNT, fk_counts
 KEY = "key"
 
 
-def maintain_fk_counts(stream: DataFrame, fk_col: str, state_dir: str,
-                       timeout_sec: int = 120) -> None:
-    """Drain ``stream`` (availableNow) maintaining per-``fk_col`` counts
-    under ``state_dir``.  Restart-safe: the checkpoint prevents
-    re-reading consumed files, and a replayed batch overwrites only its
-    own ``batch_id=`` directory."""
+def _drain_deltas(stream: DataFrame, state_dir: str, delta_fn,
+                  timeout_sec: int) -> None:
+    """Drain ``stream`` (availableNow) writing ``delta_fn(batch)`` of each
+    micro-batch to its own ``state_dir/batch_id=<n>``.  Restart-safe:
+    the checkpoint prevents re-reading consumed files, and a replayed
+    batch overwrites only its own ``batch_id=`` directory."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (fk_counts(batch_df, fk_col)
-         .select(F.col(f"`{fk_col}`").alias(KEY), COUNT)
-         .write.mode("overwrite")
+        (delta_fn(batch_df).write.mode("overwrite")
          .parquet(f"{state_dir}/batch_id={batch_id}"))
 
     q = (stream.writeStream.foreachBatch(sink)
@@ -67,90 +63,20 @@ def _await_drained(q, timeout_sec: int) -> None:
             "state is partial — raise timeout_sec or reduce the batch")
 
 
-def _folded_manifest(compact: str) -> list[str] | None:
-    """The list of delta dirs a ``__compact__`` snapshot folded, or None
-    when the manifest is absent/garbled (= the swap never committed)."""
-    import json
-    import os
-
-    path = f"{compact}/_manifest.json"
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            folded = json.load(f)
-        return list(folded)
-    except (OSError, ValueError):
-        return None
-
-
 def _read_deltas(spark: SparkSession, state_dir: str) -> DataFrame:
-    """All current delta tables, recovering from a crashed compaction.
-
-    Recovery is gated on the snapshot's COMMIT MANIFEST, not on delta
-    presence: a crash inside the delete loop leaves a fully-written
-    ``__compact__`` coexisting with a partial subset of ``batch_id=``
-    deltas, and folding those survivors would silently lose the deleted
-    batches' contribution.  So:
-
-    * ``__compact__/_manifest.json`` exists → the swap committed; FINISH
-      it by deleting exactly the manifested delta dirs (deltas written
-      AFTER the crash are untouched) and publishing as ``batch_id=-1``;
-    * no manifest → the snapshot never committed; the deltas are still
-      complete, so discard ``__compact__``.
-    """
-    import os
-    import shutil
-
-    compact = f"{state_dir}/__compact__"
-    if os.path.exists(compact):
-        folded = _folded_manifest(compact)
-        if folded is not None:
-            for d in folded:
-                p = f"{state_dir}/{d}"
-                if os.path.exists(p):
-                    shutil.rmtree(p)
-            os.rename(compact, f"{state_dir}/batch_id=-1")
-        else:
-            shutil.rmtree(compact)  # uncommitted: deltas are complete
+    """All batch delta tables under ``state_dir``."""
     return spark.read.parquet(f"{state_dir}/batch_id=*")
 
 
-def _swap_deltas(spark: SparkSession, state_dir: str, fold_fn) -> None:
-    """Crash-safe delta swap: snapshot the fold OUTSIDE the readable
-    glob, commit by writing a manifest of the folded delta dirs, delete
-    exactly those dirs, then publish by rename.
-
-    ONE directory listing drives everything: the snapshot is built by
-    ``fold_fn`` over exactly the listed delta paths, and the manifest
-    records exactly that list — so a batch landing mid-compaction is
-    neither folded nor deleted (it simply survives into the next
-    compaction).  A pre-listed DataFrame passed in by the caller would
-    reopen that window: Spark fixes the glob's file set when the reader
-    is created, while the delete loop would list again later.
-
-    The manifest is the commit point: before it exists the deltas are
-    authoritative (``_read_deltas`` discards the snapshot); after it,
-    the snapshot is, and recovery deletes only the manifested dirs — a
-    batch that lands between a crash and recovery is preserved, and a
-    crash midway through the delete loop loses nothing."""
-    import json
-    import os
-    import shutil
-
-    folded = sorted(d for d in os.listdir(state_dir)
-                    if d.startswith("batch_id="))
-    if not folded:
-        return
-    deltas = spark.read.parquet(*[f"{state_dir}/{d}" for d in folded])
-    merged = fold_fn(deltas)
-    compact = f"{state_dir}/__compact__"
-    merged.write.mode("overwrite").parquet(compact)
-    with open(f"{compact}/_manifest.json", "w") as f:
-        json.dump(folded, f)
-    for d in folded:
-        shutil.rmtree(f"{state_dir}/{d}")
-    os.rename(compact, f"{state_dir}/batch_id=-1")
+def maintain_fk_counts(stream: DataFrame, fk_col: str, state_dir: str,
+                       timeout_sec: int = 120) -> None:
+    """Drain ``stream`` (availableNow) maintaining per-``fk_col`` counts
+    under ``state_dir`` (see ``_drain_deltas``)."""
+    _drain_deltas(
+        stream, state_dir,
+        lambda b: fk_counts(b, fk_col).select(
+            F.col(f"`{fk_col}`").alias(KEY), COUNT),
+        timeout_sec)
 
 
 def read_fk_counts(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -168,21 +94,13 @@ def maintain_kmv_sketch(stream: DataFrame, col: str, state_dir: str,
     distinct sketch under ``state_dir``.  Same exactly-once shape as
     ``maintain_fk_counts``: each micro-batch overwrites only its own
     ``batch_id=`` delta, and because KMV sketches are a semigroup
-    (merge = union hashes, re-take k smallest — `sketches.kmv_merge`),
+    (merge = union hashes, re-take k smallest — `sketches.kmv_fold`),
     the current sketch is a read-time fold of the deltas.  Each delta is
     O(groups × k) regardless of batch size."""
     from ..operators.sketches import kmv_sketch
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (kmv_sketch(batch_df, col, k, group_cols)
-         .write.mode("overwrite")
-         .parquet(f"{state_dir}/batch_id={batch_id}"))
-
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", f"{state_dir}/_checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    _await_drained(q, timeout_sec)
+    _drain_deltas(stream, state_dir,
+                  lambda b: kmv_sketch(b, col, k, group_cols), timeout_sec)
 
 
 def read_kmv_sketch(spark: SparkSession, state_dir: str, k: int = 64,
@@ -196,20 +114,6 @@ def read_kmv_sketch(spark: SparkSession, state_dir: str, k: int = 64,
     return kmv_fold(deltas, k, group_cols)
 
 
-def compact_kmv_sketch(spark: SparkSession, state_dir: str, k: int = 64,
-                       group_cols: list[str] | None = None) -> None:
-    """Fold all sketch deltas into ``batch_id=-1`` and drop the
-    originals — bounds the delta-file count without changing the merged
-    sketch (the fold is associative, so compaction commutes with new
-    batches; the swap is crash-recoverable and lists the deltas exactly
-    once, see ``_swap_deltas``)."""
-    from ..operators.sketches import kmv_fold
-
-    _read_deltas(spark, state_dir)  # finish any interrupted swap first
-    _swap_deltas(spark, state_dir,
-                 lambda deltas: kmv_fold(deltas, k, group_cols))
-
-
 def maintain_quantile_sketch(stream: DataFrame, value_col: str,
                              key_col: str, state_dir: str, k: int = 256,
                              group_cols: list[str] | None = None,
@@ -217,22 +121,16 @@ def maintain_quantile_sketch(stream: DataFrame, value_col: str,
     """Drain ``stream`` (availableNow) maintaining a per-group quantile
     sketch (bottom-k-by-hash row sample) under ``state_dir``.  Same
     exactly-once shape as ``maintain_kmv_sketch``: idempotent per-batch
-    deltas; the sketch is a semigroup (`sketches.quantile_sketch_merge`
-    — union samples, re-take the k smallest hashes), so the current
-    summary is a read-time fold.  Each delta is O(groups × k) regardless
-    of batch size."""
+    deltas; the sketch is a semigroup (``_quantile_fold`` — union
+    samples, re-take the k smallest hashes), so the current summary is a
+    read-time fold.  Each delta is O(groups × k) regardless of batch
+    size."""
     from ..operators.sketches import quantile_sketch
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (quantile_sketch(batch_df, value_col, key_col, k, group_cols)
-         .write.mode("overwrite")
-         .parquet(f"{state_dir}/batch_id={batch_id}"))
-
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", f"{state_dir}/_checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    _await_drained(q, timeout_sec)
+    _drain_deltas(
+        stream, state_dir,
+        lambda b: quantile_sketch(b, value_col, key_col, k, group_cols),
+        timeout_sec)
 
 
 def _quantile_fold(deltas: DataFrame, k: int,
@@ -254,29 +152,6 @@ def read_quantile_sketch(spark: SparkSession, state_dir: str, k: int = 256,
     return _quantile_fold(_read_deltas(spark, state_dir), k, group_cols)
 
 
-def compact_quantile_sketch(spark: SparkSession, state_dir: str,
-                            k: int = 256,
-                            group_cols: list[str] | None = None) -> None:
-    """Fold all quantile-sketch deltas into ``batch_id=-1`` and drop the
-    originals (associative merge; crash-recoverable swap listing the
-    deltas exactly once — see ``_swap_deltas``)."""
-    _read_deltas(spark, state_dir)  # finish any interrupted swap first
-    _swap_deltas(spark, state_dir,
-                 lambda deltas: _quantile_fold(deltas, k, group_cols))
-
-
-def compact_fk_counts(spark: SparkSession, state_dir: str) -> None:
-    """Fold all deltas into ``batch_id=-1`` and drop the originals —
-    bounds the delta-file count without changing the merged statistic
-    (associative merge: compaction commutes with new batches; the swap
-    is crash-recoverable and lists the deltas exactly once, see
-    ``_swap_deltas``)."""
-    _read_deltas(spark, state_dir)  # finish any interrupted swap first
-    _swap_deltas(spark, state_dir,
-                 lambda deltas: deltas.groupBy(KEY)
-                 .agg(F.sum(COUNT).alias(COUNT)))
-
-
 def token_account_stream(docs: DataFrame, merges: list[tuple[str, str]],
                          group_col: str = "source") -> DataFrame:
     """Per-source tokenizer accounting ON INGEST: arriving documents
@@ -294,40 +169,3 @@ def token_account_stream(docs: DataFrame, merges: list[tuple[str, str]],
     return (toks.groupBy(group_col)
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("n_bpe").alias("total_bpe")))
-
-
-def maintain_hll_registers(stream: DataFrame, col: str, state_dir: str,
-                           p: int | None = None,
-                           group_cols: list[str] | None = None,
-                           timeout_sec: int = 120) -> None:
-    """Drain ``stream`` (availableNow) maintaining per-group HyperLogLog
-    registers under ``state_dir`` — the fixed-size sibling of
-    :func:`maintain_kmv_sketch`, same exactly-once shape: each
-    micro-batch overwrites only its own ``batch_id=`` delta, and because
-    registers are a max-semigroup (`sketches.hll_fold`) the current
-    sketch is a read-time fold of the deltas.  Each delta is
-    O(groups × 2^p) regardless of batch size."""
-    from ..operators.sketches import HLL_P, hll_registers
-
-    pp = HLL_P if p is None else p
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (hll_registers(batch_df, col, pp, group_cols)
-         .write.mode("overwrite")
-         .parquet(f"{state_dir}/batch_id={batch_id}"))
-
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", f"{state_dir}/_checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    _await_drained(q, timeout_sec)
-
-
-def read_hll_registers(spark: SparkSession, state_dir: str,
-                       group_cols: list[str] | None = None) -> DataFrame:
-    """Current registers: max-fold of every batch delta — identical to
-    the registers of the union of all batches (test-pinned)."""
-    from ..operators.sketches import hll_fold
-
-    deltas = _read_deltas(spark, state_dir)
-    return hll_fold(deltas, group_cols)

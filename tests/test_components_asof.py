@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from scardina_spark.operators.asof import asof_join
 from scardina_spark.operators.components import (
-    connected_components, dedup_by_groups, dup_groups)
+    connected_components, dup_groups)
 
 
 def test_components_multihop_chain(spark):
@@ -53,13 +53,6 @@ def test_components_match_duckdb_recursive(spark, duck):
     assert got == {int(k): int(v) for k, v in want.items()}
 
 
-def test_dedup_by_groups_keeps_one_per_component(spark):
-    df = spark.range(10).withColumnRenamed("id", "doc_id")
-    pairs = spark.createDataFrame([(1, 3), (3, 5), (7, 8)], ["id_a", "id_b"])
-    kept = sorted(r["doc_id"] for r in dedup_by_groups(df, pairs).collect())
-    assert kept == [0, 1, 2, 4, 6, 7, 9]
-
-
 def test_asof_join_matches_duckdb(spark, tables, duck):
     ev = tables["events"]
     left = ev.where(F.col("event_type") == "purchase") \
@@ -94,8 +87,7 @@ def test_asof_tolerance_voids_stale_matches(spark):
 
 
 def test_canonical_groups_keep_best_quality(spark):
-    from scardina_spark.operators.components import (
-        canonical_groups, dedup_canonical)
+    from scardina_spark.operators.components import canonical_groups
     # component {1,2,3} (chain), component {10,11}; quality favors the
     # HIGHEST id in the first and ties in the second (lowest id wins)
     docs = spark.createDataFrame(
@@ -106,9 +98,6 @@ def test_canonical_groups_keep_best_quality(spark):
     g = {r["member_id"]: r["keep_id"]
          for r in canonical_groups(docs, pairs, "q").collect()}
     assert g == {1: 3, 2: 3, 3: 3, 10: 10, 11: 10}
-    kept = sorted(r["doc_id"]
-                  for r in dedup_canonical(docs, pairs, "q").collect())
-    assert kept == [3, 10, 99]  # untouched rows survive
     # no window in the keeper choice (struct-max aggregation)
     plan = (canonical_groups(docs, pairs, "q")
             ._jdf.queryExecution().executedPlan().toString())

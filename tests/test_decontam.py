@@ -6,8 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from scardina_spark.operators.decontam import (
-    benchmark_ngrams, contamination_scores, decontaminate, pii_stats,
-    scrub_pii)
+    benchmark_ngrams, contamination_scores, decontaminate, scrub_pii)
 
 
 def _docs(spark, rows):
@@ -85,18 +84,6 @@ def test_scrub_pii_plan_is_pure_projection(spark):
     plan = scrub_pii(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Python" not in plan
-
-
-def test_pii_stats_counts(spark):
-    df = _docs(spark, [
-        (1, "a@b.io and c@d.io"),
-        (2, "no pii"),
-        (3, "192.168.0.1"),
-    ])
-    r = pii_stats(df).first()
-    assert r["docs_email"] == 1 and r["spans_email"] == 2
-    assert r["docs_ipv4"] == 1 and r["spans_ipv4"] == 1
-    assert r["docs_ssn"] == 0 and r["docs_phone"] == 0
 
 
 def test_strict_rule_survives_rounding(spark):

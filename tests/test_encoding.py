@@ -5,9 +5,9 @@ import math
 from pyspark.sql import functions as F
 
 from scardina_spark.functions import (
-    build_dictionary, encode_with_dictionary, encode_table, dict_sizes,
-    factorization_spec, factorize_exprs)
+    build_dictionary, encode_with_dictionary, factorization_spec)
 from scardina_spark.functions.dictionary import CODE, VALUE
+from scardina_spark.functions.factorize import sub_code_expr
 
 
 def test_dictionary_sorted_dense_codes(tables, duck):
@@ -49,10 +49,13 @@ def test_encode_out_of_domain_maps_to_null_code(spark):
 
 def test_encode_table_all_int(tables):
     li = tables["lineitem"].select("l_returnflag", "l_linestatus", "l_quantity")
-    dicts = {c: build_dictionary(li, c) for c in li.columns}
-    enc = encode_table(li, dicts)
+    enc = li
+    sizes = {}
+    for c in li.columns:
+        dic = build_dictionary(li, c)
+        sizes[c] = dic.count() + 2  # + the MASK and NULL slots
+        enc = encode_with_dictionary(enc, c, dic)
     assert [f.dataType.simpleString() for f in enc.schema.fields] == ["int"] * 3
-    sizes = dict_sizes(dicts)
     for c in li.columns:
         mx = enc.agg(F.max(f"`{c}`")).collect()[0][0]
         mn = enc.agg(F.min(f"`{c}`")).collect()[0][0]
@@ -73,7 +76,8 @@ def test_factorize_roundtrip(spark):
     spec = factorization_spec("code", 70000, 8)
     df = spark.createDataFrame(
         [(i,) for i in [1, 2, 255, 256, 69999]], ["code"])
-    out = factorize_exprs(df, spec, drop_original=False)
+    out = df.select("code", *[sub_code_expr("code", sub).alias(sub.name)
+                              for sub in spec.sub_cols])
     for r in out.collect():
         code = r["code"]
         rebuilt = 0

@@ -34,23 +34,6 @@ def test_metadata_only_prunes_payload(media):
         if "readschema" in plan.lower() else True
 
 
-def test_feature_extraction_contract(media):
-    feats = M.extract_features(media)
-    rows = feats.orderBy("media_id").collect()
-    assert len(rows) == media.count()
-    by_id = {r["media_id"]: r for r in rows}
-    src = {r["media_id"]: r for r in media.collect()}
-    for mid, r in by_id.items():
-        payload = bytes(src[mid]["payload"])
-        assert r["feat_dim"] == min(16, len(payload))
-        assert r["feat_head"] == payload[:16].hex()
-
-
-def test_decode_stub_rejects_unknown_kind():
-    with pytest.raises(NotImplementedError):
-        M.decode_stub(b"abc", "hologram")
-
-
 def test_frame_sampling_offsets_and_bytes(media):
     frames = M.sample_frames(media, n_frames=4, frame_bytes=4)
     rows = frames.orderBy("media_id", "frame_idx").collect()
@@ -75,12 +58,6 @@ def test_resize_batch_contract(media):
         assert r["resized_bytes"] == min(64, len(payload))
         assert r["scale_bp"] == (r["resized_bytes"] * 10_000) // len(payload)
         assert r["resized_head"] == payload[:8].hex()
-
-
-def test_payload_size_repartition(media):
-    out = M.repartition_by_payload_size(media, target_bytes=10_000)
-    assert out.rdd.getNumPartitions() >= 2
-    assert out.count() == media.count()
 
 
 def test_wav_container_roundtrip_real_codec(spark):

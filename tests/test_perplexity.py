@@ -72,28 +72,25 @@ def test_band_filter_keeps_head_and_middle(spark, docs):
     banded = {r["doc_id"]: r["ppl_band"]
               for r in P.perplexity_band(docs, lm, lo, hi).collect()}
     assert sorted(banded.values()) == ["head", "middle", "middle", "tail"]
-    kept = P.filter_by_perplexity(docs, lm, lo, hi)
-    assert kept.count() == 3
-    assert kept.columns == ["doc_id", "text"]
 
 
 def test_derive_ppl_thresholds_percentiles(spark, tables):
     docs = tables["documents"].limit(100)
     lm = P.train_unigram_lm(docs)
-    row = P.derive_ppl_thresholds(docs, lm).collect()
-    assert len(row) == 1 and row[0]["lang"] == "*"
-    lo, hi = row[0]["lo"], row[0]["hi"]
-    assert lo < hi
+    banded = P.perplexity_band_derived(docs, lm)
+    cuts = banded.select("lang", "lo", "hi").distinct().collect()
+    assert len(cuts) == 1 and cuts[0]["lang"] == "*"
+    assert cuts[0]["lo"] < cuts[0]["hi"]
     # the derived cut actually thirds the corpus: band sizes ~33/33/33
-    banded = P.perplexity_band(docs, lm, lo, hi)
     from pyspark.sql import functions as F
     sizes = {r["ppl_band"]: r["n"] for r in
              banded.groupBy("ppl_band")
              .agg(F.count("*").alias("n")).collect()}
     assert all(20 <= sizes.get(b, 0) <= 47 for b in
                ("head", "middle", "tail")), sizes
-    # per-language variant: one row per language, each internally sorted
-    per_lang = P.derive_ppl_thresholds(docs, lm, lang_col="lang").collect()
+    # per-language variant: one cut per language, each internally sorted
+    per_lang = (P.perplexity_band_derived(docs, lm, lang_col="lang")
+                .select("lang", "lo", "hi").distinct().collect())
     assert len(per_lang) == docs.select("lang").distinct().count()
     for r in per_lang:
         assert r["lo"] <= r["hi"]

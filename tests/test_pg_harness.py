@@ -1,9 +1,12 @@
 """Live-Postgres plan-cost harness: embedded server lifecycle, COPY
-load fidelity, card store roundtrip, join-order forcing, and the PPC
-ratio's sign on a deliberately distorted card set.  All tests skip when
-the environment ships no PostgreSQL binaries."""
+load fidelity, reproducible planner statistics, card store roundtrip,
+join-order forcing, and the PPC ratio's sign on a deliberately
+distorted card set.  All tests skip when the environment ships no
+PostgreSQL binaries."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -17,12 +20,22 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def server():
-    return PG.ensure_server()
+    srv = PG.ensure_server()
+    yield srv
+    srv.stop()
 
 
 @pytest.fixture(scope="module")
 def db(server):
     return PG.load_sf_tables(server, SF_DIR)
+
+
+def _left_deep(order):
+    """The left-deep plan tree that joins ``order`` first to last."""
+    tree = order[0]
+    for a in order[1:]:
+        tree = (tree, a)
+    return tree
 
 
 def test_load_matches_parquet_counts(server, db):
@@ -62,17 +75,17 @@ def test_forced_order_is_respected_and_costed(server, db):
            "l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey")
     pq = parse_query(sql)
     for order in (("l", "o", "c"), ("c", "o", "l")):
-        forced = PG.forced_join_sql(pq, order)
+        forced = PG.forced_join_sql_tree(pq, _left_deep(order))
         cost, join_sets = PG.explain_cost(server, db, forced,
                                           force_order=True)
         assert cost > 0
         assert PG.order_respected(order, join_sets), (order, join_sets)
     # forcing changes the plan tree: the two orders differ structurally
     _, js1 = PG.explain_cost(
-        server, db, PG.forced_join_sql(pq, ("l", "o", "c")),
+        server, db, PG.forced_join_sql_tree(pq, _left_deep(("l", "o", "c"))),
         force_order=True)
     _, js2 = PG.explain_cost(
-        server, db, PG.forced_join_sql(pq, ("c", "o", "l")),
+        server, db, PG.forced_join_sql_tree(pq, _left_deep(("c", "o", "l"))),
         force_order=True)
     assert set(js1) != set(js2)
 
@@ -86,7 +99,7 @@ def test_forced_count_matches_flat_count(server, db):
     pq = parse_query(sql)
     flat = int(server.psql(sql, db).strip())
     forced = int(server.psql(
-        PG.forced_join_sql(pq, ("o", "l")), db).strip())
+        PG.forced_join_sql_tree(pq, ("o", "l")), db).strip())
     assert forced == flat
 
 
@@ -215,7 +228,7 @@ def test_forced_count_matches_flat_count_composite_key(server, db):
            "l.l_orderkey = m.l_orderkey AND l.l_quantity = m.l_quantity "
            "AND l.l_quantity > 45")
     pq = parse_query(sql)
-    forced_sql = PG.forced_join_sql(pq, ("l", "m"))
+    forced_sql = PG.forced_join_sql_tree(pq, ("l", "m"))
     assert "l.l_orderkey = m.l_orderkey" in forced_sql
     assert "l.l_quantity = m.l_quantity" in forced_sql
     flat = int(server.psql(sql, db).strip())
@@ -259,3 +272,33 @@ def test_method_sensitivity_regimes(server, db):
     for tag in PG.METHOD_REGIMES:
         assert r2[f"pe_pg_{tag}"] > 0, tag
     assert r2["order_respected"]
+
+
+def test_reanalyze_keeps_planner_statistics(server):
+    """The native baseline's statistics are reproducible: at sf0.01 the
+    lineitem statistics sample covers the table, so a fresh ANALYZE
+    (what autovacuum or a reload would run) redraws exactly the
+    same ``pg_stats``, and a repeat load keeps the stored statistics
+    instead of running ANALYZE again."""
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    db = PG.load_sf_tables(server, sf_dir)
+    snap = ("SELECT attname, null_frac, avg_width, n_distinct, "
+            "most_common_vals::text, most_common_freqs::text, "
+            "histogram_bounds::text, correlation FROM pg_stats "
+            "WHERE tablename = 'lineitem' ORDER BY attname")
+    before = server.psql(snap, db)
+    n_cols = int(server.psql(
+        "SELECT count(*) FROM information_schema.columns "
+        "WHERE table_name = 'lineitem'", db))
+    assert len(before.splitlines()) == n_cols  # every column analyzed
+    server.psql("ANALYZE lineitem", db)
+    assert server.psql(snap, db) == before
+    last = ("SELECT last_analyze FROM pg_stat_user_tables "
+            "WHERE relname = 'lineitem'")
+    stamp = server.psql(last, db)
+    assert stamp.strip()
+    PG.load_sf_tables(server, sf_dir)
+    assert server.psql(last, db) == stamp
+    assert server.psql(
+        "SELECT reloptions::text FROM pg_class WHERE relname = 'lineitem'",
+        db).strip() == "{autovacuum_enabled=false}"

@@ -127,13 +127,15 @@ def test_estimator_count_plan_prunes_unused_columns(spark, tables):
 def test_join_sampler_plan_has_no_pathologies(spark, tables):
     """The weighted join sampler must stay all-equi-join: no
     broadcast-nested-loop, no cartesian product, no single-partition
-    exchange anywhere in the materialization plan."""
+    exchange anywhere in the materialization plan (the cached sample's
+    InMemoryRelation prints the sampler's plan)."""
     from scardina_spark.estimators import prepare_tree_sample
     from scardina_spark.estimators.sample import spanning_tree
     sg = build_tpch_schema()
     ts = prepare_tree_sample(spanning_tree(sg, "lineitem"), tables,
-                             "lineitem", n_min=10_000, cache=False, seed=7)
+                             "lineitem", n_min=10_000, seed=7)
     plan = _plan(ts.sample)
+    assert "InMemoryRelation" in plan and "Join" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan

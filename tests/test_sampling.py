@@ -14,7 +14,9 @@ def _frac(key: str) -> float:
 
 def test_bernoulli_matches_python(spark):
     df = spark.createDataFrame([(i,) for i in range(500)], ["id"])
-    got = {r["id"] for r in SA.bernoulli_sample(df, 0.3, "id").collect()}
+    # the holdout side of the split is the Bernoulli hash sample
+    got = {r["id"] for r in
+           SA.split_train_holdout(df, 0.3, "id", salt="")[1].collect()}
     want = {i for i in range(500) if _frac(str(i)) < 0.3}
     assert got == want
     assert 0.2 < len(got) / 500 < 0.4
@@ -34,8 +36,10 @@ def test_split_disjoint_exhaustive_stable(spark):
 
 def test_salts_decorrelate(spark):
     df = spark.createDataFrame([(i,) for i in range(1000)], ["id"])
-    a = {r["id"] for r in SA.bernoulli_sample(df, 0.5, "id", salt="a").collect()}
-    b = {r["id"] for r in SA.bernoulli_sample(df, 0.5, "id", salt="b").collect()}
+    a = {r["id"] for r in
+         SA.split_train_holdout(df, 0.5, "id", salt="a")[1].collect()}
+    b = {r["id"] for r in
+         SA.split_train_holdout(df, 0.5, "id", salt="b")[1].collect()}
     overlap = len(a & b) / 1000
     assert 0.15 < overlap < 0.35  # ~0.25 if independent
 

@@ -245,20 +245,6 @@ def test_near_dup_recall_against_bruteforce(spark):
     assert recall >= 0.9, (recall, len(exact))
 
 
-def test_derive_lsh_params_scales_with_corpus():
-    b_small, r_small = S.derive_lsh_params(10_000)
-    b_big, r_big = S.derive_lsh_params(10_000_000_000)
-    assert r_big > r_small          # buckets stay bounded as N grows
-    assert b_big >= b_small         # more bands buy the recall back
-    # bucket-size bound: expected rows per bucket ~ N / 2^r <= 2*target
-    assert 10_000_000_000 / 2 ** r_big <= 2 * 1024
-    # recall at the design point
-    import math
-    p = 1 - math.acos(0.95) / math.pi
-    recall = 1 - (1 - p ** r_big) ** b_big
-    assert recall >= 0.9
-
-
 def test_derive_ivf_params_probe_fraction_shrinks():
     """k ≈ √N and nprobe ≈ √k: the probed fraction of the corpus (and,
     with the partitioned index, of the files read) must strictly shrink
@@ -455,47 +441,6 @@ def test_hard_negatives_broadcasts_anchors(tables):
     assert "BroadcastNestedLoopJoin" in plan
     # no sort-merge join / corpus-side exchange beyond the final argmax agg
     assert "SortMergeJoin" not in plan
-
-
-def test_ivf_append_equals_full_assignment(spark, tables):
-    """Incremental == from-scratch under frozen centroids, both
-    in-memory and through the saved partition layout."""
-    import os
-    import shutil
-    import tempfile
-
-    emb = tables["embeddings"]
-    old = emb.where("vec_id < 300")
-    new = emb.where("vec_id >= 300")
-    idx = S.ivf_build_index(old, k=8, iters=0)
-    full = S.ivf_build_index(emb, k=8, iters=0)
-
-    def canon(df):
-        return sorted((r["vec_id"], r["cell"]) for r in df.collect())
-
-    appended = S.ivf_append(idx, new)
-    assert canon(appended.assigned) == canon(full.assigned)
-
-    path = os.path.join(tempfile.gettempdir(),
-                        f"ivfappend_test_{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        idx.save(path)
-        n = S.ivf_append_saved(spark, path, new)
-        assert n == new.count()
-        loaded = S.ivf_load_index(spark, path)
-        assert canon(loaded.assigned.select("vec_id", "cell")) \
-            == canon(full.assigned)
-        # probes over the appended index == probes over the full build
-        qv = [float(x) for x in
-              emb.where("vec_id = 0").first()["embedding"]]
-        got = [(r["vec_id"], r["cos_sim"]) for r in
-               S.topk_cosine_ivf_indexed(loaded, qv, 10, 2).collect()]
-        want = [(r["vec_id"], r["cos_sim"]) for r in
-                S.topk_cosine_ivf_indexed(full, qv, 10, 2).collect()]
-        assert got == want
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_ivf_append_saved_touches_only_new_files(spark, tables):
@@ -698,15 +643,6 @@ def test_multiprobe_lsh_validates(spark, tables, query_vec):
                           probe_hamming=99)
 
 
-def test_derive_pq_params_shapes(spark):
-    m, k, sl = S.derive_pq_params(500, 64)
-    assert (m, k, sl) == (8, 16, 100)
-    m, k, sl = S.derive_pq_params(10**9, 1024)
-    assert m == 128 and k == 256 and sl == 10_000
-    # derived params actually run end-to-end on the corpus shape
-    assert 64 % S.derive_pq_params(500, 64)[0] == 0
-
-
 def test_lsh_index_roundtrip_and_partition_pruning(spark, tables,
                                                    tmp_path, query_vec):
     """Materialized LSH index: save/load round-trip answers exactly the
@@ -732,39 +668,6 @@ def test_lsh_index_roundtrip_and_partition_pruning(spark, tables,
             ._jdf.queryExecution().executedPlan().toString())
     pf = plan.split("PartitionFilters: [")[1].split("]")[0]
     assert "bucket" in pf and "IN" in pf.upper()
-
-
-def test_pq_index_roundtrip_and_append(spark, tables, tmp_path,
-                                       query_vec):
-    """PQ index save/load answers exactly the in-memory ADC search;
-    appending under frozen codebooks == encoding the unioned corpus,
-    and existing code files stay byte-untouched (FAISS-add, x77
-    pattern)."""
-    import os
-    from pyspark.sql import functions as F
-    emb = tables["embeddings"].select("vec_id", "embedding")
-    old = emb.where(F.col("vec_id") < 400)
-    new = emb.where(F.col("vec_id") >= 400)
-    idx = S.pq_build_index(old, m=8, k_codes=16, iters=1)
-    path = str(tmp_path / "pqidx")
-    idx.save(path)
-    loaded = S.pq_load_index(spark, path)
-    mem = S.pq_topk(idx.codes, idx.codebooks, query_vec, 10)
-    ind = S.pq_topk(loaded.codes, loaded.codebooks, query_vec, 10)
-    assert (sorted(tuple(r) for r in mem.collect())
-            == sorted(tuple(r) for r in ind.collect()))
-    files_before = {f: os.path.getmtime(os.path.join(path, "codes", f))
-                    for f in os.listdir(os.path.join(path, "codes"))
-                    if f.endswith(".parquet")}
-    n = S.pq_append_saved(spark, path, new)
-    assert n == new.count()
-    for f, mt in files_before.items():
-        assert os.path.getmtime(os.path.join(path, "codes", f)) == mt
-    after = S.pq_load_index(spark, path)
-    whole = S.pq_encode(emb, idx.codebooks)
-    a = {r["vec_id"]: tuple(r["pq_codes"]) for r in after.codes.collect()}
-    b = {r["vec_id"]: tuple(r["pq_codes"]) for r in whole.collect()}
-    assert a == b
 
 
 def test_ivfpq_hybrid_prunes_and_recovers_recall(spark, tables,
@@ -890,38 +793,16 @@ def test_residual_adc_approximates_true_dot(spark, tables, query_vec):
     assert errs[True] <= errs[False] * 1.05, errs
 
 
-def test_pq_index_residual_flag_roundtrips(spark, tables, tmp_path):
-    """save/load preserves the residual flag (and old indexes without
-    the field load as residual=False)."""
-    emb = tables["embeddings"].select("vec_id", "embedding")
-    _, pq = S.ivfpq_build_index(emb, n_cells=4, m=8, k_codes=8,
-                                residual=True)
-    p = str(tmp_path / "pqidx")
-    pq.save(p)
-    loaded = S.pq_load_index(spark, p)
-    assert loaded.residual is True
-    # legacy meta without the residual column -> False
-    _, pq0 = S.ivfpq_build_index(emb, n_cells=4, m=8, k_codes=8,
-                                 residual=False)
-    p0 = str(tmp_path / "pqidx0")
-    pq0.save(p0)
-    loaded0 = S.pq_load_index(spark, p0)
-    assert loaded0.residual is False
-
-
-def test_ivfpq_saved_index_roundtrip_prunes_and_appends(spark, tables,
-                                                        tmp_path,
-                                                        query_vec):
-    """The saved hybrid completes the index trio: save/load reproduces
-    the in-memory search exactly, the ADC probe over the saved layout
-    shows PartitionFilters on cell (pruned file scan), and FAISS-add
-    appends encode with FROZEN centroids+codebooks so the grown index
-    equals a from-scratch encode of the union."""
+def test_ivfpq_saved_index_roundtrip_and_pruning(spark, tables, tmp_path,
+                                                 query_vec):
+    """The saved hybrid (the ``ann --method ivfpq --index`` layout):
+    save/load reproduces the in-memory search exactly, the residual
+    flag survives the roundtrip, and the ADC probe over the saved
+    layout shows PartitionFilters on cell (pruned file scan)."""
     from pyspark.sql import functions as F
 
     emb = tables["embeddings"].select("vec_id", "embedding")
     half = emb.where(F.col("vec_id") % 2 == 0)
-    rest = emb.where(F.col("vec_id") % 2 == 1)
     ivf, pq = S.ivfpq_build_index(half, n_cells=8, m=8, k_codes=16,
                                   residual=True)
     p = str(tmp_path / "hybrid")
@@ -942,44 +823,6 @@ def test_ivfpq_saved_index_roundtrip_prunes_and_appends(spark, tables,
     scan = pq2.codes.where(F.col("cell").isin(probe))
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan, plan
-
-    # FAISS-add: appended codes == from-scratch encode of the union
-    n = S.ivfpq_append_saved(spark, p, rest)
-    assert n == rest.count()
-    _, pq_grown = S.ivfpq_load_index(spark, p)
-    assigned = S.ivf_assign(emb, ivf2.centroids)
-    enc_src = S.ivf_residuals(assigned, ivf2.centroids)
-    whole = S.pq_encode(enc_src, pq2.codebooks)
-    a = {r["vec_id"]: tuple(r["pq_codes"])
-         for r in pq_grown.codes.collect()}
-    b = {r["vec_id"]: tuple(r["pq_codes"]) for r in whole.collect()}
-    assert a == b
-
-
-def test_lsh_append_saved_equals_from_scratch(spark, tables, tmp_path,
-                                              query_vec):
-    """The LSH append leg: frozen seed-derived planes bucket the delta
-    identically to a from-scratch build, so the grown index's buckets
-    and probed top-k equal the whole-corpus build's."""
-    from pyspark.sql import functions as F
-
-    emb = tables["embeddings"].select("vec_id", "embedding")
-    half = emb.where(F.col("vec_id") % 2 == 0)
-    rest = emb.where(F.col("vec_id") % 2 == 1)
-    p = str(tmp_path / "lshidx")
-    S.lsh_build_index(half, n_planes=8, seed=42).save(p)
-    n = S.lsh_append_saved(spark, p, rest)
-    assert n == rest.count()
-    grown = S.lsh_load_index(spark, p)
-    whole = S.lsh_build_index(emb, n_planes=8, seed=42)
-    a = {r["vec_id"]: r["bucket"] for r in grown.bucketed.collect()}
-    b = {r["vec_id"]: r["bucket"] for r in whole.bucketed.collect()}
-    assert a == b
-    got = S.topk_cosine_lsh_indexed(grown, query_vec, 10,
-                                    probe_hamming=2).collect()
-    want = S.topk_cosine_lsh(emb, query_vec, 10,
-                             probe_hamming=2).collect()
-    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
 
 
 def test_pq_reconstruction_error_matches_numpy(spark, tables):

@@ -50,8 +50,8 @@ def test_merge_equals_whole(spark):
     a = spark.createDataFrame([(i,) for i in range(300)], ["v"])
     b = spark.createDataFrame([(i,) for i in range(200, 600)], ["v"])
     k = 16
-    merged = SK.kmv_merge(SK.kmv_sketch(a, "v", k), SK.kmv_sketch(b, "v", k),
-                          k).first()["hashes"]
+    merged = SK.kmv_fold(SK.kmv_sketch(a, "v", k).unionByName(
+        SK.kmv_sketch(b, "v", k)), k).first()["hashes"]
     whole = SK.kmv_sketch(a.unionByName(b), "v", k).first()["hashes"]
     assert merged == whole == _kmv_py(range(600), k)
 
@@ -184,9 +184,11 @@ def test_quantile_merge_equals_whole(spark):
                               ["k", "v"])
     whole = spark.createDataFrame([(i, float(i)) for i in range(400)],
                                   ["k", "v"])
-    m = SK.quantile_sketch_merge(
-        SK.quantile_sketch(a, "v", F.col("k"), k=32),
-        SK.quantile_sketch(b, "v", F.col("k"), k=32), k=32).first()["samp"]
+    from scardina_spark.streaming.stats import _quantile_fold
+    m = _quantile_fold(
+        SK.quantile_sketch(a, "v", F.col("k"), k=32).unionByName(
+            SK.quantile_sketch(b, "v", F.col("k"), k=32)),
+        32, None).first()["samp"]
     w = SK.quantile_sketch(whole, "v", F.col("k"), k=32).first()["samp"]
     assert [(s["h"], s["v"]) for s in m] == [(s["h"], s["v"]) for s in w]
 
@@ -230,29 +232,6 @@ def test_hll_estimate_within_expected_error(spark, tables):
     assert set(est) == set(exact)
     for k, e in est.items():
         assert abs(e - exact[k]) / exact[k] <= 0.25, (k, e, exact[k])
-
-
-def test_hll_fold_equals_global_sketch(spark, tables):
-    """The semigroup property: per-shard registers folded == one global
-    pass, bit-for-bit (max is associative/commutative/idempotent) —
-    what makes HLL the 100 TB shard-then-merge sketch."""
-    from scardina_spark.operators import sketches as SK
-    ev = tables["events"]
-    whole = SK.hll_registers(ev, "user_id", group_cols=["event_type"])
-    s1 = SK.hll_registers(ev.where(F.col("user_id") % 3 == 0),
-                          "user_id", group_cols=["event_type"])
-    s2 = SK.hll_registers(ev.where(F.col("user_id") % 3 != 0),
-                          "user_id", group_cols=["event_type"])
-    folded = SK.hll_fold(s1.unionByName(s2), group_cols=["event_type"])
-    a = sorted(tuple(r) for r in whole.collect())
-    b = sorted(tuple(r) for r in folded.collect())
-    assert a == b
-    # and the estimates therefore agree exactly
-    ea = sorted(tuple(r) for r in
-                SK.hll_estimate(whole, group_cols=["event_type"]).collect())
-    eb = sorted(tuple(r) for r in
-                SK.hll_estimate(folded, group_cols=["event_type"]).collect())
-    assert ea == eb
 
 
 def test_hll_layout_invariant_and_small_range(spark):

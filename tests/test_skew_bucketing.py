@@ -1,8 +1,8 @@
-"""Salted aggregation/join equality + bucketed co-located joins."""
+"""Salted aggregation equality + bucketed co-located joins."""
 
 from pyspark.sql import functions as F
 
-from scardina_spark.operators.skew import salted_broadcast_left, salted_group_agg
+from scardina_spark.operators.skew import salted_group_agg
 
 
 def _skewed_df(spark):
@@ -19,17 +19,6 @@ def test_salted_group_agg_equals_plain(spark):
                                  F.count(F.lit(1)).alias("c")).collect()}
     salted = {(r["k"]): (r["s"], r["c"]) for r in
               salted_group_agg(df, ["k"], {"v": "s"}, "c").collect()}
-    assert salted == plain
-
-
-def test_salted_join_equals_plain(spark):
-    fact = _skewed_df(spark)
-    dim = spark.range(100).select(
-        F.col("id").alias("dk"), (F.col("id") * 10).alias("dv"))
-    plain = sorted((r["id"], r["dv"]) for r in
-                   fact.join(dim, fact["k"] == dim["dk"]).collect())
-    salted = sorted((r["id"], r["dv"]) for r in
-                    salted_broadcast_left(fact, dim, "k", "dk").collect())
     assert salted == plain
 
 

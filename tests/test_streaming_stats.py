@@ -1,5 +1,5 @@
 """Streaming maintenance of per-FK counts: multi-batch merge equals the
-batch recompute; restarts and compaction change nothing."""
+batch recompute; restarts change nothing."""
 
 from __future__ import annotations
 
@@ -8,8 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from scardina_spark.streaming.stats import (
-    compact_fk_counts, maintain_fk_counts, read_fk_counts)
+from scardina_spark.streaming.stats import maintain_fk_counts, read_fk_counts
 
 
 @pytest.fixture(scope="module")
@@ -74,16 +73,6 @@ def test_new_file_after_restart_merges_in(spark, tables, event_files,
     assert got == want
 
 
-def test_compaction_preserves_counts(spark, event_files, tmp_path):
-    state = str(tmp_path / "state")
-    maintain_fk_counts(_stream(spark, event_files), "user_id", state)
-    before = sorted(read_fk_counts(spark, state).collect())
-    compact_fk_counts(spark, state)
-    dirs = [d for d in os.listdir(state) if d.startswith("batch_id=")]
-    assert dirs == ["batch_id=-1"]
-    assert sorted(read_fk_counts(spark, state).collect()) == before
-
-
 def test_stream_kmv_sketch_equals_batch(spark, tables, event_files,
                                         tmp_path):
     """Multi-batch streamed KMV sketch == batch sketch of all events,
@@ -102,147 +91,6 @@ def test_stream_kmv_sketch_equals_batch(spark, tables, event_files,
             kmv_sketch(tables["events"], "user_id", k=16,
                        group_cols=["event_type"]).collect()}
     assert got == want
-
-
-def test_kmv_compaction_preserves_sketch(spark, tables, event_files,
-                                         tmp_path):
-    import os
-
-    from scardina_spark.streaming.stats import (
-        compact_kmv_sketch, maintain_kmv_sketch, read_kmv_sketch)
-
-    state = str(tmp_path / "state")
-    maintain_kmv_sketch(_stream(spark, event_files), "user_id", state,
-                        k=16, group_cols=["event_type"])
-    before = {r["event_type"]: r["hashes"] for r in
-              read_kmv_sketch(spark, state, k=16,
-                              group_cols=["event_type"]).collect()}
-    compact_kmv_sketch(spark, state, k=16, group_cols=["event_type"])
-    deltas = [d for d in os.listdir(state) if d.startswith("batch_id=")]
-    assert deltas == ["batch_id=-1"]
-    after = {r["event_type"]: r["hashes"] for r in
-             read_kmv_sketch(spark, state, k=16,
-                             group_cols=["event_type"]).collect()}
-    assert before == after
-
-
-def _committed_snapshot(state, merged):
-    """Replicate _swap_deltas up to its commit point (manifest written),
-    returning the folded delta dirs — callers then crash the delete loop
-    wherever they like."""
-    import json
-    import os
-
-    folded = [d for d in os.listdir(state) if d.startswith("batch_id=")]
-    merged.write.mode("overwrite").parquet(f"{state}/__compact__")
-    with open(f"{state}/__compact__/_manifest.json", "w") as f:
-        json.dump(folded, f)
-    return folded
-
-
-def test_compaction_crash_window_recovers(spark, tables, event_files,
-                                          tmp_path):
-    """A crash between delta deletion and snapshot publication must not
-    lose state: the read path publishes the committed __compact__."""
-    import os
-    import shutil
-
-    from scardina_spark.streaming.stats import (
-        maintain_kmv_sketch, read_kmv_sketch)
-
-    state = str(tmp_path / "state")
-    maintain_kmv_sketch(_stream(spark, event_files), "user_id", state,
-                        k=16, group_cols=["event_type"])
-    want = {r["event_type"]: r["hashes"] for r in
-            read_kmv_sketch(spark, state, k=16,
-                            group_cols=["event_type"]).collect()}
-
-    # simulate the crash: snapshot committed, deltas deleted, rename lost
-    merged = read_kmv_sketch(spark, state, k=16,
-                             group_cols=["event_type"])
-    for d in _committed_snapshot(state, merged):
-        shutil.rmtree(f"{state}/{d}")
-
-    got = {r["event_type"]: r["hashes"] for r in
-           read_kmv_sketch(spark, state, k=16,
-                           group_cols=["event_type"]).collect()}
-    assert got == want
-    assert not os.path.exists(f"{state}/__compact__")  # published
-
-
-def test_mid_delete_crash_recovers(spark, tables, event_files, tmp_path):
-    """THE lost-update window: a committed snapshot coexisting with a
-    partial subset of deltas (crash midway through the delete loop).
-    Folding the survivors would silently drop the deleted batches; the
-    manifest gate must finish the swap instead."""
-    import os
-    import shutil
-
-    from scardina_spark.streaming.stats import (
-        maintain_fk_counts, read_fk_counts)
-
-    state = str(tmp_path / "state")
-    maintain_fk_counts(_stream(spark, event_files), "user_id", state)
-    want = sorted(read_fk_counts(spark, state).collect())
-
-    merged = read_fk_counts(spark, state).selectExpr("key", "cnt as count")
-    folded = _committed_snapshot(state, merged)
-    assert len(folded) >= 2, "fixture needs multiple deltas"
-    shutil.rmtree(f"{state}/{folded[0]}")  # crash after the FIRST delete
-
-    got = sorted(read_fk_counts(spark, state).collect())
-    assert got == want
-    assert not os.path.exists(f"{state}/__compact__")
-
-
-def test_post_crash_batch_survives_recovery(spark, tables, event_files,
-                                            tmp_path):
-    """A delta written AFTER a crashed (committed) compaction but BEFORE
-    recovery is not part of the manifest and must survive the finished
-    swap."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from scardina_spark.streaming.stats import (
-        maintain_fk_counts, read_fk_counts)
-
-    state = str(tmp_path / "state")
-    maintain_fk_counts(_stream(spark, event_files), "user_id", state)
-    base = {r["key"]: r["cnt"] for r in read_fk_counts(spark, state).collect()}
-
-    merged = read_fk_counts(spark, state).selectExpr("key", "cnt as count")
-    for d in _committed_snapshot(state, merged):
-        shutil.rmtree(f"{state}/{d}")
-    # the late batch: one more occurrence of a known key
-    some_key = min(base)
-    spark.createDataFrame([(some_key, 1)], "key long, count long") \
-        .write.mode("overwrite").parquet(f"{state}/batch_id=999")
-
-    got = {r["key"]: r["cnt"] for r in read_fk_counts(spark, state).collect()}
-    assert got[some_key] == base[some_key] + 1
-    assert {k: v for k, v in got.items() if k != some_key} == \
-        {k: v for k, v in base.items() if k != some_key}
-
-
-def test_uncommitted_compact_snapshot_is_discarded(spark, tables,
-                                                   event_files, tmp_path):
-    """__compact__ without a manifest (crash BEFORE the commit point)
-    must be ignored — the deltas are still complete — not double-merged."""
-    import os
-
-    from scardina_spark.streaming.stats import (
-        maintain_fk_counts, read_fk_counts)
-
-    state = str(tmp_path / "state")
-    maintain_fk_counts(_stream(spark, event_files), "user_id", state)
-    want = sorted(read_fk_counts(spark, state).collect())
-    # uncommitted snapshot (no manifest) next to intact deltas
-    read_fk_counts(spark, state).selectExpr("key", "cnt as cnt") \
-        .write.mode("overwrite").parquet(f"{state}/__compact__")
-    got = sorted(read_fk_counts(spark, state).collect())
-    assert got == want
-    assert not os.path.exists(f"{state}/__compact__")
 
 
 def test_stream_quantile_sketch_equals_batch(spark, tables, event_files,
@@ -265,28 +113,6 @@ def test_stream_quantile_sketch_equals_batch(spark, tables, event_files,
                             "event_id", 32,
                             group_cols=["event_type"]).collect()}
     assert got == want
-
-
-def test_quantile_compaction_preserves_sketch(spark, tables, event_files,
-                                              tmp_path):
-    from scardina_spark.streaming.stats import (
-        compact_quantile_sketch, maintain_quantile_sketch,
-        read_quantile_sketch)
-
-    state = str(tmp_path / "state")
-    maintain_quantile_sketch(_stream(spark, event_files), "value",
-                             "event_id", state, k=32,
-                             group_cols=["event_type"])
-    before = {r["event_type"]: r["samp"] for r in
-              read_quantile_sketch(spark, state, k=32,
-                                   group_cols=["event_type"]).collect()}
-    compact_quantile_sketch(spark, state, k=32, group_cols=["event_type"])
-    deltas = [d for d in os.listdir(state) if d.startswith("batch_id=")]
-    assert deltas == ["batch_id=-1"]
-    after = {r["event_type"]: r["samp"] for r in
-             read_quantile_sketch(spark, state, k=32,
-                                  group_cols=["event_type"]).collect()}
-    assert before == after
 
 
 def test_token_account_stream_matches_batch(spark, sf_dir):
@@ -324,30 +150,3 @@ def test_token_account_stream_single_stateful_op(spark, sf_dir):
     assert st.isStreaming
     plan = st._jdf.queryExecution().analyzed().toString()
     assert plan.count("Aggregate") == 1, plan
-
-
-def test_streamed_hll_equals_batch_sketch(spark, sf_dir, tmp_path):
-    """Streamed register maintenance == one batch pass, bit-for-bit,
-    and therefore the estimates agree exactly (the max-semigroup
-    property, the HLL leg of the st8 pattern)."""
-    from scardina_spark.catalog import load_table
-    from scardina_spark.operators.sketches import (
-        approx_distinct_hll, hll_estimate, hll_registers)
-    from scardina_spark.streaming import read_events_stream
-    from scardina_spark.streaming.stats import (
-        maintain_hll_registers, read_hll_registers)
-
-    state = str(tmp_path / "hll_state")
-    maintain_hll_registers(read_events_stream(spark, sf_dir), "user_id",
-                           state, group_cols=["event_type"])
-    streamed = read_hll_registers(spark, state,
-                                  group_cols=["event_type"])
-    ev = load_table(spark, sf_dir, "events")
-    batch = hll_registers(ev, "user_id", group_cols=["event_type"])
-    assert (sorted(tuple(r) for r in streamed.collect())
-            == sorted(tuple(r) for r in batch.collect()))
-    a = sorted(tuple(r) for r in hll_estimate(
-        streamed, group_cols=["event_type"]).collect())
-    b = sorted(tuple(r) for r in approx_distinct_hll(
-        ev, "user_id", group_cols=["event_type"]).collect())
-    assert a == b

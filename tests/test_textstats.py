@@ -55,14 +55,6 @@ def test_fingerprint_normalization(spark):
     assert by_id[1] != by_id[3]
 
 
-def test_source_profile_shapes(tables):
-    prof = T.source_quality_profile(tables["documents"])
-    rows = prof.collect()
-    assert {r["source"] for r in rows} == {
-        r[0] for r in tables["documents"].select("source").distinct().collect()}
-    assert all(r["n_docs"] > 0 and 0 <= r["avg_quality"] <= 1 for r in rows)
-
-
 def test_select_training_corpus(tables):
     """The composite pipeline gates by quality+lang, collapses exact dups,
     and the greedy token budget keeps the highest-quality prefix."""
