@@ -545,14 +545,10 @@ def main() -> None:
     def build_cin() -> NarCinEstimator:
         big = _TC(epochs=8, d_word=16, d_ff=64, batch_size=1024, seed=42)
         small = _TC(epochs=10, d_word=12, d_ff=48, batch_size=1024, seed=42)
-        # localize=True so the chained path's HT cross-validation
-        # (sample_arbiter) runs as a few vectorized numpy passes per
-        # fragment.
         return build_cin_estimator(
             sg, tables, CIN_MODEL_COLUMNS,
             lambda center: big if center == "lineitem" else small,
-            sample_size=1000, max_rows=32_000, fact_threshold=8,
-            seed=42, localize=True)
+            sample_size=1000, max_rows=32_000, fact_threshold=8, seed=42)
 
     nar_cin = timed("joblight_cin_train", build_cin)
     # gated arbiter since round 4 (same protocol as the jm NAR hybrid):
@@ -664,7 +660,6 @@ def main() -> None:
                                       n_max=50_000, seed=42)
             cin.add(train_join_estimator(ts_, cols, cfg, sample_size=500,
                                          max_rows=32_000, fact_threshold=8))
-            ts_.localize()
         return cin
 
     jm_cin = timed("jm_cin_train", build_jm_cin)

@@ -160,17 +160,12 @@ def cmd_estimate(args) -> int:
         print("--hybrid applies to the learned estimators (nar-*)",
               file=sys.stderr)
         return 2
-    if getattr(args, "hybrid", None) and hasattr(est, "ts"):
-        # learned estimator + its own training sample as the checker
+    if getattr(args, "hybrid", None):
+        # the learned estimator's own training samples as the checker;
+        # stitching lets it check chained CIN queries too
         from .estimators import HybridEstimator
-        checker = SampleEstimator()
-        checker.add(est.ts.localize())
-        est = HybridEstimator(est, checker, name=f"{est.name}+{args.hybrid}",
-                              mode=args.hybrid)
-    elif getattr(args, "hybrid", None) and hasattr(est, "samples"):
-        from .estimators import HybridEstimator
-        checker = SampleEstimator()
-        for ts in est.samples:
+        checker = StitchedEstimator()
+        for ts in getattr(est, "samples", None) or [est.ts]:
             checker.add(ts.localize())
         est = HybridEstimator(est, checker, name=f"{est.name}+{args.hybrid}",
                               mode=args.hybrid)

@@ -12,26 +12,14 @@ per-row values for its fragment, each subsequent model fixes the shared
 columns to those values (unmasked inputs, no probability contribution),
 samples only its NEW tables' predicates/markers, and up-scales by the
 sampled fanout of the shared→new crossing edges (estimators.py:
-1413-1423).  When a chain step can't inherit (a fanout or predicate
-column missing from a model), estimation falls back to the
+1413-1423).  That inherited chain is the one chained estimate; the
 expectation-level ratio chain
 
     P_k(frag_k) / P_k(frag_k ∩ shared)
 
-— the same chain rule over model estimates, shared with the sample-backed
-StitchedEstimator.
-
-Beyond the reference (which discards its join samples at query time), the
-chained path cross-validates against the materialized samples themselves:
-the same chain rule evaluated with per-fragment Horvitz-Thompson
-aggregates (``sample_arbiter``).  The HT chain is unbiased per fragment
-and nearly uncorrelated with the model chains' smoothing bias, so the
-log-space average (geometric mean) of the two roughly halves the tail
-error (measured on the 30 chained suite queries: p90 1.23 -> 1.12, max
-hybrid-clamped 1.28 -> ~1.4 at sf0.01 before clamping vs 70 unclamped).
-A zero HT chain short-circuits to 0 — the sample resolves down to O(1)
-rows of the sub-join, the same argument as estimators/hybrid.py.  Loaded
-checkpoints carry no samples and fall back to the pure-model chain.
+(the chain rule StitchedEstimator evaluates over HT aggregates) serves
+only the queries the inherited chain cannot answer.  Checking an
+estimate against the materialized samples is HybridEstimator's job.
 """
 
 from __future__ import annotations
@@ -51,11 +39,6 @@ class NarCinEstimator:
 
     models: list = field(default_factory=list)  # [NarJoinEstimator]
     name: str = "nar-cin"
-    # cross-validate chained estimates against the materialized samples
-    # (geometric-mean combine; disabled automatically when samples are
-    # absent, e.g. a loaded checkpoint)
-    sample_arbiter: bool = True
-    _ht_by_ts: dict = field(default_factory=dict, repr=False)
 
     def add(self, model) -> None:
         self.models.append(model)
@@ -82,56 +65,14 @@ class NarCinEstimator:
                 return m.estimate(pq)
             except UnsupportedQueryError:
                 continue
-        # chained path: the per-row inherited-sample chain and the
-        # expectation-ratio chain estimate the same quantity with roughly
-        # log-symmetric, weakly-correlated errors — their geometric mean
-        # beats either alone (measured on the 30 chained suite queries:
-        # p90 q-error 1.23 vs 1.69 inherited / 1.44 ratio).  Either path
-        # alone still serves when the other cannot answer.
-        inh = ratio = None
         try:
-            inh = self._estimate_inherited(pq)
+            return self._estimate_inherited(pq)
         except (UnsupportedQueryError, ValueError):
-            pass
-        try:
-            ratio = chain_estimate(
+            # a shared column whose dictionary values stay off the
+            # driver (DistributedDomain) cannot be inherited by value
+            return chain_estimate(
                 self.samples, pq,
                 lambda ts, frag: self._model_for(ts).estimate(frag))
-        except (UnsupportedQueryError, ValueError):
-            if inh is None:
-                raise
-        if inh is None:
-            model = ratio
-        elif ratio is None:
-            model = inh
-        else:
-            model = float(np.sqrt(max(inh, 0.0) * max(ratio, 0.0)))
-        ht = self._ht_chain(pq) if self.sample_arbiter else None
-        if ht is None:
-            return model
-        if ht <= 0:
-            return 0.0
-        return float(np.sqrt(max(model, 0.0) * ht))
-
-    def _ht_chain(self, pq: ParsedQuery) -> float | None:
-        """The same conditional chain with per-fragment Horvitz-Thompson
-        aggregates over the materialized samples; None when any fragment's
-        sample is unavailable (checkpoint-loaded estimators)."""
-        from .sample import SampleEstimator
-
-        def frag_est(ts: TreeSample, frag) -> float:
-            if ts.sample is None and ts.local is None:
-                raise UnsupportedQueryError("no materialized sample")
-            se = self._ht_by_ts.get(id(ts))
-            if se is None:
-                se = SampleEstimator(samples=[ts], name="cin-ht")
-                self._ht_by_ts[id(ts)] = se
-            return se.estimate(frag)
-
-        try:
-            return chain_estimate(self.samples, pq, frag_est)
-        except (UnsupportedQueryError, ValueError, AttributeError):
-            return None
 
     def _estimate_inherited(self, pq: ParsedQuery) -> float:
         """Per-row chained estimation with inherited shared-column samples
@@ -197,15 +138,13 @@ def load_cin_estimator(path: str, sg=None) -> NarCinEstimator:
 def build_cin_estimator(sg, tables, model_columns: dict,
                         cfg_for, *, sample_size: int = 1000,
                         max_rows: int = 32_000, fact_threshold: int = 8,
-                        seed: int = 42, localize: bool = False,
-                        arch: str = "mlp") -> NarCinEstimator:
+                        seed: int = 42, arch: str = "mlp") -> NarCinEstimator:
     """Prepare + train every CIN subschema model, one at a time.
 
     ``cfg_for(center)`` returns the TrainConfig for one center.  Each
     subschema's sample is prepared, then its model fitted, in
     ``model_columns`` order; each trainer owns its own seeded
     RandomState, so the models (and every estimate) are deterministic.
-    ``localize=True`` pulls each sample to the driver after its fit.
     """
     from ..model.join_bridge import train_join_estimator
     from .sample import cin_trees, prepare_tree_sample
@@ -223,6 +162,4 @@ def build_cin_estimator(sg, tables, model_columns: dict,
                 ts, cin_cols, cfg_for(center), sample_size=sample_size,
                 max_rows=max_rows, fact_threshold=fact_threshold,
                 arch=arch))
-            if localize:
-                ts.localize()
     return est

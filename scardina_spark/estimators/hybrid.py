@@ -38,8 +38,8 @@ class HybridEstimator:
     model stays primary inside the band (where the sample cannot
     adjudicate); the band is tight exactly where the sample is sure.
     ``mode="arbiter"`` cross-validates the learned estimate against the
-    HT estimate (plus the zero short-circuit) — the same protocol
-    ``NarCinEstimator.sample_arbiter`` applies to chained estimates.
+    HT estimate (plus the zero short-circuit); with a
+    ``StitchedEstimator`` checker that covers chained CIN queries too.
     When the two agree within ``gate``x, it returns their geometric mean
     (in log space the geomean halves the worst single-side error); when
     they disagree by MORE than ``gate``x, the disagreement itself is the

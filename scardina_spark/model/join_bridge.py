@@ -33,7 +33,7 @@ from ..plans.parse import ParsedQuery, parse_query
 from ..plans.predicates import Predicate, normalize_predicates
 from .bridge import training_matrix
 from .nar import NarMLP, TrainConfig
-from .progressive import MASK_SLOT, NarEstimator, distinct_rows, valid_mask
+from .progressive import NarEstimator
 
 
 def _require_local_values(dom, what: str) -> np.ndarray:
@@ -77,17 +77,6 @@ def _encode_values(dom, values: np.ndarray) -> np.ndarray:
     return codes
 
 
-def decode_fanouts(vals: np.ndarray, drawn: np.ndarray) -> np.ndarray:
-    """Fanout values of drawn dictionary codes: code d ≥ 2 decodes to
-    ``vals[d - 2]``; codes 0 and 1 (MASK, NULL) and codes past the
-    dictionary decode to 1.  Clamped at 1, the fanout ≥ 1 invariant
-    (reference: estimators.py:383)."""
-    fan = np.ones(len(drawn))
-    ok = (drawn >= 2) & (drawn < len(vals) + 2)
-    fan[ok] = vals[drawn[ok] - 2]
-    return np.maximum(fan, 1.0)
-
-
 def _col_table(col: str) -> str | None:
     """Owning table of a sample column: ``t.col`` → t, ``__in__:t`` → t."""
     if col.startswith("__in__:"):
@@ -108,7 +97,6 @@ class NarJoinEstimator(NarEstimator):
 
     ts: TreeSample | None = None
     constant_one_fanouts: frozenset = frozenset()
-    continuous: frozenset = frozenset()  # cont-fanout columns (log2-regressed)
     name: str = "nar-ur"
     # eval-time skip of near-key common columns when sampling values for
     # chained inheritance (the reference's skip-high-cardinality
@@ -176,76 +164,6 @@ class NarJoinEstimator(NarEstimator):
             if c not in sampled and _is_data_col(c)
             and _col_table(c) in ahead_tables
             and (cap is None or dom.dom_size <= cap))
-
-    # -- progressive core --------------------------------------------------
-
-    def _progressive(self, by_col: dict[str, list[Predicate]],
-                     inherited: dict[str, np.ndarray],
-                     div_cols: list[str], mult_cols: list[str],
-                     extra_cols: list[str], S: int,
-                     rs: np.random.RandomState
-                     ) -> tuple[np.ndarray, dict[str, np.ndarray]]:
-        """One progressive-sampling pass: condition on ``inherited`` codes
-        (fixed, unmasked, no probability contribution), sample the
-        ``by_col`` predicate columns in selectivity order accumulating
-        per-row masses, then ``extra_cols`` unconstrained (mass 1), then
-        fanout columns — dividing by ``div_cols`` draws (unused-table
-        multiplicity) and multiplying by ``mult_cols`` draws (new-fragment
-        up-scaling, reference estimators.py:1413-1423).
-
-        Returns (per-row factors [S], sampled codes per column)."""
-        dtype = np.float64 if self.continuous else np.int64
-        codes = np.zeros((S, self.model.C), dtype=dtype)
-        mask = np.ones((S, self.model.C), dtype=bool)
-        prob = np.ones(S)
-        for c, inh in inherited.items():
-            # full dictionary codes; split into sub-codes when factorized
-            self.set_inherited(c, codes, mask, inh)
-
-        sampled: dict[str, np.ndarray] = {}
-        masks = {c: valid_mask(self.domains[c], ps)
-                 for c, ps in by_col.items()}
-        for c in self._order_columns(masks):
-            # group-aware draw: factorized columns sample their bit-window
-            # sub-columns most-significant-first under projected masks
-            # (P4/P6) and return the reconstructed full code
-            mass, full = self._sample_masked_col(c, masks[c], codes, mask, rs)
-            prob *= mass
-            sampled[c] = full
-
-        for c in extra_cols:
-            # unconstrained (mass 1): everything valid except the MASK slot
-            m = np.ones(self.domains[c].dom_size)
-            m[MASK_SLOT] = 0.0
-            _, full = self._sample_masked_col(c, m, codes, mask, rs)
-            sampled[c] = full
-
-        for sign, cols in ((-1, div_cols), (+1, mult_cols)):
-            for c in cols:
-                j = self.model.cols.index(c)
-                if c in self.continuous:
-                    # regressed log2 fanout, decoded 2**x, clamp ≥ 1
-                    # (reference: scardina/estimators.py:374-376)
-                    first, inverse = distinct_rows(codes, mask)
-                    val = self.model.regress_for(
-                        codes[first], mask[first], j)[inverse]
-                    codes[:, j] = val
-                    mask[:, j] = False
-                    fan = np.maximum(np.exp2(val), 1.0)
-                    prob = prob / fan if sign < 0 else prob * fan
-                    continue
-                p = self._conditional(codes, mask, j)
-                p[:, 1] = 0.0  # fanout columns are never NULL
-                row_sum = np.maximum(p.sum(axis=1, keepdims=True), 1e-300)
-                p = p / row_sum
-                cdf = np.cumsum(p, axis=1)
-                u = rs.rand(S, 1)
-                drawn = (u > cdf).sum(axis=1)
-                codes[:, j] = drawn
-                mask[:, j] = False
-                fan = decode_fanouts(self.domains[c].values, drawn)
-                prob = prob / fan if sign < 0 else prob * fan
-        return prob, sampled
 
     def _validate_fragment(self, pq: ParsedQuery) -> set[str]:
         alias_to_table = dict(pq.tables)

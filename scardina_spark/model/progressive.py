@@ -269,6 +269,17 @@ def distinct_rows(codes: np.ndarray, mask: np.ndarray
     return order[new], inverse
 
 
+def decode_fanouts(vals: np.ndarray, drawn: np.ndarray) -> np.ndarray:
+    """Fanout values of drawn dictionary codes: code d ≥ 2 decodes to
+    ``vals[d - 2]``; codes 0 and 1 (MASK, NULL) and codes past the
+    dictionary decode to 1.  Clamped at 1, the fanout ≥ 1 invariant
+    (reference: estimators.py:383)."""
+    fan = np.ones(len(drawn))
+    ok = (drawn >= 2) & (drawn < len(vals) + 2)
+    fan[ok] = vals[drawn[ok] - 2]
+    return np.maximum(fan, 1.0)
+
+
 @dataclass
 class NarEstimator:
     """Single-relation progressive-sampling estimator (the reference's
@@ -288,6 +299,7 @@ class NarEstimator:
     # domain-size ascending; prop = valid-mass ascending; domain-size =
     # domain ascending; nat = model column order; suffix -inv reverses.
     order_by: str = "prop-ratio"
+    continuous: frozenset = frozenset()  # cont-fanout columns (log2-regressed)
 
     def _order_columns(self, masks: dict[str, np.ndarray]) -> list[str]:
         base = self.order_by.removesuffix("-inv") if \
@@ -406,6 +418,71 @@ class NarEstimator:
                            & ((1 << sub.window) - 1)) + 1
             mask[:, j] = False
 
+    def _progressive(self, by_col: dict[str, list[Predicate]],
+                     inherited: dict[str, np.ndarray],
+                     div_cols: list[str], mult_cols: list[str],
+                     extra_cols: list[str], S: int,
+                     rs: np.random.RandomState
+                     ) -> tuple[np.ndarray, dict[str, np.ndarray]]:
+        """One progressive-sampling pass: condition on ``inherited`` codes
+        (fixed, unmasked, no probability contribution), sample the
+        ``by_col`` predicate columns in selectivity order accumulating
+        per-row masses, then ``extra_cols`` unconstrained (mass 1), then
+        fanout columns — dividing by ``div_cols`` draws (unused-table
+        multiplicity) and multiplying by ``mult_cols`` draws (new-fragment
+        up-scaling, reference estimators.py:1413-1423).
+
+        Returns (per-row factors [S], sampled codes per column)."""
+        dtype = np.float64 if self.continuous else np.int64
+        codes = np.zeros((S, self.model.C), dtype=dtype)
+        mask = np.ones((S, self.model.C), dtype=bool)
+        prob = np.ones(S)
+        for c, inh in inherited.items():
+            # full dictionary codes; split into sub-codes when factorized
+            self.set_inherited(c, codes, mask, inh)
+
+        sampled: dict[str, np.ndarray] = {}
+        masks = {c: valid_mask(self.domains[c], ps)
+                 for c, ps in by_col.items()}
+        for c in self._order_columns(masks):
+            # group-aware draw: factorized columns sample their bit-window
+            # sub-columns most-significant-first under projected masks
+            # (P4/P6) and return the reconstructed full code
+            mass, full = self._sample_masked_col(c, masks[c], codes, mask, rs)
+            prob *= mass
+            sampled[c] = full
+
+        for c in extra_cols:
+            # unconstrained (mass 1): everything valid except the MASK slot
+            m = np.ones(self.domains[c].dom_size)
+            m[MASK_SLOT] = 0.0
+            _, full = self._sample_masked_col(c, m, codes, mask, rs)
+            sampled[c] = full
+
+        for sign, cols in ((-1, div_cols), (+1, mult_cols)):
+            for c in cols:
+                j = self.model.cols.index(c)
+                if c in self.continuous:
+                    # regressed log2 fanout, decoded 2**x, clamp ≥ 1
+                    # (reference: scardina/estimators.py:374-376)
+                    first, inverse = distinct_rows(codes, mask)
+                    val = self.model.regress_for(
+                        codes[first], mask[first], j)[inverse]
+                    codes[:, j] = val
+                    mask[:, j] = False
+                    fan = np.maximum(np.exp2(val), 1.0)
+                    prob = prob / fan if sign < 0 else prob * fan
+                    continue
+                p = self._conditional(codes, mask, j)
+                p[:, NULL_SLOT] = 0.0  # fanout columns are never NULL
+                valid = np.arange(p.shape[1]) > NULL_SLOT
+                _, drawn = self._draw(p, valid, rs)
+                codes[:, j] = drawn
+                mask[:, j] = False
+                fan = decode_fanouts(self.domains[c].values, drawn)
+                prob = prob / fan if sign < 0 else prob * fan
+        return prob, sampled
+
     def estimate(self, query: ParsedQuery | str) -> float:
         pq = parse_query(query) if isinstance(query, str) else query
         if len(pq.tables) != 1:
@@ -421,21 +498,7 @@ class NarEstimator:
             if p.column not in self.domains:
                 raise ValueError(f"column not in model: {p.column}")
             by_col.setdefault(p.column, []).append(p)
-        if not by_col:
-            return float(self.n_rows)
-
-        masks = {
-            c: valid_mask(self.domains[c], ps) for c, ps in by_col.items()}
-        order = self._order_columns(masks)
-
         rs = np.random.RandomState(self.seed)
-        S = self.sample_size
-        codes = np.zeros((S, self.model.C), dtype=np.int64)
-        mask = np.ones((S, self.model.C), dtype=bool)  # all masked initially
-        prob = np.ones(S)
-
-        for c in order:
-            mass, _ = self._sample_masked_col(c, masks[c], codes, mask, rs)
-            prob *= mass
-
+        prob, _ = self._progressive(by_col, {}, [], [], [],
+                                    self.sample_size, rs)
         return float(self.n_rows) * float(prob.mean())

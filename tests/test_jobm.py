@@ -166,7 +166,7 @@ def test_build_cin_estimator_covers_parallel_alternatives(spark):
     cin = build_cin_estimator(
         sg, tables, {"shipments": JM_CIN_SH_COLUMNS},
         lambda center: cfg, sample_size=100, max_rows=4_000,
-        fact_threshold=8, seed=5, localize=True)
+        fact_threshold=8, seed=5)
     assert len(cin.models) == 2
     fk_sets = {frozenset(r.fk_col for r in m.ts.tree.rels)
                for m in cin.models}

@@ -16,6 +16,10 @@ SUBSCHEMAS = {
     "nation": ("nation", ["nation.n_name", "region.r_name"]),
 }
 
+ASIA = ("SELECT COUNT(*) FROM customer c, nation n, region r "
+        "WHERE c.c_nationkey = n.n_nationkey "
+        "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'")
+
 
 @pytest.fixture(scope="module")
 def nar_cin(tables):
@@ -46,11 +50,8 @@ def test_single_model_path(nar_cin, exact):
 
 
 def test_chained_models(nar_cin, exact):
-    sql = ("SELECT COUNT(*) FROM customer c, nation n, region r "
-           "WHERE c.c_nationkey = n.n_nationkey "
-           "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'")
-    got = nar_cin.estimate(sql)
-    want = exact.estimate(sql)
+    got = nar_cin.estimate(ASIA)
+    want = exact.estimate(ASIA)
     assert qerr(got, want) < 2.5, (got, want)
 
 
@@ -66,11 +67,8 @@ def test_inherited_chain_is_used(nar_cin, exact):
     predicate-free shared column (nation.n_name) is sampled by the root
     model so the next model can condition on it."""
     from scardina_spark.plans.parse import parse_query
-    sql = ("SELECT COUNT(*) FROM customer c, nation n, region r "
-           "WHERE c.c_nationkey = n.n_nationkey "
-           "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'")
-    got = nar_cin._estimate_inherited(parse_query(sql))
-    want = exact.estimate(sql)
+    got = nar_cin._estimate_inherited(parse_query(ASIA))
+    want = exact.estimate(ASIA)
     assert qerr(got, want) < 2.5, (got, want)
 
 
@@ -112,49 +110,58 @@ def test_inherited_chain_fanout_upscale(nar_cin_fact, exact):
 def test_cin_save_load_roundtrip(nar_cin, exact, tmp_path):
     """A loaded CIN estimator reproduces both the single-model and the
     chained inherited-sample estimates exactly (deterministic seeds; no
-    join samples on disk)."""
+    join samples on disk, and none read at query time)."""
     from scardina_spark.estimators.cin import (
         load_cin_estimator, save_cin_estimator)
     path = str(tmp_path / "cin_ckpt")
     save_cin_estimator(nar_cin, path)
     loaded = load_cin_estimator(path)
-    # a loaded estimator has no samples, so compare pure-model chains
-    nar_cin.sample_arbiter = False
-    try:
-        for sql in [
-            "SELECT COUNT(*) FROM customer c, nation n "
-            "WHERE c.c_nationkey = n.n_nationkey AND n.n_name LIKE 'NATION_1%'",
-            "SELECT COUNT(*) FROM customer c, nation n, region r "
-            "WHERE c.c_nationkey = n.n_nationkey "
-            "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'",
-        ]:
-            assert abs(nar_cin.estimate(sql) - loaded.estimate(sql)) < 1e-6, sql
-    finally:
-        nar_cin.sample_arbiter = True
+    for sql in [
+        "SELECT COUNT(*) FROM customer c, nation n "
+        "WHERE c.c_nationkey = n.n_nationkey AND n.n_name LIKE 'NATION_1%'",
+        ASIA,
+    ]:
+        assert abs(nar_cin.estimate(sql) - loaded.estimate(sql)) < 1e-6, sql
 
 
-def test_sample_arbiter_tightens_chain(nar_cin, exact):
-    """The chained path cross-validated against the materialized samples
-    (geometric mean with the HT chain) must be at least as accurate as the
-    pure-model chain, and a loaded-checkpoint-style estimator (no samples)
-    must still answer."""
-    sql = ("SELECT COUNT(*) FROM customer c, nation n, region r "
-           "WHERE c.c_nationkey = n.n_nationkey "
-           "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'")
-    want = exact.estimate(sql)
-    with_arb = nar_cin.estimate(sql)
-    nar_cin.sample_arbiter = False
-    try:
-        without = nar_cin.estimate(sql)
-    finally:
-        nar_cin.sample_arbiter = True
+def test_hybrid_arbiter_tightens_chain(nar_cin, exact):
+    """The gated arbiter over a stitched sample checker (the chain rule
+    over per-fragment HT aggregates) is at least as accurate on a chained
+    query as the raw model chain, and an empty region forces 0."""
+    from scardina_spark.estimators import HybridEstimator, StitchedEstimator
+    checker = StitchedEstimator()
+    for ts in nar_cin.samples:
+        checker.add(ts.localize())
+    hyb = HybridEstimator(nar_cin, checker, mode="arbiter")
+    want = exact.estimate(ASIA)
+    with_arb = hyb.estimate(ASIA)
+    without = nar_cin.estimate(ASIA)
     assert qerr(with_arb, want) <= qerr(without, want) * 1.05, (
         with_arb, without, want)
-    # HT chain agreeing with an empty region forces 0
-    empty = ("SELECT COUNT(*) FROM customer c, nation n, region r "
-             "WHERE c.c_nationkey = n.n_nationkey "
-             "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'NOWHERE'")
-    assert nar_cin.estimate(empty) == 0.0
+    # the HT chain agreeing with an empty region forces 0
+    empty = ASIA.replace("'ASIA'", "'NOWHERE'")
+    assert hyb.estimate(empty) == 0.0
+
+
+def test_ratio_chain_serves_distributed_shared_column(nar_cin):
+    """A shared column whose dictionary values stay off the driver cannot
+    be inherited by value: the chained query falls back to the
+    expectation-ratio chain over the models instead of raising."""
+    from scardina_spark.estimators.stitch import chain_estimate
+    from scardina_spark.model.progressive import DistributedDomain
+    from scardina_spark.plans.parse import parse_query
+    cust = next(m for m in nar_cin.models if m.ts.tree.center == "customer")
+    dom = cust.domains["nation.n_name"]
+    cust.domains["nation.n_name"] = DistributedDomain(
+        dom.name, None, n_values=len(dom.values))
+    try:
+        want = chain_estimate(
+            nar_cin.samples, parse_query(ASIA),
+            lambda ts, frag: nar_cin._model_for(ts).estimate(frag))
+        assert nar_cin.estimate(ASIA) == want
+        assert want > 0
+    finally:
+        cust.domains["nation.n_name"] = dom
 
 
 def test_cin_builder_transformer_arch(spark, tables):

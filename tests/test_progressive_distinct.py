@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from scardina_spark.functions.factorize import factorization_spec
-from scardina_spark.model.join_bridge import decode_fanouts
+from scardina_spark.model.progressive import decode_fanouts
 from scardina_spark.model.nar import NarMLP, TrainConfig, _softmax
 from scardina_spark.model.progressive import (
     NarEstimator, _sub_masks_for_prefix, distinct_rows)

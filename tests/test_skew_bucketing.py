@@ -22,12 +22,29 @@ def test_salted_group_agg_equals_plain(spark):
     assert salted == plain
 
 
-def test_salted_join_spreads_hot_key(spark):
-    fact = _skewed_df(spark)
+def _aggregate_keys(plan) -> list[list[str]]:
+    """Grouping column names of every Aggregate in a logical plan,
+    outermost first."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Aggregate":
+            ge = node.groupingExpressions()
+            out.append([ge.apply(i).name() for i in range(ge.size())])
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_salted_agg_splits_hot_key_by_salt(spark):
+    """salted_group_agg's first aggregate groups by (key, salt), so the
+    hot key's rows spread over n_salts groups before the final
+    per-key aggregate."""
     from scardina_spark.operators.skew import SALT
-    salted = fact.withColumn(SALT, (F.rand(42) * 8).cast("int"))
-    per_salt = salted.where(F.col("k") == 1).groupBy(SALT).count().collect()
-    assert len(per_salt) == 8  # hot key occupies every salt partition
+    out = salted_group_agg(_skewed_df(spark), ["k"], None, "c", n_salts=8)
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert _aggregate_keys(plan) == [["k"], ["k", SALT]]
+    assert out.where(F.col("k") == 1).first()["c"] == 18_000
 
 
 def test_bucketed_join_has_no_shuffle(spark, tables, tmp_path):
