@@ -11,7 +11,8 @@ reserves 0 for MASK inside each sub-column's own code space.  ``fact_upper``
 significant sub-column.
 
 In Spark this is a pure projection — ``shiftright`` + bitwise AND — that
-stays entirely inside whole-stage codegen; no shuffle, no UDF.
+stays entirely inside whole-stage codegen; no shuffle, no UDF.  The model
+side splits NumPy code arrays with :func:`sub_codes`, the same arithmetic.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column, functions as F
 
 
@@ -76,3 +78,8 @@ def sub_code_expr(code_col: str, sub: SubColumnSpec) -> Column:
         (F.shiftright(c, sub.offset).bitwiseAND(F.lit(2 ** sub.window - 1)))
         + F.lit(1)
     ).cast("int")
+
+
+def sub_codes(codes: np.ndarray, sub: SubColumnSpec) -> np.ndarray:
+    """NumPy twin of :func:`sub_code_expr` over int64 code arrays."""
+    return ((codes >> sub.offset) & ((1 << sub.window) - 1)) + 1

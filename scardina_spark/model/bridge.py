@@ -10,12 +10,18 @@ reference's join-sample clamp — crosses to the driver via Arrow.
 
 from __future__ import annotations
 
+from dataclasses import asdict
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dictionary import CODE, VALUE, encode_with_dictionary
+from ..functions.factorize import factorization_spec, sub_codes
 from .nar import NarMLP, TrainConfig
-from .progressive import ColumnDomain, DistributedDomain, NarEstimator
+from .progressive import (
+    ColumnDomain, ColumnGroup, DistributedDomain, NarEstimator)
+from .transformer import NarTransformer, TrmConfig
 
 # Largest dictionary whose VALUES are collected to the driver.  Above
 # this, the domain stays a distributed DataFrame (DistributedDomain):
@@ -43,21 +49,22 @@ def collect_domain(dictionary: DataFrame, name: str,
     return ColumnDomain(name, np.array([r[VALUE] for r in rows]))
 
 
-def _encode_series(s, dom: ColumnDomain) -> np.ndarray:
-    """Dictionary codes for a pandas column against ``dom``: NULL → 1,
-    value → sorted-position + 2, out-of-dictionary → 1 (the same OOD
-    convention as functions/dictionary.encode_with_dictionary)."""
-    import pandas as pd
-
-    na = pd.isna(s).to_numpy()
-    code = np.full(len(s), 1, dtype=np.int64)
+def encode_values(dom: ColumnDomain, values: np.ndarray) -> np.ndarray:
+    """Dictionary codes for ``values`` against ``dom``: NULL → 1, value →
+    sorted-position + 2, out-of-dictionary → 1 (the same OOD convention
+    as functions/dictionary.encode_with_dictionary).  An object array
+    meeting a non-string dictionary (values decoded by another model,
+    where e.g. datetime64[ns] decodes to int nanoseconds) is cast to the
+    dictionary's dtype first."""
+    na = pd.isna(values)
+    code = np.full(len(values), 1, dtype=np.int64)
     vals = dom.values
-    if len(vals) and (~na).any():
-        nn = s.to_numpy()[~na]
-        idx = np.searchsorted(vals, nn)
-        idx = np.minimum(idx, len(vals) - 1)
-        match = vals[idx] == nn
-        code[~na] = np.where(match, idx + 2, 1)
+    if len(vals) and not na.all():
+        nn = values[~na]
+        if nn.dtype == object and vals.dtype.kind not in "OUS":
+            nn = nn.astype(vals.dtype)
+        idx = np.minimum(np.searchsorted(vals, nn), len(vals) - 1)
+        code[~na] = np.where(vals[idx] == nn, idx + 2, 1)
     return code
 
 
@@ -105,7 +112,18 @@ def training_matrix(df: DataFrame, columns: list[str],
         injected = (dictionaries or {}).get(c)
         if c not in cont and injected is not None:
             injected_doms[c] = collect_domain(injected, c)
+    pdf, _ = _select_rows(df, columns, max_rows, seed, injected_doms,
+                          id_cols)
+    return _encode_rows(pdf, columns, injected_doms, cont)
 
+
+def _select_rows(df: DataFrame, columns: list[str], max_rows: int,
+                 seed: int, doms: dict[str, ColumnDomain],
+                 id_cols: list[str] | None):
+    """``training_matrix``'s row selection: project ``columns``, cap at
+    ``max_rows`` (see its docstring for the keyed and unkeyed caps),
+    dictionary-join the columns whose domain in ``doms`` is distributed,
+    and collect.  Returns the pandas frame and the uncapped row count."""
     sel = [F.col(f"`{c}`") for c in columns]
     if id_cols:
         idn = [f"__id{i}__" for i in range(len(id_cols))]
@@ -138,7 +156,7 @@ def training_matrix(df: DataFrame, columns: list[str],
                                seed=seed).limit(max_rows)
 
     def _localize(p):
-        for c, dom in injected_doms.items():
+        for c, dom in doms.items():
             if isinstance(dom, DistributedDomain):
                 p = encode_with_dictionary(p, c, dom.dictionary,
                                            broadcast=False)
@@ -165,6 +183,15 @@ def training_matrix(df: DataFrame, columns: list[str],
                                kind="mergesort", ignore_index=True)
                .head(max_rows).drop(columns=["__h__", *idn])
                .reset_index(drop=True))
+    return pdf, n
+
+
+def _encode_rows(pdf, columns: list[str], doms: dict[str, ColumnDomain],
+                 cont: set[str]
+                 ) -> tuple[np.ndarray, dict[str, ColumnDomain]]:
+    """``training_matrix``'s encode loop over the collected rows: each
+    column codes against its domain in ``doms``, or against one built
+    from these rows when absent; ``cont`` columns become log2 floats."""
     # domains insertion order must follow `columns` (training order)
     domains: dict[str, ColumnDomain] = {}
     codes_cols: list[np.ndarray] = []
@@ -176,9 +203,8 @@ def training_matrix(df: DataFrame, columns: list[str],
             v = np.nan_to_num(v, nan=1.0)
             codes_cols.append(np.log2(np.maximum(v, 1.0)))
             continue
-        dom = injected_doms.get(c)
+        dom = doms.get(c)
         if dom is None:
-            import pandas as pd
             s = pdf[c]
             dom = ColumnDomain(c, np.unique(s[~pd.isna(s)].to_numpy()))
         domains[c] = dom
@@ -186,9 +212,65 @@ def training_matrix(df: DataFrame, columns: list[str],
             # already dictionary codes (int) from the distributed join
             codes_cols.append(pdf[c].to_numpy(dtype=np.int64))
         else:
-            codes_cols.append(_encode_series(pdf[c], dom))
+            codes_cols.append(encode_values(dom, pdf[c].to_numpy()))
     dtype = np.float64 if cont else np.int64
     return np.stack(codes_cols, axis=1).astype(dtype), domains
+
+
+def model_inputs(codes: np.ndarray, columns: list[str],
+                 domains: dict[str, ColumnDomain],
+                 fact_threshold: int | None = None,
+                 factorizable: set[str] | None = None
+                 ) -> tuple[list[tuple[str, int]], np.ndarray,
+                            dict[str, ColumnGroup]]:
+    """The model's view of a training matrix: ``(bins, matrix, groups)``.
+
+    With ``fact_threshold``, every column in ``factorizable`` (default:
+    all) whose dictionary exceeds ``2**fact_threshold`` codes is
+    bit-slice factorized (M2, reference scardina/common.py:137-196): the
+    model sees its sub-columns, each with a small domain, and ``groups``
+    maps the logical column to them.  Columns without a domain (regressed
+    continuous ones) get a 0-size bin."""
+    bins: list[tuple[str, int]] = []
+    mat_cols: list[np.ndarray] = []
+    groups: dict[str, ColumnGroup] = {}
+    for ci, c in enumerate(columns):
+        dom = domains[c].dom_size if c in domains else 0
+        spec = (factorization_spec(c, dom, fact_threshold)
+                if fact_threshold and (factorizable is None
+                                       or c in factorizable) else None)
+        if spec is None or not spec.is_factorized:
+            bins.append((c, dom))
+            mat_cols.append(codes[:, ci])
+            continue
+        full = codes[:, ci].astype(np.int64)
+        groups[c] = ColumnGroup(
+            c, list(range(len(bins), len(bins) + len(spec.sub_cols))), spec)
+        for sub in spec.sub_cols:
+            bins.append((sub.name, sub.dist_size))
+            mat_cols.append(sub_codes(full, sub))
+    return bins, np.stack(mat_cols, axis=1).astype(codes.dtype), groups
+
+
+ARCHS = {"mlp": NarMLP, "trm": NarTransformer}
+
+
+def make_model(bins: list[tuple[str, int]], cfg: TrainConfig,
+               arch: str = "mlp", continuous: frozenset = frozenset()):
+    """The one model constructor: ``arch`` names a class in ``ARCHS``.
+    The Transformer is categorical-only with uniform-width embeddings
+    (the reference's default), so the MLP-only options raise for it."""
+    if arch not in ARCHS:
+        raise ValueError(f"unknown arch: {arch}")
+    if arch == "mlp":
+        return NarMLP(bins, cfg, continuous=continuous)
+    if continuous:
+        raise ValueError("cont_fanout requires arch='mlp'")
+    if cfg.smaller_emb:
+        raise ValueError("smaller_emb requires arch='mlp'")
+    if not isinstance(cfg, TrmConfig):
+        cfg = TrmConfig(**asdict(cfg))
+    return NarTransformer(bins, cfg)
 
 
 def fine_tune_single_table(est: NarEstimator, delta_df: DataFrame,
@@ -206,46 +288,31 @@ def fine_tune_single_table(est: NarEstimator, delta_df: DataFrame,
     this is true warm-start fine-tuning, and ``n_rows`` — the estimator's
     COUNT(*) scale factor — is bumped by the delta count so estimates
     reflect the appended data immediately.
-    """
-    from .progressive import NarEstimator as _NE
-    assert isinstance(est, _NE)
+
+    The rows go through ``training_matrix``'s own selection and encode
+    (under ``est.domains``) and ``model_inputs``' split.  A join sample
+    carries its row key ``__sample_id__`` and is selected and ordered by
+    it, as at training, so the fine-tune does not depend on partition
+    layout; a plain delta has no key and takes the unkeyed sample."""
     columns = list(est.domains)  # insertion order == training order
-    delta_n = delta_df.count()
-    if delta_n == 0:
+    id_cols = (["__sample_id__"] if "__sample_id__" in delta_df.columns
+               else None)
+    pdf, n = _select_rows(delta_df, columns, max_rows, seed, est.domains,
+                          id_cols)
+    if n == 0:
         return est
-    proj = delta_df.select(*[F.col(f"`{c}`") for c in columns])
-    n = delta_n
-    if n > max_rows:
-        proj = proj.sample(fraction=min(1.0, max_rows / n * 1.05), seed=seed) \
-            .limit(max_rows)
-    for c in columns:
-        dom = est.domains[c]
-        if isinstance(dom, DistributedDomain):
-            proj = encode_with_dictionary(proj, c, dom.dictionary,
-                                          broadcast=False)
-    pdf = proj.toPandas()
-    mat_cols: list[np.ndarray] = []
-    for c in columns:
-        dom = est.domains[c]
-        code = (pdf[c].to_numpy(dtype=np.int64)
-                if isinstance(dom, DistributedDomain)
-                else _encode_series(pdf[c], dom))
-        grp = (est.groups or {}).get(c)
-        if grp is None:
-            mat_cols.append(code)
-            continue
-        for sub in grp.spec.sub_cols:
-            mat_cols.append(((code >> sub.offset)
-                             & ((1 << sub.window) - 1)) + 1)
-    codes = np.stack(mat_cols, axis=1).astype(np.int64)
+    codes, _ = _encode_rows(pdf, columns, est.domains, set())
+    groups = est.groups or {}
+    thr = next((g.spec.threshold for g in groups.values()), None)
+    _, mat, _ = model_inputs(codes, columns, est.domains, thr, set(groups))
     old_epochs = est.model.cfg.epochs
     if epochs is not None:
         est.model.cfg.epochs = epochs
     try:
-        est.model.fit(codes)
+        est.model.fit(mat)
     finally:
         est.model.cfg.epochs = old_epochs
-    est.n_rows = est.n_rows + delta_n
+    est.n_rows = est.n_rows + n
     return est
 
 
@@ -258,52 +325,20 @@ def train_single_table(df: DataFrame, columns: list[str],
                        dictionaries: dict[str, DataFrame] | None = None,
                        id_cols: list[str] | None = None,
                        ) -> NarEstimator:
-    """End-to-end: encode with Spark, train the NAR-MLP, return the
+    """End-to-end: encode with Spark, train the NAR model, return the
     progressive-sampling estimator.
 
     With ``fact_threshold``, columns whose dictionary exceeds
     ``2**fact_threshold`` codes are bit-slice factorized (M2): the model
     sees the sub-columns (each with a small domain), and the estimator
     projects full-domain valid masks onto them per sample row (P4/P6)."""
-    from ..functions.factorize import factorization_spec
-    from .progressive import ColumnGroup
-
     cfg = cfg or TrainConfig()
     codes, domains = training_matrix(df, columns, max_rows, cfg.seed,
                                      dictionaries=dictionaries,
                                      id_cols=id_cols)
-
-    bins: list[tuple[str, int]] = []
-    mat_cols: list[np.ndarray] = []
-    groups: dict[str, ColumnGroup] = {}
-    for ci, c in enumerate(columns):
-        dom = domains[c].dom_size
-        spec = (factorization_spec(c, dom, fact_threshold)
-                if fact_threshold else None)
-        if spec is None or not spec.is_factorized:
-            bins.append((c, dom))
-            mat_cols.append(codes[:, ci])
-            continue
-        idxs = []
-        for sub in spec.sub_cols:
-            sub_codes = ((codes[:, ci] >> sub.offset)
-                         & ((1 << sub.window) - 1)) + 1
-            idxs.append(len(bins))
-            bins.append((sub.name, sub.dist_size))
-            mat_cols.append(sub_codes)
-        groups[c] = ColumnGroup(c, idxs, spec)
-
-    if arch == "mlp":
-        model = NarMLP(bins, cfg)
-    elif arch == "trm":
-        from .transformer import NarTransformer, TrmConfig
-        tcfg = cfg if isinstance(cfg, TrmConfig) else TrmConfig(
-            d_word=cfg.d_word, d_ff=cfg.d_ff, epochs=cfg.epochs,
-            batch_size=cfg.batch_size, lr=cfg.lr, seed=cfg.seed)
-        model = NarTransformer(bins, tcfg)
-    else:
-        raise ValueError(f"unknown arch: {arch}")
-    model.fit(np.stack(mat_cols, axis=1))
+    bins, mat, groups = model_inputs(codes, columns, domains, fact_threshold)
+    model = make_model(bins, cfg, arch)
+    model.fit(mat)
     return NarEstimator(model=model, domains=domains,
                         n_rows=df.count(), sample_size=sample_size,
                         seed=cfg.seed, groups=groups or None)

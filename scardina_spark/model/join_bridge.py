@@ -31,8 +31,9 @@ from ..estimators.sample import (
     TreeSample, UnsupportedQueryError, _crossing_fanout_cols, _divisor_cols)
 from ..plans.parse import ParsedQuery, parse_query
 from ..plans.predicates import Predicate, normalize_predicates
-from .bridge import training_matrix
-from .nar import NarMLP, TrainConfig
+from .bridge import (
+    ARCHS, encode_values, make_model, model_inputs, training_matrix)
+from .nar import TrainConfig
 from .progressive import NarEstimator
 
 
@@ -59,22 +60,6 @@ def _decode_codes(dom, codes: np.ndarray) -> np.ndarray:
     if ok.any():
         out[ok] = dom.values[codes[ok] - 2]
     return out
-
-
-def _encode_values(dom, values: np.ndarray) -> np.ndarray:
-    """Values (object array, None = NULL) → this model's codes; values
-    outside the dictionary land on the NULL slot (the encode-side OOD
-    convention, functions/dictionary.encode_with_dictionary)."""
-    codes = np.full(len(values), 1, dtype=np.int64)
-    nn = np.array([v is not None for v in values], dtype=bool)
-    vals = _require_local_values(dom, "cross-model value encoding")
-    if len(vals) and nn.any():
-        arr = np.array([v for v in values[nn]], dtype=vals.dtype)
-        idx = np.searchsorted(vals, arr)
-        idx = np.minimum(idx, len(vals) - 1)
-        match = vals[idx] == arr
-        codes[nn] = np.where(match, idx + 2, 1)
-    return codes
 
 
 def _col_table(col: str) -> str | None:
@@ -219,7 +204,9 @@ class NarJoinEstimator(NarEstimator):
         inherited: dict[str, np.ndarray] = {}
         for c, vals in values.items():
             if _col_table(c) in shared and c in self.domains:
-                inherited[c] = _encode_values(self.domains[c], vals)
+                _require_local_values(self.domains[c],
+                                      "cross-model value encoding")
+                inherited[c] = encode_values(self.domains[c], vals)
         div_cols = self._fanout_cols(_divisor_cols(self.ts, frag_tables))
         mult_cols = self._fanout_cols(
             _crossing_fanout_cols(self.ts, shared, new))
@@ -300,9 +287,6 @@ def train_join_estimator(ts: TreeSample, data_columns: list[str],
 
     With ``defer_fit``, the prepared job comes back unfitted as a
     :class:`DeferredFit`; its ``finish()`` completes it."""
-    from ..functions.factorize import factorization_spec
-    from .progressive import ColumnGroup
-
     cfg = cfg or TrainConfig()
     samp = ts.sample
 
@@ -322,41 +306,9 @@ def train_join_estimator(ts: TreeSample, data_columns: list[str],
                                      dictionaries=dictionaries,
                                      cont_log2=set(cont),
                                      id_cols=["__sample_id__"])
-    bins: list[tuple[str, int]] = []
-    mat_cols: list[np.ndarray] = []
-    groups: dict[str, ColumnGroup] = {}
-    for ci, c in enumerate(columns):
-        dom = domains[c].dom_size if c in domains else 0
-        spec = (factorization_spec(c, dom, fact_threshold)
-                if fact_threshold and c in data_columns else None)
-        if spec is None or not spec.is_factorized:
-            bins.append((c, dom))
-            mat_cols.append(codes[:, ci])
-            continue
-        idxs = []
-        full = codes[:, ci].astype(np.int64)
-        for sub in spec.sub_cols:
-            idxs.append(len(bins))
-            bins.append((sub.name, sub.dist_size))
-            mat_cols.append(((full >> sub.offset)
-                             & ((1 << sub.window) - 1)) + 1)
-        groups[c] = ColumnGroup(c, idxs, spec)
-    dtype = np.float64 if cont else np.int64
-    if arch == "mlp":
-        model = NarMLP(bins, cfg, continuous=cont)
-    elif arch == "trm":
-        # the Transformer head is categorical-only (like the reference's
-        # default; cont-fanout pairs with the MLP)
-        if cont:
-            raise ValueError("cont_fanout requires arch='mlp'")
-        from .transformer import NarTransformer, TrmConfig
-        tcfg = cfg if isinstance(cfg, TrmConfig) else TrmConfig(
-            d_word=cfg.d_word, d_ff=cfg.d_ff, epochs=cfg.epochs,
-            batch_size=cfg.batch_size, lr=cfg.lr, seed=cfg.seed)
-        model = NarTransformer(bins, tcfg)
-    else:
-        raise ValueError(f"unknown arch: {arch}")
-    mat = np.stack(mat_cols, axis=1).astype(dtype)
+    bins, mat, groups = model_inputs(codes, columns, domains, fact_threshold,
+                                     factorizable=set(data_columns))
+    model = make_model(bins, cfg, arch, continuous=cont)
     kwargs = dict(domains=domains, n_rows=ts.join_size,
                   sample_size=sample_size, seed=cfg.seed, ts=ts,
                   constant_one_fanouts=constant1, continuous=cont,
@@ -412,8 +364,8 @@ def save_join_estimator(est: NarJoinEstimator, path: str) -> None:
     import json
     import os
 
-    from .transformer import NarTransformer
-    if not isinstance(est.model, (NarMLP, NarTransformer)):
+    arch = {cls: a for a, cls in ARCHS.items()}.get(type(est.model))
+    if arch is None:
         raise ValueError(f"unsupported model type: {type(est.model)}")
     os.makedirs(path, exist_ok=True)
     est.model.save(os.path.join(path, "model.npz"))
@@ -438,7 +390,7 @@ def save_join_estimator(est: NarJoinEstimator, path: str) -> None:
         "continuous": sorted(est.continuous),
         "fact_groups": {c: g.spec.threshold
                         for c, g in (est.groups or {}).items()},
-        "arch": "mlp" if isinstance(est.model, NarMLP) else "trm",
+        "arch": arch,
     }
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
@@ -462,11 +414,8 @@ def load_join_estimator(path: str, sg=None) -> NarJoinEstimator:
 
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    if meta.get("arch") == "trm":
-        from .transformer import NarTransformer
-        model = NarTransformer.load(os.path.join(path, "model.npz"))
-    else:
-        model = NarMLP.load(os.path.join(path, "model.npz"))
+    model = ARCHS[meta.get("arch", "mlp")].load(
+        os.path.join(path, "model.npz"))
     z = np.load(os.path.join(path, "domains.npz"), allow_pickle=False)
     domains = {c: ColumnDomain(c, z[f"dom_{i}"])
                for i, c in enumerate(meta["dom_cols"])}

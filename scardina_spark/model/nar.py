@@ -51,8 +51,41 @@ def _softmax(z: np.ndarray) -> np.ndarray:
     return z
 
 
+class AdamFit:
+    """The training loop both NAR architectures share: ``cfg.epochs``
+    passes over a seeded permutation of the rows in ``cfg.batch_size``
+    batches, each one ``train_step`` (defined by the subclass) that ticks
+    ``_adam_t`` and applies :meth:`_adam` to every parameter."""
+
+    def _adam(self, idx: int, param: np.ndarray, grad: np.ndarray) -> None:
+        beta1, beta2, eps = 0.9, 0.999, 1e-8
+        m, v = self._adam_state.get(idx, (np.zeros_like(param),
+                                          np.zeros_like(param)))
+        m = beta1 * m + (1 - beta1) * grad
+        v = beta2 * v + (1 - beta2) * grad * grad
+        self._adam_state[idx] = (m, v)
+        t = self._adam_t
+        mh = m / (1 - beta1 ** t)
+        vh = v / (1 - beta2 ** t)
+        param -= self.cfg.lr * mh / (np.sqrt(vh) + eps)
+
+    def fit(self, codes: np.ndarray) -> list[float]:
+        rs = np.random.RandomState(self.cfg.seed + 1)
+        losses = []
+        n = codes.shape[0]
+        for _ in range(self.cfg.epochs):
+            order = rs.permutation(n)
+            ep_loss, nb = 0.0, 0
+            for s in range(0, n, self.cfg.batch_size):
+                batch = codes[order[s:s + self.cfg.batch_size]]
+                ep_loss += self.train_step(batch, rs)
+                nb += 1
+            losses.append(ep_loss / max(nb, 1))
+        return losses
+
+
 @dataclass
-class NarMLP:
+class NarMLP(AdamFit):
     """input_bins: [(col_name, dom_size)] — dom_size INCLUDES the MASK/NULL
     slots (codes 0..dom_size-1).
 
@@ -241,18 +274,6 @@ class NarMLP:
 
     # -- training ---------------------------------------------------------
 
-    def _adam(self, idx: int, param: np.ndarray, grad: np.ndarray) -> None:
-        beta1, beta2, eps = 0.9, 0.999, 1e-8
-        m, v = self._adam_state.get(idx, (np.zeros_like(param),
-                                          np.zeros_like(param)))
-        m = beta1 * m + (1 - beta1) * grad
-        v = beta2 * v + (1 - beta2) * grad * grad
-        self._adam_state[idx] = (m, v)
-        t = self._adam_t
-        mh = m / (1 - beta1 ** t)
-        vh = v / (1 - beta2 ** t)
-        param -= self.cfg.lr * mh / (np.sqrt(vh) + eps)
-
     def train_step(self, codes: np.ndarray, rs: np.random.RandomState) -> float:
         """One masked-AE step on a batch of dictionary codes [B, C]."""
         B = codes.shape[0]
@@ -384,22 +405,6 @@ class NarMLP:
             pid += 1
 
         return total_loss / max(total_cnt, 1)
-
-    def fit(self, codes: np.ndarray, log=None) -> list[float]:
-        rs = np.random.RandomState(self.cfg.seed + 1)
-        losses = []
-        n = codes.shape[0]
-        for ep in range(self.cfg.epochs):
-            order = rs.permutation(n)
-            ep_loss, nb = 0.0, 0
-            for s in range(0, n, self.cfg.batch_size):
-                batch = codes[order[s:s + self.cfg.batch_size]]
-                ep_loss += self.train_step(batch, rs)
-                nb += 1
-            losses.append(ep_loss / max(nb, 1))
-            if log:
-                log(f"epoch {ep}: loss {losses[-1]:.4f}")
-        return losses
 
     # -- persistence ------------------------------------------------------
 

@@ -39,6 +39,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from ..functions.factorize import sub_codes
 from ..plans.parse import ParsedQuery, parse_query
 from ..plans.predicates import (
     Predicate, accepts_null, normalize_predicates, value_mask)
@@ -414,8 +415,7 @@ class NarEstimator:
             return
         for k, sub in enumerate(grp.spec.sub_cols):
             j = grp.model_idx[k]
-            codes[:, j] = ((inh >> sub.offset)
-                           & ((1 << sub.window) - 1)) + 1
+            codes[:, j] = sub_codes(inh, sub)
             mask[:, j] = False
 
     def _progressive(self, by_col: dict[str, list[Predicate]],

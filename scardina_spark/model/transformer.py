@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .nar import TrainConfig, _softmax
+from .nar import AdamFit, TrainConfig, _softmax
 
 
 @dataclass
@@ -47,7 +47,7 @@ def _ln_backward(dy, cache):
 
 
 @dataclass
-class NarTransformer:
+class NarTransformer(AdamFit):
     input_bins: list[tuple[str, int]]
     cfg: TrmConfig = field(default_factory=TrmConfig)
 
@@ -77,8 +77,8 @@ class NarTransformer:
             }
             self.blocks.append(blk)
         self.lnf_g, self.lnf_b = np.ones(d), np.zeros(d)
-        self._adam: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        self._t = 0
+        self._adam_state: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._adam_t = 0
 
     # -- forward ----------------------------------------------------------
 
@@ -152,16 +152,6 @@ class NarTransformer:
 
     # -- training ---------------------------------------------------------
 
-    def _adam_step(self, idx, param, grad):
-        b1, b2, eps = 0.9, 0.999, 1e-8
-        m, v = self._adam.get(idx, (np.zeros_like(param), np.zeros_like(param)))
-        m = b1 * m + (1 - b1) * grad
-        v = b2 * v + (1 - b2) * grad * grad
-        self._adam[idx] = (m, v)
-        mh = m / (1 - b1 ** self._t)
-        vh = v / (1 - b2 ** self._t)
-        param -= self.cfg.lr * mh / (np.sqrt(vh) + eps)
-
     def train_step(self, codes, rs):
         B = codes.shape[0]
         d = self.cfg.d_word
@@ -219,39 +209,23 @@ class NarTransformer:
 
         # token grads: dx [B, C, d] -> pos + embeddings
         g_pos = dx.sum(axis=0)
-        self._t += 1
+        self._adam_t += 1
         pid = 0
         for bi, blk in enumerate(self.blocks):
             for key in ("ln1_g", "ln1_b", "Wq", "Wk", "Wv", "Wo",
                         "ln2_g", "ln2_b", "W1", "b1", "W2", "b2"):
-                self._adam_step(pid, blk[key], grads_blocks[bi][key])
+                self._adam(pid, blk[key], grads_blocks[bi][key])
                 pid += 1
-        self._adam_step(pid, self.lnf_g, g_lnf_g); pid += 1
-        self._adam_step(pid, self.lnf_b, g_lnf_b); pid += 1
-        self._adam_step(pid, self.pos, g_pos); pid += 1
+        self._adam(pid, self.lnf_g, g_lnf_g); pid += 1
+        self._adam(pid, self.lnf_b, g_lnf_b); pid += 1
+        self._adam(pid, self.pos, g_pos); pid += 1
         for j in range(self.C):
             gE = gE_dec[j]
             np.add.at(gE, eff[:, j], dx[:, j])
-            self._adam_step(pid, self.emb[j], gE)
+            self._adam(pid, self.emb[j], gE)
             pid += 1
 
         return loss / denom
-
-    def fit(self, codes, log=None):
-        rs = np.random.RandomState(self.cfg.seed + 1)
-        n = codes.shape[0]
-        losses = []
-        for ep in range(self.cfg.epochs):
-            order = rs.permutation(n)
-            tot, nb = 0.0, 0
-            for s in range(0, n, self.cfg.batch_size):
-                tot += self.train_step(codes[order[s:s + self.cfg.batch_size]], rs)
-                nb += 1
-            losses.append(tot / max(nb, 1))
-            if log:
-                log(f"epoch {ep}: loss {losses[-1]:.4f}")
-        return losses
-
 
     # -- persistence ------------------------------------------------------
 

@@ -9,12 +9,32 @@ count sized to the parallelism at hand.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
+def driver_memory(meminfo: str, cgroup_limit: str | None = None) -> str:
+    """Default driver heap: half of what this process may use — the
+    cgroup limit when one is set, else ``MemTotal`` of ``/proc/meminfo``
+    — capped at 48g."""
+    total = int(re.search(r"^MemTotal:\s+(\d+) kB", meminfo, re.M)[1]) << 10
+    if cgroup_limit and cgroup_limit.strip().isdigit():
+        total = min(total, int(cgroup_limit))
+    return f"{min(total // 2, 48 << 30) >> 20}m"
+
+
+def _read(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
 
 
 def get_spark(
@@ -49,7 +69,11 @@ def get_spark(
         # operators/layout.py) and are exactly the interop hazard
         # load_table has to normalize away on read
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM") or driver_memory(
+                _read("/proc/meminfo"),
+                _read("/sys/fs/cgroup/memory.max")  # v2, else v1
+                or _read("/sys/fs/cgroup/memory/memory.limit_in_bytes")))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # scan-task sizing: at 100 TB pick this so (maxPartitionBytes x
         # concurrent tasks x row-expansion) fits executor memory; 128 MiB

@@ -2,12 +2,13 @@
 
 import math
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from scardina_spark.functions import (
     build_dictionary, encode_with_dictionary, factorization_spec)
 from scardina_spark.functions.dictionary import CODE, VALUE
-from scardina_spark.functions.factorize import sub_code_expr
+from scardina_spark.functions.factorize import sub_code_expr, sub_codes
 
 
 def test_dictionary_sorted_dense_codes(tables, duck):
@@ -74,18 +75,23 @@ def test_factorization_spec_windows():
 
 def test_factorize_roundtrip(spark):
     spec = factorization_spec("code", 70000, 8)
-    df = spark.createDataFrame(
-        [(i,) for i in [1, 2, 255, 256, 69999]], ["code"])
+    codes = [1, 2, 255, 256, 69999]
+    df = spark.createDataFrame([(i,) for i in codes], ["code"])
     out = df.select("code", *[sub_code_expr("code", sub).alias(sub.name)
-                              for sub in spec.sub_cols])
-    for r in out.collect():
+                              for sub in spec.sub_cols]).orderBy("code")
+    rows = out.collect()
+    for r in rows:
         code = r["code"]
         rebuilt = 0
         for sub in spec.sub_cols:
             rebuilt |= (r[sub.name] - 1) << sub.offset
         assert rebuilt == code
         for sub in spec.sub_cols:
-            assert 1 <= r[sub.name] <= sub.dist_size - 1 or True
+            assert 1 <= r[sub.name] <= sub.dist_size - 1
+    # the NumPy split the model side uses equals the Spark projection
+    arr = np.array(codes, dtype=np.int64)
+    for sub in spec.sub_cols:
+        assert sub_codes(arr, sub).tolist() == [r[sub.name] for r in rows]
     # fact_upper projects the max code
     top = spec.sub_cols[-1]
     assert top.upper == ((69999 >> top.offset) & (2 ** top.window - 1)) + 1

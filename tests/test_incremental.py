@@ -220,6 +220,40 @@ def test_fine_tune_join_estimator_parity_at_cutoff(spark, tables,
     assert q_ft < max(2.0 * q_fs, 1.3), (q_ft, q_fs)
 
 
+def test_fine_tune_join_is_layout_independent(spark, tables):
+    """The join fine-tune selects and orders its rows by the
+    ``__sample_id__`` hash, as training does: fine-tuning on the same
+    sample spread over a different partitioning gives identical weights,
+    with and without the ``max_rows`` cap."""
+    import dataclasses
+    import hashlib
+
+    import numpy as np
+
+    from scardina_spark.model import TrainConfig
+    from scardina_spark.model.join_bridge import (
+        fine_tune_join_estimator, train_join_estimator)
+
+    tree = spanning_tree(build_tpch_schema(), "lineitem")
+    ts = prepare_tree_sample(tree, tables, "lineitem",
+                             n_min=3_000, n_max=3_000, seed=7)
+    moved = dataclasses.replace(ts, sample=ts.sample.repartition(7))
+    cols = ["lineitem.l_returnflag", "orders.o_orderstatus"]
+    cfg = TrainConfig(epochs=1, d_word=8, d_ff=16, batch_size=256, seed=1)
+
+    def tuned(sample_ts, max_rows):
+        est = train_join_estimator(ts, cols, cfg)
+        est = fine_tune_join_estimator(est, sample_ts, epochs=2,
+                                       max_rows=max_rows, seed=13)
+        m = est.model
+        return hashlib.sha256(b"".join(
+            np.ascontiguousarray(a).tobytes()
+            for a in [m.W1, m.b1, m.W2, m.b2] + m.emb + m.P)).hexdigest()
+
+    for max_rows in (200_000, 2_000):
+        assert tuned(ts, max_rows) == tuned(moved, max_rows), max_rows
+
+
 def test_fine_tune_join_rejects_cont_fanout(spark, tables, tmp_path):
     from scardina_spark.model import TrainConfig
     from scardina_spark.model.join_bridge import (

@@ -136,6 +136,23 @@ def test_trm_join_rejects_cont_fanout(tables):
                              cont_fanout=True, arch="trm")
 
 
+def test_make_model_rejects_mlp_only_options_for_trm():
+    """The Transformer has uniform-width categorical embeddings: the
+    MLP-only options must raise for it, not be dropped silently."""
+    from scardina_spark.model.bridge import make_model
+    from scardina_spark.model.transformer import NarTransformer
+
+    bins = [("a", 8), ("b", 6)]
+    with pytest.raises(ValueError, match="smaller_emb"):
+        make_model(bins, TrainConfig(smaller_emb="bound"), "trm")
+    with pytest.raises(ValueError, match="cont_fanout"):
+        make_model(bins, TrainConfig(), "trm", continuous=frozenset({"b"}))
+    with pytest.raises(ValueError, match="unknown arch"):
+        make_model(bins, TrainConfig(), "rnn")
+    assert isinstance(make_model(bins, TrainConfig(d_word=8), "trm"),
+                      NarTransformer)
+
+
 def test_save_load_roundtrip(tables, exact, tmp_path):
     """Checkpoint-eval workflow (reference run.py:659-708, 770-788): a
     loaded estimator reproduces the trained one's estimates exactly (same
