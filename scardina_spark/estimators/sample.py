@@ -34,7 +34,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..operators.fanout import adj_fanout_col, attach_count, fk_counts
 from ..operators.sampler import join_sample
-from ..operators.weights import WEIGHT, compute_weights
 from ..plans.parse import ParsedQuery, parse_query
 from ..plans.predicates import (
     Predicate, accepts_null, normalize_predicates, value_mask)
@@ -245,60 +244,12 @@ def prepare_tree_sample(
     n_min: int = 100_000, n_max: int = 500_000, seed: int = 42,
 ) -> TreeSample:
     """Materialize the unbiased weighted join sample of ``tree``
-    (reference pipeline stages b-d, scardina/datasets.py:144-378)."""
+    (reference pipeline stages b-d, scardina/datasets.py:144-378): the
+    adjacency fanouts here, then ``join_sample`` weights, draws, sizes
+    and caches the sample."""
     root = root or tree.center
-    adj = attach_tree_adj_fanouts(tree, tables)
-    # Fact-rooted fast path: when every tree edge walks many-to-one away
-    # from the root (the shape of every CIN subschema and of a UR tree
-    # rooted at the fact table), each root row joins exactly one (possibly
-    # null-extended) row per edge, so all weights are identically 1 and
-    # the join size is the root count — skip the bottom-up weight passes
-    # and sample the root uniformly.  This turns prep into two jobs
-    # (metadata count + sample/join materialization) with no shuffle
-    # outside the fanout aggregates.
-    all_m2o = all(rel.pk_table == child
-                  for _, child, rel in tree.join_tree(root))
-    handles: list = []
-    meta: list = []
-    if all_m2o:
-        join_size = tables[root].count()
-        w = dict(adj)
-        w[root] = w[root].withColumn(WEIGHT, F.lit(1.0))
-        n = max(n_min, min(n_max, join_size))
-        n_arg: "int | tuple[int, int]" = n
-    else:
-        # The weighted root's join size IS the draw's weight total, so
-        # the draw resolves its own n (r12): previously the weight-
-        # attach lineage was persisted and aggregated in a separate
-        # pass before the draw could be sized — one extra full
-        # materialization of the root relation per prep.  Exact for
-        # integer-valued weights, so join_size and n (and hence the
-        # sample) are bit-identical to the two-pass flow.
-        w = dict(compute_weights(tree, adj, root))
-        n_arg = (n_min, n_max)
-    # all_m2o also certifies the root draw may skip the weight scan and
-    # persist: w[root] is a pure projection over the scan (plus at most the
-    # loader's deterministic rebalance — the root is FK-side of every edge,
-    # so attach_tree_adj_fanouts adds only literals), hence partition
-    # membership is stable across the sampler's two passes.
-    samp = join_sample(tree, w, root, n_arg, seed=seed, drop_weights=True,
-                       uniform_root=all_m2o, cache_out=handles,
-                       meta_out=meta)
-    if not all_m2o:
-        join_size, n = meta[0]
-    # right-size partitions for the per-query aggregate: ~64k rows per
-    # task keeps scheduling overhead off the query path (estimate()
-    # latency is dominated by task launch, not compute).  repartition,
-    # NOT coalesce: coalesce would narrow the whole draw+join pipeline
-    # to this width, serializing the one-off materialization — the
-    # extra sample-sized shuffle is far cheaper than that.
-    samp = samp.repartition(max(4, n // 65536))
-    samp = samp.cache()
-    samp.count()  # materialize once; queries reuse the cached sample
-    # the weighted-root draw's internal persist (full root table) is
-    # only needed until the sample is materialized
-    for h in handles:
-        h.unpersist()
+    samp, join_size, n = join_sample(
+        tree, attach_tree_adj_fanouts(tree, tables), root, n_min, n_max, seed)
     return TreeSample(tree, root, samp, join_size, n)
 
 

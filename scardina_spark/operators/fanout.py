@@ -33,26 +33,15 @@ def fanout_col(my_col: str, other_table: str, other_col: str) -> str:
     return f"__fanout__:{my_col}={other_table}.{other_col}"
 
 
-def fk_counts(df: DataFrame, fk_col: str, salted: bool = False,
-              n_salts: int = 16) -> DataFrame:
+def fk_counts(df: DataFrame, fk_col: str) -> DataFrame:
     """Per-key multiplicity of ``fk_col`` → columns (fk_col, count).
 
     Nulls excluded, matching pandas ``value_counts`` semantics
     (reference: scardina/datasets.py:113).
-
-    ``salted=True`` routes through the two-phase salted aggregate
-    (operators/skew.py) for key distributions where even map-side partial
-    aggregation leaves one reducer hot (hot key spread across many input
-    partitions at very high cardinality).  Output is identical.
     """
     c = F.col(f"`{fk_col}`")
-    nn = df.where(c.isNotNull())
-    if salted:
-        from .skew import salted_group_agg
-        out = salted_group_agg(nn, [fk_col], count_alias=COUNT,
-                               n_salts=n_salts)
-        return out.select(F.col(f"`{fk_col}`").alias(fk_col), F.col(COUNT))
-    return nn.groupBy(c.alias(fk_col)).agg(F.count(F.lit(1)).alias(COUNT))
+    return (df.where(c.isNotNull())
+            .groupBy(c.alias(fk_col)).agg(F.count(F.lit(1)).alias(COUNT)))
 
 
 def attach_count(df: DataFrame, key_col: str, counts: DataFrame,
@@ -92,17 +81,9 @@ def attach_adj_fanouts(sg: SchemaGraph, tables: dict[str, DataFrame]
     return out
 
 
-def edge_fanout(child: DataFrame, rel_key: str, weight_col: str = "__weight__",
-                salted: bool = False, n_salts: int = 16) -> DataFrame:
+def edge_fanout(child: DataFrame, rel_key: str, weight_col: str = "__weight__"
+                ) -> DataFrame:
     """Sum of child weights per join key — the ``__fanout__`` aggregate used
-    by bottom-up weight computation (reference: scardina/datasets.py:331).
-    ``salted=True``: two-phase salted sum for hot keys (same output)."""
-    if salted:
-        from .skew import salted_group_agg
-        out = salted_group_agg(child, [rel_key],
-                               sum_cols={weight_col: "__fsum__"},
-                               count_alias=None, n_salts=n_salts)
-        return out.select(F.col(f"`{rel_key}`").alias(rel_key),
-                          F.col("__fsum__"))
+    by bottom-up weight computation (reference: scardina/datasets.py:331)."""
     return child.groupBy(F.col(f"`{rel_key}`").alias(rel_key)).agg(
         F.sum(F.col(f"`{weight_col}`")).alias("__fsum__"))

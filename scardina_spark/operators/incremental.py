@@ -42,8 +42,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..estimators.sample import TreeSample, attach_tree_adj_fanouts
 from ..schema import Relationship
 from .fanout import COUNT, adj_fanout_col, attach_count, fk_counts
-from .sampler import SAMPLE_ID, join_sample
-from .weights import WEIGHT
+from .sampler import SAMPLE_ID, fact_rooted, join_sample
 
 
 def _sum_counts(a: DataFrame, b: DataFrame, fk_col: str) -> DataFrame:
@@ -101,7 +100,7 @@ def append_refresh_tree_sample(
     then read only by the Δ-join sampler).
     """
     tree, root = ts.tree, ts.root
-    if not all(rel.pk_table == child for _, child, rel in tree.join_tree(root)):
+    if not fact_rooted(tree, root):
         raise ValueError(
             "append_refresh_tree_sample requires a fact-rooted tree "
             "(appends change __weight__ otherwise; re-run prepare_tree_sample "
@@ -110,6 +109,7 @@ def append_refresh_tree_sample(
     delta_root = delta_root.persist()
     delta_n = delta_root.count()
     if delta_n == 0:
+        delta_root.unpersist()
         return ts
     new_join_size = ts.join_size + delta_n
 
@@ -140,14 +140,8 @@ def append_refresh_tree_sample(
     adj = attach_tree_adj_fanouts(
         tree, {**tables, root: delta_root},
         {(root, fk): cnt for fk, cnt in merged.items()})
-    w = dict(adj)
-    w[root] = w[root].withColumn(WEIGHT, F.lit(1.0))
-    # uniform_root: all root weights are the literal 1.0 and delta_root
-    # is persisted + materialized above, so partition membership is
-    # stable across the sampler's two passes — skips the weight-sum scan
-    # and the weighted path's internal persist.
-    delta_samp = join_sample(tree, w, root, n_delta, seed=seed,
-                             drop_weights=True, uniform_root=True)
+    delta_cached, _, _ = join_sample(tree, adj, root, n_delta, n_delta,
+                                     seed=seed)
 
     # 4. iid subsample of the old sample + id reassignment.  The global
     # window sorts only the ≤n_max-row sample — bounded work independent
@@ -160,13 +154,14 @@ def append_refresh_tree_sample(
             .where(F.col("__rn__") <= F.lit(n_keep))
             .withColumn(SAMPLE_ID, (F.col("__rn__") - 1).cast("long"))
             .drop("__r__", "__rn__"))
-    delta_samp = delta_samp.withColumn(
+    delta_samp = delta_cached.withColumn(
         SAMPLE_ID, (F.col(SAMPLE_ID) + F.lit(n_keep)).cast("long"))
     samp = kept.unionByName(delta_samp)
 
     samp = samp.coalesce(max(4, n_new // 65536)).cache()
     samp.count()
     ts.sample.unpersist()
+    delta_cached.unpersist()
     delta_root.unpersist()
     return TreeSample(tree, root, samp, new_join_size, n_new)
 

@@ -19,9 +19,6 @@ from ..functions.dictionary import build_dictionary
 from ..schema import SchemaGraph, Subschema
 from .fanout import attach_adj_fanouts
 from .sampler import join_sample
-from .weights import WEIGHT, compute_weights
-
-from pyspark.sql import functions as F
 
 
 def _safe(name: str) -> str:
@@ -70,20 +67,12 @@ class PrepPipeline:
                         root: str, n: int, seed: int = 42) -> DataFrame:
         path = self._path("joined_samples", f"{tree.name}__{root}__{n}")
         if not self._exists(path):
-            w = compute_weights(tree, tables, root)
-            handles: list = []
-            samp = join_sample(tree, w, root, n, seed=seed,
-                               cache_out=handles)
+            samp, _, _ = join_sample(tree, tables, root, n, n, seed=seed)
             # ':' (from __in__:/__fanout__: markers) is not portable in
             # parquet column names — store as '#'
-            for c in samp.columns:
-                if ":" in c:
-                    samp = samp.withColumnRenamed(c, c.replace(":", "#"))
-            samp.write.mode("overwrite").parquet(path)
-            # the parquet write materialized the draw; the root draw's
-            # internal persist is no longer needed
-            for h in handles:
-                h.unpersist()
+            (samp.toDF(*[c.replace(":", "#") for c in samp.columns])
+             .write.mode("overwrite").parquet(path))
+            samp.unpersist()
         out = self.spark.read.parquet(path)
         for c in out.columns:
             if "#" in c:

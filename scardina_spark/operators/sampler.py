@@ -8,6 +8,10 @@ matches (reference semantics: scardina/join.py:73-245 — per-key Python
 dict loops, single-node).  This module re-derives the operator as pure
 DataFrame algebra so it scales:
 
+``join_sample`` is the one entry point.  It picks the root draw, sizes
+the sample from the join size that draw computes, and frees the draw's
+intermediates once the sample is cached.
+
 * Root sampling, uniform fast path (fact-rooted trees, all weights 1):
   exact multinomial-with-replacement, shuffle-free.  One tiny job
   collects per-partition counts plus a CONTENT fingerprint (min row
@@ -21,8 +25,8 @@ DataFrame algebra so it scales:
 
 * Root sampling, weighted path: a content-deterministic INTERVAL draw
   over the global exclusive prefix sum of weights in the total order of
-  the row's own columns (``prefix.with_prefix_sum``: one
-  range-partitioned sort + broadcast offsets + an Arrow cumsum).  The
+  the row's own columns (one range-partitioned sort, broadcast
+  partition offsets and an Arrow cumsum).  The
   driver draws n sorted uniforms scaled to the total weight; each Arrow
   batch binary-searches the targets falling in its [first cum,
   last cum + w) span and emits the covered rows.  Join-multiplicity
@@ -49,7 +53,7 @@ existence markers, matching the reference layout (scardina/join.py:86-87,
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -58,7 +62,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..schema import Subschema
 from .prefix import PID, _safe_names
-from .weights import WEIGHT
+from .storage import free_checkpoint
+from .weights import WEIGHT, compute_weights
 
 SAMPLE_ID = "__sample_id__"
 
@@ -67,65 +72,36 @@ def _q(name: str) -> F.Column:
     return F.col(f"`{name}`")
 
 
-def weighted_sample_with_replacement(
-    df: DataFrame, weight_col: str, order_cols: list[str] | None = None,
-    n: int = 1, seed: int = 42, uniform: bool = False,
-    cache_out: list | None = None,
-    n_bounds: tuple[int, int] | None = None,
-    meta_out: list | None = None,
-) -> DataFrame:
-    """Exactly ``n`` draws with replacement, P(row) ∝ ``weight_col``.
+def fact_rooted(tree: Subschema, root: str) -> bool:
+    """Every edge of ``tree`` walks many-to-one away from ``root`` (the
+    shape of every CIN subschema and of a UR tree rooted at the fact
+    table).  Each root row then joins exactly one (possibly
+    null-extended) row per edge: every weight is 1 and the join size is
+    the root's row count."""
+    return all(rel.pk_table == child for _, child, rel in tree.join_tree(root))
 
-    Returns the sampled rows (original columns + ``__sample_id__``); a row
-    drawn k times appears k times with distinct sample ids (dense 0..n-1).
 
-    ``uniform=True`` asserts every weight is the same positive constant
-    (the fact-rooted fast path, where all weights are 1): two jobs, zero
-    shuffles — per-partition (count, content fingerprint) → driver-side
-    multinomial split of ``n`` in FINGERPRINT order → per-partition local
-    draws (Arrow-batched numpy) seeded by the fingerprint.  Keying
-    everything on a content fingerprint (min row hash over
-    ``order_cols``) instead of ``spark_partition_id`` makes the draw
-    invariant under partition RENUMBERING: two writes of identical data
-    produce identically-sized files that the scan may list — and number —
-    in a different order (measured: the synthetic-IMDB bench stage drew
-    different samples at identical seed before this change).  The
-    ``order_cols`` sort additionally neutralizes within-partition arrival
-    order (shuffle replay after cache loss).
+def _uniform_draw(df: DataFrame, order_cols: list[str], seed: int
+                  ) -> tuple[int, Callable[[int], DataFrame], list]:
+    """Uniform multinomial-with-replacement over the rows of ``df``: two
+    jobs, zero shuffles.
 
-    The weighted path is a content-deterministic INTERVAL draw: the
-    global exclusive prefix sum of weights in ``order_cols`` total order
-    (``prefix.with_prefix_sum`` — one range shuffle), n sorted uniform
-    targets scaled to the total weight on the driver, and an Arrow pass
-    where each batch binary-searches the targets its [cum_first,
-    cum_last + w_last) span covers.  Join-multiplicity weights are
-    integer-valued counts (< 2^53): every partial sum is exact in
-    float64 under ANY grouping, so the draw is bit-identical for any
-    physical layout of the same logical relation — including the
-    weight-attach lineage, whose post-join partitioning this function
-    cannot control.  (Fractional weights degrade gracefully: a target
-    within 1 ulp of an interval edge may shift by one row.)
-
-    Pass ``cache_out`` (a list) to receive the weighted path's persist
-    handle (the sorted relation is read twice) — the caller should
-    ``unpersist()`` it once the sample is materialized.
-
-    ``n_bounds=(n_min, n_max)`` (weighted path only) resolves ``n`` from
-    the weight total the draw computes anyway — ``n = clamp(int(total))``
-    — so callers sizing the draw by the join size skip their own full
-    aggregation pass over the weighted relation (the total is exact for
-    integer-valued weights, so it equals the separate aggregate
-    bit-for-bit).  ``meta_out`` (a list) receives ``(join_size, n)``.
-    """
+    Runs the first job now — per-partition (row count, content
+    fingerprint) — and returns ``(join_size, draw, [])``: the row count,
+    and ``draw(n)``, the lazy n-row sample (original columns +
+    ``__sample_id__``, dense 0..n-1; a row drawn k times appears k
+    times).  ``draw`` splits ``n`` with one driver-side multinomial in
+    FINGERPRINT order and each partition draws its quota locally
+    (Arrow-batched numpy), seeded by its fingerprint.  Keying everything
+    on a content fingerprint (min row hash over ``order_cols``) instead
+    of ``spark_partition_id`` makes the draw invariant under partition
+    RENUMBERING: two writes of identical data produce identically-sized
+    files that the scan may list — and number — in a different order
+    (measured: the synthetic-IMDB bench stage drew different samples at
+    identical seed before this change).  The ``order_cols`` sort
+    additionally neutralizes within-partition arrival order (shuffle
+    replay after cache loss)."""
     sc = df.sparkSession.sparkContext
-    order_cols = list(order_cols or df.columns)
-    if not uniform:
-        return _interval_draw(df, weight_col, order_cols, n, seed,
-                              cache_out, n_bounds=n_bounds,
-                              meta_out=meta_out)
-    if n_bounds is not None:
-        raise ValueError("n_bounds requires the weighted path")
-
     fp_expr = F.min(F.xxhash64(*[_q(c) for c in order_cols])).alias("fp")
     pos = df.withColumn(PID, F.spark_partition_id())
     part = pos.groupBy(PID).agg(F.count(F.lit(1)).alias("s"),
@@ -134,83 +110,86 @@ def weighted_sample_with_replacement(
     fps = {int(r[PID]): int(r["fp"]) for r in part if r["s"]}
     total = sum(sums.values())
     if not total or total <= 0:
-        raise ValueError("weighted_sample_with_replacement: no positive weight")
-
+        raise ValueError("join_sample: no positive weight")
     # fingerprint order (ties broken by count then pid — pid only
     # matters when two partitions hold identical minimal rows)
     pids = sorted(fps, key=lambda p: (fps[p], sums[p], p))
-    rs = np.random.RandomState(seed)
-    counts = rs.multinomial(n, [sums[p] / total for p in pids])
-    quota = {p: int(c) for p, c in zip(pids, counts)}
-    offsets, running = {}, 0
-    for p in pids:
-        offsets[p] = running
-        running += quota[p]
-
-    b_quota = sc.broadcast(quota)
-    b_off = sc.broadcast(offsets)
-    b_fp = sc.broadcast(fps)
 
     safe, mapping = _safe_names(pos)
     pid_safe = mapping[PID]
     sort_safe = [mapping[c] for c in order_cols if c in mapping]
     schema = StructType(safe.schema.fields + [StructField(SAMPLE_ID, LongType())])
 
-    def draw(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [b for b in batches if len(b)]
-        if not chunks:
-            return
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(
-            chunks, ignore_index=True)
-        if sort_safe:
-            pdf = pdf.sort_values(sort_safe, kind="mergesort",
-                                  ignore_index=True)
-        pid = int(pdf[pid_safe].iloc[0])
-        k = b_quota.value.get(pid, 0)
-        if k <= 0:
-            return
-        fp = b_fp.value[pid]
-        prs = np.random.RandomState(
-            (seed * 1_000_003 + 7919 * fp) % (2 ** 32))
-        idx = prs.randint(len(pdf), size=k)
-        out = pdf.iloc[idx].copy()
-        out[SAMPLE_ID] = np.arange(b_off.value[pid], b_off.value[pid] + k,
-                                   dtype="int64")
-        yield out
+    def draw(n: int) -> DataFrame:
+        rs = np.random.RandomState(seed)
+        counts = rs.multinomial(n, [sums[p] / total for p in pids])
+        quota = {p: int(c) for p, c in zip(pids, counts)}
+        offsets, running = {}, 0
+        for p in pids:
+            offsets[p] = running
+            running += quota[p]
+        b_quota = sc.broadcast(quota)
+        b_off = sc.broadcast(offsets)
+        b_fp = sc.broadcast(fps)
 
-    out = safe.mapInPandas(draw, schema)
-    for orig, s in mapping.items():
-        out = out.withColumnRenamed(s, orig)
-    return out.drop(PID)
+        def draw_part(batches: Iterator[pd.DataFrame]
+                      ) -> Iterator[pd.DataFrame]:
+            chunks = [b for b in batches if len(b)]
+            if not chunks:
+                return
+            pdf = chunks[0] if len(chunks) == 1 else pd.concat(
+                chunks, ignore_index=True)
+            if sort_safe:
+                pdf = pdf.sort_values(sort_safe, kind="mergesort",
+                                      ignore_index=True)
+            pid = int(pdf[pid_safe].iloc[0])
+            k = b_quota.value.get(pid, 0)
+            if k <= 0:
+                return
+            fp = b_fp.value[pid]
+            prs = np.random.RandomState(
+                (seed * 1_000_003 + 7919 * fp) % (2 ** 32))
+            idx = prs.randint(len(pdf), size=k)
+            out = pdf.iloc[idx].copy()
+            out[SAMPLE_ID] = np.arange(b_off.value[pid],
+                                       b_off.value[pid] + k, dtype="int64")
+            yield out
+
+        out = safe.mapInPandas(draw_part, schema)
+        for orig, s in mapping.items():
+            out = out.withColumnRenamed(s, orig)
+        return out.drop(PID)
+
+    return int(total), draw, []
 
 
 def _interval_draw(df: DataFrame, weight_col: str, order_cols: list[str],
-                   n: int, seed: int,
-                   cache_out: list | None,
-                   n_bounds: tuple[int, int] | None = None,
-                   meta_out: list | None = None) -> DataFrame:
-    """Weighted multinomial-with-replacement via interval search over the
-    global exclusive prefix sum (see weighted_sample_with_replacement).
+                   seed: int
+                   ) -> tuple[int, Callable[[int], DataFrame], list]:
+    """Weighted multinomial-with-replacement, P(row) ∝ ``weight_col``: a
+    content-deterministic INTERVAL draw over the global exclusive prefix
+    sum of weights in ``order_cols`` total order.
 
-    One fused Arrow pass (r12): the exclusive prefix sum and the
-    interval search run in the SAME ``mapInPandas`` over the sorted
-    relation — previously a ``with_prefix_sum`` pass materialized the
-    cum column through one full-width Python round-trip and a second
-    pass searched it, and a third job re-aggregated the total.  The
-    fused form computes per-batch cums from the broadcast partition
-    offsets (the identical shifted-cumsum arithmetic, bit-for-bit) and
-    derives the total from the same per-partition sums the offsets
-    need, so the draw costs ONE Python stage and ONE tiny aggregate.
-    Join-multiplicity weights are integer-valued (< 2^53), so every
-    partial sum is exact in float64 under any grouping — the fused
-    total and cums equal the old pipeline's exactly (test-pinned);
-    fractional weights keep the documented degrade-gracefully caveat."""
+    Sorts the positive-weight rows (one range shuffle), persists them
+    and runs one tiny per-partition weight-sum job now.  Returns
+    ``(join_size, draw, [sorted])``: the weight total, ``draw(n)`` (the
+    lazy n-row sample, as in ``_uniform_draw``), and the persisted
+    relation ``draw`` reads twice — free it once the sample is
+    materialized.  ``draw`` scales n sorted driver-side uniforms to the
+    total and runs ONE fused Arrow pass: each batch computes its
+    exclusive cums from the broadcast partition offsets and
+    binary-searches the targets its [cum_first, cum_last + w_last) span
+    covers.  Join-multiplicity weights are integer-valued counts
+    (< 2^53): every partial sum is exact in float64 under ANY grouping,
+    so the total and the draw are bit-identical for any physical layout
+    of the same logical relation — including the weight-attach lineage,
+    whose post-join partitioning this function cannot control.
+    (Fractional weights degrade gracefully: a target within 1 ulp of an
+    interval edge may shift by one row.)"""
     from .prefix import _with_sorted_partitions
 
     pos = df.where(_q(weight_col) > 0)
     d = _with_sorted_partitions(pos, order_cols, None).persist()
-    if cache_out is not None:
-        cache_out.append(d)
     part_rows = (d.groupBy(PID)
                  .agg(F.sum(_q(weight_col).cast("double")).alias("s"))
                  .collect())
@@ -223,69 +202,62 @@ def _interval_draw(df: DataFrame, weight_col: str, order_cols: list[str],
     total = running
     if not total or total <= 0:
         d.unpersist()
-        if cache_out is not None and cache_out and cache_out[-1] is d:
-            cache_out.pop()
-        raise ValueError("weighted_sample_with_replacement: no positive weight")
-    # join-size-bounded draws: the weight total IS the join size (exact
-    # integer double), so resolving n here spares the caller a separate
-    # full-relation aggregate
-    if n_bounds is not None:
-        n = max(n_bounds[0], min(n_bounds[1], int(total)))
-    if meta_out is not None:
-        meta_out.append((int(total), n))
+        raise ValueError("join_sample: no positive weight")
 
-    rs = np.random.RandomState(seed)
-    targets = np.sort(rs.random_sample(n)) * total
     sc = df.sparkSession.sparkContext
-    b_t = sc.broadcast(targets)
-    b_off = sc.broadcast(offsets)
-
     safe, mapping = _safe_names(d)
     w_safe, pid_safe = mapping[weight_col], mapping[PID]
     schema = StructType(safe.schema.fields + [StructField(SAMPLE_ID, LongType())])
 
-    def draw(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t = b_t.value
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if acc is None:
-                acc = float(b_off.value.get(int(pdf[pid_safe].iloc[0]),
-                                            0.0))
-            w = pdf[w_safe].astype("float64").fillna(0.0).to_numpy()
-            # exclusive prefix: shifted sequential cumsum + partition
-            # offset — the exact arithmetic with_prefix_sum used
-            c0 = np.concatenate(([0.0], np.cumsum(w)[:-1])) + acc
-            acc += float(w.sum())
-            lo = int(np.searchsorted(t, c0[0], side="left"))
-            hi = int(np.searchsorted(t, c0[-1] + w[-1], side="left"))
-            if lo >= hi:
-                continue
-            idx = np.searchsorted(c0, t[lo:hi], side="right") - 1
-            out = pdf.iloc[idx].copy()
-            out[SAMPLE_ID] = np.arange(lo, hi, dtype="int64")
-            yield out
+    def draw(n: int) -> DataFrame:
+        rs = np.random.RandomState(seed)
+        b_t = sc.broadcast(np.sort(rs.random_sample(n)) * total)
+        b_off = sc.broadcast(offsets)
 
-    out = safe.mapInPandas(draw, schema)
-    for orig, s in mapping.items():
-        out = out.withColumnRenamed(s, orig)
-    return out.drop(PID)
+        def draw_part(batches: Iterator[pd.DataFrame]
+                      ) -> Iterator[pd.DataFrame]:
+            t = b_t.value
+            acc = None
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                if acc is None:
+                    acc = float(b_off.value.get(int(pdf[pid_safe].iloc[0]),
+                                                0.0))
+                w = pdf[w_safe].astype("float64").fillna(0.0).to_numpy()
+                # exclusive prefix: shifted sequential cumsum + partition
+                # offset — the exact arithmetic with_prefix_sum uses
+                c0 = np.concatenate(([0.0], np.cumsum(w)[:-1])) + acc
+                acc += float(w.sum())
+                lo = int(np.searchsorted(t, c0[0], side="left"))
+                hi = int(np.searchsorted(t, c0[-1] + w[-1], side="left"))
+                if lo >= hi:
+                    continue
+                idx = np.searchsorted(c0, t[lo:hi], side="right") - 1
+                out = pdf.iloc[idx].copy()
+                out[SAMPLE_ID] = np.arange(lo, hi, dtype="int64")
+                yield out
 
+        out = safe.mapInPandas(draw_part, schema)
+        for orig, s in mapping.items():
+            out = out.withColumnRenamed(s, orig)
+        return out.drop(PID)
 
-# checkpointed sampler intermediates ride the same ``cache_out``
-# release protocol as the sampler's persists (see operators/storage.py)
-from .storage import CheckpointHandle as _CheckpointHandle  # noqa: E402
+    return int(total), draw, [d]
 
 
 def pick_one_child_per_sample(
     samples: DataFrame, sample_key: str, child: DataFrame, child_key: str,
     child_table: str, weighted: bool, seed: int,
-    cache_out: list | None = None, pick_broadcast: bool = False,
-) -> DataFrame:
+    pick_broadcast: bool = False,
+) -> tuple[DataFrame, DataFrame | None]:
     """Attach exactly one child row (columns prefixed ``<child_table>.``) to
     every sample row, picked ∝ child ``__weight__`` when ``weighted`` (A-Res),
-    else via the unique PK match; null-extend when no child matches."""
+    else via the unique PK match; null-extend when no child matches.
+
+    Returns the extended sample and, for a weighted pick, the
+    checkpoint it cut the sample's lineage at (None otherwise)."""
+    ckpt = None
     pref = [F.col(f"`{c}`").alias(f"{child_table}.{c}") for c in child.columns]
     c = child.select(*pref).withColumn(f"__in__:{child_table}", F.lit(True))
     ckey = f"{child_table}.{child_key}"
@@ -306,17 +278,13 @@ def pick_one_child_per_sample(
         # was tried instead and was SLOWER than baseline, 34.5 s: the
         # InMemoryRelation columnar conversion per edge costs more than
         # it saves at this width).  Values are unchanged — the
-        # checkpoint only truncates lineage.  The checkpointed RDD
-        # rides on ``cache_out`` as an unpersist()-able handle, released
-        # by prepare_tree_sample once the final sample is materialized
-        # (same protocol as the root draw's persist); NOTE the final
-        # sample's recompute path dies with the handle — callers keep
-        # using it through its own cache, which in local mode spills
-        # rather than evicts (on a cluster, checkpoint the sample to
-        # storage before releasing, operators/pipeline.py).
-        samples = samples.localCheckpoint()
-        if cache_out is not None:
-            cache_out.append(_CheckpointHandle(samples))
+        # checkpoint only truncates lineage.  join_sample frees the
+        # checkpoint once the next one or the cached sample subsumes it;
+        # NOTE the final sample's recompute path dies with it — callers
+        # keep using the sample through its own cache, which in local
+        # mode spills rather than evicts (on a cluster, checkpoint the
+        # sample to storage, operators/pipeline.py).
+        samples = ckpt = samples.localCheckpoint()
 
     cond = _q(sample_key) == _q(ckey)
     if weighted:
@@ -414,31 +382,31 @@ def pick_one_child_per_sample(
     for cc in c.columns:
         if "__fanout__:" in cc or "__adj_fanout__:" in cc:
             out = out.withColumn(cc, F.coalesce(_q(cc), F.lit(1)).cast("long"))
-    return out
+    return out, ckpt
 
 
 def join_sample(
-    ss: Subschema, weighted_tables: dict[str, DataFrame], root: str,
-    n: "int | tuple[int, int]", seed: int = 42, drop_weights: bool = True,
-    uniform_root: bool = False, cache_out: list | None = None,
-    meta_out: list | None = None,
-) -> DataFrame:
-    """Unbiased sample (size ``n``) of the sub-join, BFS from ``root``.
+    ss: Subschema, tables: dict[str, DataFrame], root: str,
+    n_min: int, n_max: int, seed: int = 42,
+) -> tuple[DataFrame, int, int]:
+    """Materialized unbiased sample of the sub-join ``ss``, BFS from
+    ``root``; returns ``(sample, join_size, n)``.
 
-    ``weighted_tables`` must carry ``__weight__`` (operators/weights.py).
-    ``uniform_root`` certifies all root weights equal (fact-rooted trees)
-    so the root draw can skip weight scans and persist; otherwise
-    ``cache_out`` receives the root draw's persist handle to release
-    once the sample is materialized.
-
-    ``n`` may be a ``(n_min, n_max)`` tuple (weighted roots only): the
-    draw then sizes itself from the weight total it computes anyway —
-    join size = Σ root weights, ``n = clamp(join_size)`` — sparing the
-    caller a separate full aggregation pass over the weighted root
-    (exact for integer weights, so identical to the two-pass flow).
-    ``meta_out`` (a list) receives ``(join_size, n)``.
-    """
-    root_df = weighted_tables[root]
+    ``tables`` carry the adjacency fanouts, not weights.  A fact-rooted
+    tree draws its root uniformly (every weight is 1); any other tree
+    gets ``__weight__`` from ``compute_weights`` and the interval draw.
+    Either draw yields the join size from the pass it makes anyway, and
+    the sample holds ``n = clamp(join_size, n_min, n_max)`` rows
+    (reference: scardina/datasets.py:282-284); ``n_min == n_max`` asks
+    for an exact n.  The sample is cached and counted before the root
+    draw's persist and the last pick checkpoint are freed, so the caller
+    holds only the sample (``unpersist()`` it when done)."""
+    uniform = fact_rooted(ss, root)
+    if uniform:
+        tables = {**tables, root: tables[root].withColumn(WEIGHT, F.lit(1.0))}
+    else:
+        tables = compute_weights(ss, tables, root)
+    root_df = tables[root]
     # order by ALL root columns, not just the first: the draw's
     # within-partition sort must be a TOTAL order up to full-duplicate
     # rows, or ties under the first column resolve by arrival order —
@@ -448,19 +416,12 @@ def join_sample(
     # samples at identical seed).  Remaining ties are content-identical
     # rows, which are interchangeable in every downstream pick.
     order = list(root_df.columns)
-    n_bounds = n if isinstance(n, tuple) else None
-    meta: list = []
-    agg = weighted_sample_with_replacement(root_df, WEIGHT, order,
-                                           n if n_bounds is None else 1,
-                                           seed=seed,
-                                           uniform=uniform_root,
-                                           cache_out=cache_out,
-                                           n_bounds=n_bounds,
-                                           meta_out=meta)
-    if n_bounds is not None:
-        _, n = meta[0]
-    if meta_out is not None and meta:
-        meta_out.append(meta[0])
+    if uniform:
+        join_size, draw, held = _uniform_draw(root_df, order, seed)
+    else:
+        join_size, draw, held = _interval_draw(root_df, WEIGHT, order, seed)
+    n = max(n_min, min(n_max, join_size))
+    agg = draw(n)
     # The draw inherits the root scan's partitioning, which can be narrow
     # (few files / single row group); the per-edge picks chain onto it as
     # one codegen stage, so rebalance the (narrow, n-row) drawn sample once
@@ -474,7 +435,6 @@ def join_sample(
     ).withColumn(f"__in__:{root}", F.lit(True))
 
     import hashlib
-    n_handles_seen = len(cache_out) if cache_out is not None else 0
     for parent, child, rel in ss.join_tree(root):
         parent_key = rel.pk_col if rel.pk_table == parent else rel.fk_col
         child_key = rel.fk_col if rel.fk_table == child else rel.pk_col
@@ -488,38 +448,40 @@ def join_sample(
         edge_id = f"{parent}.{parent_key}={child}.{child_key}"
         e_seed = (seed + int(hashlib.md5(edge_id.encode())
                              .hexdigest()[:8], 16)) % (2 ** 31)
-        agg = pick_one_child_per_sample(
-            agg, f"{parent}.{parent_key}", weighted_tables[child], child_key,
+        agg, ckpt = pick_one_child_per_sample(
+            agg, f"{parent}.{parent_key}", tables[child], child_key,
             child, weighted=not many_to_one, seed=e_seed,
-            cache_out=cache_out,
             # n-row pick relations broadcast safely up to a couple of
             # million rows (the guide's §8 plan-broadcast envelope);
-            # callers drawing larger samples fall back to the shuffle
-            # join-back automatically
+            # larger samples fall back to the shuffle join-back
             pick_broadcast=n <= 2_000_000)
         # Release superseded storage EAGERLY (guide §5): each weighted
         # edge's localCheckpoint materializes everything upstream of it,
-        # so the moment handle k exists, handle k-1's blocks (and, at
-        # the FIRST checkpoint, the root draw's persists) are dead
-        # weight — holding them to end-of-prep pinned one full-width
-        # sample copy PER weighted edge in the block manager (measured
-        # r11: the 32-core preps were GC-bound, scaling ratio 0.28).
-        # Only the newest checkpoint survives on ``cache_out`` for the
-        # caller's end-of-prep release.  Values unchanged: the freed
-        # blocks are never read again (the new checkpoint subsumes
-        # them); the recompute path was already forfeited by the
-        # checkpoint protocol above.
-        if cache_out is not None and len(cache_out) > n_handles_seen \
-                and len(cache_out) > 1:
-            for h in cache_out[:-1]:
-                h.unpersist()
-            del cache_out[:-1]
-        if cache_out is not None:
-            n_handles_seen = len(cache_out)
+        # so the moment checkpoint k exists, checkpoint k-1's blocks
+        # (and, at the FIRST checkpoint, the root draw's persist) are
+        # dead weight — holding them to end-of-prep pinned one
+        # full-width sample copy PER weighted edge in the block manager
+        # (measured r11: the 32-core preps were GC-bound, scaling ratio
+        # 0.28).  Values unchanged: the freed blocks are never read
+        # again (the new checkpoint subsumes them).
+        if ckpt is not None:
+            for h in held:
+                free_checkpoint(h)
+            held = [ckpt]
 
-    if drop_weights:
-        agg = agg.drop(*[c for c in agg.columns if c.endswith(WEIGHT)])
+    agg = agg.drop(*[c for c in agg.columns if c.endswith(WEIGHT)])
     # deterministic column order, as the reference does
     # (scardina/datasets.py:362)
-    return agg.select(
+    samp = agg.select(
         _q(SAMPLE_ID), *[_q(c) for c in sorted(c for c in agg.columns if c != SAMPLE_ID)])
+    # right-size partitions for the per-query aggregate: ~64k rows per
+    # task keeps scheduling overhead off the query path (estimate()
+    # latency is dominated by task launch, not compute).  repartition,
+    # NOT coalesce: coalesce would narrow the whole draw+join pipeline
+    # to this width, serializing the one-off materialization — the
+    # extra sample-sized shuffle is far cheaper than that.
+    samp = samp.repartition(max(4, n // 65536)).cache()
+    samp.count()
+    for h in held:
+        free_checkpoint(h)
+    return samp, join_size, n

@@ -4782,20 +4782,16 @@ def q_join_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables = load_tables(spark, sf_dir)
     from .estimators.sample import cin_tree
     tree = cin_tree(sg, "orders")
-    w = compute_weights(tree, tables, "customer")
-    handles: list = []
-    samp = join_sample(tree, w, "customer", 2000, seed=42,
-                       cache_out=handles).select(
+    drawn, _, _ = join_sample(tree, tables, "customer", 2000, 2000, seed=42)
+    samp = drawn.select(
         F.col("`__sample_id__`").alias("sample_id"),
         F.col("`customer.c_custkey`").alias("c_custkey"),
         F.col("`orders.o_orderkey`").alias("o_orderkey"),
-        F.col("`__in__:orders`").alias("has_order")).cache()
+        F.col("`__in__:orders`").alias("has_order"))
 
     cust = tables["customer"]
     orders = tables["orders"]
     n = samp.count()
-    for h in handles:  # sample cached above; release the root-draw persist
-        h.unpersist()
     n_ids = samp.select("sample_id").distinct().count()
     bad_ids = samp.join(F.broadcast(cust.select("c_custkey")),
                         "c_custkey", "left_anti").count()
@@ -4827,7 +4823,7 @@ def q_join_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                .collect()}
     seg_dev = max(abs(exp_seg.get(s, 0.0) - got_seg.get(s, 0.0))
                   for s in set(exp_seg) | set(got_seg))
-    samp.unpersist()
+    drawn.unpersist()
     row = (int(n), int(n_ids), bad_ids == 0, bad_pairs == 0,
            abs(got_rate - exp_rate) <= 0.05, seg_dev <= 0.05)
     return local_df(spark,

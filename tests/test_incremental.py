@@ -88,6 +88,19 @@ def test_append_refresh_rejects_weighted_tree(spark, tables):
         append_refresh_tree_sample(ts, tables, tables["orders"].limit(5))
 
 
+def test_append_refresh_empty_delta_releases_its_persist(spark, tables):
+    """An empty delta returns the input sample unchanged and leaves no
+    persist behind on the caller's delta."""
+    sg = build_tpch_schema()
+    tree = cin_tree(sg, "orders")   # orders-rooted draw is fact-rooted
+    ts = prepare_tree_sample(tree, tables, "orders",
+                             n_min=500, n_max=500, seed=3)
+    delta = tables["orders"].limit(0)
+    assert append_refresh_tree_sample(ts, tables, delta) is ts
+    assert not delta.is_cached
+    ts.sample.unpersist()
+
+
 def test_fine_tune_updates_scale_and_stays_accurate(spark, tables, duck):
     from scardina_spark.model import TrainConfig
     from scardina_spark.model.bridge import (

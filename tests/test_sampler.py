@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from scardina_spark.catalog import build_tpch_schema
 from scardina_spark.operators.sampler import (
-    SAMPLE_ID, join_sample, weighted_sample_with_replacement)
-from scardina_spark.operators.weights import compute_weights
+    SAMPLE_ID, _interval_draw, _uniform_draw, join_sample)
+from scardina_spark.operators.weights import WEIGHT, compute_weights
 
 
 def test_weighted_sample_exact_n_and_proportions(spark):
@@ -20,7 +20,8 @@ def test_weighted_sample_exact_n_and_proportions(spark):
     df = spark.createDataFrame(
         [(i, float(i)) for i in range(1, 5)], ["k", "w"])
     n = 20_000
-    s = weighted_sample_with_replacement(df, "w", ["k"], n, seed=7)
+    _, draw, _ = _interval_draw(df, "w", ["k"], seed=7)
+    s = draw(n)
     counts = {r["k"]: r["c"] for r in
               s.groupBy("k").agg(F.count("*").alias("c")).collect()}
     assert sum(counts.values()) == n
@@ -33,18 +34,19 @@ def test_weighted_sample_exact_n_and_proportions(spark):
 
 def test_sample_ids_unique(spark):
     df = spark.createDataFrame([(i, 1.0) for i in range(100)], ["k", "w"])
-    s = weighted_sample_with_replacement(df, "w", ["k"], 5000, seed=3)
+    _, draw, _ = _interval_draw(df, "w", ["k"], seed=3)
+    s = draw(5000)
     assert s.select(SAMPLE_ID).distinct().count() == 5000
     assert s.count() == 5000
 
 
 def test_uniform_fast_path_exact_n_and_uniformity(spark):
-    """uniform=True must draw exactly n ids with a uniform marginal and
-    skip weight normalization (weights untouched)."""
+    """The uniform draw must draw exactly n ids with a uniform marginal
+    and skip weight normalization (weights untouched)."""
     df = spark.createDataFrame([(i, 1.0) for i in range(200)], ["k", "w"])
     n = 40_000
-    s = weighted_sample_with_replacement(df, "w", ["k"], n, seed=9,
-                                         uniform=True)
+    _, draw, _ = _uniform_draw(df, ["k"], seed=9)
+    s = draw(n)
     assert s.count() == n
     assert s.select(SAMPLE_ID).distinct().count() == n
     counts = {r["k"]: r["c"] for r in
@@ -62,9 +64,8 @@ def test_join_sample_marginal_matches_full_join(spark, tables, duck):
     sg = build_tpch_schema()
     subs = sg.cin_subschemas()
     oc = [ss for ss in subs.values() if ss.center == "orders"][0]
-    w = compute_weights(oc, tables, "customer")
     n = 20_000
-    samp = join_sample(oc, w, "customer", n, seed=11)
+    samp, _, _ = join_sample(oc, tables, "customer", n, n, seed=11)
     assert samp.count() == n
     # all customers exist; orders may be missing for childless customers
     got = {r["p"]: r["c"] for r in samp.groupBy(
@@ -94,8 +95,7 @@ def test_join_sample_pk_side_exact(spark, tables):
     sg = build_tpch_schema()
     subs = sg.cin_subschemas()
     li = [ss for ss in subs.values() if ss.center == "lineitem"][0]
-    w = compute_weights(li, tables, "lineitem")
-    samp = join_sample(li, w, "lineitem", 2000, seed=5)
+    samp, _, _ = join_sample(li, tables, "lineitem", 2000, 2000, seed=5)
     assert samp.count() == 2000
     bad = samp.where(
         F.col("`lineitem.l_orderkey`") != F.col("`orders.o_orderkey`")).count()
@@ -138,9 +138,8 @@ def test_join_sample_marginal_depth2_weighted_root(spark, tables, duck):
     tree = Subschema(name="nation_chain", center="nation",
                      rels=(rels[("nation", "customer")],
                            rels[("customer", "orders")]))
-    w = compute_weights(tree, tables, "nation")
     n = 20_000
-    samp = join_sample(tree, w, "nation", n, seed=13)
+    samp, _, _ = join_sample(tree, tables, "nation", n, n, seed=13)
     assert samp.count() == n
 
     got = {r["p"]: r["c"] for r in samp.groupBy(
@@ -183,12 +182,12 @@ def test_draw_invariant_under_layout_changes(spark, tmp_path):
     # weighted: arbitrary relayout (8 files vs 5 files)
     df.repartition(8).write.parquet(str(tmp_path / "a"))
     df.repartition(5).write.parquet(str(tmp_path / "b"))
-    fa = fingerprint(weighted_sample_with_replacement(
+    fa = fingerprint(_interval_draw(
         spark.read.parquet(str(tmp_path / "a")), "w", ["k", "w"],
-        2000, seed=11))
-    fb = fingerprint(weighted_sample_with_replacement(
+        seed=11)[1](2000))
+    fb = fingerprint(_interval_draw(
         spark.read.parquet(str(tmp_path / "b")), "w", ["k", "w"],
-        2000, seed=11))
+        seed=11)[1](2000))
     assert fa == fb, (fa, fb)
 
     # uniform: same partition sets, flipped enumeration order
@@ -200,10 +199,8 @@ def test_draw_invariant_under_layout_changes(spark, tmp_path):
                              str(tmp_path / "p_hi"))
     rev = spark.read.parquet(str(tmp_path / "p_hi"),
                              str(tmp_path / "p_lo"))
-    ff = fingerprint(weighted_sample_with_replacement(
-        fwd, "w", ["k", "w"], 2000, seed=11, uniform=True))
-    fr = fingerprint(weighted_sample_with_replacement(
-        rev, "w", ["k", "w"], 2000, seed=11, uniform=True))
+    ff = fingerprint(_uniform_draw(fwd, ["k", "w"], seed=11)[1](2000))
+    fr = fingerprint(_uniform_draw(rev, ["k", "w"], seed=11)[1](2000))
     assert ff == fr, (ff, fr)
 
 
@@ -213,36 +210,31 @@ def test_weighted_pick_chain_plan_stays_linear(spark, tables):
     weighted edge (4 weighted edges = 482 Exchange nodes on the IMDB
     prep).  The per-edge localCheckpoint keeps the final plan linear:
     a handful of Exchanges, with checkpoint scans as leaves."""
-    import contextlib
-    import io
-
     from scardina_spark.estimators.sample import (
         attach_tree_adj_fanouts, spanning_tree)
-    from scardina_spark.operators.weights import compute_weights
     from scardina_spark.catalog import build_tpch_schema
 
     sg = build_tpch_schema()
     tree = spanning_tree(sg, "nation")   # >= 3 chained weighted edges
     adj = attach_tree_adj_fanouts(tree, tables)
-    w = compute_weights(tree, adj, "nation")
-    handles: list = []
-    samp = join_sample(tree, w, "nation", 500, seed=42,
-                       cache_out=handles)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        samp.explain("formatted")
-    plan = buf.getvalue()
-    n_ex = plan.count("Exchange")
+    samp, _, _ = join_sample(tree, adj, "nation", 500, 500, seed=42)
+    # the sample comes back cached: its pick chain is the cached
+    # relation's physical plan, printed one line per node (the formatted
+    # explain this pin used to read printed every node twice, so its
+    # bound of 32 is 16 here)
+    plan = samp._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" in plan
+    chain = plan.split("== Initial Plan ==")[1]
+    n_ex = chain.count("Exchange")
     # linear budget: the two-pass argmax (max(z) + equality re-join +
     # draw-bounded tie-break) costs one Exchange + one BroadcastExchange
     # more per weighted edge than the one-pass max_by did — still O(1)
     # per edge; the exponential re-growth this pin guards against was
     # 482 Exchanges on 4 edges
-    assert n_ex <= 32, f"weighted pick chain re-grew: {n_ex} Exchanges"
-    assert "Scan ExistingRDD" in plan  # the checkpoint leaf
+    assert n_ex <= 16, f"weighted pick chain re-grew: {n_ex} Exchanges"
+    assert "Scan ExistingRDD" in chain  # the checkpoint leaf
     assert samp.count() == 500
-    for h in handles:
-        h.unpersist()
+    samp.unpersist()
 
 
 def test_fused_interval_draw_matches_two_pass_reference(spark):
@@ -261,8 +253,8 @@ def test_fused_interval_draw_matches_two_pass_reference(spark):
     df = spark.createDataFrame(rows, "k: long, w: double")
     n, seed = 1500, 23
 
-    fused = weighted_sample_with_replacement(df, "w", ["k", "w"], n,
-                                             seed=seed)
+    _, draw, _ = _interval_draw(df, "w", ["k", "w"], seed=seed)
+    fused = draw(n)
     got = sorted((r["k"], r[SAMPLE_ID]) for r in fused.collect())
 
     # reference: global exclusive cumsum -> driver-side searchsorted
@@ -282,49 +274,56 @@ def test_fused_interval_draw_matches_two_pass_reference(spark):
     assert got == want
 
 
-def test_n_bounds_resolves_join_size_like_separate_aggregate(spark):
-    """r12 pin: join_sample's (n_min, n_max) mode sizes the draw from
-    the weight total the draw computes anyway; join_size and n must
-    equal the values a separate sum(weight) aggregate produces, and the
-    sample must equal the explicit-n draw bit for bit."""
-    rows = [(i, float(1 + i % 4)) for i in range(3000)]
-    df = spark.createDataFrame(rows, "k: long, w: double")
-    want_join_size = int(df.agg(F.sum("w")).first()[0])
+def test_n_bounds_resolves_join_size_like_separate_aggregate(spark, tables):
+    """join_sample sizes the sample from the join size its root draw
+    computes anyway: the interval draw's weight total must equal a
+    separate sum(weight) aggregate, the uniform draw's row count a
+    separate count(), ``n`` must be the clamp, and the sample must equal
+    the draw at an exact n_min = n_max = n, row for row."""
+    from scardina_spark.estimators.sample import (
+        attach_tree_adj_fanouts, cin_tree)
 
-    meta: list = []
-    bounded = weighted_sample_with_replacement(
-        df, "w", ["k", "w"], n_bounds=(100, 2_000), meta_out=meta,
-        seed=5)
-    join_size, n = meta[0]
-    assert join_size == want_join_size
-    assert n == min(2_000, max(100, want_join_size))
-    explicit = weighted_sample_with_replacement(df, "w", ["k", "w"], n,
-                                                seed=5)
-    key = lambda r: (r["k"], r["w"], r[SAMPLE_ID])  # noqa: E731
-    assert sorted(map(key, bounded.collect())) == \
-        sorted(map(key, explicit.collect()))
+    sg = build_tpch_schema()
+    tree = cin_tree(sg, "orders")
+    adj = attach_tree_adj_fanouts(tree, tables)
+    cases = [   # (root, join size by a separate aggregate)
+        ("customer", int(compute_weights(tree, adj, "customer")["customer"]
+                         .agg(F.sum(WEIGHT)).first()[0])),   # interval
+        ("orders", tables["orders"].count()),                # uniform
+    ]
+    key = lambda r: tuple(r)  # noqa: E731
+    for root, want_join_size in cases:
+        bounded, join_size, n = join_sample(tree, adj, root, 100, 2_000,
+                                            seed=5)
+        assert join_size == want_join_size, root
+        assert n == min(2_000, max(100, want_join_size)), root
+        explicit, _, n_exact = join_sample(tree, adj, root, n, n, seed=5)
+        assert n_exact == n
+        assert sorted(map(key, bounded.collect())) == \
+            sorted(map(key, explicit.collect())), root
+        bounded.unpersist()
+        explicit.unpersist()
 
 
 def test_weighted_pick_chain_releases_superseded_handles(spark, tables):
-    """r12 pin: each weighted edge's localCheckpoint supersedes every
-    earlier cache_out handle (the root draw's persist and prior edges'
-    checkpoints), and join_sample releases them EAGERLY — at most the
-    newest handle survives for the caller's end-of-prep release."""
+    """Each weighted edge's localCheckpoint supersedes the root draw's
+    persist and the prior edges' checkpoints; join_sample frees them
+    eagerly and frees the last one once the sample is cached, so only
+    the sample's own cache survives the call."""
     from scardina_spark.catalog import build_tpch_schema
     from scardina_spark.estimators.sample import (
         attach_tree_adj_fanouts, spanning_tree)
-    from scardina_spark.operators.weights import compute_weights
+
+    def stored_ids():
+        return {r.id() for r
+                in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
     sg = build_tpch_schema()
     tree = spanning_tree(sg, "nation")   # >= 3 chained weighted edges
     adj = attach_tree_adj_fanouts(tree, tables)
-    w = compute_weights(tree, adj, "nation")
-    handles: list = []
-    samp = join_sample(tree, w, "nation", 500, seed=42,
-                       cache_out=handles)
-    # several weighted edges ran; without eager release there would be
-    # one handle per weighted edge plus the draw's persist
-    assert len(handles) == 1
+    base = stored_ids()
+    samp, _, _ = join_sample(tree, adj, "nation", 500, 500, seed=42)
+    assert len(stored_ids() - base) == 1
     assert samp.count() == 500
-    for h in handles:
-        h.unpersist()
+    samp.unpersist(blocking=True)
+    assert stored_ids() - base == set()

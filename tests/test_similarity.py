@@ -864,13 +864,13 @@ def test_pq_reconstruction_error_matches_numpy(spark, tables):
 
 # -- r11 optimization pins ---------------------------------------------------
 
-def _assert_pq_train_fused_matches_per_subspace(tables, cases):
+def test_pq_train_fused_matches_per_subspace(tables):
     """The fused (one-job-per-Lloyd-iteration) pq_train must be
     bit-identical to the reference per-subspace ivf_train loop it
     replaced (same init rows, same assignment, same elementwise avg)."""
     from pyspark.sql import functions as F
     emb = tables["embeddings"]
-    for m, k, iters in cases:
+    for m, k, iters in ((4, 8, 2), (8, 16, 1), (2, 4, 1)):
         fused = S.pq_train(emb, m=m, k_codes=k, iters=iters)
         d = len(emb.select("embedding").first()[0])
         ds = d // m
@@ -882,15 +882,6 @@ def _assert_pq_train_fused_matches_per_subspace(tables, cases):
                 .alias("embedding"))
             ref.append(S.ivf_train(sliced, k=k, iters=iters))
         assert fused == ref
-
-
-def test_pq_train_fused_matches_per_subspace(tables):
-    _assert_pq_train_fused_matches_per_subspace(
-        tables, ((4, 8, 2), (8, 16, 1)))
-
-
-def test_pq_train_fused_matches_per_subspace_fast(tables):
-    _assert_pq_train_fused_matches_per_subspace(tables, ((2, 4, 1),))
 
 
 def test_topk_cosine_lsh_many_equals_sequential(tables):

@@ -76,20 +76,3 @@ def test_bucketed_join_has_no_shuffle(spark, tables, tmp_path):
     assert "Exchange" not in plan
     # and the result is right
     assert joined.count() == tables["lineitem"].count()
-
-
-def test_salted_fk_counts_and_edge_fanout_equal_unsalted(spark, tables):
-    from pyspark.sql import functions as F
-    from scardina_spark.operators.fanout import edge_fanout, fk_counts
-
-    li = tables["lineitem"]
-    a = fk_counts(li, "l_orderkey").orderBy("l_orderkey").collect()
-    b = fk_counts(li, "l_orderkey", salted=True).orderBy("l_orderkey").collect()
-    assert [(r["l_orderkey"], r["count"]) for r in a] == \
-        [(r["l_orderkey"], r["count"]) for r in b]
-
-    w = li.withColumn("__weight__", F.lit(2.0))
-    x = edge_fanout(w, "l_partkey").orderBy("l_partkey").collect()
-    y = edge_fanout(w, "l_partkey", salted=True).orderBy("l_partkey").collect()
-    assert [(r["l_partkey"], r["__fsum__"]) for r in x] == \
-        [(r["l_partkey"], r["__fsum__"]) for r in y]
