@@ -646,6 +646,7 @@ def main() -> None:
     # CIN: BOTH shipments parallel-edge subschemas (cartesian expansion)
     # + the chain partners; multi-fact queries stitch across models
     from scardina_spark.estimators.sample import cin_tree as _cin_tree
+    from scardina_spark.model.bridge import base_domains
 
     def build_jm_cin() -> NarCinEstimator:
         cfg = _TC(epochs=8, d_word=16, d_ff=64, batch_size=1024, seed=42)
@@ -654,12 +655,15 @@ def main() -> None:
         items = ([("shipments", ss, JM_CIN_SH_COLUMNS) for ss in subs]
                  + [(c, _cin_tree(jm_sg, c), CIN_MODEL_COLUMNS[c])
                     for c in ["lineitem", "orders", "supplier", "nation"]])
+        doms = base_domains(jm_tables, sorted(
+            {c for _, _, cols in items for c in cols}))
         cin = NarCinEstimator()
         for center, tree, cols in items:
             ts_ = prepare_tree_sample(tree, jm_tables, center,
                                       n_max=50_000, seed=42)
             cin.add(train_join_estimator(ts_, cols, cfg, sample_size=500,
-                                         max_rows=32_000, fact_threshold=8))
+                                         max_rows=32_000, fact_threshold=8,
+                                         dictionaries=doms))
         return cin
 
     jm_cin = timed("jm_cin_train", build_jm_cin)

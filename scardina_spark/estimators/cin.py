@@ -8,18 +8,15 @@ trains its own density model, and a query spanning several subschemas
 multiplies per-model conditional selectivities.  Like the reference, the
 conditioning *inherits sampled values* of shared columns between models
 (estimators.py:1309-1411): the root model's progressive sampler draws
-per-row values for its fragment, each subsequent model fixes the shared
-columns to those values (unmasked inputs, no probability contribution),
+per-row codes for its fragment, each subsequent model fixes the shared
+columns to those codes (unmasked inputs, no probability contribution),
 samples only its NEW tables' predicates/markers, and up-scales by the
 sampled fanout of the shared→new crossing edges (estimators.py:
-1413-1423).  That inherited chain is the one chained estimate; the
-expectation-level ratio chain
-
-    P_k(frag_k) / P_k(frag_k ∩ shared)
-
-(the chain rule StitchedEstimator evaluates over HT aggregates) serves
-only the queries the inherited chain cannot answer.  Checking an
-estimate against the materialized samples is HybridEstimator's job.
+1413-1423).  The models share one dictionary per base column (reference
+datasets.py:385-416; ``model.bridge.base_domains``), so a code means the
+same value in every model and passes between them unchanged; ``add``
+refuses a model whose dictionary for a shared column differs.  Checking
+an estimate against the materialized samples is HybridEstimator's job.
 """
 
 from __future__ import annotations
@@ -28,9 +25,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from ..model.join_bridge import _is_data_col
 from ..plans.parse import ParsedQuery, parse_query
 from .sample import TreeSample, UnsupportedQueryError
-from .stitch import build_chain, chain_estimate, make_fragment
+from .stitch import build_chain, make_fragment
 
 
 @dataclass
@@ -41,6 +39,18 @@ class NarCinEstimator:
     name: str = "nar-cin"
 
     def add(self, model) -> None:
+        """Add one subschema model; ``ValueError`` when it and an earlier
+        model code a shared data column with different dictionaries."""
+        for m in self.models:
+            for c in m.domains.keys() & model.domains.keys():
+                a, b = m.domains[c], model.domains[c]
+                if _is_data_col(c) and a is not b and (
+                        a.values is None or b.values is None
+                        or not np.array_equal(a.values, b.values)):
+                    raise ValueError(
+                        f"models {m.ts.tree.name} and {model.ts.tree.name} "
+                        f"hold different dictionaries for {c}; build the "
+                        f"chain's models with one base_domains result")
         self.models.append(model)
 
     @property
@@ -65,14 +75,7 @@ class NarCinEstimator:
                 return m.estimate(pq)
             except UnsupportedQueryError:
                 continue
-        try:
-            return self._estimate_inherited(pq)
-        except (UnsupportedQueryError, ValueError):
-            # a shared column whose dictionary values stay off the
-            # driver (DistributedDomain) cannot be inherited by value
-            return chain_estimate(
-                self.samples, pq,
-                lambda ts, frag: self._model_for(ts).estimate(frag))
+        return self._estimate_inherited(pq)
 
     def _estimate_inherited(self, pq: ParsedQuery) -> float:
         """Per-row chained estimation with inherited shared-column samples
@@ -141,14 +144,19 @@ def build_cin_estimator(sg, tables, model_columns: dict,
                         seed: int = 42, arch: str = "mlp") -> NarCinEstimator:
     """Prepare + train every CIN subschema model, one at a time.
 
-    ``cfg_for(center)`` returns the TrainConfig for one center.  Each
+    ``cfg_for(center)`` returns the TrainConfig for one center.  The
+    data columns' dictionaries are built once from the base tables
+    (``base_domains``) and shared by every model.  Each
     subschema's sample is prepared, then its model fitted, in
     ``model_columns`` order; each trainer owns its own seeded
     RandomState, so the models (and every estimate) are deterministic.
     """
+    from ..model.bridge import base_domains
     from ..model.join_bridge import train_join_estimator
     from .sample import cin_trees, prepare_tree_sample
 
+    doms = base_domains(tables, sorted(
+        {c for cols in model_columns.values() for c in cols}))
     est = NarCinEstimator()
     # a center with parallel FK edges expands into one subschema per
     # alternative (reference scardina/schema.py:117) — train them ALL so
@@ -161,5 +169,5 @@ def build_cin_estimator(sg, tables, model_columns: dict,
             est.add(train_join_estimator(
                 ts, cin_cols, cfg_for(center), sample_size=sample_size,
                 max_rows=max_rows, fact_threshold=fact_threshold,
-                arch=arch))
+                arch=arch, dictionaries=doms))
     return est

@@ -33,7 +33,7 @@ import networkx as nx
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..operators.fanout import adj_fanout_col, attach_count, fk_counts
-from ..operators.sampler import join_sample
+from ..operators.sampler import SAMPLE_ID, join_sample
 from ..plans.parse import ParsedQuery, parse_query
 from ..plans.predicates import (
     Predicate, accepts_null, normalize_predicates, value_mask)
@@ -219,9 +219,12 @@ class TreeSample:
         vectorized query evaluation — the reference's deployment shape:
         the cluster prepares the sample, the estimator process answers
         queries in microseconds without a cluster round-trip.  The Spark
-        DataFrame stays available for distributed evaluation."""
+        DataFrame stays available for distributed evaluation.  Rows come
+        in ``__sample_id__`` order, whatever order Spark returns them in,
+        so sums over the local sample do not depend on session history."""
         if self.local is None:
-            pdf = self.sample.toPandas()
+            pdf = self.sample.toPandas().sort_values(
+                SAMPLE_ID, kind="stable", ignore_index=True)
             # dictionary-encode string columns: predicate evaluation
             # then runs over the categories and gathers through codes
             # (see _column_mask) — skipped for near-unique columns

@@ -11,12 +11,15 @@ reference's join-sample clamp — crosses to the driver via Arrow.
 from __future__ import annotations
 
 from dataclasses import asdict
+from functools import reduce
+from operator import or_
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
-from ..functions.dictionary import CODE, VALUE, encode_with_dictionary
+from ..functions.dictionary import build_dictionary, encode_with_dictionary
 from ..functions.factorize import factorization_spec, sub_codes
 from .nar import NarMLP, TrainConfig
 from .progressive import (
@@ -32,37 +35,61 @@ from .transformer import NarTransformer, TrmConfig
 DICT_DRIVER_CAP = 1_000_000
 
 
-def collect_domain(dictionary: DataFrame, name: str,
-                   driver_cap: int = DICT_DRIVER_CAP) -> ColumnDomain:
-    """Driver-side domain for dictionaries up to ``driver_cap`` values;
-    larger dictionaries return a :class:`DistributedDomain` that never
-    localizes its values.
-
-    One Spark job in the common (small-dictionary) case: the
-    ``limit(cap + 1)`` probe both detects oversize AND yields the rows
-    when small — a separate ``count()`` per injected dictionary column
-    would add a cluster round-trip to every training prep."""
-    rows = dictionary.orderBy(CODE).limit(driver_cap + 1).collect()
-    if len(rows) > driver_cap:
-        return DistributedDomain(name, None, dictionary,
-                                 dictionary.count())
-    return ColumnDomain(name, np.array([r[VALUE] for r in rows]))
+def base_domains(tables: dict[str, DataFrame], columns: list[str],
+                 driver_cap: int = DICT_DRIVER_CAP
+                 ) -> dict[str, ColumnDomain]:
+    """One dictionary per base column ``table.col``, built from the whole
+    table, for every model of a CIN chain to share (reference
+    scardina/datasets.py:385-416).  One Arrow-collected Spark action per
+    table: each column's distinct values in its own slot, with the
+    column's distinct count.  A column above ``driver_cap`` ships only
+    its count and becomes a :class:`DistributedDomain`.  Values sort as
+    a sample-built dictionary's do."""
+    by_table: dict[str, list[str]] = {}
+    for c in columns:
+        by_table.setdefault(c.split(".", 1)[0], []).append(c)
+    out: dict[str, ColumnDomain] = {}
+    for t, cols in by_table.items():
+        df = tables[t]
+        names = [c.split(".", 1)[1] for c in cols]
+        types = [df.schema[n].dataType for n in names]
+        slots = [f"__v{i}__" for i in range(len(cols))]
+        # each input row yields one row per column, the value in its slot
+        rows = F.explode(F.array(*[F.struct(F.lit(i).alias("__k__"), *[
+            (F.col(f"`{n}`") if j == i else F.lit(None).cast(tp))
+            .alias(slots[j]) for j, (n, tp) in enumerate(zip(names, types))])
+            for i in range(len(cols))]))
+        long = (df.select(rows.alias("__r__")).select("__r__.*")
+                .where(reduce(or_, [F.col(v).isNotNull() for v in slots]))
+                .distinct())
+        n = long.groupBy("__k__").agg(F.count("*").alias("__n__"))
+        big = F.col("__n__") > driver_cap
+        pdf = (long.join(F.broadcast(n.where(~big)), "__k__")
+               .unionByName(n.where(big), allowMissingColumns=True)
+               .toPandas())
+        for i, (c, name, tp) in enumerate(zip(cols, names, types)):
+            part = pdf[pdf["__k__"] == i]
+            if part["__n__"].max() > driver_cap:
+                out[c] = DistributedDomain(c, None, build_dictionary(df, name),
+                                           int(part["__n__"].max()))
+                continue
+            s = part[slots[i]]
+            vals = np.unique(s[~pd.isna(s)].to_numpy())
+            if isinstance(tp, IntegralType):
+                vals = vals.astype(np.int64)  # NULL-padded slots are float
+            out[c] = ColumnDomain(c, vals)
+    return out
 
 
 def encode_values(dom: ColumnDomain, values: np.ndarray) -> np.ndarray:
     """Dictionary codes for ``values`` against ``dom``: NULL → 1, value →
     sorted-position + 2, out-of-dictionary → 1 (the same OOD convention
-    as functions/dictionary.encode_with_dictionary).  An object array
-    meeting a non-string dictionary (values decoded by another model,
-    where e.g. datetime64[ns] decodes to int nanoseconds) is cast to the
-    dictionary's dtype first."""
+    as functions/dictionary.encode_with_dictionary)."""
     na = pd.isna(values)
     code = np.full(len(values), 1, dtype=np.int64)
     vals = dom.values
     if len(vals) and not na.all():
         nn = values[~na]
-        if nn.dtype == object and vals.dtype.kind not in "OUS":
-            nn = nn.astype(vals.dtype)
         idx = np.minimum(np.searchsorted(vals, nn), len(vals) - 1)
         code[~na] = np.where(vals[idx] == nn, idx + 2, 1)
     return code
@@ -70,7 +97,7 @@ def encode_values(dom: ColumnDomain, values: np.ndarray) -> np.ndarray:
 
 def training_matrix(df: DataFrame, columns: list[str],
                     max_rows: int = 200_000, seed: int = 42,
-                    dictionaries: dict[str, DataFrame] | None = None,
+                    dictionaries: dict[str, ColumnDomain] | None = None,
                     cont_log2: set[str] | None = None,
                     id_cols: list[str] | None = None,
                     ) -> tuple[np.ndarray, dict[str, ColumnDomain]]:
@@ -89,29 +116,23 @@ def training_matrix(df: DataFrame, columns: list[str],
     ``sample()``, whose selection depends on within-partition row
     order.
 
-    ``dictionaries`` injects pre-built per-column dictionaries — the
-    cross-subschema consistency mechanism (reference analog: the shared
-    ``distinct_vals_dict`` threaded through caches,
-    scardina/datasets.py:385-416): every model over any sub-join sees the
-    same code for the same base value.  Columns without an entry build
-    their dictionary from the (capped) training sample itself.
+    ``dictionaries`` injects pre-built domains per column (``base_domains``
+    output for the models of a CIN chain, so every model codes a base
+    value the same way).  Columns without an entry build their
+    dictionary from the (capped) training sample itself.
 
     One Spark action moves the data (Arrow ``toPandas`` of the capped
     sample); dictionary building and encoding are then driver-side numpy
     over that sample — domain-scale work that needs no cluster round-trips
     (the previous per-column ``distinct``/``join`` plan cost ~3 jobs per
     column, which dominated training prep).  Columns whose injected
-    dictionary exceeds ``DICT_DRIVER_CAP`` values are instead encoded
-    DISTRIBUTED (dictionary join before the collect) and their domain
-    stays a :class:`DistributedDomain` — the driver never holds the
-    values of a 100M-distinct column."""
+    domain is a :class:`DistributedDomain` are instead encoded
+    DISTRIBUTED (dictionary join before the collect) — the driver never
+    holds the values of a 100M-distinct column."""
     cont = cont_log2 or set()
-    # resolve injected domains first: distributed ones encode Spark-side
-    injected_doms: dict[str, ColumnDomain] = {}
-    for c in columns:
-        injected = (dictionaries or {}).get(c)
-        if c not in cont and injected is not None:
-            injected_doms[c] = collect_domain(injected, c)
+    dictionaries = dictionaries or {}
+    injected_doms = {c: dictionaries[c] for c in columns
+                     if c not in cont and c in dictionaries}
     pdf, _ = _select_rows(df, columns, max_rows, seed, injected_doms,
                           id_cols)
     return _encode_rows(pdf, columns, injected_doms, cont)
@@ -322,7 +343,7 @@ def train_single_table(df: DataFrame, columns: list[str],
                        max_rows: int = 200_000,
                        fact_threshold: int | None = None,
                        arch: str = "mlp",
-                       dictionaries: dict[str, DataFrame] | None = None,
+                       dictionaries: dict[str, ColumnDomain] | None = None,
                        id_cols: list[str] | None = None,
                        ) -> NarEstimator:
     """End-to-end: encode with Spark, train the NAR model, return the

@@ -34,32 +34,7 @@ from ..plans.predicates import Predicate, normalize_predicates
 from .bridge import (
     ARCHS, encode_values, make_model, model_inputs, training_matrix)
 from .nar import TrainConfig
-from .progressive import NarEstimator
-
-
-def _require_local_values(dom, what: str) -> np.ndarray:
-    """Guard for paths that need the collected value array: a
-    DistributedDomain (huge dictionary, values never localized) cannot
-    serve them — fail with a clear message instead of an AttributeError
-    deep in numpy."""
-    if dom.values is None:
-        raise ValueError(
-            f"{what} needs the collected dictionary values of "
-            f"'{dom.name}', but its domain is distributed "
-            f"(> DICT_DRIVER_CAP distinct values); use a driver-scale "
-            f"dictionary for this column or skip the operation")
-    return dom.values
-
-
-def _decode_codes(dom, codes: np.ndarray) -> np.ndarray:
-    """Dictionary codes → values (object array; MASK/NULL/OOD → None)."""
-    _require_local_values(dom, "cross-model value decoding")
-    out = np.empty(len(codes), dtype=object)
-    out[:] = None
-    ok = (codes >= 2) & (codes < len(dom.values) + 2)
-    if ok.any():
-        out[ok] = dom.values[codes[ok] - 2]
-    return out
+from .progressive import NULL_SLOT, NarEstimator
 
 
 def _col_table(col: str) -> str | None:
@@ -139,9 +114,10 @@ class NarJoinEstimator(NarEstimator):
         1380-1393).  With ``skip_high_card_cols`` (default, the
         reference's eval heuristic, estimators.py:206-209), near-key
         columns — dictionary larger than half the sample, the sample
-        playing the reference's table-size role since dictionaries are
-        sample-built here — are skipped: conditioning on an almost-unique
-        inherited value adds variance without tightening the chain."""
+        playing the reference's table-size role — are skipped:
+        conditioning on an almost-unique inherited value adds variance
+        without tightening the chain.  Chained models' dictionaries are
+        base-built (``base_domains``); the heuristic is unchanged."""
         cap = (max(64, self.ts.n_sample // 2)
                if self.skip_high_card_cols else None)
         return sorted(
@@ -178,14 +154,12 @@ class NarJoinEstimator(NarEstimator):
                     rs: np.random.RandomState
                     ) -> tuple[np.ndarray, dict[str, np.ndarray]]:
         """Root-of-chain pass: per-row probabilities for the fragment plus
-        sampled *values* (decoded) of its columns for inheritance."""
+        the sampled codes of its columns for inheritance."""
         q_tables = self._validate_fragment(pq)
         by_col = self._fragment_cols(pq, q_tables)
         div_cols = self._fanout_cols(_divisor_cols(self.ts, q_tables))
         extra = self._extra_cols(ahead_tables & q_tables, set(by_col))
-        prob, sampled = self._progressive(by_col, {}, div_cols, [], extra,
-                                          S, rs)
-        return prob, self._decode_sampled(sampled)
+        return self._progressive(by_col, {}, div_cols, [], extra, S, rs)
 
     def conditional_rows(self, pq: ParsedQuery, frag_tables: set[str],
                          shared: set[str], values: dict[str, np.ndarray],
@@ -194,32 +168,36 @@ class NarJoinEstimator(NarEstimator):
                          ) -> tuple[np.ndarray, dict[str, np.ndarray]]:
         """Chained pass (reference inherited-sample stitching, scardina/
         estimators.py:1309-1411): condition on the shared tables' inherited
-        values, sample only the NEW tables' predicates and markers, and
+        codes, sample only the NEW tables' predicates and markers, and
         up-scale by the sampled fanouts of the edges crossing shared→new.
-        Returns per-row factors and this model's newly sampled values."""
+        Returns per-row factors and this model's newly sampled codes.
+
+        The chain's models share one dictionary per base data column, so
+        an inherited data code is used as it is; a code past this model's
+        dictionary (a vanished row's fallback draw) is NULL.  Markers are
+        sample-built per model: a shared table's marker was sampled True,
+        so it takes this model's code for True."""
         self._validate_fragment(pq)
         new = frag_tables - shared
         by_col = self._fragment_cols(
             _restrict_filters(pq, new), new)
         inherited: dict[str, np.ndarray] = {}
-        for c, vals in values.items():
-            if _col_table(c) in shared and c in self.domains:
-                _require_local_values(self.domains[c],
-                                      "cross-model value encoding")
-                inherited[c] = encode_values(self.domains[c], vals)
+        for c, codes in values.items():
+            if _col_table(c) not in shared or c not in self.domains:
+                continue
+            dom = self.domains[c]
+            if _is_data_col(c):
+                ok = (codes >= 2) & (codes < dom.dom_size)
+                inherited[c] = np.where(ok, codes, NULL_SLOT)
+            else:
+                inherited[c] = np.full(
+                    len(codes), encode_values(dom, np.array([True]))[0])
         div_cols = self._fanout_cols(_divisor_cols(self.ts, frag_tables))
         mult_cols = self._fanout_cols(
             _crossing_fanout_cols(self.ts, shared, new))
         extra = self._extra_cols(ahead_tables & new, set(by_col))
-        prob, sampled = self._progressive(by_col, inherited, div_cols,
-                                          mult_cols, extra, S, rs)
-        return prob, self._decode_sampled(sampled)
-
-    def _decode_sampled(self, sampled: dict[str, np.ndarray]
-                        ) -> dict[str, np.ndarray]:
-        return {c: _decode_codes(self.domains[c], drawn)
-                for c, drawn in sampled.items() if _is_data_col(c)
-                or c.startswith("__in__:")}
+        return self._progressive(by_col, inherited, div_cols, mult_cols,
+                                 extra, S, rs)
 
 
 def _restrict_filters(pq: ParsedQuery, tables: set[str]) -> ParsedQuery:
@@ -284,6 +262,9 @@ def train_join_estimator(ts: TreeSample, data_columns: list[str],
     scardina/common.py:137-196): near-continuous columns (prices,
     timestamps) would otherwise each add a domain-wide softmax head that
     dominates the training cost.
+
+    ``dictionaries`` (``bridge.base_domains`` output) fixes data columns'
+    dictionaries; markers and fanouts stay sample-built.
 
     With ``defer_fit``, the prepared job comes back unfitted as a
     :class:`DeferredFit`; its ``finish()`` completes it."""
@@ -371,7 +352,9 @@ def save_join_estimator(est: NarJoinEstimator, path: str) -> None:
     est.model.save(os.path.join(path, "model.npz"))
     doms = {}
     for i, (c, dom) in enumerate(est.domains.items()):
-        vals = _require_local_values(dom, "estimator checkpointing")
+        vals = dom.values
+        if vals is None:
+            raise ValueError(f"cannot checkpoint distributed domain {c}")
         if vals.dtype == object:
             vals = vals.astype(np.str_)  # no pickle in the npz
         doms[f"dom_{i}"] = vals

@@ -14,9 +14,9 @@ each merge touches only the words containing the merged pair.  Total
 Spark-job count per training is O(1) (the word-count localization),
 not O(n_merges); a realistic 32k-merge tokenizer is therefore one
 corpus shuffle plus an in-memory loop, never ~64k sequential cluster
-jobs.  Vocabularies above ``driver_cap`` (mirroring the
-``model/bridge.collect_domain`` cap pattern) fall back to the fully
-distributed per-iteration loop.  Encoding afterwards is a broadcast
+jobs.  Vocabularies above ``driver_cap`` (mirroring
+``model/bridge.DICT_DRIVER_CAP``) fall back to the fully distributed
+per-iteration loop.  Encoding afterwards is a broadcast
 vocabulary join: no per-document merge computation at all.
 
 Determinism: the best pair each iteration is chosen by
@@ -216,9 +216,8 @@ def bpe_learn(df: DataFrame, n_merges: int = 8, col: str = "text",
     vocabulary fits ``driver_cap`` — a single localization job and an
     in-memory merge loop (see :func:`_learn_local`): total Spark jobs
     O(1), independent of ``n_merges``.  The ``limit(cap + 1)`` probe
-    both detects oversize AND yields the rows when small (the
-    ``collect_domain`` pattern); oversize vocabularies run the
-    distributed per-iteration loop instead."""
+    both detects oversize AND yields the rows when small; oversize
+    vocabularies run the distributed per-iteration loop instead."""
     wc = word_counts(df, col)
     probe = wc.limit(driver_cap + 1).toPandas()
     if len(probe) > driver_cap:

@@ -4931,19 +4931,24 @@ def q_nar_cin_qerror(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .estimators.cin import NarCinEstimator
     from .estimators.sample import cin_tree
     from .model import TrainConfig
+    from .model.bridge import base_domains
     from .model.join_bridge import train_join_estimator
     sg = build_tpch_schema()
     tables = load_tables(spark, sf_dir)
     cfg = TrainConfig(epochs=12, d_word=12, d_ff=48, batch_size=512, seed=11)
-    est = NarCinEstimator()
-    for center, cols in {
+    model_cols = {
         "customer": ["customer.c_mktsegment", "customer.c_acctbal",
                      "nation.n_name"],
         "nation": ["nation.n_name", "region.r_name"],
-    }.items():
+    }
+    doms = base_domains(tables, sorted(
+        {c for cols in model_cols.values() for c in cols}))
+    est = NarCinEstimator()
+    for center, cols in model_cols.items():
         tscin = prepare_tree_sample(cin_tree(sg, center), tables, center,
                                     n_min=30_000, seed=11)
-        est.add(train_join_estimator(tscin, cols, cfg, sample_size=800))
+        est.add(train_join_estimator(tscin, cols, cfg, sample_size=800,
+                                     dictionaries=doms))
     exact = ExactEstimator(sg, tables)
     return _qerror_check_df(spark, est.estimate, exact, CIN_BENCH_QUERIES,
                             4.0)

@@ -34,10 +34,6 @@ class Relationship:
     fk_col: str
 
     @property
-    def join_str(self) -> str:
-        return f"{self.pk_table}.{self.pk_col}={self.fk_table}.{self.fk_col}"
-
-    @property
     def name_part(self) -> str:
         # subschema naming mirrors reference: scardina/schema.py:150
         return f"{self.fk_col}={self.pk_table}.{self.pk_col}"
@@ -81,20 +77,9 @@ class SchemaGraph:
     def relationships(self) -> list[Relationship]:
         return [d["rel"] for _, _, d in self.g.edges(data=True)]
 
-    def fk_cols(self, table: str) -> list[str]:
-        """FK columns of ``table`` (one per incoming PK->FK edge)."""
-        return [d["rel"].fk_col for _, _, d in self.g.in_edges(table, data=True)]
-
     def rels_into(self, table: str) -> list[Relationship]:
         """Edges where ``table`` is the FK side."""
         return [d["rel"] for _, _, d in self.g.in_edges(table, data=True)]
-
-    def rels_out_of(self, table: str) -> list[Relationship]:
-        """Edges where ``table`` is the PK side."""
-        return [d["rel"] for _, _, d in self.g.out_edges(table, data=True)]
-
-    def rels_touching(self, table: str) -> list[Relationship]:
-        return self.rels_into(table) + self.rels_out_of(table)
 
     # -- subschema derivation ----------------------------------------------
 
@@ -123,25 +108,6 @@ class SchemaGraph:
                 out[ss.name] = ss
         return out
 
-    def ur_subschema(self) -> "Subschema":
-        """The whole schema as one universal relation
-        (reference: scardina/schema.py:185-204)."""
-        rels = tuple(sorted(self.relationships(), key=lambda r: r.join_str))
-        # center: the table that is never on the PK side of an edge used as
-        # hub; for UR we just pick the largest FK-side table.
-        centers = [t for t in self.table_names if self.rels_into(t)]
-        center = centers[0] if centers else self.table_names[0]
-        return Subschema(f"{self.name}__ur", center, rels)
-
-    def subschema_cover(self, subschemas: dict[str, "Subschema"]) -> dict[str, set[str]]:
-        """table -> set of subschema names containing it (the hypergraph of
-        reference: scardina/schema.py:167-183, without the hypernetx dep)."""
-        cover: dict[str, set[str]] = {t: set() for t in self.table_names}
-        for name, ss in subschemas.items():
-            for t in ss.tables:
-                cover[t].add(name)
-        return cover
-
 
 def center_name_for(center: str, rels: tuple[Relationship, ...] | list[Relationship]) -> str:
     parts = sorted(r.name_part for r in rels)
@@ -167,10 +133,6 @@ class Subschema:
             ts.add(r.pk_table)
             ts.add(r.fk_table)
         return ts
-
-    @property
-    def n_tables(self) -> int:
-        return len(self.tables)
 
     def as_graph(self) -> nx.MultiDiGraph:
         g = nx.MultiDiGraph(name=self.name, center=self.center)

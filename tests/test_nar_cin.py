@@ -7,6 +7,7 @@ from scardina_spark.estimators import ExactEstimator, prepare_tree_sample
 from scardina_spark.estimators.cin import NarCinEstimator
 from scardina_spark.estimators.sample import cin_tree
 from scardina_spark.model import TrainConfig
+from scardina_spark.model.bridge import base_domains
 from scardina_spark.model.join_bridge import train_join_estimator
 
 SUBSCHEMAS = {
@@ -20,16 +21,24 @@ ASIA = ("SELECT COUNT(*) FROM customer c, nation n, region r "
         "WHERE c.c_nationkey = n.n_nationkey "
         "AND n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'")
 
+FRAG_SQL = ("SELECT COUNT(*) FROM lineitem l, orders o, customer c "
+            "WHERE l.l_orderkey = o.o_orderkey "
+            "AND o.o_custkey = c.c_custkey "
+            "AND c.c_mktsegment = 'BUILDING' AND l.l_returnflag = 'R'")
+
 
 @pytest.fixture(scope="module")
 def nar_cin(tables):
     sg = build_tpch_schema()
     est = NarCinEstimator()
     cfg = TrainConfig(epochs=15, d_word=12, d_ff=48, batch_size=512, seed=11)
+    doms = base_domains(tables, sorted(
+        {c for _, cols in SUBSCHEMAS.values() for c in cols}))
     for center, (root, cols) in SUBSCHEMAS.items():
         ts = prepare_tree_sample(cin_tree(sg, center), tables, root,
                                  n_min=30_000, seed=11)
-        est.add(train_join_estimator(ts, cols, cfg, sample_size=800))
+        est.add(train_join_estimator(ts, cols, cfg, sample_size=800,
+                                     dictionaries=doms))
     return est
 
 
@@ -86,18 +95,19 @@ def nar_cin_fact(tables):
         "lineitem": ("lineitem", ["lineitem.l_returnflag",
                                   "orders.o_orderstatus"]),
     }
+    doms = base_domains(tables, sorted(
+        {c for _, cols in specs.values() for c in cols}))
     for center, (root, cols) in specs.items():
         ts = prepare_tree_sample(cin_tree(sg, center), tables, root,
                                  n_min=30_000, seed=7)
-        est.add(train_join_estimator(ts, cols, cfg, sample_size=800))
+        est.add(train_join_estimator(ts, cols, cfg, sample_size=800,
+                                     dictionaries=doms))
     return est
 
 
 def test_inherited_chain_fanout_upscale(nar_cin_fact, exact):
     from scardina_spark.plans.parse import parse_query
-    sql = ("SELECT COUNT(*) FROM lineitem l, orders o, customer c "
-           "WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey "
-           "AND c.c_mktsegment = 'BUILDING' AND l.l_returnflag = 'R'")
+    sql = FRAG_SQL
     pq = parse_query(sql)
     got = nar_cin_fact._estimate_inherited(pq)
     want = exact.estimate(sql)
@@ -143,25 +153,77 @@ def test_hybrid_arbiter_tightens_chain(nar_cin, exact):
     assert hyb.estimate(empty) == 0.0
 
 
-def test_ratio_chain_serves_distributed_shared_column(nar_cin):
-    """A shared column whose dictionary values stay off the driver cannot
-    be inherited by value: the chained query falls back to the
-    expectation-ratio chain over the models instead of raising."""
-    from scardina_spark.estimators.stitch import chain_estimate
+def test_inherited_chain_serves_distributed_shared_column(nar_cin):
+    """A shared column whose dictionary stays distributed (values never
+    on the driver) is inherited by code: the chain gives the same
+    estimate as with the collected dictionary."""
     from scardina_spark.model.progressive import DistributedDomain
     from scardina_spark.plans.parse import parse_query
-    cust = next(m for m in nar_cin.models if m.ts.tree.center == "customer")
-    dom = cust.domains["nation.n_name"]
-    cust.domains["nation.n_name"] = DistributedDomain(
-        dom.name, None, n_values=len(dom.values))
+    dom = nar_cin.models[0].domains["nation.n_name"]
+    want = nar_cin._estimate_inherited(parse_query(ASIA))
+    dist = DistributedDomain(dom.name, None, n_values=len(dom.values))
     try:
-        want = chain_estimate(
-            nar_cin.samples, parse_query(ASIA),
-            lambda ts, frag: nar_cin._model_for(ts).estimate(frag))
+        for m in nar_cin.models:
+            m.domains["nation.n_name"] = dist
         assert nar_cin.estimate(ASIA) == want
         assert want > 0
     finally:
-        cust.domains["nation.n_name"] = dom
+        for m in nar_cin.models:
+            m.domains["nation.n_name"] = dom
+
+
+def test_inherited_codes_keep_their_values(nar_cin_fact, monkeypatch):
+    """Every non-NULL code the root model samples for a shared column
+    reaches the next model as the same value, never as NULL (with
+    per-model dictionaries, values missing from the next model's
+    dictionary became NULL)."""
+    from scardina_spark.model.join_bridge import NarJoinEstimator
+    seen = []
+    orig = NarJoinEstimator.conditional_rows
+
+    def record(self, pq, frag_tables, shared, values, *a):
+        seen.append((self, shared, dict(values)))
+        return orig(self, pq, frag_tables, shared, values, *a)
+
+    monkeypatch.setattr(NarJoinEstimator, "conditional_rows", record)
+    nar_cin_fact.estimate(FRAG_SQL)
+    root = nar_cin_fact.models[0]
+    checked = 0
+    for m, shared, values in seen:
+        for c, codes in values.items():
+            if c.split(".")[0] not in shared or c.startswith("__") \
+                    or c not in m.domains:
+                continue
+            nn = codes[codes >= 2]
+            assert (nn < m.domains[c].dom_size).all(), c
+            assert (m.domains[c].values[nn - 2]
+                    == root.domains[c].values[nn - 2]).all(), c
+            checked += len(nn)
+    assert checked > 0
+
+
+def test_add_refuses_mismatched_shared_dictionaries():
+    """Two models that code a shared data column differently cannot
+    chain; sample-built markers may differ."""
+    import numpy as np
+
+    from scardina_spark.model.progressive import ColumnDomain
+
+    class M:
+        def __init__(self, name, doms):
+            self.ts = type("TS", (), {"tree": type(
+                "T", (), {"name": name})()})()
+            self.domains = {c: ColumnDomain(c, np.array(v))
+                            for c, v in doms.items()}
+
+    est = NarCinEstimator()
+    est.add(M("a", {"nation.n_name": ["A", "B"],
+                    "__in__:nation": [True]}))
+    est.add(M("b", {"nation.n_name": ["A", "B"],
+                    "__in__:nation": [False, True]}))
+    with pytest.raises(ValueError, match="nation.n_name"):
+        est.add(M("c", {"nation.n_name": ["A", "C"]}))
+    assert len(est.models) == 2
 
 
 def test_cin_builder_transformer_arch(spark, tables):

@@ -112,21 +112,20 @@ def test_huge_dictionary_never_collects_values(spark):
     value array (the 100M-distinct `title.title`-at-100x OOM case)."""
     from pyspark.sql import functions as F
 
-    from scardina_spark.functions.dictionary import build_dictionary
     from scardina_spark.model import TrainConfig
-    from scardina_spark.model.bridge import train_single_table
+    from scardina_spark.model.bridge import base_domains, train_single_table
     from scardina_spark.model.progressive import DistributedDomain
 
     n = 5_000_000
     df = (spark.range(n)
           .select(F.col("id").alias("v"),
                   (F.col("id") % 4).cast("string").alias("cat")))
-    dict5m = build_dictionary(df, "v")
+    dom5m = base_domains({"t": df}, ["t.v"])["t.v"]
 
     cfg = TrainConfig(epochs=2, d_word=8, d_ff=16, batch_size=512, seed=3)
     est = train_single_table(df, ["v", "cat"], cfg, sample_size=200,
                              max_rows=2_000, fact_threshold=8,
-                             dictionaries={"v": dict5m})
+                             dictionaries={"v": dom5m})
 
     dom = est.domains["v"]
     assert isinstance(dom, DistributedDomain)
@@ -170,6 +169,28 @@ def test_training_matrix_layout_independent_with_id_cols(tables):
     assert a.shape == (500, 2)
     assert np.array_equal(a, b)
     assert np.array_equal(a, c)
+
+
+def test_base_domains_code_like_sample_built(tables):
+    """Base-built dictionaries give a date, a string, a float and an int
+    column the same codes (and the same value dtypes) as dictionaries
+    built from the collected rows; a date dictionary used to come back
+    as ``datetime`` objects that could not be searched against the
+    sample's ``datetime64`` column."""
+    from scardina_spark.model.bridge import base_domains, training_matrix
+
+    o = tables["orders"]
+    cols = ["o_orderdate", "o_orderstatus", "o_totalprice", "o_custkey"]
+    want, own = training_matrix(o, cols, id_cols=["o_orderkey"])
+    doms = base_domains({"orders": o}, [f"orders.{c}" for c in cols])
+    got, _ = training_matrix(o, cols, id_cols=["o_orderkey"],
+                             dictionaries={c: doms[f"orders.{c}"]
+                                           for c in cols})
+    assert np.array_equal(got, want)
+    for c in cols:
+        base = doms[f"orders.{c}"].values
+        assert base.dtype.kind == own[c].values.dtype.kind, c
+        assert np.array_equal(base, own[c].values), c
 
 
 def test_smaller_emb_dims():

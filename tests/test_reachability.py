@@ -10,9 +10,10 @@ an attribute or an identifier-shaped string in reached code reaches
 every top-level def, class or constant of that name in the library.
 Module-level statements other than defs, assignments and imports run on
 import and count as reached code; so do module-protocol dunders such as
-``__getattr__``.  Imports reach nothing by themselves.  Methods are
-not scanned: a reached class keeps every method it defines, so an
-orphaned method is not caught here.
+``__getattr__``.  Imports reach nothing by themselves.  A method is
+reached when its name is (a call ``x.m()`` reaches every method named
+``m``); dunder methods and the rest of a class body are reached with the
+class.
 
 A library def that only tests call fails here by name: give it an entry
 point or delete it with its tests.  Spark-free.
@@ -99,10 +100,19 @@ def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
 
 
+def _methods(stmt: ast.stmt) -> list[ast.stmt]:
+    """The non-dunder methods a class statement defines."""
+    if not isinstance(stmt, ast.ClassDef):
+        return []
+    return [m for m in stmt.body
+            if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not _is_dunder(m.name)]
+
+
 def _scan() -> tuple[dict[str, list[tuple[str, set[str]]]], set[str]]:
-    """Top-level library defs (name -> (module, names it uses) per
-    definition site) and the names the entry points and import-time
-    module code use."""
+    """Library defs (name -> (site, names it uses) per definition site;
+    a method's site is ``module:Class.method``) and the names the entry
+    points and import-time module code use."""
     defs: dict[str, list[tuple[str, set[str]]]] = {}
     roots: set[str] = set()
     for path in _entry_files():
@@ -115,16 +125,23 @@ def _scan() -> tuple[dict[str, list[tuple[str, set[str]]]], set[str]]:
             names = _targets(stmt)
             if not names:
                 roots |= _refs(stmt)  # runs on import
+            methods = _methods(stmt)
+            own = set().union(*(_refs(n) for n in ast.iter_child_nodes(stmt)
+                                if n not in methods))
             for name in names:
-                defs.setdefault(name, []).append((mod, _refs(stmt)))
+                defs.setdefault(name, []).append((f"{mod}:{name}", own))
                 if _is_dunder(name):
                     roots.add(name)
+            for m in methods:
+                defs.setdefault(m.name, []).append(
+                    (f"{mod}:{stmt.name}.{m.name}", _refs(m)))
     return defs, roots
 
 
 def unreached(extra_roots=()) -> list[str]:
-    """``module:name`` of every top-level library def or constant that
-    neither an entry point nor ``extra_roots`` reaches."""
+    """``module:name`` (``module:Class.method`` for a method) of every
+    library def or constant that neither an entry point nor
+    ``extra_roots`` reaches."""
     defs, frontier = _scan()
     frontier |= set(extra_roots)
     reached: set[str] = set()
@@ -135,8 +152,8 @@ def unreached(extra_roots=()) -> list[str]:
         reached.add(name)
         for _, refs in defs.get(name, ()):
             frontier |= refs - reached
-    return sorted(f"{mod}:{name}" for name, sites in defs.items()
-                  if name not in reached for mod, _ in sites)
+    return sorted(site for name, sites in defs.items()
+                  if name not in reached for site, _ in sites)
 
 
 def test_every_library_def_is_reached_from_an_entry_point():
@@ -150,5 +167,5 @@ def test_every_library_def_is_reached_from_an_entry_point():
 def test_keep_list_names_exist_and_are_unreached():
     """A keep-list entry that an entry point reaches, or that no longer
     exists, is stale."""
-    kept = {s.split(":")[1] for s in unreached()}
+    kept = {s.split(":")[1].split(".")[-1] for s in unreached()}
     assert set(KEEP) <= kept, sorted(set(KEEP) - kept)

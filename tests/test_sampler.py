@@ -327,3 +327,18 @@ def test_weighted_pick_chain_releases_superseded_handles(spark, tables):
     assert samp.count() == 500
     samp.unpersist(blocking=True)
     assert stored_ids() - base == set()
+
+
+def test_localized_sample_rows_follow_sample_id(spark, tables):
+    """Two draws of the same tree in one session localize to identical
+    frames in ``__sample_id__`` order, whatever order Spark returns the
+    rows in (sums over the local sample then do not depend on session
+    history)."""
+    from scardina_spark.estimators.sample import (
+        prepare_tree_sample, spanning_tree)
+    tree = spanning_tree(build_tpch_schema(), "customer")
+    a, b = (prepare_tree_sample(tree, tables, "customer", n_min=2000,
+                                n_max=2000, seed=42).localize().local
+            for _ in range(2))
+    assert a[SAMPLE_ID].is_monotonic_increasing
+    assert a.equals(b)
