@@ -16,7 +16,7 @@ from operator import or_
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegralType
 
 from ..functions.dictionary import build_dictionary, encode_with_dictionary
@@ -35,16 +35,15 @@ from .transformer import NarTransformer, TrmConfig
 DICT_DRIVER_CAP = 1_000_000
 
 
-def base_domains(tables: dict[str, DataFrame], columns: list[str],
-                 driver_cap: int = DICT_DRIVER_CAP
+def base_domains(tables: dict[str, DataFrame], columns: list[str]
                  ) -> dict[str, ColumnDomain]:
     """One dictionary per base column ``table.col``, built from the whole
     table, for every model of a CIN chain to share (reference
     scardina/datasets.py:385-416).  One Arrow-collected Spark action per
-    table: each column's distinct values in its own slot, with the
-    column's distinct count.  A column above ``driver_cap`` ships only
-    its count and becomes a :class:`DistributedDomain`.  Values sort as
-    a sample-built dictionary's do."""
+    table: each column's distinct values in its own slot.  A column above
+    ``DICT_DRIVER_CAP`` values ships none of them and becomes a
+    :class:`DistributedDomain`.  Values sort as a sample-built
+    dictionary's do."""
     by_table: dict[str, list[str]] = {}
     for c in columns:
         by_table.setdefault(c.split(".", 1)[0], []).append(c)
@@ -59,20 +58,23 @@ def base_domains(tables: dict[str, DataFrame], columns: list[str],
             (F.col(f"`{n}`") if j == i else F.lit(None).cast(tp))
             .alias(slots[j]) for j, (n, tp) in enumerate(zip(names, types))])
             for i in range(len(cols))]))
-        long = (df.select(rows.alias("__r__")).select("__r__.*")
-                .where(reduce(or_, [F.col(v).isNotNull() for v in slots]))
-                .distinct())
-        n = long.groupBy("__k__").agg(F.count("*").alias("__n__"))
-        big = F.col("__n__") > driver_cap
-        pdf = (long.join(F.broadcast(n.where(~big)), "__k__")
-               .unionByName(n.where(big), allowMissingColumns=True)
-               .toPandas())
+        # one shuffle: the hash partitioning on __k__ also serves the
+        # distinct and the per-column count
+        k = Window.partitionBy("__k__")
+        pdf = (df.select(rows.alias("__r__")).select("__r__.*")
+               .where(reduce(or_, [F.col(v).isNotNull() for v in slots]))
+               .repartition("__k__").distinct()
+               .withColumn("__n__", F.count(F.lit(1)).over(k))
+               .where(F.col("__n__") <= DICT_DRIVER_CAP).toPandas())
         for i, (c, name, tp) in enumerate(zip(cols, names, types)):
             part = pdf[pdf["__k__"] == i]
-            if part["__n__"].max() > driver_cap:
-                out[c] = DistributedDomain(c, None, build_dictionary(df, name),
-                                           int(part["__n__"].max()))
-                continue
+            if part.empty:
+                # above the cap, or no non-NULL value: count Spark-side
+                d = build_dictionary(df, name)
+                n = d.count()
+                if n:
+                    out[c] = DistributedDomain(c, None, d, n)
+                    continue
             s = part[slots[i]]
             vals = np.unique(s[~pd.isna(s)].to_numpy())
             if isinstance(tp, IntegralType):
