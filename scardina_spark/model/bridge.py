@@ -11,13 +11,10 @@ reference's join-sample clamp — crosses to the driver via Arrow.
 from __future__ import annotations
 
 from dataclasses import asdict
-from functools import reduce
-from operator import or_
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import IntegralType
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dictionary import build_dictionary, encode_with_dictionary
 from ..functions.factorize import factorization_spec, sub_codes
@@ -40,46 +37,22 @@ def base_domains(tables: dict[str, DataFrame], columns: list[str]
     """One dictionary per base column ``table.col``, built from the whole
     table, for every model of a CIN chain to share (reference
     scardina/datasets.py:385-416).  One Arrow-collected Spark action per
-    table: each column's distinct values in its own slot.  A column above
-    ``DICT_DRIVER_CAP`` values ships none of them and becomes a
-    :class:`DistributedDomain`.  Values sort as a sample-built
-    dictionary's do."""
-    by_table: dict[str, list[str]] = {}
-    for c in columns:
-        by_table.setdefault(c.split(".", 1)[0], []).append(c)
+    column: its distinct non-NULL values (deduplicated map-side before
+    the shuffle, so no task sees a whole column), probed at
+    ``DICT_DRIVER_CAP + 1`` rows.  A column past the cap becomes a
+    :class:`DistributedDomain` whose values stay in Spark.  Values sort
+    and keep their dtype as a sample-built dictionary's do."""
     out: dict[str, ColumnDomain] = {}
-    for t, cols in by_table.items():
-        df = tables[t]
-        names = [c.split(".", 1)[1] for c in cols]
-        types = [df.schema[n].dataType for n in names]
-        slots = [f"__v{i}__" for i in range(len(cols))]
-        # each input row yields one row per column, the value in its slot
-        rows = F.explode(F.array(*[F.struct(F.lit(i).alias("__k__"), *[
-            (F.col(f"`{n}`") if j == i else F.lit(None).cast(tp))
-            .alias(slots[j]) for j, (n, tp) in enumerate(zip(names, types))])
-            for i in range(len(cols))]))
-        # one shuffle: the hash partitioning on __k__ also serves the
-        # distinct and the per-column count
-        k = Window.partitionBy("__k__")
-        pdf = (df.select(rows.alias("__r__")).select("__r__.*")
-               .where(reduce(or_, [F.col(v).isNotNull() for v in slots]))
-               .repartition("__k__").distinct()
-               .withColumn("__n__", F.count(F.lit(1)).over(k))
-               .where(F.col("__n__") <= DICT_DRIVER_CAP).toPandas())
-        for i, (c, name, tp) in enumerate(zip(cols, names, types)):
-            part = pdf[pdf["__k__"] == i]
-            if part.empty:
-                # above the cap, or no non-NULL value: count Spark-side
-                d = build_dictionary(df, name)
-                n = d.count()
-                if n:
-                    out[c] = DistributedDomain(c, None, d, n)
-                    continue
-            s = part[slots[i]]
-            vals = np.unique(s[~pd.isna(s)].to_numpy())
-            if isinstance(tp, IntegralType):
-                vals = vals.astype(np.int64)  # NULL-padded slots are float
-            out[c] = ColumnDomain(c, vals)
+    for c in columns:
+        t, name = c.split(".", 1)
+        v = F.col(f"`{name}`")
+        s = (tables[t].select(v).where(v.isNotNull()).distinct()
+             .limit(DICT_DRIVER_CAP + 1).toPandas()[name])
+        if len(s) > DICT_DRIVER_CAP:
+            d = build_dictionary(tables[t], name)
+            out[c] = DistributedDomain(c, None, d, d.count())
+        else:
+            out[c] = ColumnDomain(c, np.unique(s.to_numpy()))
     return out
 
 

@@ -193,6 +193,39 @@ def test_base_domains_code_like_sample_built(tables):
         assert np.array_equal(base, own[c].values), c
 
 
+def test_base_domains_dedup_map_side_and_keep_big_ints(spark):
+    """``base_domains`` runs one query per column, each with a partial
+    aggregate below its exchange, so duplicates drop before the shuffle
+    and no task has to dedup a whole column.  Integers past 2**53 keep
+    their exact values beside a NULL-holding column of the same table,
+    and code as the sample-built dictionary codes them."""
+    from scardina_spark.model.bridge import base_domains, training_matrix
+
+    big = 1 << 53
+    df = spark.createDataFrame(
+        [(i, big + i % 20, i % 5 if i % 3 else None) for i in range(60)],
+        "k long, b long, c long")
+    store = spark._jsparkSession.sharedState().statusStore()
+    n0 = store.executionsList().size()
+    doms = base_domains({"t": df}, ["t.b", "t.c"])
+    ex = store.executionsList()
+    plans = [ex.apply(i).physicalPlanDescription()
+             for i in range(n0, ex.size())]
+    assert len(plans) == 2
+    for p in plans:
+        final = p[:p.index("Initial Plan")]
+        assert "HashAggregate" in final[final.index("Exchange"):], p
+    b = doms["t.b"].values
+    assert b.dtype == np.int64
+    assert b.tolist() == [big + i for i in range(20)]
+    want, _ = training_matrix(df, ["b", "c"], id_cols=["k"])
+    got, _ = training_matrix(df, ["b", "c"], id_cols=["k"],
+                             dictionaries={"b": doms["t.b"],
+                                           "c": doms["t.c"]})
+    assert np.array_equal(got, want)
+    assert (got[:, 0] >= 2).all()
+
+
 def test_smaller_emb_dims():
     """The reference's smaller_emb embedding-size heuristics
     (scardina/models.py:24-60): 'bound' caps widths at domain size,
