@@ -205,12 +205,24 @@ def test_base_domains_dedup_map_side_and_keep_big_ints(spark):
     df = spark.createDataFrame(
         [(i, big + i % 20, i % 5 if i % 3 else None) for i in range(60)],
         "k long, b long, c long")
+    bus = spark.sparkContext._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
-    n0 = store.executionsList().size()
+
+    def executions_after(last):
+        # the store keeps the latest executions in id order and evicts
+        # the oldest, so new ones are read from its tail
+        bus.waitUntilEmpty()
+        ex, out = store.executionsList(), []
+        for i in range(ex.size() - 1, -1, -1):
+            if ex.apply(i).executionId() <= last:
+                break
+            out.append(ex.apply(i))
+        return out[::-1]
+
+    last = max((e.executionId() for e in executions_after(-1)[-1:]),
+               default=-1)
     doms = base_domains({"t": df}, ["t.b", "t.c"])
-    ex = store.executionsList()
-    plans = [ex.apply(i).physicalPlanDescription()
-             for i in range(n0, ex.size())]
+    plans = [e.physicalPlanDescription() for e in executions_after(last)]
     assert len(plans) == 2
     for p in plans:
         final = p[:p.index("Initial Plan")]
